@@ -97,7 +97,8 @@ _EXEC_ORDER = [
 # fastscan runs ≈ 488 s actual under host_scale 0.42 → reference-est
 # 1150 for the old four-full-search shape; the round-11 phase diet
 # replaces the two full fastscan runs with 100/200-query slices,
-# re-scaling the same measurement to ≈ 820)
+# re-scaling the same measurement to ≈ 820; the 200-query kernel slices
+# are gone since, and the estimate is left as a conservative bound)
 _SCALE10M_CACHED_EST = 820.0
 
 
@@ -169,7 +170,6 @@ def _compact(result: dict) -> dict:
         "seq_latency_recall": seq.get("recall_gate"),
         "scale10m_recall": scale10m.get("recall_gate_0.9"),
         "scale10m_2x_brute": scale10m.get("ivf_2x_brute_gate"),
-        "scale10m_fastscan_eq": scale10m.get("fastscan_equal_gate"),
         "dedup10m_recall": dedup10m.get("recall_gate"),
         "dedup10m_linear": dedup10m.get("linear_gate"),
     }
@@ -1479,6 +1479,7 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
     import numpy as np
     from pyspark.sql import functions as F
 
+    from rabitq_spark.metrics import SearchMetrics
     from rabitq_spark.operators.knn import knn_exact_fast
 
     base = _gaussian_base(spark, n_base, dim).cache()
@@ -1592,66 +1593,6 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
         exact[["query_id", "neighbor_id"]], on=["query_id", "neighbor_id"]
     )
     recall = len(hits) / max(len(exact), 1)
-
-    # Arrow-kernel A/B at the same 1M scale: fused popcount estimator vs the
-    # fastscan nibble-LUT GEMM (round-6 verdict item 6). Equality gate is
-    # bit-exact frame identity — the kernels must ORDER candidates
-    # identically, not just score them closely. Two readings are reported
-    # because they answer different questions: `kernel_micro` isolates the
-    # asym kernels on a fixed large-cluster geometry (where fastscan's GEMM
-    # is 10-40× the popcount); `*_sec` is the full search wall, where the
-    # shortlist stage is lexsort/Arrow-bound so the kernel win dilutes to
-    # ~1.1-1.2× (Amdahl; analysis in PLAN.md round 7).
-    from rabitq_spark.index.search import (
-        _popcount64, fastscan_asym, fastscan_luts, fastscan_nibbles,
-    )
-
-    rng = np.random.default_rng(7)
-    mb_planes = rng.integers(-(2**63), 2**63, size=(32, 4, dim // 64),
-                             dtype=np.int64)
-    mb_codes = rng.integers(-(2**63), 2**63, size=(8192, dim // 64),
-                            dtype=np.int64)
-    t0 = time.perf_counter()
-    ref_asym = np.zeros((32, 8192), dtype=np.int64)
-    for p in range(4):
-        ref_asym += _popcount64(
-            mb_planes[:, p, None, :] & mb_codes[None, :, :]
-        ).sum(axis=-1) << p
-    pop_ms = (time.perf_counter() - t0) * 1000
-    lut3 = fastscan_luts(mb_planes, 4)
-    t0 = time.perf_counter()
-    fs_asym = fastscan_asym(lut3, fastscan_nibbles(mb_codes))
-    fs_ms = (time.perf_counter() - t0) * 1000
-    kernel_ab = {
-        "kernel_micro": {
-            "geometry": f"npairs=32 m=8192 dim={dim}",
-            "popcount_ms": round(pop_ms, 1),
-            "fastscan_ms": round(fs_ms, 1),
-            "kernel_speedup": round(pop_ms / max(fs_ms, 1e-9), 1),
-            "asym_equal": bool(np.array_equal(ref_asym, fs_asym)),
-        }
-    }
-    ref_frame = None
-    for impl_name in ("fused", "fastscan"):
-        # kernel A/B measures the KERNELS: pin them past the geometry
-        # dispatch (which would otherwise pick the winner itself)
-        search(
-            model, queries.limit(10), impl=impl_name,
-            arrow_min_queries_per_cluster=0,
-        ).write.format("noop").mode("overwrite").save()
-        t0 = time.perf_counter()
-        got = search(
-            model, queries, impl=impl_name, arrow_min_queries_per_cluster=0
-        ).toPandas()
-        kernel_ab[f"{impl_name}_sec"] = round(time.perf_counter() - t0, 2)
-        got = got.sort_values(["query_id", "rank"], ignore_index=True)
-        if ref_frame is None:
-            ref_frame = got
-        else:
-            kernel_ab["fastscan_equal_gate"] = bool(ref_frame.equals(got))
-    kernel_ab["fastscan_speedup"] = round(
-        kernel_ab["fused_sec"] / max(kernel_ab["fastscan_sec"], 1e-9), 2
-    )
 
     # adaptive early-stop probing (round-8; reference README.md:20): the
     # triangle cutoff must cut probed clusters materially below the static
@@ -1813,16 +1754,14 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
     search(model4, queries.limit(10)).write.format("noop").mode(
         "overwrite"
     ).save()
-    # Phase diet (round 12, mirroring the 10M phase's round-11 diet): ONE
-    # full-width multibit search through the ENGINE's default dispatch
-    # (auto → the value-GEMM fastscan kernel at this geometry), plus a
-    # 200-query kernel slice A/B whose frame equality carries the
-    # jvm-vs-fastscan gate. The old shape ran BOTH kernels full width
-    # (jvm 116.8 s + forced fastscan 41.8 s in the r11-close run) to prove
-    # a bit-equality that is a per-(query, cluster) property — the slice
-    # carries the same meaning at a fraction of the cost.
+    # ONE full-width multibit search through the ENGINE's default dispatch
+    # (the kernel it picked is reported from SearchMetrics), plus a
+    # 200-query slice through each kernel whose frame equality carries the
+    # jvm-vs-arrow gate — bit-equality is a per-(query, cluster) property,
+    # so the slice carries the meaning a full-width comparison would.
+    met4 = SearchMetrics(observe_rough=False, observe_precise=False)
     t0 = time.perf_counter()
-    approx4 = search(model4, queries).toPandas()
+    approx4 = search(model4, queries, metrics=met4).toPandas()
     ivf4_s = time.perf_counter() - t0
     hits4 = approx4.merge(
         exact[["query_id", "neighbor_id"]], on=["query_id", "neighbor_id"]
@@ -1832,12 +1771,18 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
     t0 = time.perf_counter()
     jvm4 = search(model4, sub4, impl="jvm").toPandas()
     slice4_jvm_s = time.perf_counter() - t0
+    met4_arrow = SearchMetrics(observe_rough=False, observe_precise=False)
     t0 = time.perf_counter()
-    fs4 = search(
-        model4, sub4, impl="fastscan", arrow_min_queries_per_cluster=0
-    ).toPandas()
-    slice4_fs_s = time.perf_counter() - t0
-    mb_equal = fs4.sort_values(
+    arrow4 = search(model4, sub4, impl="arrow", metrics=met4_arrow).toPandas()
+    slice4_arrow_s = time.perf_counter() - t0
+    if met4_arrow.kernel != "arrow":
+        # a forced arm that silently ran another kernel would measure the
+        # wrong thing — fail loudly instead
+        raise RuntimeError(
+            f"multibit4 arrow slice ran {met4_arrow.kernel}: "
+            f"{met4_arrow.kernel_reason}"
+        )
+    mb_equal = arrow4.sort_values(
         ["query_id", "rank"], ignore_index=True
     ).equals(jvm4.sort_values(["query_id", "rank"], ignore_index=True))
     for df in (model4.index_df, model4.base_df):
@@ -1863,20 +1808,17 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
         "effective_overfetch": auto_overfetch(model, cfg.nprobe, TOPK),
         "recall_gate_0.9": recall >= 0.9,
         "multibit4_build_sec": round(build4_s, 2),
-        # engine-default full-width search (auto dispatch → fastscan kernel
-        # at this geometry; round 12 — the pre-r12 value here was the
-        # forced-jvm full-width wall, now measured on the 200q slice)
+        # engine-default full-width search (auto dispatch)
         "multibit4_ivf_sec": round(ivf4_s, 2),
         "multibit4_recall_at_k": round(recall4, 4),
         "multibit4_effective_overfetch": auto_overfetch(model4, cfg4.nprobe, TOPK),
-        "multibit4_fastscan_sec": round(ivf4_s, 2),
-        "multibit4_kernel": "fastscan (auto dispatch; one full-width run)",
+        "multibit4_kernel": met4.kernel,
+        "multibit4_kernel_reason": met4.kernel_reason,
         "multibit4_slice_jvm_sec": round(slice4_jvm_s, 2),
-        "multibit4_slice_fastscan_sec": round(slice4_fs_s, 2),
-        "multibit4_fastscan_equal_gate": bool(mb_equal),
+        "multibit4_slice_arrow_sec": round(slice4_arrow_s, 2),
+        "multibit4_arrow_equal_gate": bool(mb_equal),
         "earlystop": earlystop,
         "seq_latency": seq_latency,
-        "kernel_ab": kernel_ab,
     }
 
 
@@ -1886,9 +1828,9 @@ def _scale_probe_10m(
     """Second decade of the 100x story (round-7 verdict item 4): 10M x 256
     (~10 GB f32, fits the 128 GiB sandbox). ONE multibit-4 index — the
     measured-best config at 1M (recall 1.0 at 1/8 the rerank width) —
-    searched through both the jvm plan and the fastscan Arrow kernel,
-    against the brute GEMM control. Gates: recall >= 0.9 and
-    IVF >= 2x brute (fastscan wall * 2 <= brute wall).
+    searched through the engine's default kernel dispatch, against the
+    brute GEMM control. Gates: recall >= 0.9 and IVF >= 2x brute
+    (IVF wall * 2 <= brute wall).
     SPARK_GRAFT_SCALE10M=0 skips (local iteration)."""
     import numpy as np
     import pandas as pd
@@ -1943,7 +1885,7 @@ def _scale_probe_10m(
     # recall 0.9789 → 0.7762 — on this isotropic gaussian base recall
     # tracks candidate MASS, not balance (flat nprobe-sweep: 90k→0.744,
     # 124k→0.902, 146k→0.977), so the flat recipe is kept and the wall
-    # fix is the value-GEMM estimator kernel + slice-measured dispatch.
+    # fix is the value-GEMM estimator kernel.
     # Model + sidecar cache (round-10 budget item): build_index at 10M
     # cost 232 s on the r9 host and was re-paid EVERY run even though the
     # base parquet never changes. The model is saved ONCE via the product
@@ -2024,51 +1966,6 @@ def _scale_probe_10m(
     search(model, queries.limit(10)).write.format("noop").mode(
         "overwrite"
     ).save()
-    # Host-measured kernel choice for the full-width search (round 11):
-    # the Arrow-vs-jvm geometry threshold (arrow_min_queries_per_cluster
-    # = 12) was tuned on the r9 host, where the jvm codegen join won this
-    # geometry 3-4x; this round's host INVERTS it (measured: jvm
-    # 0.30 s/query vs forced fastscan 0.089 s/query, same model, same
-    # probe table). Relative kernel throughput is a host property, not a
-    # geometry one, so measure BOTH kernels on the same 200-query slice
-    # in the same run and carry the winner into the full-width
-    # measurement. Both slice walls and the choice land in the artifact,
-    # and the kernels are bit-equal (fastscan_equal_gate just below, plus
-    # the impl-equality pytest), so the choice cannot change one result
-    # row — it only decides which implementation of the identical
-    # computation the engine's best path uses on this host.
-    sub = queries.limit(200).localCheckpoint(eager=True)
-    t0 = time.perf_counter()
-    jvm_slice = search(model, sub).toPandas()
-    out["kernel_slice_jvm_sec"] = round(time.perf_counter() - t0, 1)
-    t0 = time.perf_counter()
-    fs_slice = search(
-        model, sub, impl="fastscan", fastscan_max_lut_bytes=1 << 31,
-        arrow_min_queries_per_cluster=0,
-    ).toPandas()
-    out["kernel_slice_fastscan_sec"] = round(time.perf_counter() - t0, 1)
-    # the forced-kernel equality gate — which MUST force the Arrow kernel,
-    # the default dispatch would compare jvm vs jvm (round-9 review
-    # finding): kernel bit-exactness is a per-(query, cluster) property,
-    # not a width one, so the 200-query slice carries the same meaning a
-    # full-width comparison would
-    out["fastscan_equal_gate"] = bool(
-        fs_slice.sort_values(["query_id", "rank"], ignore_index=True).equals(
-            jvm_slice.sort_values(["query_id", "rank"], ignore_index=True)
-        )
-    )
-    if out["kernel_slice_fastscan_sec"] < out["kernel_slice_jvm_sec"]:
-        fs_kw = dict(
-            impl="fastscan", fastscan_max_lut_bytes=1 << 31,
-            arrow_min_queries_per_cluster=0,
-        )
-        out["full_width_kernel"] = "fastscan"
-    else:
-        # round 12: the engine DEFAULT (impl="auto") now routes this
-        # geometry to fastscan itself, so honoring a jvm slice win needs
-        # an explicit pin — {} would silently re-route to fastscan
-        fs_kw = dict(impl="jvm")
-        out["full_width_kernel"] = "jvm"
     # INTERLEAVED brute/ivf halves (round 11, third pass): the two paths
     # used to run back-to-back at full width, ~7 bench-minutes apart — and
     # this round's phase ticks measured the shared host drifting 20-50x
@@ -2102,12 +1999,14 @@ def _scale_probe_10m(
         met = SearchMetrics(observe_rough=False, observe_precise=False)
         mets.append(met)
         t0 = time.perf_counter()
-        full_parts.append(search(model, half, metrics=met, **fs_kw).toPandas())
+        full_parts.append(search(model, half, metrics=met).toPandas())
         ivf_s += time.perf_counter() - t0
     exact = pd.concat(exact_parts, ignore_index=True)
     full = pd.concat(full_parts, ignore_index=True)
     out["brute_sec"] = round(brute_s, 1)
     out["ivf_sec"] = round(ivf_s, 1)
+    out["full_width_kernel"] = mets[0].kernel
+    out["full_width_kernel_reason"] = mets[0].kernel_reason
     # round-8 verdict item 5: the candidate-bound property as an artifact
     # line — rows the exact rerank READ from base storage per query
     # (join plan would read n_base per batch; the store reads candidates)
@@ -2129,30 +2028,24 @@ def _scale_probe_10m(
         float(probe_pdf["cluster_id"].map(sizes).sum()) / max(nq, 1), 1
     )
     # Phase diet (round 11, second pass): the phase used to run FOUR full
-    # 10M searches — brute, jvm, fastscan-dispatch, fastscan-forced — and
-    # a mid-run host slowdown blew the phase to 1249 s vs a 326 s
-    # estimate, starving every later phase. The slice-based kernel A/B
-    # above now carries the forced-kernel equality gate; what remains
-    # full-width is ONE search per path (brute + the measured-best
-    # kernel). Dispatch routing is still exercised on a 100-query slice:
+    # 10M searches and a mid-run host slowdown blew it to 1249 s vs a
+    # 326 s estimate, starving every later phase; what remains full-width
+    # is ONE search per path (brute + the engine default). Dispatch
+    # routing is still exercised on a 100-query slice:
+    met100 = SearchMetrics(observe_rough=False, observe_precise=False)
     t0 = time.perf_counter()
-    search(model, queries.limit(100)).write.format(
+    search(model, queries.limit(100), metrics=met100).write.format(
         "noop"
     ).mode("overwrite").save()
-    out["fastscan_route_100q_sec"] = round(time.perf_counter() - t0, 1)
-    out["fastscan_dispatch"] = (
-        "auto dispatch -> fastscan (round 12: multibit est_pairs floor; "
-        "pre-r12 the geometry gate sent this 100q batch to jvm, 43 s vs "
-        "~10 s through the value-GEMM kernel)"
-    )
+    out["auto_route_100q_sec"] = round(time.perf_counter() - t0, 1)
+    out["auto_route_100q_kernel"] = met100.kernel
+    out["auto_route_100q_reason"] = met100.kernel_reason
     hits = full.merge(
         exact[["query_id", "neighbor_id"]], on=["query_id", "neighbor_id"]
     )
     out["recall_at_k"] = round(len(hits) / max(len(exact), 1), 4)
     out["recall_gate_0.9"] = out["recall_at_k"] >= 0.9
-    # gate on the engine's best path — the kernel the same-run slice A/B
-    # measured fastest on THIS host (full_width_kernel above); both
-    # kernels produce bit-identical frames (fastscan_equal_gate)
+    # gate on the engine default (its kernel: full_width_kernel above)
     out["ivf_2x_brute_gate"] = out["ivf_sec"] * 2 <= out["brute_sec"]
     for df in (model.index_df, model.base_df, base, queries):
         df.unpersist()

@@ -59,12 +59,16 @@ from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.rotation import apply_rot
 from rabitq_spark.index.search import (
+    KERNELS,
     PROBE_SCHEMA,
     _fused_shortlist,
     auto_overfetch,
+    choose_kernel,
     exact_rerank,
     quantize_probe_pairs,
+    rough_estimator_expr,
 )
+from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.topk import topk_per_group
 from rabitq_spark._dist import ensure_package_on_executors
 
@@ -110,6 +114,7 @@ def search_adaptive(
     query_vec: str = "qvec",
     kernel: str = "auto",
     stats: dict | None = None,
+    metrics: SearchMetrics | None = None,
 ) -> DataFrame:
     """Batch top-k ANN with per-query adaptive probe cutoff; returns
     (query_id, neighbor_id, dist, rank) like search().
@@ -118,7 +123,7 @@ def search_adaptive(
     exactly as in search(); pass a value covering every probed row (e.g.
     10**6) for the provably-brute-exact configuration. `stats`, if a dict
     is passed, receives waves / probed_clusters_total /
-    avg_probes_per_query / retired_early. `max_probes` caps
+    avg_probes_per_query / retired_early / wave_kernels. `max_probes` caps
     the probed clusters per query (approximate mode — on heavily
     OVERLAPPING clusters the triangle bound is weak, radii span the gaps,
     and an uncapped run degrades toward a full scan; with the cap the
@@ -126,17 +131,19 @@ def search_adaptive(
     that retire earlier, which PROVABLY lose nothing). Leave None for the
     exact contract.
 
-    `kernel` picks the per-wave rough scorer: "popcount"/"fastscan" run
-    the fused Arrow shortlist; "jvm" runs the codegen join (identical
-    results — same estimator, same global top-R trim); "auto" (default)
-    picks PER WAVE by the same geometry rule as search() — the codegen
-    join below ~12 probing queries per probed cluster (small sequential
-    batches, very wide cluster counts), the Arrow kernel above it.
+    `kernel` picks the per-wave rough scorer: "arrow" runs the value-GEMM
+    Arrow shortlist; "jvm" runs the codegen join (identical results —
+    same estimator, same global top-R trim); "auto" (default) asks
+    search.choose_kernel PER WAVE with the wave's probe geometry — the
+    same rule search() applies. `metrics.kernel` / `kernel_reason`, when
+    `metrics` is passed, report the last wave's choice.
 
     Reference parity: README.md:20 ("early stop", the one unchecked
     feature the reference never built); the wave loop is the batch
     analogue of a sequential scan breaking out of its posting-list loop.
     """
+    if kernel not in KERNELS:
+        raise ValueError(f"kernel must be one of {KERNELS}, got {kernel!r}")
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
     cfg = model.config
@@ -189,6 +196,7 @@ def search_adaptive(
     id_to_row = {v: i for i, v in enumerate(q_ids)}
     acc: pd.DataFrame | None = None
     waves = 0
+    wave_kernels: list[str] = []
     probed_total = 0
     wave = max(1, int(wave0))
 
@@ -285,55 +293,30 @@ def search_adaptive(
             }
         )
         probes_df = spark.createDataFrame(tbl, PROBE_SCHEMA)
-        wave_kernel = kernel
-        if wave_kernel == "auto":
-            # per-wave geometry dispatch, the same rule as search(): the
-            # Arrow kernels' per-(cluster, batch) group setup needs ~12+
-            # probing queries per cluster to amortize; below that the
-            # codegen join wins (measured: sequential 100-query batches
-            # popcount 38.1 s vs jvm 21.8 s; full 1k batch fused 7.3 s vs
-            # jvm 12.5 s at 31 q/cluster). Round 12: multi-bit codes route
-            # to the value-GEMM fastscan kernel whenever its integer-
-            # exactness bound holds — search()'s auto dispatch measured it
-            # 8-10× over the jvm join even at ~1 query/cluster (10M slice)
-            if cfg.bits_per_dim > 1 and (
-                model.dim_pad
-                * ((1 << cfg.theta_log_dim) - 1)
-                * ((1 << cfg.bits_per_dim) - 1)
-                < 1 << 24
-            ):
-                wave_kernel = "fastscan"
-            else:
-                q_per_cluster = len(ci_arr) / max(len(np.unique(ci_arr)), 1)
-                wave_kernel = "popcount" if q_per_cluster >= 12 else "jvm"
+        probed_set = [int(c) for c in np.unique(ci_arr)]
+        if kernel == "auto":
+            wave_kernel, reason = choose_kernel(
+                model, len(ci_arr), len(probed_set)
+            )
+        else:
+            wave_kernel, reason = kernel, "requested"
+        wave_kernels.append(wave_kernel)
+        if metrics is not None:
+            metrics.kernel, metrics.kernel_reason = wave_kernel, reason
         if wave_kernel == "jvm":
             # JVM wave scorer — search()'s stages 5-6 on the wave's probe
-            # table. The Arrow shortlist pays a per-(cluster, batch) group
-            # setup that needs ~12+ probing queries per cluster to
-            # amortize (the geometry dispatch finding, search.py); waves
-            # over many clusters with few queries each sit far below
-            # that, exactly where the codegen join wins (measured at
-            # 10M x 256: fused 55 s vs jvm join 18.5 s at 6 q/cluster).
-            from rabitq_spark.index.search import rough_estimator_expr
-
+            # table, with the same estimator expression (shared helper —
+            # the frame-identity contract depends on it)
             index = model.index_df
-            probed_set = [int(c) for c in np.unique(ci_arr)]
             if 2 * len(probed_set) <= ncl:
                 index = index.filter(F.col("cluster_id").isin(probed_set))
-            # same estimator expression as search() stage 5 (shared helper
-            # — the frame-identity contract depends on it)
             local = index.join(F.broadcast(probes_df), "cluster_id").select(
                 "query_id", "orig_id",
                 rough_estimator_expr(model).alias("rough"),
             )
         else:
             local = _fused_shortlist(
-                model,
-                probes_df,
-                r,
-                cfg.theta_log_dim,
-                prune_partitions=True,
-                kernel=wave_kernel,
+                model, probes_df, r, cfg.theta_log_dim, prune_partitions=True
             )
         shortlist = topk_per_group(
             local,
@@ -379,6 +362,7 @@ def search_adaptive(
         stats["avg_probes_per_query"] = probed_total / max(nq, 1)
         stats["retired_early"] = int(early_retired.sum())
         stats["forced_final_wave"] = forced_final
+        stats["wave_kernels"] = wave_kernels
 
     if acc is None:
         acc = pd.DataFrame(

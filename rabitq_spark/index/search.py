@@ -231,9 +231,6 @@ def rough_distance_expr_multibit(
     return F.col("center_dist_sq") + F.col("y_c_dist_sq") - 2.0 * est_ip
 
 
-_POPCNT = None
-
-
 def rough_estimator_expr(model) -> F.Column:
     """The bits-aware D5 estimator for a model — the single place the
     single-bit / multi-bit Column selection lives. Shared by search()'s
@@ -247,99 +244,21 @@ def rough_estimator_expr(model) -> F.Column:
     return rough_distance_expr(cfg.theta_log_dim, model.n_words)
 
 
-def _popcount64(arr: "np.ndarray") -> "np.ndarray":
-    """Vectorized popcount for int64 arrays (numpy<2 has no bitwise_count):
-    byte-LUT sum over the 8 bytes of each word."""
-    global _POPCNT
-    if _POPCNT is None:
-        _POPCNT = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
-    b = arr.view(np.uint8).reshape(*arr.shape, 8)
-    return _POPCNT[b].sum(axis=-1).astype(np.int64)
+def value_gemm_dtype(dim_pad: int, theta_log_dim: int, bits: int):
+    """The narrowest float dtype in which value_gemm_asym is integer-exact
+    for this geometry: float32 while every partial sum
+    dim_pad·(2^theta_log_dim − 1)·(2^bits − 1) stays under 2^24, float64
+    (exact to 2^53) above it — about 2× slower, never wrong."""
+    bound = dim_pad * ((1 << theta_log_dim) - 1) * ((1 << bits) - 1)
+    return np.float32 if bound < 1 << 24 else np.float64
 
 
-# nibble value v (0..15) -> its 4 bits, LSB first: W16[v, i] = (v >> i) & 1
-_NIBBLE_W = np.array(
-    [[(v >> i) & 1 for i in range(4)] for v in range(16)], dtype=np.int32
-)
-
-
-def fastscan_luts(planes: "np.ndarray", theta_log_dim: int) -> "np.ndarray":
-    """Fastscan-style (André et al., Quick ADC / FAISS fastscan lineage;
-    the reference's one unexplored kernel family — README.md:13, and the
-    src/simd.rs runtime-dispatch pattern) packed-LUT preparation.
-
-    The asymmetric dot D4 is ⟨code_bits, qu⟩ where qu is the query's
-    theta_log_dim-bit scalar-quantized residual. Fastscan regroups the sum
-    by 4-dim NIBBLES of the base code: for chunk c and nibble value v,
-    LUT[c, v] = Σ_{i: bit i of v} qu[4c+i], so the scan is one table lookup
-    per nibble instead of plane-wise popcounts. Input `planes` is the
-    packed bit-plane tensor (npairs, theta_log_dim, n_words) exactly as the
-    probe table carries it; qu is reconstructed by unpacking the planes
-    (bitorder little — the inverse of _prepare_probes' packbits).
-    Returns int32 LUTs of shape (npairs, n_chunks, 16), n_chunks = dim_pad/4.
-    """
-    npairs, _, n_words = planes.shape
-    dim_pad = n_words * 64
-    # float32 GEMM exactness in fastscan_asym requires every partial sum
-    # (≤ dim_pad·(2^theta_log_dim − 1)) to stay under 2^24; enforce the
-    # bound HERE rather than only documenting it, so a config that
-    # breaches it fails loudly instead of silently returning wrong
-    # integers (search() falls back to the popcount kernel before this
-    # can trigger — this is the defense for direct callers)
-    if dim_pad * ((1 << theta_log_dim) - 1) >= 1 << 24:
-        raise ValueError(
-            f"fastscan float32-exactness bound violated: dim_pad={dim_pad} "
-            f"× (2^{theta_log_dim}−1) ≥ 2^24; use the popcount kernel"
-        )
-    qu = np.zeros((npairs, dim_pad), dtype=np.int32)
-    for p in range(theta_log_dim):
-        bits = np.unpackbits(
-            planes[:, p, :].astype(np.uint64).view(np.uint8).reshape(npairs, -1),
-            axis=1,
-            bitorder="little",
-        )
-        qu += bits.astype(np.int32) << p
-    return qu.reshape(npairs, dim_pad // 4, 4) @ _NIBBLE_W.T
-
-
-def fastscan_nibbles(codes: "np.ndarray") -> "np.ndarray":
-    """Split packed 1-bit codes (m, n_words) int64 into 4-bit nibbles
-    (m, n_words*16) uint8, dimension-major: nibble c covers dims 4c..4c+3
-    with bit i = dim 4c+i (little bit order matches fastscan_luts)."""
-    m, n_words = codes.shape
-    by = np.ascontiguousarray(codes).view(np.uint8).reshape(m, n_words * 8)
-    nib = np.empty((m, n_words * 16), dtype=np.uint8)
-    nib[:, 0::2] = by & 0x0F
-    nib[:, 1::2] = by >> 4
-    return nib
-
-
-def fastscan_asym(lut3: "np.ndarray", nib: "np.ndarray") -> "np.ndarray":
-    """Batch LUT scan as ONE GEMM: one-hot the nibbles (m, 16·C) and
-    multiply by the flattened LUTs (npairs, 16·C) → asym (npairs, m).
-
-    BLAS beats both the plane-wise popcount kernel (11–42× measured across
-    dim 64–1024) and a per-chunk gather loop (2–7×): the one-hot spends 16×
-    the nominal flops but runs at GEMM throughput with no large integer
-    temporaries. EXACTNESS: every product is 0/1 × an integer LUT entry
-    ≤ 60, every partial sum an integer ≤ dim_pad·15 < 2^24, so float32
-    arithmetic is exact regardless of BLAS summation order — the int64
-    result is bit-identical to the popcount kernel's (asserted in
-    tests/test_index.py)."""
-    npairs, n_chunks, _ = lut3.shape
-    m = nib.shape[0]
-    onehot = np.zeros((m, n_chunks * 16), dtype=np.float32)
-    flat = nib.astype(np.int64) + 16 * np.arange(n_chunks, dtype=np.int64)[None, :]
-    onehot[np.arange(m)[:, None], flat] = 1.0
-    lutf = lut3.reshape(npairs, n_chunks * 16).astype(np.float32)
-    return (lutf @ onehot.T).astype(np.int64)
-
-
-def unpack_plane_values(planes: "np.ndarray", n_planes: int) -> "np.ndarray":
+def unpack_plane_values(
+    planes: "np.ndarray", n_planes: int, dtype=np.float32
+) -> "np.ndarray":
     """Packed bit-plane tensor (n, n_planes, n_words) int64 → per-dim
-    integer values (n, n_words·64) float32: v[d] = Σ_p 2^p · bit_p[d]
-    (bitorder little — the inverse of _prepare_probes' packbits; the same
-    reconstruction fastscan_luts performs before regrouping by nibble)."""
+    integer values (n, n_words·64) as `dtype`: v[d] = Σ_p 2^p · bit_p[d]
+    (bitorder little — the inverse of _prepare_probes' packbits)."""
     n, stored_planes, n_words = planes.shape
     # unpack EVERY plane's words in one contiguous pass (8× the per-plane
     # slice-copy-unpack loop: one C call over one buffer), then fold the
@@ -350,25 +269,21 @@ def unpack_plane_values(planes: "np.ndarray", n_planes: int) -> "np.ndarray":
     acc = b[:, 0, :].copy()
     for p in range(1, n_planes):
         acc |= b[:, p, :] << p
-    return acc.astype(np.float32)
+    return acc.astype(dtype)
 
 
 def value_gemm_asym(qvals: "np.ndarray", bvals: "np.ndarray") -> "np.ndarray":
-    """The round-11 estimator kernel: the cross term
+    """The Arrow rough kernel: the estimator's integer cross term
     Σ_{p<P, i<B} 2^{i+p}·popcount(bplane_i ∧ qplane_p) is, by the binary
     expansion of both sides, exactly ⟨u_q, u_b⟩ — one integer dot product
-    of the per-dim quantized VALUES. So compute it as ONE float32 GEMM of
-    the unpacked values instead of B plane passes of one-hot LUT GEMMs:
-    16× fewer flops per plane (dim vs 16·dim one-hot columns), B× fewer
-    passes, and no LUT/one-hot construction per (cluster, batch) group —
-    measured 0.76 µs/pair end-to-end before vs the GEMM's ~50 ns/pair
-    after, at 10M × 256 × 4-bit geometry.
+    of the per-dim quantized VALUES, computed as ONE GEMM of the unpacked
+    values (unpack_plane_values) for every code width B.
 
-    EXACTNESS: every product is an integer ≤ (2^P−1)(2^B−1), every partial
-    sum ≤ dim_pad·(2^P−1)(2^B−1); callers enforce that bound < 2^24
-    (search()'s fastscan gate), so float32 arithmetic is exact regardless
-    of BLAS summation order — bit-identical to the plane-wise popcount
-    kernel (asserted in tests)."""
+    EXACTNESS: every product is an integer ≤ (2^P−1)(2^B−1) and every
+    partial sum ≤ dim_pad·(2^P−1)(2^B−1), so a GEMM in value_gemm_dtype's
+    dtype is exact regardless of BLAS summation order — bit-identical to
+    the jvm plan's bit_count sum (asserted in tests against a popcount
+    reference)."""
     return (qvals @ bvals.T).astype(np.int64)
 
 
@@ -384,11 +299,10 @@ def _fused_shortlist(
     r: int,
     theta_log_dim: int,
     prune_partitions: bool = True,
-    kernel: str = "popcount",
 ) -> DataFrame:
-    """Alternative stages 5-6: rough-score candidates and keep a local top-R
-    per query inside ONE mapInPandas over the index — the probe table rides
-    as a broadcast keyed by cluster.
+    """The Arrow plan for stages 5-6: rough-score candidates and keep a
+    local top-R per query inside ONE mapInPandas over the index — the probe
+    table rides as a broadcast keyed by cluster.
 
     Trades the JVM join+window for numpy batch math plus a much smaller
     window input (≤ R rows per query per index partition instead of every
@@ -396,29 +310,20 @@ def _fused_shortlist(
     small batches. Results are identical: same estimator, same top-R
     semantics (ties on rough broken by orig_id via stable ordering).
 
-    kernel="popcount" computes the asymmetric dot plane-wise (byte-LUT
-    popcount over AND-ed words); kernel="fastscan" unpacks both sides to
-    their per-dim quantized integer VALUES and computes the whole cross
-    term as ONE float32 GEMM (value_gemm_asym; round 11 — supersedes the
-    per-plane one-hot LUT GEMM, which spent 16× the flops per plane plus
-    per-group LUT/one-hot construction) — same integer asym, bit-identical
-    rough scores. The unpacked query values are built LAZILY executor-side
-    per cluster group (cached per worker, 4 bytes/dim per probe row), NOT
-    broadcast — the per-group rebuild is ~npairs×dim bit ops, noise.
-
-    Multi-bit base codes (config.bits_per_dim = B > 1) are supported by
-    both kernels through the shift-add identity the symmetric estimator's
-    cross term factors into: Σ_{j<P,i<B} 2^{i+j}·pop(bplane_i ∧ qplane_j)
-    = Σ_i 2^i · asym_1bit(bplane_i) — each base plane is scanned with the
-    SAME 1-bit kernel (one extra pass per plane), then shifted in. The
-    rough formula mirrors rough_distance_expr_multibit (unbiased, no
-    error-bound term).
+    The estimator's integer term is one value GEMM per (cluster, batch)
+    group (value_gemm_asym) for every code width, in the dtype
+    value_gemm_dtype picks for the model's geometry. The unpacked query
+    values are built LAZILY executor-side per cluster (cached per worker,
+    4 or 8 bytes/dim per probe row), NOT broadcast — the per-group rebuild
+    is ~npairs×dim bit ops, noise. The rough formulas mirror
+    rough_distance_expr (1-bit) and rough_distance_expr_multibit (B > 1).
     """
     spark = probes.sparkSession
     ppdf = probes.toPandas()
     n_words = model.n_words
     bits = model.config.bits_per_dim
     dim_pad = model.dim_pad
+    dtype = value_gemm_dtype(dim_pad, theta_log_dim, bits)
     by_cluster: dict = {}
     for cid, grp in ppdf.groupby("cluster_id"):
         planes = np.vstack(grp["qplanes"].values).astype(np.int64)  # (p, 4w)
@@ -463,50 +368,28 @@ def _fused_shortlist(
                 codes = np.vstack(grp["code"].values).astype(np.int64)
                 m = codes.shape[0]  # codes: (m, bits·w), plane-major words
 
-                # fastscan kernel (round 11): the cross/asym term is ONE
-                # value GEMM (see value_gemm_asym) — unpack the query
-                # values once per cluster (cached; 4·dim_pad bytes per
-                # probe row, bounded at 64 MB per worker: past it, rebuild
-                # per group, correctness unaffected) and the base values
-                # once per (cluster, batch) group
-                qvals = None
-                if kernel == "fastscan":
-                    qvals = qv_cache.get(int(cid))
-                    if qvals is None:
-                        qvals = unpack_plane_values(planes, theta_log_dim)
-                        if (
-                            sum(v.nbytes for v in qv_cache.values())
-                            + qvals.nbytes
-                            <= 64 << 20
-                        ):
-                            qv_cache[int(cid)] = qvals
-
-                def asym_1bit(words):
-                    """Σ_plane popcount(words & qplane) << plane for ONE
-                    base bit-plane's packed words (m, w) → (npairs, m)."""
-                    out = np.zeros((len(qids), words.shape[0]), dtype=np.int64)
-                    for p in range(theta_log_dim):
-                        anded = planes[:, p, None, :] & words[None, :, :]
-                        out += _popcount64(anded).sum(axis=-1) << p
-                    return out
+                # the cross/asym term is ONE value GEMM: unpack the query
+                # values once per cluster (cached, bounded at 64 MB per
+                # worker: past it, rebuild per group, correctness
+                # unaffected) and the base values once per (cluster,
+                # batch) group
+                qvals = qv_cache.get(int(cid))
+                if qvals is None:
+                    qvals = unpack_plane_values(planes, theta_log_dim, dtype)
+                    if (
+                        sum(v.nbytes for v in qv_cache.values()) + qvals.nbytes
+                        <= 64 << 20
+                    ):
+                        qv_cache[int(cid)] = qvals
+                cross = value_gemm_asym(
+                    qvals,
+                    unpack_plane_values(
+                        codes.reshape(m, bits, n_words), bits, dtype
+                    ),
+                )
 
                 cds = grp["center_dist_sq"].values.astype(np.float32)
                 if bits > 1:
-                    # symmetric multi-bit estimator, mirroring
-                    # rough_distance_expr_multibit: cross term via one
-                    # value GEMM (fastscan) or the per-plane shift-add of
-                    # the 1-bit popcount kernel — identical integers
-                    cube = codes.reshape(m, bits, n_words)
-                    if kernel == "fastscan":
-                        cross = value_gemm_asym(
-                            qvals, unpack_plane_values(cube, bits)
-                        )
-                    else:
-                        cross = np.zeros((len(qids), m), dtype=np.int64)
-                        for i in range(bits):
-                            cross += asym_1bit(
-                                np.ascontiguousarray(cube[:, i, :])
-                            ) << i
                     b_lb = grp["b_lb"].values.astype(np.float32)
                     b_delta = grp["b_delta"].values.astype(np.float32)
                     b_sum = grp["b_sum"].values.astype(np.float32)
@@ -533,15 +416,6 @@ def _fused_shortlist(
                         np.float64
                     ) - 2.0 * est_ip
                 else:
-                    if kernel == "fastscan":
-                        asym = value_gemm_asym(
-                            qvals,
-                            unpack_plane_values(
-                                codes.reshape(m, 1, n_words), 1
-                            ),
-                        )
-                    else:
-                        asym = asym_1bit(codes)
                     f_ip = grp["factor_ip"].values.astype(np.float32)
                     f_ppc = grp["factor_ppc"].values.astype(np.float32)
                     eb = grp["error_bound"].values.astype(np.float32)
@@ -555,7 +429,7 @@ def _fused_shortlist(
                             (cds[None, :] + ycd[:, None])
                             + lb[:, None] * f_ppc[None, :]
                         ).astype(np.float64)
-                        + (2.0 * asym - ssum[:, None])
+                        + (2.0 * cross - ssum[:, None])
                         * f_ip[None, :]
                         * delta[:, None]
                         - eb[None, :]
@@ -571,7 +445,7 @@ def _fused_shortlist(
                     # the stable (rough, orig_id) trim below is unchanged
                     # in semantics — it just runs on ~nq×r rows instead
                     # of nq×m (the round-7 Amdahl item: selection, not
-                    # the estimator, dominated the fastscan path)
+                    # the estimator, dominated the Arrow path)
                     kth = np.partition(rough, r - 1, axis=1)[:, r - 1 : r]
                     qi, ci = np.nonzero(rough <= kth)
                     out_q.append(qids[qi])
@@ -708,20 +582,65 @@ def auto_overfetch(model: RaBitQModel, nprobe: int, topk: int) -> int:
     )
 
 
-# Round-12 auto-dispatch floors (guide §1.2: the distributed algorithm
-# first). Total pair-scores below these keep the jvm codegen join — the
-# Arrow kernels' fixed per-search Python/Arrow round-trip plus per-group
-# setup dominates there. Measured on the r12 host: sf0.1 headline geometry
-# (~0.9M pairs) jvm wins; 1M×256 1-bit (~31M pairs) fused wins 40.2→33.3 s;
-# 10M×256 4-bit (~50M pairs) fastscan wins 8–10× — and the 4-bit value-GEMM
-# kernel already wins at ~1 query/cluster (200-query slice at 10M: 12.5 s
-# vs jvm 98.2 s), so the multibit floor is lower and geometry-free.
+# Auto-dispatch floors (guide §1.2: the distributed algorithm first),
+# used only by choose_kernel. Total pair-scores below these keep the jvm
+# codegen join — the Arrow kernel's fixed per-search Python/Arrow
+# round-trip plus per-group setup dominates there. Measured on the r12
+# host: sf0.1 headline geometry (~0.9M pairs) jvm wins; 1M×256 1-bit
+# (~31M pairs) Arrow wins 40.2→33.3 s; 10M×256 4-bit (~50M pairs) Arrow
+# wins 8–10× — and on 4-bit codes the value GEMM already wins at ~1
+# query/cluster (200-query slice at 10M: 12.5 s vs jvm 98.2 s), so the
+# multibit floor is lower and geometry-free.
 _ARROW_MIN_PAIRS = 8_000_000
 _ARROW_MIN_PAIRS_MULTIBIT = 2_000_000
-# Byte cap for the probe table the fused path materializes/broadcasts
-# (round 12: the 1M-row cap alone was tuned at dim 256 ≈ 160 B/row; a
-# small-dim probe table with more rows but fewer bytes is equally safe).
-_FUSED_MAX_PROBE_BYTES = 256 << 20
+# 1-bit geometry floor (measured at 10M × 256, 0.5% coverage, r9): the
+# Arrow kernel pays a per-(cluster, batch)-group setup that needs enough
+# probing queries per cluster to amortize — at ~6.4 queries/cluster the
+# jvm join won 18.5 s vs 55.4 s; at 31 queries/cluster Arrow won 7.3 s vs
+# jvm 12.5 s (1M probe). 12 sits between the two measured regimes. The
+# 1-bit Arrow figures behind both 1-bit floors were taken with a plane-wise
+# popcount kernel ~30× slower per call than the value GEMM, so these floors
+# are conservative until re-measured.
+_ARROW_MIN_QUERIES_PER_CLUSTER = 12
+# Byte cap for the probe table the Arrow path collects to the driver and
+# broadcasts (≈ 1.7M probe rows at dim 256).
+_ARROW_MAX_PROBE_BYTES = 256 << 20
+
+KERNELS = ("auto", "jvm", "arrow")
+
+
+def choose_kernel(
+    model: RaBitQModel, n_probe_rows: int, n_probed_clusters: int
+) -> tuple[str, str]:
+    """The auto-dispatch rule — the one place the jvm/Arrow floors live.
+    Returns ("jvm" | "arrow", reason) for a probe table of `n_probe_rows`
+    (query, cluster) pairs over `n_probed_clusters` distinct clusters.
+    search() and every search_adaptive wave call it; every kernel is
+    bit-identical, so the choice can never change a result row."""
+    # avg cluster size uses model.n_rows when the builder recorded it, else
+    # n_clusters (exact under k ≈ √n sizing)
+    avg_cluster = (
+        model.n_rows / max(model.n_clusters, 1)
+        if model.n_rows
+        else float(model.n_clusters)
+    )
+    est_pairs = n_probe_rows * avg_cluster
+    if model.config.bits_per_dim > 1:
+        floor = _ARROW_MIN_PAIRS_MULTIBIT
+        if est_pairs < floor:
+            return "jvm", f"est_pairs {est_pairs:.3g} < {floor:.3g}"
+        return "arrow", f"est_pairs {est_pairs:.3g} >= {floor:.3g}"
+    if est_pairs < _ARROW_MIN_PAIRS:
+        return "jvm", f"est_pairs {est_pairs:.3g} < {_ARROW_MIN_PAIRS:.3g}"
+    q_per_cluster = n_probe_rows / max(n_probed_clusters, 1)
+    if q_per_cluster < _ARROW_MIN_QUERIES_PER_CLUSTER:
+        return "jvm", (
+            f"{q_per_cluster:.3g} queries/cluster < "
+            f"{_ARROW_MIN_QUERIES_PER_CLUSTER}"
+        )
+    return "arrow", (
+        f"est_pairs {est_pairs:.3g}, {q_per_cluster:.3g} queries/cluster"
+    )
 
 
 def search(
@@ -736,9 +655,6 @@ def search(
     metrics: "SearchMetrics | None" = None,
     impl: str = "auto",
     broadcast_probes: bool = True,
-    fused_max_probe_rows: int | None = None,
-    fastscan_max_lut_bytes: int = 256 << 20,
-    arrow_min_queries_per_cluster: float = 12.0,
     index_predicate=None,
     allowed: "DataFrame | None" = None,
 ) -> DataFrame:
@@ -771,15 +687,18 @@ def search(
     model.n_rows when the builder recorded it and otherwise n_clusters
     itself (exact under the standard n_clusters ≈ √n sizing).
 
-    `impl` picks the rough-scoring implementation — all three produce
-    bit-identical frames (impl-equality tests): "jvm" is the codegen
-    broadcast-join plan, "fused" the Arrow popcount kernel, "fastscan" the
-    Arrow value-GEMM kernel. The default "auto" (round 12) picks per
-    search from the probe geometry: multi-bit codes route to fastscan and
-    1-bit codes to fused once the estimated pair-score volume clears the
-    measured floors (_ARROW_MIN_PAIRS*); small searches stay on the jvm
-    join — see the dispatch block for the measurements.
+    `impl` picks the rough-scoring kernel — both produce bit-identical
+    frames (impl-equality tests): "jvm" is the codegen broadcast-join
+    plan, "arrow" the value-GEMM mapInPandas plan (_fused_shortlist). The
+    default "auto" keeps the jvm join when nprobe covers more than half
+    the clusters and otherwise asks choose_kernel, which reads the probe
+    geometry. An explicit "arrow" is honoured unless the search is
+    filtered or the probe table exceeds the driver byte cap; either
+    demotes it to "jvm". `metrics.kernel` / `metrics.kernel_reason` report
+    the kernel that ran and why.
     """
+    if impl not in KERNELS:
+        raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
     cfg = model.config
     topk = topk or cfg.topk
     nprobe = nprobe or cfg.nprobe
@@ -791,155 +710,59 @@ def search(
     index = model.index_df
     if index_predicate is not None:
         index = index.filter(index_predicate)
-    auto = impl == "auto"
-    if auto:
-        # Scale-measured kernel dispatch (round 12, guide §1.2/§3.1 —
-        # pick the strategy deliberately). Tentative kernel by code width:
-        # multi-bit codes go to the value-GEMM fastscan kernel (one float32
-        # BLAS call per (cluster, batch) group vs bits×planes unrolled
-        # bit_count terms per pair in codegen — measured r11/r12: 10M×256
-        # 4-bit, 200-query slice, fastscan 12.5 s vs jvm 98.2 s at ~1
-        # query/cluster; 1M×256 4-bit full width 41.8 s vs 116.8 s);
-        # 1-bit codes go to the fused popcount kernel (1M×256: fused
-        # 33.3 s vs jvm 40.2 s at 31 q/cluster). Both tentative choices
-        # are DEMOTED back to the jvm join below when the probe geometry
-        # says the per-group Arrow setup cannot amortize (est_pairs /
-        # q-per-cluster floors) — every kernel is bit-identical (the
-        # impl-equality tests), so dispatch can never change a result row.
-        impl = "fastscan" if cfg.bits_per_dim > 1 else "fused"
+    kernel, reason = impl, "requested"
+    if impl == "auto":
         if nprobe * 2 > model.n_clusters:
             # High-coverage regime (the same gate that disables partition
             # pruning): the batch scans most of the index, so the jvm path
             # pays ZERO driver-side jobs here while resolving the Arrow
             # geometry would add a checkpoint + collect per search — at
             # the sf0.1 headline shape (nprobe 28 of 32 clusters, 2k rows)
-            # that job alone is ~10% of the whole search. Coverage this
-            # wide on a big index is the cost-rule's brute-force territory
-            # anyway (operators/ann.py), so auto keeps the join plan and
-            # every remaining auto resolution below coincides with the
-            # pruning job the jvm path pays regardless — net added jobs
-            # from auto dispatch: zero.
-            impl = "jvm"
-    if impl in ("fused", "fastscan") and (
-        index_predicate is not None or allowed is not None
-    ):
-        # the fused/fastscan Arrow paths read the unfiltered model tables;
-        # filtering is a jvm-plan feature (multi-bit codes are supported —
-        # per-plane shift-add in _fused_shortlist)
-        impl = "jvm"
+            # that job alone is ~10% of the whole search. Every remaining
+            # auto resolution below coincides with the pruning job the jvm
+            # path pays regardless — net added jobs from auto dispatch: 0.
+            kernel, reason = "jvm", "nprobe covers over half the clusters"
+        else:
+            kernel = "arrow"  # tentative: choose_kernel settles it below
+    if kernel == "arrow" and (index_predicate is not None or allowed is not None):
+        # the Arrow plan reads the unfiltered model tables; filtering is a
+        # jvm-plan feature
+        kernel, reason = "jvm", "filtered search runs on the jvm plan"
     r = max(topk * overfetch, topk)
-    probes_materialized = False
     probed_clusters: list | None = None  # collected once, reused by pruning
-    if impl in ("fused", "fastscan"):
-        # Gate (round-2 verdict): the fused path materializes the whole
-        # probe table on the driver. Checkpoint once (executor blocks), then
-        # ONE groupBy(cluster_id).count() job (≤ n_clusters result rows)
-        # yields the probe row count, the probed-cluster list AND the
-        # queries-per-cluster geometry — round 12: this replaces the former
-        # count() + distinct().collect() pair, one job instead of two.
+    if kernel == "arrow":
+        # The Arrow plan materializes the whole probe table on the driver.
+        # Checkpoint once (executor blocks), then ONE
+        # groupBy(cluster_id).count() job (≤ n_clusters result rows) yields
+        # the probe row count, the probed-cluster list AND the
+        # queries-per-cluster geometry.
         probes = probes.localCheckpoint(eager=True)
-        probes_materialized = True
-        cluster_rows = (
-            probes.groupBy("cluster_id").count().collect()
-        )
+        cluster_rows = probes.groupBy("cluster_id").count().collect()
         probed_clusters = [row["cluster_id"] for row in cluster_rows]
         n_probe_rows = int(sum(row["count"] for row in cluster_rows))
-        # Driver-memory gate: the row cap (round-2) bounded the probe
-        # table the fused path materializes. An EXPLICIT caller cap stays a
-        # hard row limit (the round-2 contract; tests pin it); the default
-        # (None) is rows-OR-bytes aware (round 12): a probe row costs
-        # theta_log_dim × n_words packed-plane int64s plus ~32 B of scalars
-        # — at dim 64 that is ~64 B/row, 8× under the dim-256 geometry the
-        # 1M-row cap was tuned on — so a small-dim table with more rows but
-        # fewer bytes stays eligible.
-        per_probe_row_bytes = cfg.theta_log_dim * model.n_words * 8 + 32
-        if fused_max_probe_rows is not None:
-            over_cap = n_probe_rows > fused_max_probe_rows
-        else:
-            over_cap = (
-                n_probe_rows > 1_000_000
-                and n_probe_rows * per_probe_row_bytes > _FUSED_MAX_PROBE_BYTES
+        # a probe row is theta_log_dim × n_words packed-plane int64s plus
+        # ~32 B of scalars
+        probe_bytes = n_probe_rows * (cfg.theta_log_dim * model.n_words * 8 + 32)
+        if probe_bytes > _ARROW_MAX_PROBE_BYTES:
+            kernel, reason = "jvm", (
+                f"probe table {probe_bytes} B > cap {_ARROW_MAX_PROBE_BYTES} B"
             )
-        if over_cap:
-            impl = "jvm"
-        elif auto:
-            # Total-work floor (round 12): the Arrow kernels pay a fixed
-            # Python/Arrow round-trip per search plus per-group setup;
-            # below a few million pair-scores the jvm codegen join wins on
-            # fixed overhead regardless of geometry (sf0.1 headline
-            # geometry ≈ 0.9M pairs: jvm is the measured winner; 1M probe
-            # ≈ 31M pairs: fused wins; 10M probe ≈ 50M: fastscan wins
-            # 8–10×). avg cluster size uses model.n_rows when the builder
-            # recorded it, else n_clusters (exact under k ≈ √n sizing).
-            avg_cluster = (
-                model.n_rows / max(model.n_clusters, 1)
-                if model.n_rows
-                else float(model.n_clusters)
+        elif impl == "auto":
+            kernel, reason = choose_kernel(
+                model, n_probe_rows, len(probed_clusters)
             )
-            est_pairs = n_probe_rows * avg_cluster
-            if cfg.bits_per_dim > 1:
-                # value-GEMM fastscan amortizes at ~1 query/cluster (the
-                # 10M slice measurement above) — only the total-work floor
-                # applies
-                if est_pairs < _ARROW_MIN_PAIRS_MULTIBIT:
-                    impl = "jvm"
-            else:
-                q_per_cluster = n_probe_rows / max(len(probed_clusters), 1)
-                if (
-                    est_pairs < _ARROW_MIN_PAIRS
-                    or q_per_cluster < arrow_min_queries_per_cluster
-                ):
-                    impl = "jvm"
-        else:
-            if arrow_min_queries_per_cluster > 0:
-                # Geometry dispatch (measured at 10M x 256, 0.5% coverage,
-                # r9): the Arrow kernels pay a per-(cluster, batch)-group
-                # setup (pandas group materialization, LUT build/gather)
-                # that needs enough probing queries per cluster to amortize
-                # — at ~6.4 queries/cluster the jvm codegen join won 18.5 s
-                # vs fused 55.4 / fastscan 76.5; at 31 queries/cluster
-                # fused won 7.3 s vs jvm 12.5 (1M probe). Threshold 12 sits
-                # between the two measured regimes; kernel-pinning tests/
-                # benches pass 0 to force the Arrow path.
-                if n_probe_rows < arrow_min_queries_per_cluster * len(
-                    probed_clusters
-                ):
-                    impl = "jvm"
-        if impl == "fastscan" and (
-            model.dim_pad
-            * ((1 << cfg.theta_log_dim) - 1)
-            * ((1 << cfg.bits_per_dim) - 1)
-            >= 1 << 24
-        ):
-            # fastscan's float32 value GEMM is integer-exact only while
-            # partial sums stay under 2^24 (every product is bounded by
-            # (2^P−1)(2^B−1) — see value_gemm_asym); past the bound use
-            # the popcount kernel — same fused plan, same results
-            impl = "fused"
-        if impl == "fastscan" and (
-            n_probe_rows * 4 * model.dim_pad > fastscan_max_lut_bytes
-        ):
-            # the unpacked query values cost 4 bytes/dim per probe row
-            # (float32; vs 0.5 for the packed planes — 8×). They are
-            # built lazily executor-side with a 64 MB per-worker cache,
-            # so past this TOTAL byte budget most groups would rebuild
-            # them every batch — fall back to the popcount kernel,
-            # which shares every other property of the fused plan
-            impl = "fused"
-    if impl in ("fused", "fastscan"):
-        # Stages 5-6 fused in one Arrow pass (see _fused_shortlist); it
-        # collects the probe table itself and derives partition pruning
-        # from it, so no separate pruning job here. impl="fastscan" swaps
-        # the popcount estimator kernel for the unpacked-value GEMM
-        # (value_gemm_asym) — identical results (impl-equality test),
-        # faster on large clusters.
+    if metrics is not None:
+        metrics.kernel, metrics.kernel_reason = kernel, reason
+    if kernel == "arrow":
+        # Stages 5-6 in one Arrow pass (see _fused_shortlist); it collects
+        # the probe table itself and derives partition pruning from it, so
+        # no separate pruning job here.
         local = _fused_shortlist(
             model,
             probes,
             r,
             cfg.theta_log_dim,
             prune_partitions=prune_partitions,
-            kernel="fastscan" if impl == "fastscan" else "popcount",
         )
         if metrics is not None and metrics.observe_rough:
             local = local.observe(
@@ -959,9 +782,8 @@ def search(
             # both the pruning collect and the broadcast join below read the
             # blocks — previously the whole rotate/argpartition/quantize
             # stage ran twice per search.
-            if not probes_materialized:
-                probes = probes.localCheckpoint(eager=True)
             if probed_clusters is None:
+                probes = probes.localCheckpoint(eager=True)
                 probed_clusters = [
                     row.cluster_id
                     for row in probes.select("cluster_id").distinct().collect()
@@ -1057,15 +879,8 @@ def range_search(
         ]
         index = index.filter(F.col("cluster_id").isin(probed))
     probe_side = F.broadcast(probes) if broadcast_probes else probes
-    est = (
-        rough_distance_expr_multibit(
-            cfg.bits_per_dim, cfg.theta_log_dim, model.n_words, model.dim_pad
-        )
-        if cfg.bits_per_dim > 1
-        else rough_distance_expr(cfg.theta_log_dim, model.n_words)
-    )
     cand = index.join(probe_side, "cluster_id").select(
-        "query_id", "orig_id", est.alias("rough")
+        "query_id", "orig_id", rough_estimator_expr(model).alias("rough")
     )
     if rough_cutoff:
         cand = cand.filter(F.col("rough") <= F.lit(radius_sq + rough_margin))

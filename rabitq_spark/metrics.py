@@ -36,6 +36,12 @@ class SearchMetrics:
     # window/codegen interaction and measured free, so it has no flag.
     observe_rough: bool = True
     observe_precise: bool = True
+    # The rough kernel that ran ("jvm" | "arrow") and why it was chosen —
+    # set by search() (and search_adaptive(), for its last wave) from
+    # choose_kernel when the plan is built, so reading them costs no
+    # Spark job.
+    kernel: str | None = None
+    kernel_reason: str | None = None
 
     @property
     def rough_count(self) -> int:

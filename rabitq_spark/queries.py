@@ -305,16 +305,17 @@ def q_ann_ivf_earlystop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivf_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exhaustive IVF+RaBitQ search through the FASTSCAN kernel
-    (impl="fastscan", index/search.py::fastscan_asym): per-probe 4-bit
-    nibble LUTs scanned as one one-hot GEMM per Arrow batch — the Quick
-    ADC / FAISS-fastscan kernel family (the reference lineage's follow-up,
-    README.md:13; cf. the src/simd.rs runtime kernel dispatch). The kernel
-    produces the exact integer asymmetric dot of the popcount estimator
-    (unit-tested bit-identical), and the exhaustive configuration reranks
-    every row, so the output is bit-identical to brute-force knn_exact —
-    while still executing the full LUT-build → nibble-scan → shortlist
-    path."""
+    """Exhaustive IVF+RaBitQ search pinned to the Arrow rough kernel
+    (impl="arrow", index/search.py::value_gemm_asym): the query and base
+    codes are unpacked to their per-dim quantized values and the
+    estimator's integer term is one GEMM per (cluster, Arrow batch) — the
+    fastscan idea (Quick ADC / FAISS fastscan lineage, README.md:13; cf.
+    the src/simd.rs runtime kernel dispatch) taken to a single dense
+    product. The kernel produces the exact integer of the jvm plan's
+    popcount sum (unit-tested bit-identical), and the exhaustive
+    configuration reranks every row, so the output is bit-identical to
+    brute-force knn_exact — while still executing the full unpack → GEMM
+    → shortlist path. The registry name predates the kernel's rename."""
     from rabitq_spark.index import search
 
     model = _get_model(spark, sf_dir)
@@ -322,16 +323,15 @@ def q_ann_ivf_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
+    # an explicit impl="arrow" is always honoured (this entry ORACLE-CHECKS
+    # the Arrow path, so the auto dispatch must not route it to jvm)
     return search(
         model,
         queries,
         topk=_KNN_K,
         nprobe=model.n_clusters,
         overfetch=10**6,
-        impl="fastscan",
-        # pin the kernel: this entry ORACLE-CHECKS the fastscan path, so
-        # the geometry dispatch must not silently route it to jvm
-        arrow_min_queries_per_cluster=0,
+        impl="arrow",
     )
 
 
@@ -7561,7 +7561,7 @@ ORACLE_SQL: dict[str, str] = {
     "knn_exact": _SQL_KNN_EXACT,
     # exhaustive IVF+RaBitQ == exact brute force (see q_ann_ivf_exhaustive)
     "ann_ivf_exhaustive": _SQL_KNN_EXACT,
-    # exhaustive fastscan-kernel IVF == exact brute force (same argument:
+    # exhaustive Arrow-kernel IVF == exact brute force (same argument:
     # every row reranked exactly; the kernel only orders the shortlist)
     "ann_ivf_fastscan": _SQL_KNN_EXACT,
     # exhaustive multi-bit (bits_per_dim=2) == the same brute force

@@ -28,7 +28,10 @@ import os
 DIM = int(os.environ.get("PROBE_DIM", "64"))
 PROBE_DIV = int(os.environ.get("PROBE_DIV", "8"))
 NQ = int(os.environ.get("PROBE_NQ", "1000"))
+# rough kernel passed to search(impl=...): jvm | arrow | auto
 IMPL = os.environ.get("PROBE_IMPL", "jvm")
+if IMPL not in ("jvm", "arrow", "auto"):
+    raise SystemExit(f"PROBE_IMPL must be jvm, arrow or auto, got {IMPL!r}")
 K = 10
 
 

@@ -133,14 +133,16 @@ def test_adaptive_topk_larger_than_cluster(spark):
     assert (ad["neighbor_id"].values == ex["neighbor_id"].values).all()
 
 
-def test_adaptive_jvm_kernel_equals_popcount(spark, sf_dir):
+def test_adaptive_jvm_kernel_equals_arrow(spark, sf_dir):
     """The per-wave jvm scorer (codegen join) must produce frame-identical
-    results to the fused Arrow shortlist — same estimator, same trim."""
+    results to the Arrow shortlist — same estimator, same trim — and a
+    forced kernel must run in every wave."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.index import build_index, search_adaptive
+    from rabitq_spark.metrics import SearchMetrics
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
@@ -150,10 +152,16 @@ def test_adaptive_jvm_kernel_equals_popcount(spark, sf_dir):
     model = build_index(base, RaBitQConfig(n_clusters=8, nprobe=4, topk=5))
     model.index_df = model.index_df.cache()
     frames = {}
-    for k in ("popcount", "jvm"):
+    for k in ("arrow", "jvm"):
+        met, stats = SearchMetrics(), {}
         frames[k] = (
-            search_adaptive(model, queries, topk=5, overfetch=10**6, kernel=k)
+            search_adaptive(
+                model, queries, topk=5, overfetch=10**6, kernel=k,
+                stats=stats, metrics=met,
+            )
             .toPandas()
             .sort_values(["query_id", "rank"], ignore_index=True)
         )
-    pd.testing.assert_frame_equal(frames["jvm"], frames["popcount"], check_exact=True)
+        assert met.kernel == k
+        assert stats["wave_kernels"] == [k] * stats["waves"]
+    pd.testing.assert_frame_equal(frames["jvm"], frames["arrow"], check_exact=True)

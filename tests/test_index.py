@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from rabitq_spark.config import RaBitQConfig
 from rabitq_spark.index import RaBitQModel, build_index, search
 from rabitq_spark.index.search import _prepare_probes, rough_distance_expr
+from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.functions.vector import l2_squared
 from rabitq_spark.operators.knn import knn_exact
 
@@ -71,58 +72,98 @@ def test_estimator_is_probabilistic_lower_bound(spark, model_and_data):
     assert np.corrcoef(joined["rough"], joined["exact"])[0, 1] > 0.5
 
 
+def _search_sorted(model, queries, **kwargs):
+    met = SearchMetrics()
+    frame = search(model, queries, metrics=met, **kwargs).toPandas()
+    return frame.sort_values(["query_id", "rank"], ignore_index=True), met
+
+
 def test_fused_impl_equals_jvm(spark, model_and_data):
+    """1-bit codes: the Arrow plan (_fused_shortlist, float32 value GEMM)
+    reproduces the jvm codegen plan's frame exactly. 8 queries over 8
+    clusters sit under every auto floor, so the explicit impl="arrow" must
+    be honoured, not demoted."""
     model, base, queries = model_and_data
-    a = search(model, queries, impl="jvm").toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
-    )
-    b = search(
-        model, queries, impl="fused", arrow_min_queries_per_cluster=0
-    ).toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
-    )
+    a, met_a = _search_sorted(model, queries, impl="jvm")
+    b, met_b = _search_sorted(model, queries, impl="arrow")
+    assert met_a.kernel == "jvm"
+    assert met_b.kernel == "arrow", met_b.kernel_reason
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
-def test_fastscan_impl_equals_jvm(spark, model_and_data):
-    model, base, queries = model_and_data
-    a = search(model, queries, impl="jvm").toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
+def test_fastscan_impl_equals_jvm(spark):
+    """Past the float32 exactness bound: theta_log_dim 8 and 8-bit codes
+    at dim 320 give dim_pad·255·255 > 2^24, so the Arrow value GEMM runs
+    in float64 — and must still reproduce the jvm frame exactly."""
+    from rabitq_spark.index.search import value_gemm_dtype
+
+    dim, n = 320, 600
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((n, dim)).astype(np.float32)
+    base = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "vec": list(vecs)}),
+        "id bigint, vec array<float>",
     )
-    b = search(
-        model, queries, impl="fastscan", arrow_min_queries_per_cluster=0
-    ).toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
+    queries = base.filter(f"id < {NQ}").select(
+        F.col("id").alias("query_id"), F.col("vec").alias("qvec")
     )
+    cfg = RaBitQConfig(
+        n_clusters=8, nprobe=4, topk=K, overfetch=8, theta_log_dim=8,
+        bits_per_dim=8,
+    )
+    model = build_index(base, cfg)
+    assert value_gemm_dtype(model.dim_pad, 8, 8) is np.float64
+    a, met_a = _search_sorted(model, queries, impl="jvm")
+    b, met_b = _search_sorted(model, queries, impl="arrow")
+    assert met_a.kernel == "jvm"
+    assert met_b.kernel == "arrow", met_b.kernel_reason
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
 def test_fastscan_kernel_bit_identical_to_popcount():
-    """The packed-nibble-LUT GEMM kernel must produce the EXACT integer
-    asymmetric dot the plane-wise popcount kernel produces, for every
-    (theta_log_dim, n_words) shape the probe table can carry — the
-    float32 one-hot GEMM is provably exact below 2^24 (see fastscan_asym)."""
+    """The Arrow kernel (value GEMM over unpacked plane values) must give
+    the EXACT integer of the plane-wise popcount definition for every
+    (query planes, base planes, words) shape the probe table and index
+    can carry — float32 below the 2^24 partial-sum bound, float64 above."""
+    from popcount_ref import gemm_cross, popcount_cross
+
     from rabitq_spark.index.search import (
-        _popcount64,
-        fastscan_asym,
-        fastscan_luts,
-        fastscan_nibbles,
+        unpack_plane_values,
+        value_gemm_asym,
+        value_gemm_dtype,
     )
 
     rng = np.random.default_rng(7)
-    for theta_log_dim, n_words, npairs, m in [(4, 1, 5, 97), (4, 4, 3, 64),
-                                              (2, 2, 7, 33), (4, 16, 2, 50)]:
-        planes = rng.integers(
-            -(2**63), 2**63, size=(npairs, theta_log_dim, n_words), dtype=np.int64
-        )
-        codes = rng.integers(-(2**63), 2**63, size=(m, n_words), dtype=np.int64)
-        ref = np.zeros((npairs, m), dtype=np.int64)
-        for p in range(theta_log_dim):
-            anded = planes[:, p, None, :] & codes[None, :, :]
-            ref += _popcount64(anded).sum(axis=-1) << p
-        got = fastscan_asym(fastscan_luts(planes, theta_log_dim),
-                            fastscan_nibbles(codes))
-        assert np.array_equal(ref, got), (theta_log_dim, n_words)
+    below = [(4, 1, 1, 5, 97), (4, 1, 4, 3, 64), (2, 1, 2, 7, 33),
+             (4, 1, 16, 2, 50), (4, 2, 4, 5, 40), (4, 4, 4, 3, 30)]
+    above = [(8, 8, 5, 3, 20)]
+    for shapes, want in ((below, np.float32), (above, np.float64)):
+        for theta_log_dim, bits, n_words, npairs, m in shapes:
+            assert value_gemm_dtype(n_words * 64, theta_log_dim, bits) is want
+            planes = rng.integers(
+                -(2**63), 2**63, size=(npairs, theta_log_dim, n_words),
+                dtype=np.int64,
+            )
+            codes = rng.integers(
+                -(2**63), 2**63, size=(m, bits, n_words), dtype=np.int64
+            )
+            assert np.array_equal(
+                popcount_cross(planes, codes), gemm_cross(planes, codes)
+            ), (theta_log_dim, bits, n_words)
+
+    # the bound is real: all-ones query planes against all-ones codes with
+    # one cleared bit give the odd total 320·255·255 − 1 > 2^24, which
+    # float32 cannot represent but the float64 GEMM the engine picks can
+    planes = np.full((1, 8, 5), -1, dtype=np.int64)
+    codes = np.full((1, 8, 5), -1, dtype=np.int64)
+    codes[0, 0, 0] = -2
+    ref = popcount_cross(planes, codes)
+    assert ref[0, 0] == 320 * 255 * 255 - 255 and ref[0, 0] % 2 == 1
+    assert np.array_equal(gemm_cross(planes, codes), ref)
+    f32 = value_gemm_asym(
+        unpack_plane_values(planes, 8), unpack_plane_values(codes, 8)
+    )
+    assert not np.array_equal(f32, ref)
 
 
 def test_save_load_roundtrip(spark, model_and_data, tmp_path):
@@ -213,22 +254,45 @@ def test_index_schema_and_codes(spark, model_and_data):
 
 
 def test_fused_gate_falls_back_to_jvm(spark, model_and_data, monkeypatch):
-    """Past fused_max_probe_rows the fused impl must NOT collect the probe
-    table (round-2 verdict: ungated toPandas): it falls back to the jvm join
-    path and still returns identical results."""
+    """Past the probe-table byte cap an explicit impl="arrow" must NOT
+    collect the probe table to the driver: it falls back to the jvm join
+    path, reports why, and returns identical results."""
     import importlib
 
     search_mod = importlib.import_module("rabitq_spark.index.search")
     model, base, queries = model_and_data
 
     def boom(*args, **kwargs):
-        raise AssertionError("fused shortlist must not run past the probe cap")
+        raise AssertionError("Arrow shortlist must not run past the probe cap")
 
     monkeypatch.setattr(search_mod, "_fused_shortlist", boom)
-    gated = search_mod.search(
-        model, queries, topk=K, impl="fused", fused_max_probe_rows=1
-    ).toPandas().sort_values(["query_id", "rank"], ignore_index=True)
-    jvm = search_mod.search(model, queries, topk=K).toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
-    )
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 1)
+    gated, met = _search_sorted(model, queries, topk=K, impl="arrow")
+    assert met.kernel == "jvm" and "cap" in met.kernel_reason
+    jvm, _ = _search_sorted(model, queries, topk=K)
     pd.testing.assert_frame_equal(gated, jvm, check_exact=True)
+
+
+def test_choose_kernel_floors():
+    """The one auto-dispatch rule: 1-bit codes need both the pair-volume
+    floor and 12 probing queries per cluster; multi-bit codes only their
+    lower pair floor. Pure geometry — no Spark."""
+    from types import SimpleNamespace
+
+    from rabitq_spark.index.search import choose_kernel
+
+    def model(bits, n_rows=1_000_000, n_clusters=1000):
+        return SimpleNamespace(
+            n_rows=n_rows, n_clusters=n_clusters,
+            config=RaBitQConfig(bits_per_dim=bits),
+        )
+
+    # 1-bit, avg cluster 1000 rows: 8M pairs needs 8000 probe rows
+    assert choose_kernel(model(1), 7_999, 10)[0] == "jvm"
+    assert choose_kernel(model(1), 8_000, 10)[0] == "arrow"
+    assert choose_kernel(model(1), 12_000, 1000)[0] == "arrow"
+    kernel, reason = choose_kernel(model(1), 11_999, 1000)
+    assert kernel == "jvm" and "queries/cluster" in reason
+    # multi-bit: 2M pairs, queries per cluster ignored
+    assert choose_kernel(model(4), 1_999, 1000)[0] == "jvm"
+    assert choose_kernel(model(4), 2_000, 1000)[0] == "arrow"

@@ -23,6 +23,7 @@ from rabitq_spark.index.search import (
     _prepare_probes,
     rough_distance_expr_multibit,
 )
+from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.knn import knn_exact
 
 K = 5
@@ -178,33 +179,54 @@ def test_multibit_save_load_roundtrip(spark, data, model2, tmp_path):
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
-@pytest.mark.parametrize("impl", ["fused", "fastscan"])
-def test_multibit_arrow_impls_equal_jvm(spark, data, model2, impl):
-    """Multi-bit codes through the Arrow kernels: the symmetric cross-plane
-    estimator factors into per-base-plane 1-bit scans (shift-add), so the
-    fused popcount AND fastscan nibble-LUT paths must reproduce the jvm
-    plan's results exactly."""
+@pytest.fixture(scope="module")
+def model4(spark, data):
+    base, _ = data
+    cfg = RaBitQConfig(n_clusters=8, nprobe=4, topk=K, overfetch=8, bits_per_dim=4)
+    m = build_index(base, cfg)
+    m.index_df = m.index_df.cache()
+    return m
+
+
+def _arrow_search(model, queries, **kwargs):
+    """search(impl="arrow") sorted by (query_id, rank), asserting the
+    Arrow kernel actually ran: 8 queries over 8 clusters sit under every
+    auto floor, so a demotion to the jvm join would otherwise compare
+    jvm with itself."""
+    met = SearchMetrics()
+    frame = search(model, queries, impl="arrow", metrics=met, **kwargs)
+    frame = frame.toPandas().sort_values(["query_id", "rank"], ignore_index=True)
+    assert met.kernel == "arrow", met.kernel_reason
+    return frame
+
+
+@pytest.mark.parametrize("bits", [2, 4])
+def test_multibit_arrow_impls_equal_jvm(spark, data, request, bits):
+    """Multi-bit codes through the Arrow kernel: the symmetric cross-plane
+    estimator's integer term is one value GEMM of the unpacked query and
+    base values, so the Arrow plan must reproduce the jvm plan's results
+    exactly."""
     base, queries = data
-    a = search(model2, queries, impl="jvm").toPandas().sort_values(
+    model = request.getfixturevalue(f"model{bits}")
+    a = search(model, queries, impl="jvm").toPandas().sort_values(
         ["query_id", "rank"], ignore_index=True
     )
-    b = search(model2, queries, impl=impl).toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
+    pd.testing.assert_frame_equal(
+        a, _arrow_search(model, queries), check_exact=True
     )
-    pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
-@pytest.mark.parametrize("impl", ["fused", "fastscan"])
-def test_multibit_arrow_exhaustive_equals_exact(spark, data, model2, impl):
-    """Exhaustive multi-bit search through the Arrow kernels is bit-exact
+@pytest.mark.parametrize("bits", [2, 4])
+def test_multibit_arrow_exhaustive_equals_exact(spark, data, request, bits):
+    """Exhaustive multi-bit search through the Arrow kernel is bit-exact
     to brute force — the strongest cross-impl invariant (rerank covers
     every row regardless of how the shortlist was ordered)."""
     base, queries = data
+    model = request.getfixturevalue(f"model{bits}")
     exact = knn_exact(queries, base, K).toPandas().sort_values(
         ["query_id", "rank"], ignore_index=True
     )
-    exh = search(
-        model2, queries, topk=K, nprobe=model2.n_clusters, overfetch=10**6,
-        impl=impl,
-    ).toPandas().sort_values(["query_id", "rank"], ignore_index=True)
+    exh = _arrow_search(
+        model, queries, topk=K, nprobe=model.n_clusters, overfetch=10**6
+    )
     pd.testing.assert_frame_equal(exh, exact, check_exact=True)

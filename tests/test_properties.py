@@ -313,33 +313,24 @@ def test_asof_all_directions_nulls_tolerance_match_pandas(spark, seed):
 
 @settings(max_examples=60, deadline=None)
 @given(
-    st.integers(1, 4),   # theta_log_dim
+    st.integers(1, 8),   # theta_log_dim (query planes)
+    st.integers(1, 8),   # bits_per_dim (base planes)
     st.integers(1, 8),   # n_words (dim_pad = 64·w)
     st.integers(1, 40),  # npairs
     st.integers(1, 300), # m
     st.integers(0, 2**32),
 )
-def test_fastscan_asym_equals_popcount_any_shape(p, w, npairs, m, seed):
-    """Property: the fastscan nibble-LUT GEMM kernel computes the exact
-    integer asymmetric dot of the plane-wise popcount kernel for EVERY
-    (planes, words, pairs, rows) geometry, not just the shapes the index
-    happens to use — the float32 one-hot GEMM is exact below 2^24."""
+def test_fastscan_asym_equals_popcount_any_shape(p, b, w, npairs, m, seed):
+    """Property: the Arrow value-GEMM kernel computes the exact integer
+    cross term of the plane-wise popcount definition for EVERY (query
+    planes, base planes, words, pairs, rows) geometry, not just the shapes
+    the index happens to use — in float32 below the 2^24 partial-sum
+    bound and float64 above it, as the engine picks."""
     import numpy as np
 
-    from rabitq_spark.index.search import (
-        _popcount64,
-        fastscan_asym,
-        fastscan_luts,
-        fastscan_nibbles,
-    )
+    from popcount_ref import gemm_cross, popcount_cross
 
     rng = np.random.default_rng(seed)
     planes = rng.integers(-(2**63), 2**63, size=(npairs, p, w), dtype=np.int64)
-    codes = rng.integers(-(2**63), 2**63, size=(m, w), dtype=np.int64)
-    ref = np.zeros((npairs, m), dtype=np.int64)
-    for j in range(p):
-        ref += _popcount64(planes[:, j, None, :] & codes[None, :, :]).sum(
-            axis=-1
-        ) << j
-    got = fastscan_asym(fastscan_luts(planes, p), fastscan_nibbles(codes))
-    assert np.array_equal(ref, got)
+    codes = rng.integers(-(2**63), 2**63, size=(m, b, w), dtype=np.int64)
+    assert np.array_equal(popcount_cross(planes, codes), gemm_cross(planes, codes))

@@ -75,17 +75,20 @@ def test_gather_missing_id_raises(stored_model):
 
 def test_store_search_bitexact_vs_join(spark, gappy_base, stored_model):
     queries = _queries(spark, gappy_base)
-    # exhaustive AND approximate configs, jvm and fused impls
+    # exhaustive AND approximate configs, jvm and Arrow kernels
     for kwargs in (
         dict(nprobe=stored_model.n_clusters, overfetch=10**6),
         dict(),
-        dict(impl="fused", arrow_min_queries_per_cluster=0),
+        dict(impl="arrow"),
     ):
+        met = SearchMetrics()
         with_store = (
-            search(stored_model, queries, topk=K, **kwargs)
+            search(stored_model, queries, topk=K, metrics=met, **kwargs)
             .toPandas()
             .sort_values(["query_id", "rank"], ignore_index=True)
         )
+        if kwargs.get("impl") == "arrow":
+            assert met.kernel == "arrow", met.kernel_reason
         stored_model.vec_store, saved = None, stored_model.vec_store
         try:
             join_plan = (
