@@ -63,34 +63,12 @@ def shingles_from_tokens(w: Column | str, n: int = 3) -> Column:
     )
 
 
-def minhash_band_key(shingles: Column | str, band: int) -> Column:
-    """One minhash value = min over shingles of md5('<band>|' + s).
-
-    md5 hex strings order identically in any engine; banding several of
-    these keys gives LSH blocking whose false-negative rate falls
-    exponentially in the band count.
-    """
-    sh = _c(shingles)
-    return F.array_min(
-        F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{band}|"), s)))
-    )
-
-
 def band_xor_constant(band: int) -> int:
     """Deterministic 60-bit xor-mix constant for band `band` (derived from
     md5 so any engine can reproduce it as a literal)."""
     import hashlib
 
     return int(hashlib.md5(f"band{band}".encode()).hexdigest()[:15], 16)
-
-
-def shingle_hashes60(shingles: Column | str) -> Column:
-    """Hash each shingle ONCE to a 60-bit integer (md5-based, cross-engine).
-
-    Banded minhash keys are then cheap integer mixes of this array —
-    md5 cost is paid once per shingle instead of once per (shingle, band).
-    """
-    return F.transform(_c(shingles), token_hash60)
 
 
 _MASK60 = (1 << 60) - 1
@@ -132,23 +110,18 @@ def _combine_hashes(hs: list) -> Column:
     return out.bitwiseAND(F.lit(_MASK60).cast("bigint"))
 
 
-def xor_minhash_key(hashes: Column | str, band: int) -> Column:
-    """Minhash for one band: min over (hash XOR band-constant) — an xor-mix
-    min-wise family; the per-band constant reorders the mins independently.
-    Pure integer ops (no per-band md5)."""
-    c = F.lit(band_xor_constant(band)).cast("bigint")
-    return F.array_min(F.transform(_c(hashes), lambda h: h.bitwiseXOR(c)))
-
-
 def banded_minhash_key(
     hashes: Column | str, band: int, rows_per_band: int = 1
 ) -> Column:
     """AND-amplified LSH band key: the shift-xor combination of
-    `rows_per_band` independent xor-minhashes. Collision probability per
-    band is J^r instead of J — essential when typical PAIRWISE similarity
-    is moderate (e.g. char-5-grams of a shared-vocab corpus measured 10%
-    single-min collisions at 5k docs → 1.3M candidate pairs per band;
-    r=4 measured 622). rows_per_band=1 degrades to xor_minhash_key."""
+    `rows_per_band` independent xor-minhashes, each the min over
+    (hash XOR band-constant) — an xor-mix min-wise family whose per-band
+    constant reorders the mins independently, pure integer ops (no
+    per-band md5). rows_per_band=1 is one such minhash. Collision
+    probability per band is J^r instead of J — essential when typical
+    PAIRWISE similarity is moderate (e.g. char-5-grams of a shared-vocab
+    corpus measured 10% single-min collisions at 5k docs → 1.3M candidate
+    pairs per band; r=4 measured 622)."""
     h = _c(hashes)
 
     def xor_with(const):

@@ -5,11 +5,16 @@ Four families, all shuffle-conscious:
 
 * exact     — hash-groupBy on a canonical fingerprint; one shuffle on the
               fingerprint, min-id wins.
-* minhash   — shingle → banded minhash keys → equi-join blocking → exact
-              Jaccard verify on candidates only. The blocking join is the
-              only quadratic-risk step and is keyed, so it shuffles by band
-              key and scales horizontally; false-negative rate decays
-              exponentially with band count.
+* minhash   — ONE pipeline of private stages: shingle hashes → banded
+              minhash keys → (band, key) equi-join candidates → exact
+              Jaccard verify on candidates only. Four callers run it: the
+              self-join (neardup_minhash_pairs, and neardup_ngram_pairs
+              from its own char-gram hashes), the cross-join
+              (neardup_minhash_pairs_cross), NearDupState, and the
+              admission stream (streaming/neardup_stream.py). The blocking
+              join is the only quadratic-risk step and is keyed, so it
+              shuffles by band key and scales horizontally; false-negative
+              rate decays exponentially with band count.
 * simhash   — 60-bit fingerprint; band the bits into (max_hamming + 1)
               segments so the pigeonhole principle makes the banded
               candidate join EXACTLY equivalent to the all-pairs hamming
@@ -29,7 +34,6 @@ from rabitq_spark.functions.text import (
     hamming60,
     jaccard,
     simhash60,
-    word_shingles,
 )
 from rabitq_spark.functions.vector import cosine_similarity
 
@@ -193,15 +197,90 @@ def _banded_candidates(keys_df, n_bands: int, carry: list[str]):
     return out
 
 
-def _banded_candidates_exploded(keys_df, n_bands: int, min_band_hits: int = 1):
-    """Candidate pairs via explode + ONE equi-join on (band, key) + distinct.
+# -- the MinHash pipeline ------------------------------------------------
+# hash → band keys → candidates → verify, run by every MinHash caller (see
+# the module docstring); each caller owns its cache scope and id ordering.
+
+
+def _shingle_hashes(
+    docs: DataFrame, id_col: str, text_col: str, shingle_words: int, scope: list
+) -> DataFrame:
+    """Hashing stage: a materialized (doc_id, hs) cache, hs the non-empty
+    set of 60-bit word-shingle hashes.
+
+    One md5 per word, no shingle strings: shingle hashes combine per-word
+    hashes, and Jaccard over them equals the string Jaccard up to 2^-60
+    collision probability. The word-hash array must be materialized before
+    the combiner reads it — inlined, CollapseProject re-evaluates the md5
+    transform once per shingle element (measured 45 s vs 1 s at 5k docs).
+    Its one consumer is the shingle-hash cache, so it is dropped as soon as
+    that cache is built: at 10M docs the word-hash arrays are ~3 GB of
+    executor storage that would otherwise stay pinned across the whole
+    banding + verify tail. It is registered in `scope` first, so
+    release_caches() drains it even if the count fails.
+    """
+    from rabitq_spark.functions.text import combine_word_hashes, word_hashes
+
+    wh = _scoped_cache(
+        _widen(docs).select(
+            F.col(id_col).alias("doc_id"), word_hashes(F.col(text_col)).alias("h")
+        ),
+        scope,
+    )
+    # a doc has shingles iff it has >= shingle_words words; a filter on
+    # size(hs) would be pushed below the projection and run the combiner
+    # twice per row
+    hashed = _scoped_cache(
+        wh.filter(F.size("h") >= shingle_words).select(
+            "doc_id", combine_word_hashes("h", shingle_words).alias("hs")
+        ),
+        scope,
+    )
+    hashed.count()
+    wh.unpersist(False)
+    return hashed
+
+
+def _band_keys(
+    hashed: DataFrame, n_bands: int, rows_per_band: int = 1
+) -> DataFrame:
+    """Key stage: long-form (doc_id, b, k) rows, one per band, k the
+    banded xor-minhash key of hs. rows_per_band > 1 AND-amplifies each band
+    (collision ~ J^r) for corpora whose baseline pairwise similarity would
+    otherwise flood the candidate join. This is also NearDupState's
+    on-disk `keys` schema."""
+    from rabitq_spark.functions.text import banded_minhash_key
+
+    wide = hashed.select(
+        "doc_id",
+        *[
+            banded_minhash_key("hs", b, rows_per_band).alias(f"k{b}")
+            for b in range(n_bands)
+        ],
+    )
+    return wide.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("b"), F.col(f"k{b}").alias("k"))
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("doc_id", F.col("bk.b").alias("b"), F.col("bk.k").alias("k"))
+
+
+def _self_candidates(keys: DataFrame, min_band_hits: int = 1) -> DataFrame:
+    """Self-candidate stage: (id_a < id_b) pairs sharing a band key, via
+    ONE equi-join of the long-form keys on (b, k) + distinct.
 
     Fewer stages than the per-band union form and a single shuffle keyed by
-    (band, key) — the right plan when the candidate set is small relative
-    to the corpus (minhash/ngram tails, where AND-amplified bands keep
-    collisions rare). The union form (_banded_candidates) stays for
-    simhash, whose pigeonhole bands intentionally admit large candidate
-    sets that would make the distinct an expensive extra shuffle.
+    (b, k) — the right plan when the candidate set is small relative to the
+    corpus (minhash/ngram tails, where AND-amplified bands keep collisions
+    rare). The union form (_banded_candidates) stays for simhash, whose
+    pigeonhole bands intentionally admit large candidate sets that would
+    make the distinct an expensive extra shuffle.
 
     min_band_hits > 1 OR-thresholds the bands (an (r, b, t)-LSH in the
     Mining-of-Massive-Datasets sense): a pair must collide in >= t of the
@@ -215,20 +294,7 @@ def _banded_candidates_exploded(keys_df, n_bands: int, min_band_hits: int = 1):
     P(Binomial(b, J^r) >= t); at r=5, b=12, t=2 that is 0.991 -> 0.944
     at J = 0.8 exactly and >= 0.9998 at J >= 0.9.
     """
-    kv = keys_df.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"), F.col(f"k{b}").alias("k")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.b").alias("b"), F.col("bk.k").alias("k"))
-    l, r = kv.alias("l"), kv.alias("r")
+    l, r = keys.alias("l"), keys.alias("r")
     matched = l.join(
         r,
         (F.col("l.b") == F.col("r.b"))
@@ -247,13 +313,47 @@ def _banded_candidates_exploded(keys_df, n_bands: int, min_band_hits: int = 1):
     )
 
 
-def _shingle_table(
-    docs: DataFrame, id_col: str, text_col: str, shingle_words: int
-) -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        word_shingles(F.col(text_col), shingle_words).alias("shingles"),
+def _cross_candidates(keys_a: DataFrame, keys_b: DataFrame) -> DataFrame:
+    """Cross-candidate stage: (id_a from keys_a, id_b from keys_b) pairs
+    sharing a band key, each once — one equi-join on (b, k). A broadcast
+    hint on either key table carries through to the join."""
+    return (
+        keys_a.select(F.col("doc_id").alias("id_a"), "b", "k")
+        .join(keys_b.select(F.col("doc_id").alias("id_b"), "b", "k"), ["b", "k"])
+        .select("id_a", "id_b")
+        .distinct()
     )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    hashes_a: DataFrame,
+    hashes_b: DataFrame,
+    threshold: float,
+    *,
+    spread: bool,
+) -> DataFrame:
+    """Verify stage: candidate (id_a, id_b) pairs joined to their hash sets
+    (id_a's from hashes_a, id_b's from hashes_b) → (id_a, id_b, jaccard),
+    jaccard >= threshold. Only candidate pairs' sets ever meet — never
+    all-pairs.
+
+    The Jaccard is CPU-bound per candidate (array_intersect builds a hash
+    set per row — measured ~75 µs/pair at 200-element arrays) but
+    byte-small, so `spread` repartitions the joined pairs past AQE's
+    size-based coalescing to keep a corpus-sized candidate set scoring on
+    every core (same rule as the embedding near-dup verify, where it
+    measured 32 -> 13 s). Batch-sized callers, and joins whose streaming
+    side is already wide, pass spread=False rather than pay the extra
+    shuffle."""
+    sa = hashes_a.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"))
+    sb = hashes_b.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("hs_b"))
+    pairs = cand.join(sa, "id_a").join(sb, "id_b")
+    if spread:
+        pairs = pairs.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    return pairs.select(
+        "id_a", "id_b", jaccard("hs_a", "hs_b").alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def neardup_minhash_pairs(
@@ -266,82 +366,18 @@ def neardup_minhash_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
 
-    Plan: per-doc shingle set (codegen) → explode n_bands minhash keys →
+    Plan: per-doc shingle-hash set (codegen) → explode n_bands minhash keys →
     self-equi-join on (band, key) for candidates → exact Jaccard verify.
     Candidates shuffle by band key; the verify join brings only candidate
     pairs' shingle sets together — never all-pairs.
     """
-    from rabitq_spark.functions.text import (
-        combine_word_hashes,
-        word_hashes,
-        xor_minhash_key,
-    )
-
-    # everything (banding AND verification) runs on 60-bit shingle hashes
-    # built by combining per-word hashes — one md5 per word, no shingle
-    # strings; Jaccard over hashes equals the string Jaccard up to 2^-60
-    # collision probability. The word-hash array is cached so the shingle
-    # combiner cannot inline (and re-evaluate) the md5 transform per element.
     scope = _begin_scope("minhash")
-    wh = _widen(docs).select(
-        F.col(id_col).alias("doc_id"), word_hashes(F.col(text_col)).alias("h")
-    ).cache()
-    hashed = _scoped_cache(
-        wh.select("doc_id", combine_word_hashes("h", shingle_words).alias("hs")),
-        scope,
-    )
-    # wh has exactly one consumer (hashed); materialize through the
-    # barrier NOW and drop it immediately. At 10M docs the word-hash
-    # arrays are ~3 GB of executor storage that round 10 measured pinned
-    # across the whole banding + verify tail (one of three simultaneous
-    # ~10M-row array caches behind the super-linear dedup10m slope).
-    hashed.count()
-    wh.unpersist(False)
-    return _banded_jaccard_pairs(hashed, n_bands, threshold, scope=scope)
-
-
-def _banded_jaccard_pairs(
-    hashed: DataFrame,
-    n_bands: int,
-    threshold: float,
-    rows_per_band: int = 1,
-    scope: list | None = None,
-    min_band_hits: int = 1,
-) -> DataFrame:
-    """Shared LSH tail: banded xor-minhash keys → candidate equi-joins →
-    exact Jaccard verify on the hash sets. `hashed` must be a materialized
-    (cached) (doc_id, hs array<bigint>) projection. rows_per_band > 1
-    AND-amplifies each band (collision ~ J^r) for corpora whose baseline
-    pairwise similarity would otherwise flood the candidate join."""
-    from rabitq_spark.functions.text import banded_minhash_key, jaccard
-
-    keys = hashed.filter(F.size("hs") > 0).select(
-        "doc_id",
-        *[
-            banded_minhash_key("hs", b, rows_per_band).alias(f"k{b}")
-            for b in range(n_bands)
-        ],
-    )
-    if scope is not None:
-        # the banded self-join references the key table twice; without a
-        # barrier each side recomputes all n_bands×r array-min transforms
-        keys = _scoped_cache(keys, scope)
-    cand = _banded_candidates_exploded(keys, n_bands, min_band_hits)
-    sa = hashed.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"))
-    sb = hashed.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("hs_b"))
-    # the Jaccard verify is CPU-bound per candidate (array_intersect builds
-    # a hash set per row — measured ~75 µs/pair at 200-element arrays) but
-    # byte-small, so repartition past AQE's size-based coalescing to keep a
-    # large candidate set scoring on every core (no effect at sf0.1 where
-    # the verify already runs wide; guards the sf1.0+ shapes — same rule as
-    # the embedding near-dup verify, where it measured 32 -> 13 s)
-    par = hashed.sparkSession.sparkContext.defaultParallelism
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .repartition(par)
-        .select("id_a", "id_b", jaccard("hs_a", "hs_b").alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    hashed = _shingle_hashes(docs, id_col, text_col, shingle_words, scope)
+    # the self-join reads the key table twice; without a barrier each side
+    # recomputes all n_bands×r array-min transforms
+    keys = _scoped_cache(_band_keys(hashed, n_bands), scope)
+    return _jaccard_verify(
+        _self_candidates(keys), hashed, hashed, threshold, spread=True
     )
 
 
@@ -365,73 +401,11 @@ def neardup_minhash_pairs_cross(
     eval set), its exploded key table broadcasts and the big side never
     shuffles at all (AQE decides).
     """
-    from rabitq_spark.functions.text import (
-        banded_minhash_key,
-        combine_word_hashes,
-        jaccard,
-        word_hashes,
-    )
-
     scope = _begin_scope("minhash_cross")
-
-    def hashed(docs: DataFrame) -> DataFrame:
-        wh = _scoped_cache(
-            docs.select(
-                F.col(id_col).alias("doc_id"),
-                word_hashes(F.col(text_col)).alias("h"),
-            ),
-            scope,
-        )
-        return _scoped_cache(
-            wh.select(
-                "doc_id", combine_word_hashes("h", shingle_words).alias("hs")
-            ).filter(F.size("hs") > 0),
-            scope,
-        )
-
-    ha, hb = hashed(docs_a), hashed(docs_b)
-
-    def keyed(h: DataFrame, side: str) -> DataFrame:
-        keys = _scoped_cache(
-            h.select(
-                "doc_id",
-                *[
-                    banded_minhash_key("hs", b).alias(f"k{b}")
-                    for b in range(n_bands)
-                ],
-            ),
-            scope,
-        )
-        return keys.select(
-            F.col("doc_id").alias(f"id_{side}"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("b"), F.col(f"k{b}").alias("k")
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            f"id_{side}", F.col("bk.b").alias("b"), F.col("bk.k").alias("k")
-        )
-
-    cand = (
-        keyed(ha, "a")
-        .join(keyed(hb, "b"), ["b", "k"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = ha.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"))
-    sb = hb.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("hs_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", jaccard("hs_a", "hs_b").alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    ha = _shingle_hashes(docs_a, id_col, text_col, shingle_words, scope)
+    hb = _shingle_hashes(docs_b, id_col, text_col, shingle_words, scope)
+    cand = _cross_candidates(_band_keys(ha, n_bands), _band_keys(hb, n_bands))
+    return _jaccard_verify(cand, ha, hb, threshold, spread=True)
 
 
 def neardup_ngram_pairs(
@@ -455,7 +429,7 @@ def neardup_ngram_pairs(
     ~20 µs/doc each).
 
     min_band_hits=2 additionally OR-thresholds the bands (see
-    _banded_candidates_exploded): single-band noise collisions at the
+    _self_candidates): single-band noise collisions at the
     corpus's ~0.2 baseline Jaccard grow QUADRATICALLY with corpus size
     (measured 2.8M candidates at 50k docs -> 22.7M at 150k, 8x at 3x
     rows — the round-7 sf3 slope-gate failure), while every true >= 0.8
@@ -489,19 +463,18 @@ def neardup_ngram_pairs(
     codes = _scoped_cache(
         lowered.select("doc_id", char_codes(F.col("lt")).alias("cs")), scope
     )
+    # a text has grams iff it has >= n_chars chars (filter before the
+    # projection, as in _shingle_hashes)
     hashed = _scoped_cache(
-        codes.select(
+        codes.filter(F.size("cs") >= n_chars).select(
             "doc_id", rolling_gram_hashes(F.col("cs"), n_chars).alias("hs")
         ),
         scope,
     )
-    return _banded_jaccard_pairs(
-        hashed,
-        n_bands,
-        threshold,
-        rows_per_band,
-        scope=scope,
-        min_band_hits=min_band_hits,
+    keys = _scoped_cache(_band_keys(hashed, n_bands, rows_per_band), scope)
+    return _jaccard_verify(
+        _self_candidates(keys, min_band_hits), hashed, hashed, threshold,
+        spread=True,
     )
 
 
@@ -582,6 +555,67 @@ def simhash_pairs(
     )
 
 
+# Largest GEMM screen block, in matrix entries: 32M float64 ≈ 256 MB per
+# block, whatever the Arrow batch and the broadcast side's sizes. Callers
+# read it on the driver and pass it into their Python workers, so the value
+# in effect on the driver is the one the workers use.
+_COSINE_BLOCK_ENTRIES = 33_554_432
+
+
+def _seq_norms(mat):
+    """sqrt of the left-to-right running sum of squares — the exact order
+    l2_norm's fold (and the oracle's list_reduce) uses."""
+    import numpy as np
+
+    acc = np.zeros(len(mat))
+    for j in range(mat.shape[1]):
+        acc = acc + mat[:, j] * mat[:, j]
+    return np.sqrt(acc)
+
+
+def _cosine_pairs(ids_a, mat_a, ids_b, mat_b, threshold, max_entries, keep=None):
+    """Yield (ids_a, ids_b, cosine) arrays, one triple per block, for the
+    row pairs of mat_a × mat_b whose cosine is >= threshold — bit-identical
+    to the Column fold / DuckDB list_reduce cosine. Two phases per block:
+
+    screen — a BLAS GEMM keeps pairs whose fast cosine clears
+    threshold − 1e-6 (margin ≫ GEMM rounding error, so no qualifying pair
+    can be missed). mat_a is cut into row blocks so the cosine matrix never
+    exceeds `max_entries`;
+    emit — survivors get the EXACT cosine, reproduced in the fold's
+    left-to-right IEEE order by a per-dimension vectorized accumulation
+    (acc += a[:,j] * b[:,j]). This replaced a join-back + F.aggregate
+    verify stage: higher-order folds are interpreted (not codegen), and at
+    181k candidates (sf1.0, threshold 0.4) that stage alone measured ~13 s.
+
+    `keep(ids_a, ids_b) -> bool mask`, when given, drops screened pairs
+    before the exact emit (the self-join's id_a < id_b)."""
+    import numpy as np
+
+    norms_a = np.linalg.norm(mat_a, axis=1)
+    norms_b = np.linalg.norm(mat_b, axis=1)
+    safe_a = np.where(norms_a == 0.0, 1.0, norms_a)
+    safe_b = np.where(norms_b == 0.0, 1.0, norms_b)
+    seq_a, seq_b = _seq_norms(mat_a), _seq_norms(mat_b)
+    block = max(1, max_entries // max(len(ids_b), 1))
+    for lo in range(0, len(ids_a), block):
+        hi = min(lo + block, len(ids_a))
+        cos = (mat_a[lo:hi] @ mat_b.T) / safe_a[lo:hi, None] / safe_b[None, :]
+        li, ri = np.nonzero(cos >= threshold - 1e-6)
+        li = lo + li
+        if keep is not None:
+            mask = keep(ids_a[li], ids_b[ri])
+            li, ri = li[mask], ri[mask]
+        va, vb = mat_a[li], mat_b[ri]
+        acc = np.zeros(len(li))
+        for j in range(mat_a.shape[1]):
+            acc = acc + va[:, j] * vb[:, j]
+        denom = seq_a[li] * seq_b[ri]
+        exact = np.where(denom == 0.0, 0.0, acc / np.where(denom == 0.0, 1.0, denom))
+        final = exact >= threshold
+        yield ids_a[li][final], ids_b[ri][final], exact[final]
+
+
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -634,76 +668,28 @@ def embedding_neardup_pairs(
     spark = embeddings.sparkSession
     ensure_package_on_executors(spark)
 
-    # One distributed pass, two phases per Arrow batch:
-    #   screen — a BLAS GEMM against the broadcast table keeps pairs whose
-    #   fast cosine clears threshold − 1e-6 (margin ≫ GEMM rounding error,
-    #   so no qualifying pair can be missed);
-    #   emit  — survivors get the EXACT cosine, reproduced in the fold's
-    #   left-to-right IEEE order by a per-dimension vectorized accumulation
-    #   (acc += a[:,j] * b[:,j]), bit-identical to the Column-fold / DuckDB
-    #   list_reduce formulation. This replaces the former join-back +
-    #   F.aggregate verify stage: higher-order folds are interpreted (not
-    #   codegen), and at 181k candidates (sf1.0, threshold 0.4) that stage
-    #   alone measured ~13 s — the numpy emit is the same arithmetic at
-    #   vector speed, and the join/shuffle disappears entirely.
+    # One distributed pass: each Arrow batch is GEMM-screened and exactly
+    # emitted against the broadcast table (_cosine_pairs), so no verify
+    # join or shuffle runs at all.
     pdf_all = embeddings.select(id_col, vec_col).toPandas()
     all_ids = np.asarray(pdf_all[id_col].values, dtype=np.int64)
     all_mat = np.ascontiguousarray(
         np.vstack(pdf_all[vec_col].values).astype(np.float64)
     )
-    all_norms = np.linalg.norm(all_mat, axis=1)
-    bc = spark.sparkContext.broadcast((all_ids, all_mat, all_norms))
-    margin = 1e-6
-
-    def _seq_norms(mat: np.ndarray) -> np.ndarray:
-        # sqrt of the left-to-right running sum of squares — the exact
-        # order l2_norm's fold (and the oracle's list_reduce) uses
-        acc = np.zeros(len(mat))
-        for j in range(mat.shape[1]):
-            acc = acc + mat[:, j] * mat[:, j]
-        return np.sqrt(acc)
+    bc = spark.sparkContext.broadcast((all_ids, all_mat))
+    max_entries = _COSINE_BLOCK_ENTRIES
 
     def find_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, mat_b, norms_b = bc.value
-        safe_norms = np.where(norms_b == 0.0, 1.0, norms_b)
-        seq_norms_b = _seq_norms(mat_b)
-        nb = len(ids_b)
+        ids_b, mat_b = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             ids = np.asarray(pdf[id_col].values, dtype=np.int64)
             mat = np.ascontiguousarray(np.vstack(pdf[vec_col].values).astype(np.float64))
-            norms = np.linalg.norm(mat, axis=1)
-            inv = np.where(norms == 0, 1.0, norms)
-            seq_norms = _seq_norms(mat)
-            # block the local side so the cosine matrix stays ≤ ~256 MB per
-            # slice no matter how Arrow batches the partition
-            block = max(1, 33_554_432 // max(nb, 1))
-            for lo in range(0, len(ids), block):
-                hi = min(lo + block, len(ids))
-                cos = (
-                    (mat[lo:hi] @ mat_b.T)
-                    / inv[lo:hi, None]
-                    / safe_norms[None, :]
-                )
-                li, ri = np.nonzero(cos >= threshold - margin)
-                keep = ids[lo + li] < ids_b[ri]
-                li, ri = lo + li[keep], ri[keep]
-                va, vb = mat[li], mat_b[ri]
-                acc = np.zeros(len(li))
-                for j in range(mat.shape[1]):
-                    acc = acc + va[:, j] * vb[:, j]
-                denom = seq_norms[li] * seq_norms_b[ri]
-                exact = np.where(denom == 0.0, 0.0,
-                                 acc / np.where(denom == 0.0, 1.0, denom))
-                final = exact >= threshold
-                yield pd.DataFrame(
-                    {
-                        "id_a": ids[li][final],
-                        "id_b": ids_b[ri][final],
-                        "cosine": exact[final],
-                    }
-                )
+            for ia, ib, cos in _cosine_pairs(
+                ids, mat, ids_b, mat_b, threshold, max_entries, keep=np.less
+            ):
+                yield pd.DataFrame({"id_a": ia, "id_b": ib, "cosine": cos})
 
     # spread the GEMM to cluster width: a 2-file parquet table would
     # otherwise run on 2 cores (same fix as knn_exact_fast — measured
@@ -877,18 +863,58 @@ def neardup_incremental(
     return old_pairs.unionByName(self_pairs).unionByName(cross_norm)
 
 
-class NearDupState:
+class _LayeredState:
+    """Parquet state tables read as base_dir ∪ delta_dir: `base_dir` holds
+    the bootstrap build (read-only afterwards), `delta_dir` receives the
+    per-batch appends, and every read unions the layers — so a caller can
+    bootstrap once, then run many idempotent delta sessions against fresh
+    delta dirs. Subclasses name their tables in `_TABLES`."""
+
+    _TABLES: tuple[str, ...] = ()
+
+    def __init__(self, spark, base_dir: str, delta_dir: str | None) -> None:
+        self.spark = spark
+        self.base_dir = base_dir.rstrip("/")
+        self.delta_dir = delta_dir.rstrip("/") if delta_dir else None
+        # which delta subtables hold data (parquet reads fail on empty
+        # dirs; single-driver mutation, no lock needed). Seeded from disk
+        # so re-attaching to a populated delta_dir sees prior sessions'
+        # delta rows instead of silently dropping them from reads.
+        self._delta_written: set[str] = _existing_delta_tables(
+            spark, self.delta_dir, self._TABLES
+        )
+
+    def _paths(self, table: str) -> list[str]:
+        paths = [f"{self.base_dir}/{table}"]
+        if self.delta_dir and table in self._delta_written:
+            paths.append(f"{self.delta_dir}/{table}")
+        return paths
+
+    def _read(self, table: str) -> DataFrame:
+        return self.spark.read.parquet(*self._paths(table))
+
+    def _append(self, df: DataFrame, table: str) -> None:
+        if self.delta_dir is None:
+            raise ValueError(
+                f"{type(self).__name__} needs delta_dir to accept delta batches"
+            )
+        df.write.mode("append").parquet(f"{self.delta_dir}/{table}")
+        self._delta_written.add(table)
+
+    def pairs(self) -> DataFrame:
+        """All accepted near-dup pairs in the current state."""
+        return self._read("pairs")
+
+
+class NearDupState(_LayeredState):
     """Materialized-state incremental near-dup (the production form of
     neardup_incremental, which recomputes pairs(old) every call).
 
     State = three parquet tables per corpus: `hashes` (doc_id, hs — the
     60-bit shingle hash sets the Jaccard verify needs), `keys` (doc_id,
     b, k — exploded banded minhash keys, the candidate-join side), and
-    `pairs` (id_a, id_b, jaccard — the accumulated accepted pairs). The
-    state is LAYERED: `base_dir` holds the bootstrap corpus (read-only
-    after bootstrap), `delta_dir` receives per-batch appends, and reads
-    union the layers — so a caller can bootstrap once, then run many
-    idempotent delta sessions against fresh delta dirs.
+    `pairs` (id_a, id_b, jaccard — the accumulated accepted pairs), layered
+    as base_dir ∪ delta_dir (_LayeredState).
 
     `apply_delta` pays only the Δ terms of
 
@@ -903,11 +929,13 @@ class NearDupState:
     banded candidacy is a pure per-document function, so splitting the
     corpus cannot create or destroy candidate pairs (bit-equality vs
     the full recompute is oracle-checked by queries.py::q_neardup_state
-    and tests/test_dedup.py). At 100 TB, bucket the saved `keys` table
-    by k (sources/tables.py::write_bucketed) to also skip the scan's
+    and tests/test_neardup_state.py). At 100 TB, bucket the saved `keys`
+    table by k (sources/tables.py::write_bucketed) to also skip the scan's
     exchange on the rare oversized-Δ batch that exceeds the broadcast
     threshold.
     """
+
+    _TABLES = ("hashes", "keys", "pairs")
 
     def __init__(
         self,
@@ -918,97 +946,11 @@ class NearDupState:
         n_bands: int = 8,
         threshold: float = 0.8,
     ) -> None:
-        self.spark = spark
-        self.base_dir = base_dir.rstrip("/")
-        self.delta_dir = delta_dir.rstrip("/") if delta_dir else None
+        super().__init__(spark, base_dir, delta_dir)
         self.shingle_words = shingle_words
         self.n_bands = n_bands
         self.threshold = threshold
-        # which delta subtables hold data (parquet reads fail on empty
-        # dirs; single-driver mutation, no lock needed). Seeded from disk
-        # so re-attaching to a populated delta_dir sees prior sessions'
-        # delta docs instead of silently dropping them from reads.
-        self._delta_written: set[str] = _existing_delta_tables(
-            spark, self.delta_dir, ("hashes", "keys", "pairs")
-        )
 
-    # -- state table IO -------------------------------------------------
-    def _paths(self, table: str) -> list[str]:
-        paths = [f"{self.base_dir}/{table}"]
-        if self.delta_dir and table in self._delta_written:
-            paths.append(f"{self.delta_dir}/{table}")
-        return paths
-
-    def _read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(*self._paths(table))
-
-    def _append(self, df: DataFrame, table: str) -> None:
-        if self.delta_dir is None:
-            raise ValueError(
-                "NearDupState needs delta_dir to accept delta batches"
-            )
-        df.write.mode("append").parquet(f"{self.delta_dir}/{table}")
-        self._delta_written.add(table)
-
-    def pairs(self) -> DataFrame:
-        """All accepted near-dup pairs in the current state."""
-        return self._read("pairs")
-
-    # -- hashing (identical transforms to neardup_minhash_pairs) --------
-    def _hashed(
-        self, docs: DataFrame, id_col: str, text_col: str, scope: list
-    ) -> DataFrame:
-        from rabitq_spark.functions.text import combine_word_hashes, word_hashes
-
-        # the word-hash array MUST be materialized (scoped cache) before the
-        # shingle combiner reads it — inlined, CollapseProject re-evaluates
-        # the md5 transform once per shingle element (measured 41 s vs 1 s
-        # at 5k docs; same barrier as neardup_minhash_pairs)
-        wh = _scoped_cache(
-            _widen(docs).select(
-                F.col(id_col).alias("doc_id"),
-                word_hashes(F.col(text_col)).alias("h"),
-            ),
-            scope,
-        )
-        return wh.select(
-            "doc_id",
-            combine_word_hashes("h", self.shingle_words).alias("hs"),
-        ).filter(F.size("hs") > 0)
-
-    def _keyed(self, hashed: DataFrame) -> DataFrame:
-        from rabitq_spark.functions.text import banded_minhash_key
-
-        wide = hashed.select(
-            "doc_id",
-            *[
-                banded_minhash_key("hs", b).alias(f"k{b}")
-                for b in range(self.n_bands)
-            ],
-        )
-        return wide.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("b"), F.col(f"k{b}").alias("k"))
-                        for b in range(self.n_bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("doc_id", F.col("bk.b").alias("b"), F.col("bk.k").alias("k"))
-
-    def _verify(self, cand: DataFrame, hashes: DataFrame) -> DataFrame:
-        sa = hashes.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"))
-        sb = hashes.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("hs_b"))
-        return (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select("id_a", "id_b", jaccard("hs_a", "hs_b").alias("jaccard"))
-            .filter(F.col("jaccard") >= self.threshold)
-        )
-
-    # -- lifecycle ------------------------------------------------------
     def bootstrap(
         self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     ) -> None:
@@ -1017,24 +959,13 @@ class NearDupState:
         self-join once for the initial pair set. Every later batch is
         apply_delta and never repeats this corpus-sized work."""
         scope = _begin_scope("neardup_state")
-        hashed = _scoped_cache(self._hashed(docs, id_col, text_col, scope), scope)
+        hashed = _shingle_hashes(docs, id_col, text_col, self.shingle_words, scope)
         hashed.write.mode("overwrite").parquet(f"{self.base_dir}/hashes")
-        keyed = _scoped_cache(self._keyed(hashed), scope)
-        keyed.write.mode("overwrite").parquet(f"{self.base_dir}/keys")
-        l, r = keyed.alias("l"), keyed.alias("r")
-        cand = (
-            l.join(
-                r,
-                (F.col("l.b") == F.col("r.b"))
-                & (F.col("l.k") == F.col("r.k"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-            .distinct()
-        )
-        self._verify(cand, hashed).write.mode("overwrite").parquet(
-            f"{self.base_dir}/pairs"
-        )
+        keys = _scoped_cache(_band_keys(hashed, self.n_bands), scope)
+        keys.write.mode("overwrite").parquet(f"{self.base_dir}/keys")
+        _jaccard_verify(
+            _self_candidates(keys), hashed, hashed, self.threshold, spread=True
+        ).write.mode("overwrite").parquet(f"{self.base_dir}/pairs")
 
     def apply_delta(
         self,
@@ -1047,66 +978,42 @@ class NearDupState:
         Reads the pre-batch state lazily, so sequential batches in one
         session compose (batch 2's cross join sees batch 1's appends)."""
         scope = _begin_scope("neardup_state_delta")
-        d_hashed = _scoped_cache(
-            self._hashed(delta_docs, id_col, text_col, scope), scope
+        d_hashed = _shingle_hashes(
+            delta_docs, id_col, text_col, self.shingle_words, scope
         )
-        d_keyed = _scoped_cache(self._keyed(d_hashed), scope)
+        d_keys = _scoped_cache(_band_keys(d_hashed, self.n_bands), scope)
+        self_pairs = _jaccard_verify(
+            _self_candidates(d_keys), d_hashed, d_hashed, self.threshold,
+            spread=False,
+        )
 
-        # Δ×Δ candidates: tiny self-join inside the batch
-        l, r = d_keyed.alias("l"), d_keyed.alias("r")
-        self_cand = (
-            l.join(
-                r,
-                (F.col("l.b") == F.col("r.b"))
-                & (F.col("l.k") == F.col("r.k"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-            .distinct()
+        # Δ×old: broadcast the Δ keys so the saved key table is scanned
+        # without an exchange. Verify shape: the old-hashes scan STREAMS
+        # (never shuffles, never broadcasts — its hash arrays are the
+        # corpus-sized payload, and the scan's tasks are already
+        # state-wide); what broadcasts is small by construction — the bare
+        # candidate id pairs (two longs per row) and the Δ-batch hash
+        # table. Attaching the Δ hash sets to the candidate broadcast
+        # instead measured ~1.5 GB at a 923k-candidate sf1.0 batch;
+        # ids-only is ~15 MB.
+        cross_cand = _cross_candidates(self._read("keys"), F.broadcast(d_keys))
+        cross_pairs = _jaccard_verify(
+            F.broadcast(cross_cand),
+            self._read("hashes"),
+            F.broadcast(d_hashed),
+            self.threshold,
+            spread=False,
+        ).select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            "jaccard",
         )
-        self_pairs = self._verify(self_cand, d_hashed)
-
-        # Δ×old candidates: broadcast the Δ keys so the saved key table is
-        # scanned without an exchange; MUST be materialized (localCheckpoint)
-        # before the appends below mutate the very state they read
-        old_keys = self._read("keys")
-        cross_cand = (
-            F.broadcast(
-                d_keyed.select(
-                    F.col("doc_id").alias("id_d"), "b", "k"
-                )
-            )
-            .join(old_keys.select(F.col("doc_id").alias("id_o"), "b", "k"), ["b", "k"])
-            .select("id_d", "id_o")
-            .distinct()
-        )
-        old_hashes = self._read("hashes")
-        d_side = d_hashed.select(
-            F.col("doc_id").alias("id_d"), F.col("hs").alias("hs_d")
-        )
-        o_side = old_hashes.select(
-            F.col("doc_id").alias("id_o"), F.col("hs").alias("hs_o")
-        )
-        # verify-join shape: the old-hashes scan STREAMS (never shuffles,
-        # never broadcasts — its hash arrays are the corpus-sized payload);
-        # what broadcasts is small by construction — the bare candidate id
-        # pairs (two longs per row) and the Δ-batch hash table. Attaching
-        # hs_d to the candidate broadcast instead measured ~1.5 GB at a
-        # 923k-candidate sf1.0 batch; ids-only is ~15 MB.
-        cross_pairs = (
-            o_side.join(F.broadcast(cross_cand), "id_o")
-            .join(F.broadcast(d_side), "id_d")
-            .select(
-                F.least("id_d", "id_o").alias("id_a"),
-                F.greatest("id_d", "id_o").alias("id_b"),
-                jaccard("hs_d", "hs_o").alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= self.threshold)
-        )
+        # MUST be materialized before the appends below mutate the very
+        # state it reads
         new_pairs = self_pairs.unionByName(cross_pairs).localCheckpoint(eager=True)
 
         self._append(d_hashed, "hashes")
-        self._append(d_keyed, "keys")
+        self._append(d_keys, "keys")
         self._append(new_pairs, "pairs")
         return new_pairs
 
@@ -1120,7 +1027,7 @@ class NearDupState:
         target_dir = target_dir.rstrip("/")
         if target_dir in (self.base_dir, self.delta_dir):
             raise ValueError("compact target must be a fresh directory")
-        for table in ("hashes", "keys", "pairs"):
+        for table in self._TABLES:
             self._read(table).write.mode("overwrite").parquet(
                 f"{target_dir}/{table}"
             )
@@ -1133,26 +1040,26 @@ class NearDupState:
         )
 
 
-class EmbeddingNearDupState:
+class EmbeddingNearDupState(_LayeredState):
     """Materialized-state incremental EMBEDDING near-dup — the semantic
     twin of NearDupState (paraphrase-level duplicates that token shingles
     miss). State = two parquet tables: `vectors` (id, vec — the corpus) and
-    `pairs` (id_a, id_b, cosine >= threshold). Layered exactly like
-    NearDupState: read = base_dir ∪ delta_dir, appends go to delta_dir.
+    `pairs` (id_a, id_b, cosine >= threshold), layered as base_dir ∪
+    delta_dir exactly like NearDupState (_LayeredState).
 
     `apply_delta` pays only the Δ terms: pairs(Δ, Δ) via the exact
     GEMM-prefilter family (embedding_neardup_pairs — Δ is batch-sized), and
     pairs(Δ, old) by broadcasting the Δ MATRIX (small side) over ONE scan
-    of the state vectors — per Arrow batch a BLAS screen at
-    threshold − 1e-6 margin, then the surviving pairs' cosine recomputed in
-    the fold's left-to-right IEEE order (the same screen/emit split as
-    embedding_neardup_pairs, so the result is bit-identical to the naive
-    all-pairs oracle). The corpus-sized side is never shuffled, never
-    collected; per-batch work is O(batch × |Δ|) flops.
+    of the state vectors — per Arrow batch the same blocked screen/emit as
+    embedding_neardup_pairs (_cosine_pairs), so the result is bit-identical
+    to the naive all-pairs oracle. The corpus-sized side is never shuffled,
+    never collected; per-batch work is O(batch × |Δ|) flops.
 
     Oracle contract (queries.py::q_embedding_neardup_state): bootstrap +
     two chained deltas == the full-corpus recompute, bit-exact.
     """
+
+    _TABLES = ("vectors", "pairs")
 
     def __init__(
         self,
@@ -1164,9 +1071,7 @@ class EmbeddingNearDupState:
         vec_col: str = "embedding",
         max_delta_rows: int = 500_000,
     ) -> None:
-        self.spark = spark
-        self.base_dir = base_dir.rstrip("/")
-        self.delta_dir = delta_dir.rstrip("/") if delta_dir else None
+        super().__init__(spark, base_dir, delta_dir)
         self.threshold = threshold
         self.id_col = id_col
         self.vec_col = vec_col
@@ -1174,29 +1079,6 @@ class EmbeddingNearDupState:
         # (500k × 256 float64 ≈ 1 GB — comfortably under driver memory;
         # tune per deployment)
         self.max_delta_rows = int(max_delta_rows)
-        self._delta_written: set[str] = _existing_delta_tables(
-            spark, self.delta_dir, ("vectors", "pairs")
-        )
-
-    def _paths(self, table: str) -> list[str]:
-        paths = [f"{self.base_dir}/{table}"]
-        if self.delta_dir and table in self._delta_written:
-            paths.append(f"{self.delta_dir}/{table}")
-        return paths
-
-    def _read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(*self._paths(table))
-
-    def _append(self, df: DataFrame, table: str) -> None:
-        if self.delta_dir is None:
-            raise ValueError(
-                "EmbeddingNearDupState needs delta_dir to accept deltas"
-            )
-        df.write.mode("append").parquet(f"{self.delta_dir}/{table}")
-        self._delta_written.add(table)
-
-    def pairs(self) -> DataFrame:
-        return self._read("pairs")
 
     def bootstrap(self, embeddings: DataFrame) -> None:
         embeddings.select(
@@ -1236,22 +1118,12 @@ class EmbeddingNearDupState:
         )
         bc = self.spark.sparkContext.broadcast((d_ids, d_mat))
         threshold = self.threshold
-        margin = 1e-6
-
-        def _seq_norms(mat: np.ndarray) -> np.ndarray:
-            # left-to-right running sum of squares: the fold/oracle order
-            acc = np.zeros(len(mat))
-            for j in range(mat.shape[1]):
-                acc = acc + mat[:, j] * mat[:, j]
-            return np.sqrt(acc)
+        max_entries = _COSINE_BLOCK_ENTRIES
 
         def cross(batches):
             import pandas as pd
 
             ids_d, mat_d = bc.value
-            gemm_norms_d = np.linalg.norm(mat_d, axis=1)
-            safe_d = np.where(gemm_norms_d == 0.0, 1.0, gemm_norms_d)
-            seq_d = _seq_norms(mat_d)
             for pdf in batches:
                 if pdf.empty:
                     continue
@@ -1259,28 +1131,16 @@ class EmbeddingNearDupState:
                 mat_o = np.ascontiguousarray(
                     np.vstack(pdf["vec"].values).astype(np.float64)
                 )
-                norms_o = np.linalg.norm(mat_o, axis=1)
-                safe_o = np.where(norms_o == 0.0, 1.0, norms_o)
-                seq_o = _seq_norms(mat_o)
-                cos = (mat_o @ mat_d.T) / safe_o[:, None] / safe_d[None, :]
-                oi, di = np.nonzero(cos >= threshold - margin)
-                va, vb = mat_o[oi], mat_d[di]
-                acc = np.zeros(len(oi))
-                for j in range(mat_o.shape[1]):
-                    acc = acc + va[:, j] * vb[:, j]
-                denom = seq_o[oi] * seq_d[di]
-                exact = np.where(
-                    denom == 0.0, 0.0, acc / np.where(denom == 0.0, 1.0, denom)
-                )
-                keep = exact >= threshold
-                ia, ib = ids_o[oi][keep], ids_d[di][keep]
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.minimum(ia, ib),
-                        "id_b": np.maximum(ia, ib),
-                        "cosine": exact[keep],
-                    }
-                )
+                for io, id_, cos in _cosine_pairs(
+                    ids_o, mat_o, ids_d, mat_d, threshold, max_entries
+                ):
+                    yield pd.DataFrame(
+                        {
+                            "id_a": np.minimum(io, id_),
+                            "id_b": np.maximum(io, id_),
+                            "cosine": cos,
+                        }
+                    )
 
         old = self._read("vectors")
         par = self.spark.sparkContext.defaultParallelism

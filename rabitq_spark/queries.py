@@ -2138,7 +2138,7 @@ WITH codes AS (
   {_ngram_band_union_sql(12, 5)}
 ), cand AS (
   -- min_band_hits=2: a pair must collide in >= 2 of the 12 band keys
-  -- (mirrors _banded_candidates_exploded's count-aggregate prune)
+  -- (mirrors _self_candidates's count-aggregate prune)
   SELECT l.doc_id AS id_a, r.doc_id AS id_b
   FROM bands l JOIN bands r
     ON l.b = r.b AND l.key = r.key AND l.doc_id < r.doc_id

@@ -3,17 +3,18 @@ documents arrive continuously and each one must be admitted or rejected
 against everything accepted SO FAR.
 
 State is a pair of append-only Parquet tables under `store_path`:
-  keys/       (band, key, doc_id)  — banded minhash keys of ACCEPTED docs
+  keys/       (doc_id, b, k)       — banded minhash keys of ACCEPTED docs
   hashes/     (doc_id, hs)         — their shingle-hash sets (for verify)
   decisions/  (doc_id, canonical_id, is_dup)  — the verdict log
 
-Each micro-batch (foreachBatch):
-  1. banded xor-minhash keys for the batch (same oracle-checked family as
-     operators/dedup.neardup_minhash_pairs),
-  2. candidates = batch keys ⨝ store keys on (band, key) PLUS the banded
-     in-batch self-join — never all-pairs,
-  3. exact Jaccard verify on candidates; canonical_id = min(self, all
-     verified matches),
+Each micro-batch (foreachBatch) runs the same stages as
+operators/dedup.neardup_minhash_pairs:
+  1. shingle hashes and banded minhash keys for the batch,
+  2. candidates = batch keys ⨝ store keys on (b, k) PLUS the banded
+     in-batch self-join (id_a < id_b) — never all-pairs,
+  3. exact Jaccard verify on candidates; canonical_id = least(self, every
+     verified store match, every verified smaller in-batch match) — a
+     larger in-batch match never lowers it,
   4. accepted rows (canonical == self) append their keys+hashes to the
      store; every row appends its decision.
 
@@ -41,46 +42,18 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
 def read_doc_stream(
-    spark: SparkSession,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_files_per_trigger: int = 2,
+    spark: SparkSession, path: str, max_files_per_trigger: int = 2
 ) -> DataFrame:
-    """File-source stream of (doc_id, text) parquet rows."""
+    """File-source stream of (doc_id, text) parquet rows — the columns
+    neardup_maintenance_stream reads."""
     schema = StructType(
-        [StructField(id_col, LongType()), StructField(text_col, StringType())]
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
     )
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(path)
     )
-
-
-def _batch_keys_and_hashes(
-    batch: DataFrame, shingle_words: int, n_bands: int
-) -> tuple[DataFrame, DataFrame]:
-    from rabitq_spark.functions.text import (
-        combine_word_hashes,
-        word_hashes,
-        xor_minhash_key,
-    )
-
-    wh = batch.select(
-        F.col("doc_id"), word_hashes(F.col("text")).alias("h")
-    ).localCheckpoint(eager=True)
-    hashed = wh.select(
-        "doc_id", combine_word_hashes("h", shingle_words).alias("hs")
-    ).localCheckpoint(eager=True)
-    nonempty = hashed.filter(F.size("hs") > 0)
-    keys = nonempty.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[xor_minhash_key("hs", b) for b in range(n_bands)])
-        ).alias("band", "key"),
-    )
-    return keys, hashed
 
 
 def neardup_maintenance_stream(
@@ -94,7 +67,14 @@ def neardup_maintenance_stream(
 ):
     """Run the admission stream to completion (availableNow). Read
     `{store_path}/decisions` afterwards for the verdict log."""
-    from rabitq_spark.functions.text import jaccard
+    from rabitq_spark.operators.dedup import (
+        _band_keys,
+        _cross_candidates,
+        _jaccard_verify,
+        _scoped_cache,
+        _self_candidates,
+        _shingle_hashes,
+    )
 
     spark = doc_stream.sparkSession
     keys_dir = os.path.join(store_path, "keys")
@@ -102,85 +82,52 @@ def neardup_maintenance_stream(
     decisions_dir = os.path.join(store_path, "decisions")
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        batch = batch_df.localCheckpoint(eager=True)
-        keys, hashed = _batch_keys_and_hashes(batch, shingle_words, n_bands)
-        # candidate matches vs the accepted store (if any yet)
-        store_pairs = None
-        if os.path.isdir(keys_dir):
-            skeys = spark.read.parquet(keys_dir)
-            shashes = spark.read.parquet(hashes_dir)
-            cand = (
-                keys.join(
-                    skeys.withColumnsRenamed({"doc_id": "old_id"}),
-                    ["band", "key"],
+        # every cache is consumed before the handler returns, so the
+        # batch's scope is drained here rather than left to release_caches()
+        scope: list = []
+        try:
+            batch = batch_df.localCheckpoint(eager=True)
+            hashed = _shingle_hashes(batch, "doc_id", "text", shingle_words, scope)
+            keys = _scoped_cache(_band_keys(hashed, n_bands), scope)
+            matches = _jaccard_verify(
+                _self_candidates(keys), hashed, hashed, threshold, spread=False
+            ).select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("match_id"))
+            if os.path.isdir(keys_dir):
+                store_matches = _jaccard_verify(
+                    _cross_candidates(keys, spark.read.parquet(keys_dir)),
+                    hashed,
+                    spark.read.parquet(hashes_dir),
+                    threshold,
+                    spread=False,
+                ).select(
+                    F.col("id_a").alias("doc_id"), F.col("id_b").alias("match_id")
                 )
-                .select("doc_id", "old_id")
-                .distinct()
+                matches = matches.unionByName(store_matches)
+            min_match = matches.groupBy("doc_id").agg(
+                F.min("match_id").alias("min_match")
             )
-            store_pairs = (
-                cand.join(hashed, "doc_id")
-                .join(
-                    shashes.withColumnsRenamed(
-                        {"doc_id": "old_id", "hs": "hs_old"}
-                    ),
-                    "old_id",
+            decisions = (
+                batch.select("doc_id")
+                .join(min_match, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.least(
+                        F.col("doc_id"), F.coalesce("min_match", F.col("doc_id"))
+                    ).alias("canonical_id"),
                 )
-                .filter(jaccard("hs", "hs_old") >= threshold)
-                .select("doc_id", F.col("old_id").alias("match_id"))
+                .withColumn(
+                    "is_dup",
+                    (F.col("canonical_id") != F.col("doc_id")).cast("int"),
+                )
+                .localCheckpoint(eager=True)
             )
-        # in-batch matches (both orientations so min() sees every neighbor)
-        l, r = keys.alias("l"), keys.alias("r")
-        bcand = (
-            l.join(
-                r,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.key") == F.col("r.key"))
-                & (F.col("l.doc_id") != F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("doc_id"),
-                F.col("r.doc_id").alias("match_id"),
-            )
-            .distinct()
-        )
-        batch_pairs = (
-            bcand.join(hashed, "doc_id")
-            .join(
-                hashed.withColumnsRenamed(
-                    {"doc_id": "match_id", "hs": "hs_m"}
-                ),
-                "match_id",
-            )
-            .filter(jaccard("hs", "hs_m") >= threshold)
-            .select("doc_id", "match_id")
-        )
-        matches = (
-            batch_pairs
-            if store_pairs is None
-            else batch_pairs.unionByName(store_pairs)
-        )
-        min_match = matches.groupBy("doc_id").agg(
-            F.min("match_id").alias("min_match")
-        )
-        decisions = (
-            batch.select("doc_id")
-            .join(min_match, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("doc_id"), F.coalesce("min_match", F.col("doc_id"))
-                ).alias("canonical_id"),
-            )
-            .withColumn(
-                "is_dup",
-                (F.col("canonical_id") != F.col("doc_id")).cast("int"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        accepted = decisions.filter(F.col("is_dup") == 0).select("doc_id")
-        keys.join(accepted, "doc_id").write.mode("append").parquet(keys_dir)
-        hashed.join(accepted, "doc_id").write.mode("append").parquet(hashes_dir)
-        decisions.write.mode("append").parquet(decisions_dir)
+            accepted = decisions.filter(F.col("is_dup") == 0).select("doc_id")
+            keys.join(accepted, "doc_id").write.mode("append").parquet(keys_dir)
+            hashed.join(accepted, "doc_id").write.mode("append").parquet(hashes_dir)
+            decisions.write.mode("append").parquet(decisions_dir)
+        finally:
+            for df in scope:
+                df.unpersist(False)
 
     q = (
         doc_stream.writeStream.foreachBatch(handle)

@@ -354,6 +354,46 @@ def test_release_caches_drains_text_generations(spark, sf_dir):
     assert not (persistent_ids() & created)
 
 
+def test_cross_join_and_state_drop_word_hash_cache(spark, sf_dir, tmp_path):
+    """The word-hash arrays (~3 GB at 10M docs) have one consumer, the
+    shingle-hash cache: once it is built no persisted RDD may still hold
+    them — in the cross-join and NearDupState.bootstrap as in the
+    self-join. Only shingle-hash and key caches stay live, and
+    release_caches() drains those."""
+    from rabitq_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    def new_caches(family, run):
+        before = persistent_ids()
+        run()
+        created = persistent_ids() - before
+        scope = dedup._SCOPES[family]
+        assert any(df.columns == ["doc_id", "h"] for df in scope)
+        live = [tuple(df.columns) for df in scope if df.storageLevel.useMemory]
+        assert set(live) <= {("doc_id", "hs"), ("doc_id", "b", "k")}, live
+        assert len(created) == len(live)
+        return created
+
+    created = new_caches(
+        "minhash_cross",
+        lambda: dedup.neardup_minhash_pairs_cross(
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+        ).count(),
+    )
+    created |= new_caches(
+        "neardup_state",
+        lambda: dedup.NearDupState(spark, str(tmp_path / "base")).bootstrap(docs),
+    )
+    dedup.release_caches()
+    assert not (persistent_ids() & created)
+
+
 def test_release_caches_drains_blocked_embedding_index(spark, sf_dir):
     """The blocked path's index cache is scope-registered: release_caches()
     (or the next invocation) unpersists it — round-2 verdict: it leaked."""

@@ -149,6 +149,34 @@ def test_embedding_state_two_deltas_equal_full_recompute(spark, sf_dir, tmp_path
     pd.testing.assert_frame_equal(got, full, check_exact=True)
 
 
+def test_embedding_delta_blocked_screen_equals_one_block(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """apply_delta's Δ×old GEMM screen is blocked by the same budget as
+    embedding_neardup_pairs: patched down to a few matrix entries it runs
+    one old row per block, and must land on the same pairs."""
+    from rabitq_spark.operators import dedup
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    base_dir = str(tmp_path / "bbase")
+    dedup.EmbeddingNearDupState(spark, base_dir, threshold=0.4).bootstrap(
+        emb.filter(F.col("vec_id") % 10 >= 2)
+    )
+    delta = emb.filter(F.col("vec_id") % 10 < 2)
+
+    def delta_pairs(tag):
+        st = dedup.EmbeddingNearDupState(
+            spark, base_dir, str(tmp_path / tag), threshold=0.4
+        )
+        return _norm(st.apply_delta(delta).toPandas())
+
+    want = delta_pairs("one_block")
+    assert len(want) > 0
+    monkeypatch.setattr(dedup, "_COSINE_BLOCK_ENTRIES", 7)
+    assert delta.count() > 7  # so each block holds a single old row
+    pd.testing.assert_frame_equal(delta_pairs("blocked"), want, check_exact=True)
+
+
 def test_reattach_to_populated_delta_dir_sees_prior_deltas(spark, sf_dir, tmp_path):
     """Re-attaching a NEW state object to a delta_dir populated by a prior
     session must read those prior delta docs (round-5 ADVICE: _delta_written
