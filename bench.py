@@ -371,6 +371,17 @@ def _scale10m_cache_ready(dim: int = 256) -> bool:
         return False
 
 
+def _prepare_state(spark, sf_dir: str, errors: dict) -> dict[str, float]:
+    """queries.prepare() for `sf_dir`: {kind: build seconds}; each failed
+    kind's error lands in `errors` under its kind name."""
+    from rabitq_spark.queries import prepare
+
+    failed: dict = {}
+    walls = prepare(spark, sf_dir, errors=failed)
+    errors.update({kind: repr(exc)[:200] for kind, exc in failed.items()})
+    return walls
+
+
 def _median(xs: list[float]) -> float:
     s = sorted(xs)
     n = len(s)
@@ -653,40 +664,10 @@ def main() -> None:
             ).save()
         except Exception:  # noqa: BLE001
             pass
-    # model-backed queries additionally warm at the BENCH SF so their timed
-    # run measures the search, not the one-time build/save/load that the
-    # per-process model cache amortizes in production use
-    for name in (
-        "ann_ivf_cold_index",
-        "ann_ivf_store_cold",
-        "ann_ivf_cosine",
-        "ann_stream_index",
-        "ann_stream_cdc",
-        "ann_jl_ivf",
-        "ann_pq",
-        "ann_ivfpq",
-        "ann_ivfpq_filtered",
-        "ann_ivfpq_append",
-        "curated_retrieval",
-        "stream_incremental_agg",
-        "neardup_stream",
-        # bootstraps its LSH state tables on first call; the timed run then
-        # measures the delta-batch cost only (the production shape)
-        "neardup_state",
-        # first _get_model(SF_DIR) user in the timed loop — warm the shared
-        # session model so the timed run measures the two-phase search
-        "maxsim_ivf",
-        # bootstraps its vector-state tables on first call (same contract
-        # as neardup_state: the timed run measures the delta batches)
-        "embedding_neardup_state",
-    ):
-        if name in SPARK_QUERIES:
-            try:
-                SPARK_QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001
-                pass
+    # every kind of trained state (models, codebooks, bootstrapped state
+    # tables) builds here, once, so no timed row below includes a build; a
+    # failing builder is reported under its kind name
+    result["prepare_sec"] = _prepare_state(spark, SF_DIR, result["phase_errors"])
     # ONE timed run per query (round-10 budget item), then the 10 slowest
     # earn 2 extra repeats — medians + spreads where the variance matters,
     # single warm runs where three repeats of a 0.3 s query bought nothing
@@ -922,19 +903,9 @@ def _sf1_section(spark, bench_queries) -> dict:
         "queries": {},
         "queries_spread": {},
     }
-    # the state queries' first call bootstraps their corpus state tables
-    # (one-time, cached per sf-dir); warm them so the timed run measures
-    # the production shape — delta batches against materialized state
-    from rabitq_spark.queries import SPARK_QUERIES as _Q
-
-    for warm_name in ("neardup_state", "embedding_neardup_state"):
-        if warm_name in _Q:
-            try:
-                _Q[warm_name](spark, sf1_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001
-                pass
+    # trained state builds once up front, so no timed row includes a build
+    out["prepare_errors"] = {}
+    out["prepare_sec"] = _prepare_state(spark, sf1_dir, out["prepare_errors"])
     for name, fn in bench_queries:
         try:
             runs = [time_df(fn, spark, sf1_dir)]
@@ -943,23 +914,19 @@ def _sf1_section(spark, bench_queries) -> dict:
                 out["queries_spread"][name] = [
                     round(min(runs), 3), round(max(runs), 3)
                 ]
-            # primary = the FIRST run: comparable with prior rounds' cold
-            # single-runs (several repeat-set queries amortize a per-process
-            # model/fixture cache, so run 2 is warm — e.g. bpe_merges
-            # 11.6 s cold vs 0.25 s warm; a median would split the
-            # difference and misread as a regression or win)
+            # primary = the FIRST run (trained state is prepared above, so
+            # it holds no build; only first-call JIT can make it the slower)
             out["queries"][name] = round(runs[0], 3)
             # round-7 verdict item 6: when run 1 dwarfs run 2, name the
-            # cause IN the artifact — the gap is the one-time per-process
-            # model/fixture/JIT amortization (curated_retrieval builds the
-            # shared IVF model on first call; embedding_neardup warms the
-            # BLAS/GEMM prefilter), not a query regression
+            # cause IN the artifact — first-call amortization (e.g.
+            # embedding_neardup warms the BLAS/GEMM prefilter), not a query
+            # regression
             if name in repeat_set and len(runs) > 1 and runs[0] > 2 * runs[1]:
                 out.setdefault("cold_warm", {})[name] = {
                     "cold_sec": round(runs[0], 3),
                     "warm_sec": round(runs[1], 3),
-                    "cause": "first-call amortization (shared model/"
-                    "fixture build + JIT), not steady-state cost",
+                    "cause": "first-call amortization (JIT, BLAS "
+                    "warm-up), not steady-state cost",
                 }
         except Exception:  # noqa: BLE001
             out["queries"][name] = -1.0

@@ -315,9 +315,7 @@ def search_adaptive(
                 rough_estimator_expr(model).alias("rough"),
             )
         else:
-            local = _fused_shortlist(
-                model, probes_df, r, cfg.theta_log_dim, prune_partitions=True
-            )
+            local = _fused_shortlist(model, probes_df, r, cfg.theta_log_dim)
         shortlist = topk_per_group(
             local,
             ["query_id"],

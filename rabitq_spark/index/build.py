@@ -3,8 +3,8 @@ entry point 2; reference RaBitQ::from_path, src/rabitq.rs:158-265).
 
 Spark shape:
   T1  read base Parquet, zero-pad to dim % 64 == 0
-  T2  centroids via MLlib KMeans (replaces the external faiss script,
-      scripts/cluster.py) — trained on a sample at scale
+  T2  centroids via seeded numpy Lloyd on a driver-side sample (replaces
+      the external faiss script, scripts/cluster.py)
   T3  one mapInPandas pass over the base computing, per row, in float32
       (matching reference numerics): nearest centroid, residual, packed sign
       codes, and the Factor quadruple (src/rabitq.rs:199-229)
@@ -50,6 +50,9 @@ _STD_INDEX_COLS = frozenset(p.split()[0] for p in INDEX_SCHEMA.split(", ")) | fr
 
 
 MAX_DENSE_ROT_DIM = 2048
+
+# driver-side k-means training sample cap (_kmeans_centroids)
+_KMEANS_SAMPLE_ROWS = 100_000
 
 
 def gen_rotation(dim_pad: int, seed: int, block_dim: int = MAX_DENSE_ROT_DIM):
@@ -134,33 +137,19 @@ def _kmeans_centroids(
     k: int,
     seed: int,
     sample_fraction: float | None,
-    max_sample_rows: int = 100_000,
-    use_mllib: bool = False,
 ) -> np.ndarray:
     """Coarse centroids, replacing scripts/cluster.py (faiss).
 
-    Default path mirrors the reference exactly: train on a bounded SAMPLE
-    (scripts/cluster.py:10-19 reservoir-samples before faiss) held on the
-    driver, with seeded numpy Lloyd — deterministic and free of MLlib's JVM
-    warm-up cost. Assignments for every row still happen in the distributed
-    transform pass. `use_mllib=True` switches to distributed MLlib KMeans
-    for cases where even the sample must stay distributed.
+    Mirrors the reference exactly: train on a bounded SAMPLE
+    (scripts/cluster.py:10-19 reservoir-samples before faiss) of at most
+    _KMEANS_SAMPLE_ROWS rows held on the driver, with seeded numpy Lloyd —
+    deterministic and free of MLlib's JVM warm-up cost. Assignments for
+    every row still happen in the distributed transform pass.
     """
-    if use_mllib:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        df = base.select(array_to_vector(F.col(vec_col)).alias("features"))
-        if sample_fraction is not None and sample_fraction < 1.0:
-            df = df.sample(fraction=sample_fraction, seed=seed)
-        model = KMeans(k=k, seed=seed, maxIter=10, initMode="k-means||").fit(df)
-        centers = [np.asarray(c) for c in model.clusterCenters()]
-        return np.vstack(centers).astype(np.float32)
-
     df = base.select(F.col(vec_col).alias("v"))
     if sample_fraction is not None and sample_fraction < 1.0:
         df = df.sample(fraction=sample_fraction, seed=seed)
-    sample = df.limit(max_sample_rows).toPandas()
+    sample = df.limit(_KMEANS_SAMPLE_ROWS).toPandas()
     x = np.vstack(sample["v"].values).astype(np.float32)
     return _numpy_lloyd(x, k, seed)
 

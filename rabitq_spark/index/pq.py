@@ -558,7 +558,7 @@ def pq_search(
     moderate batches and small m; the per-(row, query) JVM cost is m ops.
     impl="arrow": the rough phase is Arrow-batched numpy — per base
     partition, LUT[q, j, codes[:, j]] gathers accumulated across j, local
-    top-R, global top-R. Measured 1M × 256 (scripts/pq_probe.py): the
+    top-R, global top-R. Measured 1M × 256 (PLAN.md, IVF-PQ scale probe): the
     columnar gather path is the one that competes with the BLAS brute
     force; per-row JVM scans (SQ8 at 345 s/100 q, and jvm-ADC in
     proportion) lose at that density. Same results either way — the exact
@@ -738,7 +738,7 @@ def _ivfpq_search_arrow(
     """Large-batch IVF-PQ: ship QUERY VECTORS (2 KB each), not LUTs (64 KB
     per probe row) — the materialized-LUT plan is O(nq × nprobe × m × ksub)
     bytes and killed an 8 GB driver at nq=1000, nprobe=62, m=32
-    (scripts/pq_probe.py). Here the driver computes only the probe
+    (PLAN.md, IVF-PQ scale probe). Here the driver computes only the probe
     ASSIGNMENT (nq × n_clusters argpartition — trivial), broadcasts
     (query ids, query matrix, cell → query-index lists, codebooks), and
     each scoring task builds the residual LUT per (cell, probing-queries)

@@ -298,7 +298,6 @@ def _fused_shortlist(
     probes: DataFrame,
     r: int,
     theta_log_dim: int,
-    prune_partitions: bool = True,
 ) -> DataFrame:
     """The Arrow plan for stages 5-6: rough-score candidates and keep a
     local top-R per query inside ONE mapInPandas over the index — the probe
@@ -500,7 +499,7 @@ def _fused_shortlist(
     # so the probed cluster set costs no extra Spark job (unlike the jvm
     # path's distinct().collect()).
     index = model.index_df
-    if prune_partitions and 2 * len(by_cluster) <= model.n_clusters:
+    if 2 * len(by_cluster) <= model.n_clusters:
         index = index.filter(F.col("cluster_id").isin(list(by_cluster)))
     return index.mapInPandas(
         score, "query_id bigint, orig_id bigint, rough double"
@@ -651,7 +650,6 @@ def search(
     overfetch: int | None = None,
     query_id: str = "query_id",
     query_vec: str = "qvec",
-    prune_partitions: bool = True,
     metrics: "SearchMetrics | None" = None,
     impl: str = "auto",
     broadcast_probes: bool = True,
@@ -757,13 +755,7 @@ def search(
         # Stages 5-6 in one Arrow pass (see _fused_shortlist); it collects
         # the probe table itself and derives partition pruning from it, so
         # no separate pruning job here.
-        local = _fused_shortlist(
-            model,
-            probes,
-            r,
-            cfg.theta_log_dim,
-            prune_partitions=prune_partitions,
-        )
+        local = _fused_shortlist(model, probes, r, cfg.theta_log_dim)
         if metrics is not None and metrics.observe_rough:
             local = local.observe(
                 metrics.rough, F.count(F.lit(1)).alias("rough_count")
@@ -772,7 +764,7 @@ def search(
             local, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
         ).select("query_id", "orig_id")
     else:
-        if prune_partitions and nprobe * 2 <= model.n_clusters:
+        if nprobe * 2 <= model.n_clusters:
             # Static partition pruning: the probed cluster set is tiny (≤ nq ×
             # nprobe); pushing it into the scan as an IN-filter prunes Parquet
             # partitions — the analogue of the reference's CSR offsets scan
@@ -849,7 +841,6 @@ def range_search(
     rough_margin: float = 0.0,
     query_id: str = "query_id",
     query_vec: str = "qvec",
-    prune_partitions: bool = True,
     broadcast_probes: bool = True,
 ) -> DataFrame:
     """Radius query: all (query_id, neighbor_id, dist) with exact squared-L2
@@ -871,7 +862,7 @@ def range_search(
     probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
 
     index = model.index_df
-    if prune_partitions and nprobe * 2 <= model.n_clusters:
+    if nprobe * 2 <= model.n_clusters:
         probes = probes.localCheckpoint(eager=True)
         probed = [
             row.cluster_id

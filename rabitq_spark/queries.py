@@ -10,6 +10,7 @@ exact DECIMAL arithmetic cast back to double, so hashes match exactly.
 
 from __future__ import annotations
 
+import time as _time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,13 +42,23 @@ _KNN_K = 10
 _KNN_NQ = 10
 
 
-def q_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
+def _knn_queries(emb: DataFrame) -> DataFrame:
+    """The first _KNN_NQ rows of the embeddings table `emb` as the
+    (query_id, qvec) batch every k-NN entry searches with."""
+    return emb.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    return knn_exact(queries, base, _KNN_K)
+
+
+def _base(emb: DataFrame) -> DataFrame:
+    """The embeddings table `emb` as the (id, vec) base the indexes and the
+    exact scans read."""
+    return emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
+
+
+def q_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    return knn_exact(_knn_queries(emb), _base(emb), _KNN_K)
 
 
 _SQL_KNN_EXACT = f"""
@@ -190,17 +201,6 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-# --------------------------------------------------------------------------
-# Q: IVF + RaBitQ index build + batch search (SURVEY §3, §7 phases 2-3).
-#
-# The exhaustive configuration (nprobe = n_clusters, unbounded overfetch)
-# reranks every candidate exactly, so the result equals brute-force k-NN
-# bit-for-bit — making the full train+search pipeline DuckDB-oracle-checkable
-# (the estimator/quantization path is still exercised: codes, factors, rough
-# scores and the top-R shortlist all run; the shortlist just keeps everything).
-
-_MODEL_CACHE: dict = {}
-
 # Session-owned temp dirs: every mkdtemp in this registry (vec stores,
 # cold-reload model dirs, stream inputs/checkpoints) is reclaimed at
 # interpreter exit — repeated sweep sessions must not accumulate copies
@@ -225,31 +225,103 @@ _FIXTURE_DIR = _os.path.join(
 )
 
 
-def _get_model(spark: SparkSession, sf_dir: str):
+# --------------------------------------------------------------------------
+# Trained state. Every index, codebook or bootstrapped state table an entry
+# reads is one KIND with one builder `(spark, sf_dir) -> state`, declared in
+# PREPARED_KINDS at the foot of this module. The driver contract
+# `queries()[name](spark, sf_dir)` carries no state argument and many
+# entries share the `ivf` model, so the state lives for the session in one
+# memo keyed by (kind, sf_dir). prepared() is the only code that reads or
+# writes it; prepare() builds every kind up front, so a timed run of an
+# entry never pays for a build. A builder that caches a DataFrame also
+# materializes it, or the first run would still pay for filling the cache.
+
+_PREPARED: dict = {}
+
+
+def prepared(spark: SparkSession, sf_dir: str, kind: str):
+    """The `kind` state for `sf_dir`, built by its PREPARED_KINDS builder
+    on first use and shared by every later caller."""
+    key = (kind, sf_dir)
+    if key not in _PREPARED:
+        _PREPARED[key] = PREPARED_KINDS[kind](spark, sf_dir)
+    return _PREPARED[key]
+
+
+def prepare(
+    spark: SparkSession, sf_dir: str, errors: dict | None = None
+) -> dict[str, float]:
+    """Build every kind of trained state for `sf_dir` that is not built yet;
+    returns {kind: seconds} (a kind built earlier costs ~0). A failing
+    builder raises, or, given an `errors` dict, lands there under its kind
+    and the remaining kinds still build."""
+    walls: dict[str, float] = {}
+    for kind in PREPARED_KINDS:
+        t0 = _time.perf_counter()
+        try:
+            prepared(spark, sf_dir, kind)
+        except Exception as exc:  # noqa: BLE001
+            if errors is None:
+                raise
+            errors[kind] = exc
+            continue
+        walls[kind] = round(_time.perf_counter() - t0, 3)
+    return walls
+
+
+def _cached_index(model):
+    """`model` with its index_df cached and materialized."""
+    model.index_df = model.index_df.cache()
+    model.index_df.count()
+    return model
+
+
+# --------------------------------------------------------------------------
+# Q: IVF + RaBitQ index build + batch search (SURVEY §3, §7 phases 2-3).
+#
+# The exhaustive configuration (nprobe = n_clusters, unbounded overfetch)
+# reranks every candidate exactly, so the result equals brute-force k-NN
+# bit-for-bit — making the full train+search pipeline DuckDB-oracle-checkable
+# (the estimator/quantization path is still exercised: codes, factors, rough
+# scores and the top-R shortlist all run; the shortlist just keeps everything).
+
+
+def _search_all(model, emb: DataFrame, **kw) -> DataFrame:
+    """Exhaustive search of the _knn_queries batch: every cluster probed and
+    every candidate reranked, so the top-k equals brute force bit-for-bit."""
+    from rabitq_spark.index import search
+
+    return search(
+        model,
+        _knn_queries(emb),
+        topk=_KNN_K,
+        nprobe=model.n_clusters,
+        overfetch=10**6,
+        **kw,
+    )
+
+
+def _build_ivf(spark: SparkSession, sf_dir: str):
     from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.index import build_index
 
-    key = sf_dir
-    if key not in _MODEL_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-        model = build_index(base, RaBitQConfig())
-        model.index_df = model.index_df.cache()
-        _MODEL_CACHE[key] = model
-    return _MODEL_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _cached_index(build_index(_base(emb), RaBitQConfig()))
 
 
 def q_ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rabitq_spark.index import search
-
-    model = _get_model(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(prepared(spark, sf_dir, "ivf"), emb)
+
+
+def _build_vecstore(spark: SparkSession, sf_dir: str):
+    import copy
+
+    from rabitq_spark.index.vecstore import attach_vec_store
+
+    model = copy.copy(prepared(spark, sf_dir, "ivf"))
+    attach_vec_store(model, _mkdtemp(prefix="rabitq_vecstore_"))
+    return model
 
 
 def q_ann_ivf_vecstore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,27 +334,8 @@ def q_ann_ivf_vecstore(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive configuration still equals brute force exactly — this
     entry oracle-checks the store build, the sorted-id shard lookup, and
     the fold, end to end."""
-    import tempfile
-
-    from rabitq_spark.index import search
-    from rabitq_spark.index.vecstore import attach_vec_store
-
-    key = (sf_dir, "vecstore")
-    if key not in _MODEL_CACHE:
-        base_model = _get_model(spark, sf_dir)
-        import copy
-
-        model = copy.copy(base_model)
-        attach_vec_store(model, _mkdtemp(prefix="rabitq_vecstore_"))
-        _MODEL_CACHE[key] = model
-    model = _MODEL_CACHE[key]
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(prepared(spark, sf_dir, "vecstore"), emb)
 
 
 def q_ann_ivf_earlystop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -296,11 +349,9 @@ def q_ann_ivf_earlystop(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing only the clusters geometry cannot exclude."""
     from rabitq_spark.index import search_adaptive
 
-    model = _get_model(spark, sf_dir)
+    model = prepared(spark, sf_dir, "ivf")
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = _knn_queries(emb)
     return search_adaptive(model, queries, topk=_KNN_K, overfetch=10**6)
 
 
@@ -316,23 +367,18 @@ def q_ann_ivf_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     configuration reranks every row, so the output is bit-identical to
     brute-force knn_exact — while still executing the full unpack → GEMM
     → shortlist path. The registry name predates the kernel's rename."""
-    from rabitq_spark.index import search
-
-    model = _get_model(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
     # an explicit impl="arrow" is always honoured (this entry ORACLE-CHECKS
     # the Arrow path, so the auto dispatch must not route it to jvm)
-    return search(
-        model,
-        queries,
-        topk=_KNN_K,
-        nprobe=model.n_clusters,
-        overfetch=10**6,
-        impl="arrow",
-    )
+    return _search_all(prepared(spark, sf_dir, "ivf"), emb, impl="arrow")
+
+
+def _build_multibit2(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.config import RaBitQConfig
+    from rabitq_spark.index import build_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _cached_index(build_index(_base(emb), RaBitQConfig(bits_per_dim=2)))
 
 
 def q_ann_ivf_multibit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,24 +389,15 @@ def q_ann_ivf_multibit(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the exact rerank cover every row, so the result is bit-identical
     to brute force — the estimator-family change cannot alter it (the
     recall win at tight budgets is asserted in tests/test_multibit.py)."""
-    from rabitq_spark.config import RaBitQConfig
-    from rabitq_spark.index import build_index, search
-
-    key = (sf_dir, "multibit2")
-    if key not in _MODEL_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-        model = build_index(base, RaBitQConfig(bits_per_dim=2))
-        model.index_df = model.index_df.cache()
-        _MODEL_CACHE[key] = model
-    model = _MODEL_CACHE[key]
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(prepared(spark, sf_dir, "multibit2"), emb)
+
+
+def _build_sq8_bounds(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.index.sq8 import sq8_train
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return sq8_train(_base(emb), "vec")
 
 
 def q_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,18 +407,31 @@ def q_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank covers every row and the output is bit-identical to brute-force
     `knn_exact`; the bounded-shortlist recall behaviour is asserted in
     tests/test_sq8.py."""
-    from rabitq_spark.index.sq8 import sq8_search, sq8_train
+    from rabitq_spark.index.sq8 import sq8_search
+
+    lo, hi = prepared(spark, sf_dir, "sq8_bounds")
+    emb = load_table(spark, sf_dir, "embeddings")
+    return sq8_search(_knn_queries(emb), _base(emb), _KNN_K, lo, hi, shortlist=10**9)
+
+
+def _pq_coded(spark: SparkSession, sf_dir: str, m: int, ksub: int):
+    """(codebook, cached + materialized PQ codes) over the base."""
+    from rabitq_spark.index.pq import pq_encode, pq_train
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    key = (sf_dir, "sq8_bounds")
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = sq8_train(base, "vec")
-    lo, hi = _MODEL_CACHE[key]
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return sq8_search(queries, base, _KNN_K, lo, hi, shortlist=10**9)
+    base = _base(emb)
+    cb = pq_train(base, "vec", m=m, ksub=ksub, iters=6)
+    coded = pq_encode(base, cb).cache()
+    coded.count()
+    return cb, coded
+
+
+def _build_pq_codebook(spark: SparkSession, sf_dir: str):
+    return _pq_coded(spark, sf_dir, m=8, ksub=64)
+
+
+def _build_pq4_codebook(spark: SparkSession, sf_dir: str):
+    return _pq_coded(spark, sf_dir, m=16, ksub=16)
 
 
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,21 +442,12 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force `knn_exact` — the whole train→encode→LUT→ADC→rerank path
     still executes. Bounded-shortlist recall is asserted in
     tests/test_pq.py."""
-    from rabitq_spark.index.pq import pq_encode, pq_search, pq_train
+    from rabitq_spark.index.pq import pq_search
 
+    cb, coded = prepared(spark, sf_dir, "pq_codebook")
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    key = (sf_dir, "pq_codebook")
-    if key not in _MODEL_CACHE:
-        cb = pq_train(base, "vec", m=8, ksub=64, iters=6)
-        coded = pq_encode(base, cb).cache()
-        _MODEL_CACHE[key] = (cb, coded)
-    cb, coded = _MODEL_CACHE[key]
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
     return pq_search(
-        queries, base, _KNN_K, cb, shortlist=10**9, coded_base=coded
+        _knn_queries(emb), _base(emb), _KNN_K, cb, shortlist=10**9, coded_base=coded
     )
 
 
@@ -420,23 +461,25 @@ def q_ann_pq4_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_exact — while the train→encode→LUT→GEMM-scan path still executes.
     Kernel-selection coverage: ann_pq exercises the gather path (ksub=64),
     this row the GEMM path."""
-    from rabitq_spark.index.pq import pq_encode, pq_search, pq_train
+    from rabitq_spark.index.pq import pq_search
+
+    cb, coded = prepared(spark, sf_dir, "pq4_codebook")
+    emb = load_table(spark, sf_dir, "embeddings")
+    return pq_search(
+        _knn_queries(emb), _base(emb), _KNN_K, cb, shortlist=10**9,
+        coded_base=coded, impl="arrow",
+    )
+
+
+def _build_ivfpq(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.index.pq import ivfpq_encode, ivfpq_train
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    key = (sf_dir, "pq4_codebook")
-    if key not in _MODEL_CACHE:
-        cb = pq_train(base, "vec", m=16, ksub=16, iters=6)
-        coded = pq_encode(base, cb).cache()
-        _MODEL_CACHE[key] = (cb, coded)
-    cb, coded = _MODEL_CACHE[key]
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return pq_search(
-        queries, base, _KNN_K, cb, shortlist=10**9, coded_base=coded,
-        impl="arrow",
-    )
+    base = _base(emb)
+    coarse, cb = ivfpq_train(base, "vec", n_clusters=16, m=8, ksub=64, iters=6)
+    coded = ivfpq_encode(base, coarse, cb).cache()
+    coded.count()
+    return coarse, cb, coded
 
 
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,19 +490,11 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     output bit-identical to brute force while the whole coarse-assign →
     residual-encode → probe → ADC → rerank path executes; bounded-budget
     recall is asserted in tests/test_pq.py."""
-    from rabitq_spark.index.pq import ivfpq_encode, ivfpq_search, ivfpq_train
+    from rabitq_spark.index.pq import ivfpq_search
 
+    coarse, cb, coded = prepared(spark, sf_dir, "ivfpq")
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    key = (sf_dir, "ivfpq")
-    if key not in _MODEL_CACHE:
-        coarse, cb = ivfpq_train(base, "vec", n_clusters=16, m=8, ksub=64, iters=6)
-        coded = ivfpq_encode(base, coarse, cb).cache()
-        _MODEL_CACHE[key] = (coarse, cb, coded)
-    coarse, cb, coded = _MODEL_CACHE[key]
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = _knn_queries(emb)
     return ivfpq_search(
         queries, coded, _KNN_K, coarse, cb, nprobe=coarse.shape[0], shortlist=10**9
     )
@@ -506,6 +541,21 @@ FROM embeddings WHERE vec_id < {_JL_NQ}"""
     return "\nUNION ALL\n".join(selects)
 
 
+def _build_jl_ivf(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.config import RaBitQConfig
+    from rabitq_spark.functions.project import jl_project, jl_signs
+    from rabitq_spark.index import build_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    dim = len(emb.select("embedding").first()["embedding"])
+    signs = jl_signs(_JL_K, dim)
+    proj_base = emb.select(
+        F.col("vec_id").alias("id"),
+        jl_project("embedding", signs).cast("array<float>").alias("vec"),
+    )
+    return _cached_index(build_index(proj_base, RaBitQConfig())), signs
+
+
 def q_ann_jl_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reduce-then-index: embeddings project to 16 dims (deterministic JL
     signs), the IVF+RaBitQ index builds in PROJECTED space, the shortlist
@@ -514,24 +564,11 @@ def q_ann_jl_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     a few hundred before quantizing). Registered exhaustively (shortlist =
     whole table, rerank-all) so the output equals brute force bit-for-bit
     while the full project→index→search→rerank path executes."""
-    from rabitq_spark.config import RaBitQConfig
-    from rabitq_spark.functions.project import jl_project, jl_signs
+    from rabitq_spark.functions.project import jl_project
     from rabitq_spark.functions.vector import l2_squared
-    from rabitq_spark.index import build_index, search
+    from rabitq_spark.index import search
 
-    key = (sf_dir, "jl_ivf")
-    if key not in _MODEL_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        dim = len(emb.select("embedding").first()["embedding"])
-        signs = jl_signs(_JL_K, dim)
-        proj_base = emb.select(
-            F.col("vec_id").alias("id"),
-            jl_project("embedding", signs).cast("array<float>").alias("vec"),
-        )
-        model = build_index(proj_base, RaBitQConfig())
-        model.index_df = model.index_df.cache()
-        _MODEL_CACHE[key] = (model, signs)
-    model, signs = _MODEL_CACHE[key]
+    model, signs = prepared(spark, sf_dir, "jl_ivf")
     emb = load_table(spark, sf_dir, "embeddings")
     proj_q = emb.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"),
@@ -572,14 +609,11 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on trained KMeans state no SQL can express)."""
     from rabitq_spark.index import search
 
-    model = _get_model(spark, sf_dir)
+    model = prepared(spark, sf_dir, "ivf")
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
+    queries = _knn_queries(emb)
     approx = search(model, queries, topk=_KNN_K)
-    exact = knn_exact(queries, base, _KNN_K)
+    exact = knn_exact(queries, _base(emb), _KNN_K)
     hits = approx.join(
         exact.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"]
     )
@@ -594,7 +628,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _get_cold_model(spark: SparkSession, sf_dir: str):
+def _build_cold(spark: SparkSession, sf_dir: str):
     """Build → save → load round-trip: the production read path.
 
     The reference's primary CLI flow is load-from-dir then query
@@ -602,16 +636,11 @@ def _get_cold_model(spark: SparkSession, sf_dir: str):
     cluster_id-partitioned Parquet scan, so probe-filtered searches prune
     partitions on disk instead of scanning a cached DataFrame.
     """
-    key = ("cold", sf_dir)
-    if key not in _MODEL_CACHE:
-        import tempfile
+    from rabitq_spark.index.model import RaBitQModel
 
-        from rabitq_spark.index.model import RaBitQModel
-
-        path = _mkdtemp(prefix="rabitq_cold_index_")
-        _get_model(spark, sf_dir).save(path)
-        _MODEL_CACHE[key] = RaBitQModel.load(spark, path)
-    return _MODEL_CACHE[key]
+    path = _mkdtemp(prefix="rabitq_cold_index_")
+    prepared(spark, sf_dir, "ivf").save(path)
+    return RaBitQModel.load(spark, path)
 
 
 def q_ann_ivf_cold_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,16 +648,20 @@ def q_ann_ivf_cold_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     load-then-query flow). Equals brute force bit-for-bit, so the whole
     persistence path — Parquet partition layout, sidecar arrays, schema
     round-trip — is oracle-checked."""
-    from rabitq_spark.index import search
-
-    model = _get_cold_model(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    return _search_all(prepared(spark, sf_dir, "cold"), emb)
+
+
+def _build_store_cold(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.index.model import RaBitQModel
+
+    path = _mkdtemp(prefix="rabitq_store_cold_")
+    prepared(spark, sf_dir, "ivf").save(path, store_min_rows=1)
+    loaded = RaBitQModel.load(spark, path)
+    assert loaded.vec_store is not None, (
+        "save(store_min_rows=1) must auto-build the vecstore sidecar"
     )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return loaded
 
 
 def q_ann_ivf_store_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,26 +674,20 @@ def q_ann_ivf_store_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     auto-attaches the sidecar and search() dispatches stage 7 through
     VecStore.gather. Exhaustive config == brute force bit-for-bit, so the
     sidecar build-at-save, re-open, and fold are all oracle-checked."""
-    from rabitq_spark.index import search
-    from rabitq_spark.index.model import RaBitQModel
-
-    key = ("store_cold", sf_dir)
-    if key not in _MODEL_CACHE:
-        path = _mkdtemp(prefix="rabitq_store_cold_")
-        _get_model(spark, sf_dir).save(path, store_min_rows=1)
-        loaded = RaBitQModel.load(spark, path)
-        assert loaded.vec_store is not None, (
-            "save(store_min_rows=1) must auto-build the vecstore sidecar"
-        )
-        _MODEL_CACHE[key] = loaded
-    model = _MODEL_CACHE[key]
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(prepared(spark, sf_dir, "store_cold"), emb)
+
+
+def _build_store_uri(spark: SparkSession, sf_dir: str):
+    import copy
+
+    from rabitq_spark.index.vecstore import VecStore, build_vec_store
+
+    model = copy.copy(prepared(spark, sf_dir, "ivf"))
+    uri = "file://" + _mkdtemp(prefix="rabitq_store_uri_") + "/vecstore"
+    build_vec_store(model.base_df, uri, dim=model.dim)
+    model.vec_store = VecStore.open(uri)
+    return model
 
 
 def q_ann_ivf_store_uri(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -673,26 +700,24 @@ def q_ann_ivf_store_uri(spark: SparkSession, sf_dir: str) -> DataFrame:
     crates/disk/src/reader.rs). Exhaustive config == brute force
     bit-for-bit, so the whole URI write + range-read round trip is
     oracle-checked."""
-    import copy
-
-    from rabitq_spark.index import search
-    from rabitq_spark.index.vecstore import VecStore, build_vec_store
-
-    key = ("store_uri", sf_dir)
-    if key not in _MODEL_CACHE:
-        model = copy.copy(_get_model(spark, sf_dir))
-        uri = "file://" + _mkdtemp(prefix="rabitq_store_uri_") + "/vecstore"
-        build_vec_store(model.base_df, uri, dim=model.dim)
-        model.vec_store = VecStore.open(uri)
-        _MODEL_CACHE[key] = model
-    model = _MODEL_CACHE[key]
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    return _search_all(prepared(spark, sf_dir, "store_uri"), emb)
+
+
+def _build_ivfpq_cold(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.index.pq import (
+        ivfpq_encode,
+        ivfpq_load,
+        ivfpq_save,
+        ivfpq_train,
     )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = _base(emb)
+    coarse, cb = ivfpq_train(base, "vec", n_clusters=16, m=8, ksub=64, iters=6)
+    path = _mkdtemp(prefix="ivfpq_cold_")
+    ivfpq_save(path, coarse, cb, ivfpq_encode(base, coarse, cb))
+    return ivfpq_load(spark, path)
 
 
 def q_ann_ivfpq_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -701,34 +726,27 @@ def q_ann_ivfpq_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force bit-for-bit, oracle-checking the whole save/load round
     trip; the bounded-nprobe partition pruning on the loaded table is a
     plan-level pytest (tests/test_pq.py)."""
-    from rabitq_spark.index.pq import (
-        ivfpq_encode,
-        ivfpq_load,
-        ivfpq_save,
-        ivfpq_search,
-        ivfpq_train,
-    )
+    from rabitq_spark.index.pq import ivfpq_search
 
-    key = (sf_dir, "ivfpq_cold")
-    if key not in _MODEL_CACHE:
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        coarse, cb = ivfpq_train(base, "vec", n_clusters=16, m=8, ksub=64, iters=6)
-        path = _mkdtemp(prefix="ivfpq_cold_")
-        ivfpq_save(path, coarse, cb, ivfpq_encode(base, coarse, cb))
-        _MODEL_CACHE[key] = ivfpq_load(spark, path)
-    coarse, cb, coded = _MODEL_CACHE[key]
+    coarse, cb, coded = prepared(spark, sf_dir, "ivfpq_cold")
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = _knn_queries(emb)
     return ivfpq_search(
         queries, coded, _KNN_K, coarse, cb, nprobe=coarse.shape[0], shortlist=10**9
     )
+
+
+def _build_ivfpq_attr(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.index.pq import ivfpq_encode, ivfpq_train
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label"
+    )
+    coarse, cb = ivfpq_train(base, "vec", n_clusters=16, m=8, ksub=64, iters=6)
+    coded = ivfpq_encode(base, coarse, cb, attr_cols=["label"]).cache()
+    coded.count()
+    return coarse, cb, coded
 
 
 def q_ann_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,26 +754,36 @@ def q_ann_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_encode attr_cols; the predicate restricts the codes scan before
     any scoring). Exhaustive config == brute force over the filtered base —
     the filtered-ANN surface at PQ parity with the RaBitQ family."""
-    from rabitq_spark.index.pq import ivfpq_encode, ivfpq_search, ivfpq_train
+    from rabitq_spark.index.pq import ivfpq_search
 
+    coarse, cb, coded = prepared(spark, sf_dir, "ivfpq_attr")
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label"
-    )
-    key = (sf_dir, "ivfpq_attr")
-    if key not in _MODEL_CACHE:
-        coarse, cb = ivfpq_train(base, "vec", n_clusters=16, m=8, ksub=64, iters=6)
-        coded = ivfpq_encode(base, coarse, cb, attr_cols=["label"]).cache()
-        _MODEL_CACHE[key] = (coarse, cb, coded)
-    coarse, cb, coded = _MODEL_CACHE[key]
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = _knn_queries(emb)
     return ivfpq_search(
         queries, coded, _KNN_K, coarse, cb,
         nprobe=coarse.shape[0], shortlist=10**9,
         predicate=F.col("label") < 5,
     )
+
+
+def _build_ivfpq_append(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.index.pq import (
+        ivfpq_append,
+        ivfpq_encode,
+        ivfpq_load,
+        ivfpq_save,
+        ivfpq_train,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = _base(emb)
+    first = base.filter(F.col("id") % 2 == 0)
+    second = base.filter(F.col("id") % 2 == 1)
+    coarse, cb = ivfpq_train(first, "vec", n_clusters=16, m=8, ksub=64, iters=6)
+    path = _mkdtemp(prefix="ivfpq_append_")
+    ivfpq_save(path, coarse, cb, ivfpq_encode(first, coarse, cb))
+    ivfpq_append(spark, path, second)
+    return ivfpq_load(spark, path)
 
 
 def q_ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -764,78 +792,49 @@ def q_ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended into cluster_id partitions — no rewrite), load, search
     exhaustively. Equals brute force over the FULL corpus bit-for-bit, so
     the whole append path is oracle-checked."""
-    from rabitq_spark.index.pq import (
-        ivfpq_append,
-        ivfpq_encode,
-        ivfpq_load,
-        ivfpq_save,
-        ivfpq_search,
-        ivfpq_train,
-    )
+    from rabitq_spark.index.pq import ivfpq_search
 
-    key = (sf_dir, "ivfpq_append")
-    if key not in _MODEL_CACHE:
-        import tempfile
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        first = base.filter(F.col("id") % 2 == 0)
-        second = base.filter(F.col("id") % 2 == 1)
-        coarse, cb = ivfpq_train(first, "vec", n_clusters=16, m=8, ksub=64, iters=6)
-        path = _mkdtemp(prefix="ivfpq_append_")
-        ivfpq_save(path, coarse, cb, ivfpq_encode(first, coarse, cb))
-        ivfpq_append(spark, path, second)
-        _MODEL_CACHE[key] = ivfpq_load(spark, path)
-    coarse, cb, coded = _MODEL_CACHE[key]
+    coarse, cb, coded = prepared(spark, sf_dir, "ivfpq_append")
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = _knn_queries(emb)
     return ivfpq_search(
         queries, coded, _KNN_K, coarse, cb, nprobe=coarse.shape[0], shortlist=10**9
     )
 
 
-def _get_stream_model(spark: SparkSession, sf_dir: str):
+def _build_stream(spark: SparkSession, sf_dir: str):
     """Bootstrap an index on the first half of the embeddings, then stream
     the second half in through Structured Streaming index maintenance
     (foreachBatch append into the saved model's partitions)."""
-    key = ("stream", sf_dir)
-    if key not in _MODEL_CACHE:
-        import tempfile
+    from rabitq_spark.config import RaBitQConfig
+    from rabitq_spark.index import build_index
+    from rabitq_spark.index.model import RaBitQModel
+    from rabitq_spark.streaming.index_stream import (
+        maintain_index_stream,
+        read_vector_stream,
+    )
 
-        from rabitq_spark.config import RaBitQConfig
-        from rabitq_spark.index import build_index
-        from rabitq_spark.index.model import RaBitQModel
-        from rabitq_spark.streaming.index_stream import (
-            maintain_index_stream,
-            read_vector_stream,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        half = emb.count() // 2
-        seed = emb.filter(F.col("vec_id") < half).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        path = _mkdtemp(prefix="rabitq_stream_index_")
-        build_index(seed, RaBitQConfig()).save(path)
-        stream_in = _mkdtemp(prefix="rabitq_stream_in_")
-        (
-            emb.filter(F.col("vec_id") >= half)
-            .select("vec_id", "embedding")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(stream_in)
-        )
-        maintain_index_stream(
-            path,
-            read_vector_stream(spark, stream_in),
-            checkpoint=_mkdtemp(prefix="rabitq_stream_ckpt_"),
-        )
-        _MODEL_CACHE[key] = RaBitQModel.load(spark, path)
-    return _MODEL_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    half = emb.count() // 2
+    seed = emb.filter(F.col("vec_id") < half).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    )
+    path = _mkdtemp(prefix="rabitq_stream_index_")
+    build_index(seed, RaBitQConfig()).save(path)
+    stream_in = _mkdtemp(prefix="rabitq_stream_in_")
+    (
+        emb.filter(F.col("vec_id") >= half)
+        .select("vec_id", "embedding")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(stream_in)
+    )
+    maintain_index_stream(
+        path,
+        read_vector_stream(spark, stream_in),
+        checkpoint=_mkdtemp(prefix="rabitq_stream_ckpt_"),
+    )
+    return RaBitQModel.load(spark, path)
 
 
 def q_ann_stream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -844,72 +843,57 @@ def q_ann_stream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exhaustive config == brute force over the FULL table, so the whole
     streaming-append path (frozen transform, partition append, reload) is
     oracle-checked bit-exact."""
-    from rabitq_spark.index import search
-
-    model = _get_stream_model(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(prepared(spark, sf_dir, "stream"), emb)
 
 
-def _get_stream_cdc_model(spark: SparkSession, sf_dir: str):
+def _build_stream_cdc(spark: SparkSession, sf_dir: str):
     """Bootstrap the even ids, then stream two op-tagged CDC batches:
     batch 0 upserts reversed vectors for id % 8 == 0 and inserts the odd
     ids with id % 9 == 1; batch 1 deletes id % 16 == 0. Visibility resolves
     through sequence-versioned tombstones at load
     (streaming/index_stream.py::load_index_with_tombstones)."""
-    key = ("stream_cdc", sf_dir)
-    if key not in _MODEL_CACHE:
-        import tempfile
+    from rabitq_spark.config import RaBitQConfig
+    from rabitq_spark.index import build_index
+    from rabitq_spark.streaming.index_stream import (
+        load_index_with_tombstones,
+        maintain_index_cdc_stream,
+        read_cdc_vector_stream,
+    )
 
-        from rabitq_spark.config import RaBitQConfig
-        from rabitq_spark.index import build_index
-        from rabitq_spark.streaming.index_stream import (
-            load_index_with_tombstones,
-            maintain_index_cdc_stream,
-            read_cdc_vector_stream,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        boot = emb.filter(F.col("vec_id") % 2 == 0).select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-        model_path = _mkdtemp(prefix="rabitq_cdc_model_")
-        build_index(boot, RaBitQConfig()).save(model_path)
-        stream_in = _mkdtemp(prefix="rabitq_cdc_in_")
-        b0 = (
-            emb.filter((F.col("vec_id") % 8 == 0))
-            .select(
-                F.lit("upsert").alias("op"),
-                "vec_id",
-                F.reverse("embedding").alias("embedding"),
-            )
-            .unionByName(
-                emb.filter(
-                    (F.col("vec_id") % 2 == 1) & (F.col("vec_id") % 9 == 1)
-                ).select(F.lit("upsert").alias("op"), "vec_id", "embedding")
-            )
-        )
-        b1 = emb.filter(F.col("vec_id") % 16 == 0).select(
-            F.lit("delete").alias("op"),
+    emb = load_table(spark, sf_dir, "embeddings")
+    boot = emb.filter(F.col("vec_id") % 2 == 0).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    )
+    model_path = _mkdtemp(prefix="rabitq_cdc_model_")
+    build_index(boot, RaBitQConfig()).save(model_path)
+    stream_in = _mkdtemp(prefix="rabitq_cdc_in_")
+    b0 = (
+        emb.filter((F.col("vec_id") % 8 == 0))
+        .select(
+            F.lit("upsert").alias("op"),
             "vec_id",
-            F.lit(None).cast("array<float>").alias("embedding"),
+            F.reverse("embedding").alias("embedding"),
         )
-        b0.coalesce(1).write.mode("append").parquet(stream_in)
-        b1.coalesce(1).write.mode("append").parquet(stream_in)
-        maintain_index_cdc_stream(
-            model_path,
-            read_cdc_vector_stream(spark, stream_in, max_files_per_trigger=1),
-            checkpoint=_mkdtemp(prefix="rabitq_cdc_ckpt_"),
+        .unionByName(
+            emb.filter(
+                (F.col("vec_id") % 2 == 1) & (F.col("vec_id") % 9 == 1)
+            ).select(F.lit("upsert").alias("op"), "vec_id", "embedding")
         )
-        model = load_index_with_tombstones(spark, model_path)
-        model.index_df = model.index_df.cache()
-        _MODEL_CACHE[key] = model
-    return _MODEL_CACHE[key]
+    )
+    b1 = emb.filter(F.col("vec_id") % 16 == 0).select(
+        F.lit("delete").alias("op"),
+        "vec_id",
+        F.lit(None).cast("array<float>").alias("embedding"),
+    )
+    b0.coalesce(1).write.mode("append").parquet(stream_in)
+    b1.coalesce(1).write.mode("append").parquet(stream_in)
+    maintain_index_cdc_stream(
+        model_path,
+        read_cdc_vector_stream(spark, stream_in, max_files_per_trigger=1),
+        checkpoint=_mkdtemp(prefix="rabitq_cdc_ckpt_"),
+    )
+    return _cached_index(load_index_with_tombstones(spark, model_path))
 
 
 def q_ann_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -918,16 +902,8 @@ def q_ann_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of ann_ivf_cdc. Exhaustive search == brute force over
     the post-CDC survivor set, so batch ordering, tombstone sequencing, and
     the frozen-transform appends are all hash-checked bit-exact."""
-    from rabitq_spark.index import search
-
-    model = _get_stream_cdc_model(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(prepared(spark, sf_dir, "stream_cdc"), emb)
 
 
 _SQL_KNN_STREAM_CDC = f"""
@@ -958,36 +934,31 @@ SELECT query_id, neighbor_id, dist, CAST(rank AS INT) AS rank FROM (
 """
 
 
-def _get_cosine_model(spark: SparkSession, sf_dir: str):
+def _build_cosine(spark: SparkSession, sf_dir: str):
     """IVF index over unit-normalized embeddings: cosine ranking == L2 ranking
     on unit vectors, so the same index machinery serves cosine queries (the
     distance the reference leaves unchecked, README.md:19)."""
-    key = ("cosine", sf_dir)
-    if key not in _MODEL_CACHE:
-        from rabitq_spark.config import RaBitQConfig
-        from rabitq_spark.functions.vector import l2_norm
-        from rabitq_spark.index import build_index
+    from rabitq_spark.config import RaBitQConfig
+    from rabitq_spark.functions.vector import l2_norm
+    from rabitq_spark.index import build_index
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        # norm behind a barrier: inlined, the l2_norm FOLD re-evaluates per
-        # element inside the division lambda (64x per row — pitfall #2;
-        # measured 23.6 -> 3.9 s of build at 20k rows), and the checkpoint
-        # lets build_index's several consumers share one normalization pass
-        unit = (
-            emb.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding"),
-                l2_norm("embedding").alias("__n"),
-            )
-            .localCheckpoint(eager=False)
-            .select(
-                "id", _unit_vec(F.col("embedding"), F.col("__n")).alias("vec")
-            )
+    emb = load_table(spark, sf_dir, "embeddings")
+    # norm behind a barrier: inlined, the l2_norm FOLD re-evaluates per
+    # element inside the division lambda (64x per row — pitfall #2;
+    # measured 23.6 -> 3.9 s of build at 20k rows), and the checkpoint
+    # lets build_index's several consumers share one normalization pass
+    unit = (
+        emb.select(
+            F.col("vec_id").alias("id"),
+            F.col("embedding"),
+            l2_norm("embedding").alias("__n"),
         )
-        model = build_index(unit, RaBitQConfig())
-        model.index_df = model.index_df.cache()
-        _MODEL_CACHE[key] = model
-    return _MODEL_CACHE[key]
+        .localCheckpoint(eager=False)
+        .select(
+            "id", _unit_vec(F.col("embedding"), F.col("__n")).alias("vec")
+        )
+    )
+    return _cached_index(build_index(unit, RaBitQConfig()))
 
 
 def _unit_vec(vec, norm):
@@ -1005,7 +976,7 @@ def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rabitq_spark.functions.vector import dot, l2_norm
     from rabitq_spark.index import search
 
-    model = _get_cosine_model(spark, sf_dir)
+    model = prepared(spark, sf_dir, "cosine")
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.select(
         F.col("vec_id"), F.col("embedding"), l2_norm("embedding").alias("norm")
@@ -1044,22 +1015,17 @@ def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
-def _get_attr_model(spark: SparkSession, sf_dir: str):
+def _build_attr(spark: SparkSession, sf_dir: str):
     """Index carrying a metadata column (label) for filtered search — the
     attrs ride the index rows so predicates push into the Parquet scan."""
     from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.index import build_index
 
-    key = ("attr", sf_dir)
-    if key not in _MODEL_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label"
-        )
-        model = build_index(base, RaBitQConfig(), attr_cols=["label"])
-        model.index_df = model.index_df.cache()
-        _MODEL_CACHE[key] = model
-    return _MODEL_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    base = emb.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label"
+    )
+    return _cached_index(build_index(base, RaBitQConfig(), attr_cols=["label"]))
 
 
 def q_ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1067,20 +1033,9 @@ def q_ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index scan BEFORE the shortlist — exhaustive config therefore equals
     brute force over the filtered base, bit-for-bit. Standard vector-store
     surface the reference lacks (its README has no filtering either)."""
-    from rabitq_spark.index import search
-
-    model = _get_attr_model(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model,
-        queries,
-        topk=_KNN_K,
-        nprobe=model.n_clusters,
-        overfetch=10**6,
-        index_predicate=F.col("label") < 5,
+    return _search_all(
+        prepared(spark, sf_dir, "attr"), emb, index_predicate=F.col("label") < 5
     )
 
 
@@ -1111,11 +1066,9 @@ def q_ann_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     configuration == brute-force range scan bit-for-bit."""
     from rabitq_spark.index import range_search
 
-    model = _get_model(spark, sf_dir)
+    model = prepared(spark, sf_dir, "ivf")
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = _knn_queries(emb)
     return range_search(
         model,
         queries,
@@ -1145,18 +1098,12 @@ def q_ann_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete-then-search (README.md:18's unchecked 'delete'): drop every
     vec_id % 7 == 0 from the trained index via anti-join, exhaustive search
     over the survivors == brute force over the filtered table."""
-    from rabitq_spark.index import search
     from rabitq_spark.index.build import delete_from_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     victims = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-    model = delete_from_index(_get_model(spark, sf_dir), victims)
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    model = delete_from_index(prepared(spark, sf_dir, "ivf"), victims)
+    return _search_all(model, emb)
 
 
 _SQL_KNN_DELETE = f"""
@@ -1185,22 +1132,16 @@ def q_ann_ivf_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive settings the compacted index must still equal brute force
     over the survivors, which hash-checks the full requantization pass,
     not just the anti-join."""
-    from rabitq_spark.index import search
     from rabitq_spark.index.build import compact_index, delete_from_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     victims = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-    trimmed = delete_from_index(_get_model(spark, sf_dir), victims)
+    trimmed = delete_from_index(prepared(spark, sf_dir, "ivf"), victims)
     n_left = emb.count() - victims.count()
     model = compact_index(
         trimmed, n_clusters=max(4, int(n_left**0.5)), n_rows=n_left
     )
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(model, emb)
 
 
 _UPSERT_N = 25
@@ -1211,20 +1152,14 @@ def q_ann_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replace the first 25 vectors with their reversed arrays
     (delete + frozen-transform append), exhaustive search == brute force
     over the post-upsert table."""
-    from rabitq_spark.index import search
     from rabitq_spark.index.build import upsert_into_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     replacement = emb.filter(F.col("vec_id") < _UPSERT_N).select(
         F.col("vec_id").alias("id"), F.reverse(F.col("embedding")).alias("vec")
     )
-    model = upsert_into_index(_get_model(spark, sf_dir), replacement)
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    model = upsert_into_index(prepared(spark, sf_dir, "ivf"), replacement)
+    return _search_all(model, emb)
 
 
 def q_ann_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,7 +1169,6 @@ def q_ann_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     composing the lakehouse CDC surface (operators/cdc.py semantics) with
     index mutation, no rebuild, untouched codes never recomputed.
     Exhaustive search == brute force over the changelog-applied base."""
-    from rabitq_spark.index import search
     from rabitq_spark.index.build import delete_from_index, upsert_into_index
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1251,14 +1185,9 @@ def q_ann_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    model = delete_from_index(_get_model(spark, sf_dir), deletes)
+    model = delete_from_index(prepared(spark, sf_dir, "ivf"), deletes)
     model = upsert_into_index(model, upserts)
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(model, emb)
 
 
 _SQL_KNN_CDC = f"""
@@ -1785,6 +1714,17 @@ SELECT doc_id, dropped_by, CAST(dropped_by = 'kept' AS INT) AS kept FROM (
 """
 
 
+def _build_neardup_state_base(spark: SparkSession, sf_dir: str) -> str:
+    """Directory of the NearDupState bootstrapped on doc_id % 10 >= 2; the
+    entries below fold the remaining docs in as delta batches."""
+    from rabitq_spark.operators.dedup import NearDupState
+
+    docs = load_table(spark, sf_dir, "documents")
+    base_dir = _mkdtemp(prefix="neardup_state_")
+    NearDupState(spark, base_dir).bootstrap(docs.filter(F.col("doc_id") % 10 >= 2))
+    return base_dir
+
+
 def q_neardup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized-state incremental near-dup (operators/dedup.py::
     NearDupState — round-4 verdict item 5): the corpus's banded LSH state
@@ -1794,19 +1734,13 @@ def q_neardup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms with the state side scanned, never shuffled. The oracle is the
     full-corpus recompute — bit-equality across two chained deltas proves
     both the incremental identity and the state layering."""
-    import tempfile
-
     from rabitq_spark.operators.dedup import NearDupState
 
     docs = load_table(spark, sf_dir, "documents")
-    key = (sf_dir, "neardup_state_base")
-    if key not in _MODEL_CACHE:
-        base_dir = _mkdtemp(prefix="neardup_state_")
-        boot = NearDupState(spark, base_dir)
-        boot.bootstrap(docs.filter(F.col("doc_id") % 10 >= 2))
-        _MODEL_CACHE[key] = base_dir
     state = NearDupState(
-        spark, _MODEL_CACHE[key], _mkdtemp(prefix="neardup_delta_")
+        spark,
+        prepared(spark, sf_dir, "neardup_state_base"),
+        _mkdtemp(prefix="neardup_delta_"),
     )
     state.apply_delta(docs.filter(F.col("doc_id") % 10 == 0))
     state.apply_delta(docs.filter(F.col("doc_id") % 10 == 1))
@@ -1821,8 +1755,6 @@ def q_neardup_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus recompute — bit-equality proves the split identity is
     associative over micro-batches (ANY partitioning of the delta drains
     to the same pair set)."""
-    import tempfile
-
     from rabitq_spark.operators.dedup import NearDupState
     from rabitq_spark.streaming.neardup_stream import (
         neardup_state_maintenance_stream,
@@ -1830,13 +1762,6 @@ def q_neardup_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    key = (sf_dir, "neardup_state_base")  # bootstrap shared with q_neardup_state
-    if key not in _MODEL_CACHE:
-        base_dir = _mkdtemp(prefix="neardup_state_")
-        NearDupState(spark, base_dir).bootstrap(
-            docs.filter(F.col("doc_id") % 10 >= 2)
-        )
-        _MODEL_CACHE[key] = base_dir
     stream_in = _mkdtemp(prefix="nds_stream_in_")
     for r in (0, 1):
         (
@@ -1847,7 +1772,9 @@ def q_neardup_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(stream_in)
         )
     state = NearDupState(
-        spark, _MODEL_CACHE[key], _mkdtemp(prefix="nds_delta_")
+        spark,
+        prepared(spark, sf_dir, "neardup_state_base"),
+        _mkdtemp(prefix="nds_delta_"),
     )
     neardup_state_maintenance_stream(
         state,
@@ -1952,49 +1879,44 @@ SELECT id AS doc_id, rank FROM {prev}
 """
 
 
-def _get_neardup_stream_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _build_neardup_stream(spark: SparkSession, sf_dir: str):
     """Stream the documents table through online near-dup admission in
     id-ordered micro-batches; return the decision log. Files are staged in
     ascending doc_id ranges (FileStreamSource processes oldest-first), so
     each group's minimum id arrives first and the greedy admit order
     reproduces the batch canonicalization on clique-shaped groups."""
-    key = ("neardup_stream", sf_dir)
-    if key not in _MODEL_CACHE:
-        import tempfile
+    from rabitq_spark.streaming.neardup_stream import (
+        neardup_maintenance_stream,
+        read_doc_stream,
+    )
 
-        from rabitq_spark.streaming.neardup_stream import (
-            neardup_maintenance_stream,
-            read_doc_stream,
-        )
-
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        stream_in = _mkdtemp(prefix="rabitq_nd_stream_in_")
-        # slice by the ACTUAL id range, not [0, n): benchdata replicas
-        # carry key-OFFSET doc_ids, and the [0, n) assumption silently
-        # streamed only the first replica at sf1.0 (measured: exactly
-        # 1/10 of the corpus — the same bug class the round-9 full sweep
-        # exposed in the event-stream entries)
-        lo_id, hi_id = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-        slice_sz = max(1, (hi_id - lo_id) // 4 + 1)
-        for i in range(4):
-            lo = lo_id + i * slice_sz
-            hi = lo_id + (i + 1) * slice_sz
-            (
-                docs.filter(
-                    (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(stream_in)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    stream_in = _mkdtemp(prefix="rabitq_nd_stream_in_")
+    # slice by the ACTUAL id range, not [0, n): benchdata replicas
+    # carry key-OFFSET doc_ids, and the [0, n) assumption silently
+    # streamed only the first replica at sf1.0 (measured: exactly
+    # 1/10 of the corpus — the same bug class the round-9 full sweep
+    # exposed in the event-stream entries)
+    lo_id, hi_id = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+    slice_sz = max(1, (hi_id - lo_id) // 4 + 1)
+    for i in range(4):
+        lo = lo_id + i * slice_sz
+        hi = lo_id + (i + 1) * slice_sz
+        (
+            docs.filter(
+                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
             )
-        store = _mkdtemp(prefix="rabitq_nd_store_")
-        neardup_maintenance_stream(
-            read_doc_stream(spark, stream_in, max_files_per_trigger=1),
-            store,
-            checkpoint=_mkdtemp(prefix="rabitq_nd_ckpt_"),
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(stream_in)
         )
-        _MODEL_CACHE[key] = spark.read.parquet(f"{store}/decisions")
-    return _MODEL_CACHE[key]
+    store = _mkdtemp(prefix="rabitq_nd_store_")
+    neardup_maintenance_stream(
+        read_doc_stream(spark, stream_in, max_files_per_trigger=1),
+        store,
+        checkpoint=_mkdtemp(prefix="rabitq_nd_ckpt_"),
+    )
+    return spark.read.parquet(f"{store}/decisions")
 
 
 def q_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2002,7 +1924,7 @@ def q_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch connected-components canonicalization because real
     near-dup groups are cliques (verified for this corpus in
     tests/test_neardup_stream.py)."""
-    return _get_neardup_stream_decisions(spark, sf_dir).select(
+    return prepared(spark, sf_dir, "neardup_stream").select(
         "doc_id", "canonical_id", "is_dup"
     )
 
@@ -2349,22 +2271,17 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     next round's counts, which no single SQL statement can express; the
     pytest gate instead matches the merge sequence symbol-for-symbol
     against an independent pure-Python reference (tests/test_bpe.py)."""
-    merges = _get_bpe_merges(spark, sf_dir)
+    merges = prepared(spark, sf_dir, "bpe")
     return spark.createDataFrame(
         [(i, a, b, c) for i, (a, b, c) in enumerate(merges)],
         "step int, left string, right string, pair_count bigint",
     )
 
 
-def _get_bpe_merges(spark: SparkSession, sf_dir: str):
-    key = ("bpe", sf_dir)
-    if key not in _MODEL_CACHE:
-        from rabitq_spark.operators.bpe import bpe_train
+def _build_bpe(spark: SparkSession, sf_dir: str):
+    from rabitq_spark.operators.bpe import bpe_train
 
-        _MODEL_CACHE[key] = bpe_train(
-            load_table(spark, sf_dir, "documents"), n_merges=10
-        )
-    return _MODEL_CACHE[key]
+    return bpe_train(load_table(spark, sf_dir, "documents"), n_merges=10)
 
 
 def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2376,7 +2293,7 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rabitq_spark.operators.bpe import bpe_token_counts
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = _get_bpe_merges(spark, sf_dir)
+    merges = prepared(spark, sf_dir, "bpe")
     counts = bpe_token_counts(docs, merges)
     base = docs.select("doc_id", token_count("text").alias("n_ws"))
     return base.join(counts.drop("n_ws"), "doc_id", "left").select(
@@ -2484,7 +2401,7 @@ def q_maxsim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same oracle contract as ann_ivf_exhaustive."""
     from rabitq_spark.operators.knn import maxsim_search_ivf
 
-    model = _get_model(spark, sf_dir)
+    model = prepared(spark, sf_dir, "ivf")
     emb = load_table(spark, sf_dir, "embeddings")
     mv = emb.select(
         F.floor(F.col("vec_id") / _MAXSIM_M).cast("bigint").alias("doc_id"),
@@ -2746,6 +2663,19 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _build_emb_neardup_state_base(spark: SparkSession, sf_dir: str) -> str:
+    """Directory of the EmbeddingNearDupState bootstrapped on vec_id % 10
+    >= 2; the entries below fold the remaining vectors in as deltas."""
+    from rabitq_spark.operators.dedup import EmbeddingNearDupState
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    base_dir = _mkdtemp(prefix="embstate_")
+    EmbeddingNearDupState(spark, base_dir, threshold=0.4).bootstrap(
+        emb.filter(F.col("vec_id") % 10 >= 2)
+    )
+    return base_dir
+
+
 def q_embedding_neardup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized-state incremental EMBEDDING near-dup (operators/
     dedup.py::EmbeddingNearDupState): bootstrap once (cached), then two
@@ -2753,20 +2683,12 @@ def q_embedding_neardup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors with the Δ matrix broadcast — the corpus side never shuffles.
     Oracle = the full-corpus all-pairs cosine recompute, bit-exact (the
     screen margin + fold-order emit make the two-phase plan exact)."""
-    import tempfile
-
     from rabitq_spark.operators.dedup import EmbeddingNearDupState
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, "emb_neardup_state_base")
-    if key not in _MODEL_CACHE:
-        base_dir = _mkdtemp(prefix="embstate_")
-        boot = EmbeddingNearDupState(spark, base_dir, threshold=0.4)
-        boot.bootstrap(emb.filter(F.col("vec_id") % 10 >= 2))
-        _MODEL_CACHE[key] = base_dir
     state = EmbeddingNearDupState(
         spark,
-        _MODEL_CACHE[key],
+        prepared(spark, sf_dir, "emb_neardup_state_base"),
         _mkdtemp(prefix="embstate_d_"),
         threshold=0.4,
     )
@@ -2809,8 +2731,6 @@ def q_embedding_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a file-source stream, each micro-batch is one GEMM-screened apply_delta
     against the materialized vector state. Oracle = full all-pairs
     recompute (associative over any micro-batch partitioning)."""
-    import tempfile
-
     from rabitq_spark.operators.dedup import EmbeddingNearDupState
     from rabitq_spark.streaming.index_stream import read_vector_stream
     from rabitq_spark.streaming.neardup_stream import (
@@ -2818,12 +2738,6 @@ def q_embedding_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, "emb_neardup_state_base")  # shared with the batch query
-    if key not in _MODEL_CACHE:
-        base_dir = _mkdtemp(prefix="embstate_")
-        boot = EmbeddingNearDupState(spark, base_dir, threshold=0.4)
-        boot.bootstrap(emb.filter(F.col("vec_id") % 10 >= 2))
-        _MODEL_CACHE[key] = base_dir
     stream_in = _mkdtemp(prefix="embstate_stream_in_")
     for r in (0, 1):
         (
@@ -2835,7 +2749,7 @@ def q_embedding_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     state = EmbeddingNearDupState(
         spark,
-        _MODEL_CACHE[key],
+        prepared(spark, sf_dir, "emb_neardup_state_base"),
         _mkdtemp(prefix="embstate_sd_"),
         threshold=0.4,
     )
@@ -2851,9 +2765,8 @@ def q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rabitq_spark.operators.simjoin import similarity_join
 
     emb = load_table(spark, sf_dir, "embeddings")
-    left = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    model = _get_model(spark, sf_dir)
-    return similarity_join(left, model, k=_SIMJOIN_K, exhaustive=True)
+    model = prepared(spark, sf_dir, "ivf")
+    return similarity_join(_base(emb), model, k=_SIMJOIN_K, exhaustive=True)
 
 
 def q_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3467,11 +3380,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rabitq_spark.operators.knn import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    nn = knn_exact(queries, base, _HN_SKIP + _HN_K)
+    nn = knn_exact(_knn_queries(emb), _base(emb), _HN_SKIP + _HN_K)
     return (
         nn.filter(F.col("rank") > _HN_SKIP)
         .select(
@@ -3714,8 +3623,6 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id-range files; in-batch rows sorted per key). The drained state
     must equal the batch ordered fold — and the oracle — bit-for-bit,
     which checks the custom stateful operator end-to-end."""
-    import tempfile
-
     from rabitq_spark.streaming.pipeline import read_events_stream
     from rabitq_spark.streaming.stateful import streaming_ewma
 
@@ -3762,8 +3669,6 @@ def q_stream_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contrast q_stream_sessionize, which exercises the BUILT-IN
     F.session_window; this entry exercises the explicit-state extension
     point the built-in can't cover (custom close rules, richer state)."""
-    import tempfile
-
     from rabitq_spark.streaming.pipeline import read_events_stream
     from rabitq_spark.streaming.stateful import stateful_sessionize
 
@@ -3813,8 +3718,6 @@ def q_stream_sessionize_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the stream drains; the emitted set must then equal the batch
     gaps-and-islands sessionize — and its oracle — bit-exactly."""
     import os as _os
-    import tempfile
-
     from rabitq_spark.streaming.pipeline import (
         read_events_stream,
         stamp_staged_files,
@@ -4516,8 +4419,6 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema on read-back — never inference in a pipeline) must
     aggregate identically to the Parquet original. Exercises the text
     source/sink family the lakehouse edges still speak."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -4531,8 +4432,6 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + source twin of q_csv_roundtrip."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -4549,8 +4448,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark-native writer/reader, predicate pushdown and column pruning
     included) — the third lakehouse storage format a migrating user brings.
     Typed columns survive natively, so no schema-on-read is needed."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -5257,6 +5154,35 @@ FROM events GROUP BY user_id
 """
 
 
+def _build_stream_incr_agg(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the final aggregate state after streaming the events table
+    in four file slices."""
+    from rabitq_spark.streaming.matview_stream import (
+        maintain_agg_stream,
+        read_event_stream,
+    )
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", F.col("value").cast("double").alias("value")
+    )
+    stream_in = _mkdtemp(prefix="rabitq_mv_stream_in_")
+    for i in range(4):
+        (
+            ev.filter((F.col("event_id") % 4) == i)
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(stream_in)
+        )
+    return maintain_agg_stream(
+        read_event_stream(spark, stream_in, max_files_per_trigger=1),
+        state_dir=_mkdtemp(prefix="rabitq_mv_state_"),
+        checkpoint=_mkdtemp(prefix="rabitq_mv_ckpt_"),
+        keys=["user_id"],
+        sum_cols=["value"],
+        minmax_cols=["value"],
+    )
+
+
 def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of incremental_agg: the events table arrives as four
     file slices through a foreachBatch stream; each micro-batch merges its
@@ -5264,36 +5190,7 @@ def q_stream_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/matview_stream.py). DECIMAL addition is associative, so the
     final state must equal the full batch recompute bit-for-bit — same
     oracle as incremental_agg."""
-    key = ("stream_incr_agg", sf_dir)
-    if key not in _MODEL_CACHE:
-        import tempfile
-
-        from rabitq_spark.streaming.matview_stream import (
-            maintain_agg_stream,
-            read_event_stream,
-        )
-
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", F.col("value").cast("double").alias("value")
-        )
-        stream_in = _mkdtemp(prefix="rabitq_mv_stream_in_")
-        for i in range(4):
-            (
-                ev.filter((F.col("event_id") % 4) == i)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(stream_in)
-            )
-        final = maintain_agg_stream(
-            read_event_stream(spark, stream_in, max_files_per_trigger=1),
-            state_dir=_mkdtemp(prefix="rabitq_mv_state_"),
-            checkpoint=_mkdtemp(prefix="rabitq_mv_ckpt_"),
-            keys=["user_id"],
-            sum_cols=["value"],
-            minmax_cols=["value"],
-        )
-        _MODEL_CACHE[key] = final
-    state = spark.read.parquet(_MODEL_CACHE[key])
+    state = spark.read.parquet(prepared(spark, sf_dir, "stream_incr_agg"))
     return state.select(
         "user_id",
         "cnt",
@@ -7212,6 +7109,22 @@ LEFT JOIN lowq ON t.doc_id = lowq.doc_id
 """
 
 
+def _build_curated_retrieval(spark: SparkSession, sf_dir: str):
+    """IVF index over the embeddings of the documents curation keeps."""
+    from rabitq_spark.config import RaBitQConfig
+    from rabitq_spark.index import build_index
+
+    kept = (
+        q_curate_corpus(spark, sf_dir)
+        .filter(F.col("reason") == "kept")
+        .select(F.col("doc_id").alias("vec_id"))
+    )
+    base = load_table(spark, sf_dir, "embeddings").join(kept, "vec_id").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    )
+    return _cached_index(build_index(base, RaBitQConfig()))
+
+
 def q_curated_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full product loop composed end to end: curation verdicts
     (dedup > contamination > repetition > quality) select the surviving
@@ -7219,31 +7132,8 @@ def q_curated_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over it — exhaustive config == brute force over exactly the
     curated survivor set, so the composition of the two oracle-checked
     subsystems is itself hash-checked."""
-    from rabitq_spark.config import RaBitQConfig
-    from rabitq_spark.index import build_index, search
-
-    key = (sf_dir, "curated_retrieval")
-    if key not in _MODEL_CACHE:
-        kept = (
-            q_curate_corpus(spark, sf_dir)
-            .filter(F.col("reason") == "kept")
-            .select("doc_id")
-        )
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.join(
-            kept.withColumnRenamed("doc_id", "vec_id"), "vec_id"
-        ).select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-        model = build_index(base, RaBitQConfig())
-        model.index_df = model.index_df.cache()
-        _MODEL_CACHE[key] = model
-    model = _MODEL_CACHE[key]
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return search(
-        model, queries, topk=_KNN_K, nprobe=model.n_clusters, overfetch=10**6
-    )
+    return _search_all(prepared(spark, sf_dir, "curated_retrieval"), emb)
 
 
 def _sql_curated_retrieval() -> str:
@@ -7275,6 +7165,35 @@ SELECT query_id, neighbor_id, dist, CAST(rank AS INT) AS rank FROM (
 
 # --------------------------------------------------------------------------
 # registry
+
+# Every kind of trained state and its one builder (see prepared()). `ivf`
+# comes first: four kinds derive from it, so prepare() times their own work.
+PREPARED_KINDS: dict[str, Callable[[SparkSession, str], object]] = {
+    "ivf": _build_ivf,
+    "vecstore": _build_vecstore,
+    "cold": _build_cold,
+    "store_cold": _build_store_cold,
+    "store_uri": _build_store_uri,
+    "multibit2": _build_multibit2,
+    "cosine": _build_cosine,
+    "attr": _build_attr,
+    "jl_ivf": _build_jl_ivf,
+    "stream": _build_stream,
+    "stream_cdc": _build_stream_cdc,
+    "curated_retrieval": _build_curated_retrieval,
+    "sq8_bounds": _build_sq8_bounds,
+    "pq_codebook": _build_pq_codebook,
+    "pq4_codebook": _build_pq4_codebook,
+    "ivfpq": _build_ivfpq,
+    "ivfpq_cold": _build_ivfpq_cold,
+    "ivfpq_attr": _build_ivfpq_attr,
+    "ivfpq_append": _build_ivfpq_append,
+    "bpe": _build_bpe,
+    "neardup_state_base": _build_neardup_state_base,
+    "neardup_stream": _build_neardup_stream,
+    "emb_neardup_state_base": _build_emb_neardup_state_base,
+    "stream_incr_agg": _build_stream_incr_agg,
+}
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # Registry ORDER is a driver-coverage decision: the driver's

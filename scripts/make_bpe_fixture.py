@@ -25,7 +25,7 @@ import os
 import sys
 from collections import Counter
 
-N_MERGES = 10  # matches queries.py::_get_bpe_merges
+N_MERGES = 10  # matches queries.py::_build_bpe (the `bpe` prepared kind)
 
 
 def ref_bpe_train(texts: list[str], n_merges: int) -> list[tuple[str, str, int]]:

@@ -5,6 +5,8 @@ optimization work targets measured cost, not guesses (guide §1).
 Usage: PYTHONPATH=/root/repo python scripts/profile_query.py name [name ...]
        [--sf /root/testdata/sf0.1] [--repeat 2] [--no-warmup]
 
+Builds every kind of trained state for --sf first (queries.prepare) and
+prints each build wall on its own line, so the timed reps hold no build.
 Writes nothing to the repo; prints a per-job table (job id, duration,
 n tasks, description/callsite) for the LAST run of each query.
 """
@@ -45,8 +47,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     app_id = spark.sparkContext.applicationId
 
-    from rabitq_spark.queries import SPARK_QUERIES
+    from rabitq_spark.queries import SPARK_QUERIES, prepare
 
+    for kind, sec in prepare(spark, args.sf).items():
+        print(f"[prepare {kind}] {sec:.2f}s")
     for name in args.names:
         fn = SPARK_QUERIES[name]
         if not args.no_warmup:

@@ -1,9 +1,11 @@
 """Time selected registry queries with the noop sink (guide §1.4).
 
 Usage: PYTHONPATH=<repo> python scripts/time_queries.py [--sf DIR] [--reps N] name...
-Prints one line per query: name, per-rep seconds, and the Spark job count
-consumed by the reps (jobs are the load-independent structural signal on a
-noisy shared host).
+First builds every kind of trained state for --sf (queries.prepare) and
+prints one PREPARE line per kind with its build seconds, so no timed rep
+includes a build. Then prints one line per query: name, per-rep seconds,
+and the Spark jobs each rep consumed (jobs are the load-independent
+structural signal on a noisy shared host).
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ import time
 
 sys.path.insert(0, ".")
 
-from rabitq_spark.queries import SPARK_QUERIES
+from rabitq_spark.queries import SPARK_QUERIES, prepare
 from rabitq_spark.session import get_spark
 
 
@@ -26,28 +28,34 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark("time_queries")
+    # retain every job in the status store: the per-rep job count is a
+    # difference of its size, which the default 1000-job cap would clip
+    spark = get_spark(
+        "time_queries", extra_conf={"spark.ui.retainedJobs": "1000000"}
+    )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
     def n_jobs() -> int:
         return sc._jsc.sc().statusStore().jobsList(None).size()
 
+    for kind, sec in prepare(spark, args.sf).items():
+        print(f"PREPARE {kind}: {sec:.2f}s", flush=True)
     for name in args.names:
         fn = SPARK_QUERIES[name]
         # warmup at the smallest SF: codegen/JIT hot, same plan shapes
         fn(spark, args.warm_sf).write.format("noop").mode("overwrite").save()
-        runs = []
-        j0 = n_jobs()
+        runs, jobs = [], []
         for _ in range(args.reps):
             sc.setJobDescription(f"time:{name}")
+            j0 = n_jobs()
             t0 = time.perf_counter()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
-        njobs = n_jobs() - j0
+            jobs.append(n_jobs() - j0)
         print(
             f"RESULT {name}: reps={[round(r, 2) for r in runs]} "
-            f"jobs/{args.reps}reps={njobs}",
+            f"jobs/rep={jobs}",
             flush=True,
         )
     spark.stop()
