@@ -1980,19 +1980,24 @@ def _scale_probe_10m(
     out["rerank_base_rows_per_query"] = round(
         sum(m.rerank_base_rows for m in mets) / max(nq, 1), 1
     )
-    from rabitq_spark.index.search import _prepare_probes
-
+    # rough candidates per query, analytically: each probed cluster's size
+    # times the probe rows search() reported on it (SearchMetrics probe
+    # geometry, both halves) — the bench does not re-run the probe prep
     sizes = {
         r["cluster_id"]: r["n"]
         for r in model.index_df.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    probe_pdf = _prepare_probes(
-        model, queries, "query_id", "qvec", cfg.nprobe
-    ).select("cluster_id").toPandas()
-    out["rough_candidates_per_query"] = round(
-        float(probe_pdf["cluster_id"].map(sizes).sum()) / max(nq, 1), 1
+    geometry = [m.probed_clusters for m in mets]
+    out["rough_candidates_per_query"] = (
+        round(
+            sum(sizes.get(c, 0) * n for g in geometry for c, n in g.items())
+            / max(nq, 1),
+            1,
+        )
+        if all(g is not None for g in geometry)
+        else None
     )
     # Phase diet (round 11, second pass): the phase used to run FOUR full
     # 10M searches and a mid-run host slowdown blew it to 1249 s vs a

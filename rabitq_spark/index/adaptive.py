@@ -55,19 +55,21 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.model import RaBitQModel
-from rabitq_spark.index.rotation import apply_rot
 from rabitq_spark.index.search import (
     KERNELS,
-    PROBE_SCHEMA,
     _fused_shortlist,
+    _padded_queries,
     auto_overfetch,
     choose_kernel,
+    cluster_filter,
     exact_rerank,
+    probe_frame,
     quantize_probe_pairs,
+    query_geometry,
     rough_estimator_expr,
 )
+from rabitq_spark.index.vecstore import query_matrix
 from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.topk import topk_per_group
 from rabitq_spark._dist import ensure_package_on_executors
@@ -157,15 +159,9 @@ def search_adaptive(
 
     qpd = queries.select(query_id, query_vec).toPandas()
     q_ids = np.asarray(qpd[query_id].values)
-    q = np.vstack(qpd[query_vec].values).astype(np.float32)
-    nq = q.shape[0]
-    if q.shape[1] < model.dim_pad:
-        q = np.hstack(
-            [q, np.zeros((nq, model.dim_pad - q.shape[1]), np.float32)]
-        )
-    yp = apply_rot(q, model.rotation).astype(np.float32)
-    cp_sq = (cp**2).sum(axis=1)
-    d2 = (yp**2).sum(axis=1)[:, None] - 2.0 * (yp @ cp.T) + cp_sq[None, :]
+    qmat = query_matrix(qpd[query_vec].to_numpy(), model.dim)
+    nq = qmat.shape[0]
+    yp, d2 = query_geometry(qmat, model.rotation, cp)
     np.maximum(d2, 0.0, out=d2)
 
     radii = np.sqrt(cluster_radii_sq(model))  # (ncl,)
@@ -200,12 +196,14 @@ def search_adaptive(
     probed_total = 0
     wave = max(1, int(wave0))
 
-    # pre-pad query vectors once for the rerank join (zeros cancel in the
-    # exact difference, same as search() stage 7)
-    qv = queries.select(
-        F.col(query_id).alias("query_id"),
-        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
-    )
+    # the rerank folds each candidate against the query matrix already on
+    # the driver when the ids can index it; otherwise it joins the padded
+    # query vectors back (zeros cancel in the exact difference, same as
+    # search() stage 7)
+    if len(np.unique(q_ids)) == nq:
+        qv = (q_ids, qmat)
+    else:
+        qv = _padded_queries(model, queries, query_id, query_vec)
 
     forced_final = False
     while live.any() and waves < 64:
@@ -268,31 +266,13 @@ def search_adaptive(
         ci_arr = np.concatenate(pairs_c)
         probed_total += len(ci_arr)
 
-        cols = quantize_probe_pairs(
-            yp, cp, qi_arr, ci_arr, d2, model.rand_bias, scalar,
-            cfg.theta_log_dim,
-        )
-        # Arrow table (typed, zero-copy) — the pandas/py-object route
-        # rejects numpy scalars in the non-Arrow fallback
-        import pyarrow as pa
-
-        qp = np.vstack(cols["qplanes"])
-        tbl = pa.table(
-            {
-                "query_id": pa.array(
-                    np.asarray(q_ids[qi_arr], dtype=np.int64), pa.int64()
-                ),
-                "cluster_id": pa.array(cols["cluster_id"], pa.int32()),
-                "y_c_dist_sq": pa.array(cols["y_c_dist_sq"], pa.float32()),
-                "lower_bound": pa.array(cols["lower_bound"], pa.float32()),
-                "delta": pa.array(cols["delta"], pa.float32()),
-                "scalar_sum": pa.array(cols["scalar_sum"], pa.float32()),
-                "qplanes": pa.FixedSizeListArray.from_arrays(
-                    pa.array(qp.ravel(), pa.int64()), qp.shape[1]
-                ).cast(pa.list_(pa.int64())),
-            }
-        )
-        probes_df = spark.createDataFrame(tbl, PROBE_SCHEMA)
+        block = {
+            "query_id": np.asarray(q_ids[qi_arr], dtype=np.int64),
+            **quantize_probe_pairs(
+                yp, cp, qi_arr, ci_arr, d2, model.rand_bias, scalar,
+                cfg.theta_log_dim,
+            ),
+        }
         probed_set = [int(c) for c in np.unique(ci_arr)]
         if kernel == "auto":
             wave_kernel, reason = choose_kernel(
@@ -309,13 +289,14 @@ def search_adaptive(
             # the frame-identity contract depends on it)
             index = model.index_df
             if 2 * len(probed_set) <= ncl:
-                index = index.filter(F.col("cluster_id").isin(probed_set))
+                index = index.filter(cluster_filter(probed_set))
+            probes_df = probe_frame(spark, block)
             local = index.join(F.broadcast(probes_df), "cluster_id").select(
                 "query_id", "orig_id",
                 rough_estimator_expr(model).alias("rough"),
             )
         else:
-            local = _fused_shortlist(model, probes_df, r, cfg.theta_log_dim)
+            local = _fused_shortlist(model, block, r, cfg.theta_log_dim)
         shortlist = topk_per_group(
             local,
             ["query_id"],

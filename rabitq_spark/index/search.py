@@ -1,20 +1,32 @@
 """Batch ANN search — the reference's 7-stage query lifecycle
 (src/rabitq.rs:267-333) as one DataFrame program (SURVEY.md §3).
 
+A bounded batch (its float64 query matrix within
+vecstore.QUERY_MATRIX_MAX_BYTES, its probe table within
+_ARROW_MAX_PROBE_BYTES, unique integer query ids) is collected ONCE to the
+driver, where the reference runs stages 1-4 too: per query, before any
+scan. That one copy feeds every stage below. Any other batch keeps the
+executor path: stages 1-4 as a mapInPandas, a checkpoint and a count job
+for the probe geometry, the query vectors joined back for stage 7.
+
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
-       residual quantization) — one mapInPandas over the query batch with
-       the rotation matrix + projected centroids broadcast. Emits the probe
-       table: (query_id, cluster_id, y_c_dist_sq, lower_bound, delta,
-       scalar_sum, qplanes).
+       residual quantization) — prepare_probe_block, one numpy function:
+       on the driver for a bounded batch (the probe table then rides as an
+       Arrow local relation and the probed-cluster geometry is free), else
+       inside a mapInPandas over the query batch with the rotation matrix
+       + projected centroids broadcast. Emits the probe table: (query_id,
+       cluster_id, y_c_dist_sq, lower_bound, delta, scalar_sum, qplanes).
   5.   rough scoring — equi-join probes ⋈ index on cluster_id (probe side
        broadcast; index side partition-pruned by the probed cluster set),
-       then the D5 estimator as a pure Column expression (whole-stage
-       codegen; src/rabitq.rs:336-367).
+       then the D5 estimator as one SQL expression (whole-stage codegen;
+       src/rabitq.rs:336-367), or the Arrow value-GEMM kernel.
   6.   top-R rough candidates per query (WindowGroupLimit) — the batch
        substitute for the sequential heap threshold (src/rerank.rs:62-114).
-  7.   exact rerank: join base on orig_id, exact squared-L2 in double
-       precision, top-k per query.
+  7.   exact rerank: the shortlist's base vectors (base join or vec-store
+       gather) against the query vectors, exact squared-L2 in double
+       precision — one numpy fold (vecstore.l2_fold) for both plans when
+       the query matrix is on the driver — then top-k per query.
 
 Scale notes: the only shuffles are the two window top-ks and (if the probe
 table outgrows broadcast) the cluster_id join. The index never moves; probes
@@ -34,6 +46,12 @@ from rabitq_spark._dist import ensure_package_on_executors
 from rabitq_spark.functions.vector import l2_squared, pad_to_multiple
 from rabitq_spark.index.rotation import apply_rot
 from rabitq_spark.index.model import RaBitQModel
+from rabitq_spark.index.vecstore import (
+    collect_queries,
+    matrix_rerank,
+    query_matrix,
+    store_exact_rerank,
+)
 from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.topk import topk_per_group
 
@@ -55,12 +73,12 @@ def quantize_probe_pairs(
 ) -> dict:
     """Stage-4 residual quantization for an EXPLICIT flat list of
     (query, cluster) pairs (P8/P9/P10, src/rabitq.rs:304-317) — the
-    shared numpy core of _prepare_probes' batch path and
-    search_adaptive's driver-built probe waves. `yp` is the rotated
-    padded query block, `cp` the projected centroids, `qi`/`ci` parallel
-    index arrays selecting the pairs, `d2` the (nq, n_clusters) squared
-    centroid distances. Bit-identical to the original (nq, nb)-shaped
-    computation: every op is elementwise per pair."""
+    shared numpy core of prepare_probe_block and search_adaptive's
+    probe waves. `yp` is the rotated padded query block, `cp` the
+    projected centroids, `qi`/`ci` parallel index arrays selecting the
+    pairs, `d2` the (nq, n_clusters) squared centroid distances. Every op
+    is elementwise per pair. `qplanes` comes back as one (npairs,
+    theta_log_dim·n_words) int64 array."""
     dim_pad = cp.shape[1]
     n_words = dim_pad // 64
     npairs = len(qi)
@@ -91,20 +109,90 @@ def quantize_probe_pairs(
         "lower_bound": lb,
         "delta": delta,
         "scalar_sum": scalar_sum,
-        "qplanes": list(qplanes),
+        "qplanes": qplanes,
     }
+
+
+def query_geometry(q, rot, cp: "np.ndarray") -> tuple:
+    """Stages 1-3a for an (nq, dim) query block: P5 zero padding to the
+    rotation's width (src/rabitq.rs:276-280), the rotation, and the J1
+    squared distances to every projected centroid. Returns (yp, d2)."""
+    q = np.asarray(q, dtype=np.float32)
+    if q.shape[1] < cp.shape[1]:
+        q = np.hstack(
+            [q, np.zeros((q.shape[0], cp.shape[1] - q.shape[1]), np.float32)]
+        )
+    yp = apply_rot(q, rot).astype(np.float32)
+    cp_sq = (cp**2).sum(axis=1)
+    d2 = (yp**2).sum(axis=1)[:, None] - 2.0 * (yp @ cp.T) + cp_sq[None, :]
+    return yp, d2
+
+
+def prepare_probe_block(
+    ids: "np.ndarray",
+    q,
+    rot,
+    cp: "np.ndarray",
+    bias: "np.ndarray",
+    scalar: "np.float32",
+    theta_log_dim: int,
+    nprobe: int,
+) -> dict:
+    """Stages 1-4 for one query block, as numpy: rotate, pick the nprobe
+    nearest centroids per query, quantize each (query, centroid) residual
+    into theta_log_dim bit-planes (P8/P9/P10, src/rabitq.rs:304-317).
+    Returns the probe table's columns (PROBE_SCHEMA order) as arrays, one
+    row per (query, probed cluster). The executor mapInPandas and
+    search()'s driver path both call it; an empty block gives empty
+    columns."""
+    yp, d2 = query_geometry(q, rot, cp)
+    nq = yp.shape[0]
+    nb = min(nprobe, cp.shape[0])
+    probe_idx = np.argpartition(d2, nb - 1, axis=1)[:, :nb]  # (nq, nb)
+    cols = quantize_probe_pairs(
+        yp,
+        cp,
+        np.repeat(np.arange(nq), nb),
+        probe_idx.ravel(),
+        d2,
+        bias,
+        scalar,
+        theta_log_dim,
+    )
+    return {"query_id": np.repeat(np.asarray(ids, dtype=np.int64), nb), **cols}
+
+
+def probe_frame(spark, block: dict) -> DataFrame:
+    """A driver-built probe block as a DataFrame: one typed Arrow table
+    (zero-copy; the pandas/py-object route rejects numpy scalars in the
+    non-Arrow fallback)."""
+    import pyarrow as pa
+
+    qp = block["qplanes"]
+    tbl = pa.table(
+        {
+            "query_id": pa.array(block["query_id"], pa.int64()),
+            "cluster_id": pa.array(block["cluster_id"], pa.int32()),
+            "y_c_dist_sq": pa.array(block["y_c_dist_sq"], pa.float32()),
+            "lower_bound": pa.array(block["lower_bound"], pa.float32()),
+            "delta": pa.array(block["delta"], pa.float32()),
+            "scalar_sum": pa.array(block["scalar_sum"], pa.float32()),
+            "qplanes": pa.FixedSizeListArray.from_arrays(
+                pa.array(qp.ravel(), pa.int64()), qp.shape[1]
+            ).cast(pa.list_(pa.int64())),
+        }
+    )
+    return spark.createDataFrame(tbl, PROBE_SCHEMA)
 
 
 def _prepare_probes(
     model: RaBitQModel, queries: DataFrame, query_id: str, query_vec: str, nprobe: int
 ) -> DataFrame:
-    """Stages 1-4: rotate queries, pick nprobe nearest centroids, quantize the
-    per-(query, centroid) residual into 4 bit-planes (P8/P9/P10,
-    src/rabitq.rs:304-317)."""
+    """Stages 1-4 on the executors: prepare_probe_block per Arrow batch of
+    the query frame, with the rotation and projected centroids broadcast."""
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
     cfg = model.config
-    dim, dim_pad = model.dim, model.dim_pad
     theta_log_dim = cfg.theta_log_dim
     scalar = np.float32(cfg.scalar)
     bc = spark.sparkContext.broadcast(
@@ -113,41 +201,48 @@ def _prepare_probes(
 
     def prep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rot, cp, bias = bc.value
-        cp_sq = (cp**2).sum(axis=1)
-        n_words = dim_pad // 64
         for pdf in batches:
             if pdf.empty:
                 continue
-            q = np.vstack(pdf[query_vec].values).astype(np.float32)
-            if q.shape[1] < dim_pad:  # P5 query padding (src/rabitq.rs:276-280)
-                q = np.hstack(
-                    [q, np.zeros((q.shape[0], dim_pad - q.shape[1]), np.float32)]
-                )
-            yp = apply_rot(q, rot).astype(np.float32)  # stage 2 rotate
-            # stage 3: J1 distances to all centroids + top-nprobe
-            d2 = (yp**2).sum(axis=1)[:, None] - 2.0 * (yp @ cp.T) + cp_sq[None, :]
-            nq = yp.shape[0]
-            nb = min(nprobe, cp.shape[0])
-            probe_idx = np.argpartition(d2, nb - 1, axis=1)[:, :nb]  # (nq, nb)
-            # stage 4 via the shared flat-pair core (bit-identical to the
-            # former (nq, nb)-shaped inline code: every op is per pair)
-            cols = quantize_probe_pairs(
-                yp,
+            block = prepare_probe_block(
+                pdf[query_id].values,
+                np.vstack(pdf[query_vec].values),
+                rot,
                 cp,
-                np.repeat(np.arange(nq), nb),
-                probe_idx.ravel(),
-                d2,
                 bias,
                 scalar,
                 theta_log_dim,
+                nprobe,
             )
-            yield pd.DataFrame(
-                {"query_id": np.repeat(pdf[query_id].values, nb), **cols}
-            )
+            yield pd.DataFrame({**block, "qplanes": list(block["qplanes"])})
 
     return queries.select(
         F.col(query_id).alias(query_id), F.col(query_vec).alias(query_vec)
     ).mapInPandas(prep, PROBE_SCHEMA)
+
+
+def _double(x: float) -> str:
+    """A SQL double literal: a bare `2.0` parses as DECIMAL."""
+    return f"{float(x)!r}D"
+
+
+def _plane_cross_sql(
+    code_planes: int, query_planes: int, n_words: int
+) -> str:
+    """Σ_{j<query_planes, i<code_planes} 2^{i+j}·popcount(code plane i ∧
+    query plane j) as SQL, left-associated in the order the jvm estimator
+    has always summed it: query plane outer, code plane inner, words
+    innermost. Every index is a compile-time constant (ANSI-safe)."""
+    terms = []
+    for j in range(query_planes):
+        for i in range(code_planes):
+            pop = " + ".join(
+                f"bit_count(element_at(code, {i * n_words + w + 1})"
+                f" & element_at(qplanes, {j * n_words + w + 1}))"
+                for w in range(n_words)
+            )
+            terms.append(f"shiftleft(CAST(({pop}) AS BIGINT), {i + j})")
+    return " + ".join(terms)
 
 
 def rough_distance_expr(theta_log_dim: int, n_words: int) -> F.Column:
@@ -164,29 +259,18 @@ def rough_distance_expr(theta_log_dim: int, n_words: int) -> F.Column:
     and made IVF lose to brute force past ~1e5 candidates (measured,
     scripts/scaling_probe.py). Unrolled scalar codegen removes every
     allocation; indexes are compile-time constants within bounds, so it is
-    ANSI-safe.
+    ANSI-safe. Built as ONE SQL string: one F.expr call, where the
+    equivalent Column tree costs a py4j round trip per node.
     """
-    asym = None
-    for p in range(theta_log_dim):
-        pop = None
-        for w in range(n_words):
-            term = F.bit_count(
-                F.element_at(F.col("code"), w + 1).bitwiseAND(
-                    F.element_at(F.col("qplanes"), p * n_words + w + 1)
-                )
-            )
-            pop = term if pop is None else pop + term
-        shifted = F.shiftleft(pop.cast("bigint"), p)
-        asym = shifted if asym is None else asym + shifted
-    return (
-        F.col("center_dist_sq")
-        + F.col("y_c_dist_sq")
-        + F.col("lower_bound") * F.col("factor_ppc")
-        + (2.0 * asym.cast("double") - F.col("scalar_sum"))
-        * F.col("factor_ip")
-        * F.col("delta")
-        - F.col("error_bound") * F.sqrt(F.col("y_c_dist_sq"))
+    asym = _plane_cross_sql(1, theta_log_dim, n_words)
+    # parenthesized to the Column tree's left-associated shape, so the
+    # float arithmetic (and so every rough score) is unchanged
+    base = "((center_dist_sq + y_c_dist_sq) + (lower_bound * factor_ppc))"
+    ip = (
+        f"(((({_double(2)} * CAST(({asym}) AS DOUBLE)) - scalar_sum)"
+        " * factor_ip) * delta)"
     )
+    return F.expr(f"({base} + {ip}) - (error_bound * sqrt(y_c_dist_sq))")
 
 
 def rough_distance_expr_multibit(
@@ -206,36 +290,31 @@ def rough_distance_expr_multibit(
                 + b_lb·delta·scalar_sum + delta·b_delta·⟨u_q,u_b⟩ )
 
     Unrolled over (query-plane, base-plane, word) — B×4×n_words bit_count
-    terms, every index a compile-time constant (ANSI-safe). Unlike the
-    1-bit RaBitQ estimator this is unbiased with no error-bound subtraction;
-    accuracy comes from the extra base planes."""
-    cross = None
-    for j in range(theta_log_dim):
-        for i in range(bits):
-            pop = None
-            for w in range(n_words):
-                term = F.bit_count(
-                    F.element_at(F.col("code"), i * n_words + w + 1).bitwiseAND(
-                        F.element_at(F.col("qplanes"), j * n_words + w + 1)
-                    )
-                )
-                pop = term if pop is None else pop + term
-            shifted = F.shiftleft(pop.cast("bigint"), i + j)
-            cross = shifted if cross is None else cross + shifted
-    est_ip = (
-        float(dim_pad) * F.col("lower_bound") * F.col("b_lb")
-        + F.col("lower_bound") * F.col("b_delta") * F.col("b_sum")
-        + F.col("b_lb") * F.col("delta") * F.col("scalar_sum")
-        + F.col("delta") * F.col("b_delta") * cross.cast("double")
+    terms, every index a compile-time constant (ANSI-safe), as one SQL
+    string like rough_distance_expr. Unlike the 1-bit RaBitQ estimator
+    this is unbiased with no error-bound subtraction; accuracy comes from
+    the extra base planes."""
+    cross = _plane_cross_sql(bits, theta_log_dim, n_words)
+    terms = [
+        f"(({_double(dim_pad)} * lower_bound) * b_lb)",
+        "((lower_bound * b_delta) * b_sum)",
+        "((b_lb * delta) * scalar_sum)",
+        f"((delta * b_delta) * CAST(({cross}) AS DOUBLE))",
+    ]
+    est_ip = terms[0]
+    for t in terms[1:]:
+        est_ip = f"({est_ip} + {t})"
+    return F.expr(
+        f"(center_dist_sq + y_c_dist_sq) - ({_double(2)} * {est_ip})"
     )
-    return F.col("center_dist_sq") + F.col("y_c_dist_sq") - 2.0 * est_ip
 
 
 def rough_estimator_expr(model) -> F.Column:
     """The bits-aware D5 estimator for a model — the single place the
     single-bit / multi-bit Column selection lives. Shared by search()'s
-    stage-5 jvm plan and search_adaptive's jvm wave scorer, whose
-    'identical results' contract depends on using the same expression."""
+    stage-5 jvm plan, range_search and search_adaptive's jvm wave scorer,
+    whose 'identical results' contract depends on using the same
+    expression."""
     cfg = model.config
     if cfg.bits_per_dim > 1:
         return rough_distance_expr_multibit(
@@ -244,6 +323,12 @@ def rough_estimator_expr(model) -> F.Column:
     return rough_distance_expr(cfg.theta_log_dim, model.n_words)
 
 
+def cluster_filter(clusters) -> F.Column:
+    """Partition pruning to the probed clusters — `cluster_id IN (...)` as
+    ONE SQL expression (Column.isin pays a py4j round trip per literal);
+    an empty set keeps nothing."""
+    listed = ", ".join(str(int(c)) for c in clusters)
+    return F.expr(f"cluster_id IN ({listed})") if listed else F.lit(False)
 def value_gemm_dtype(dim_pad: int, theta_log_dim: int, bits: int):
     """The narrowest float dtype in which value_gemm_asym is integer-exact
     for this geometry: float32 while every partial sum
@@ -258,7 +343,7 @@ def unpack_plane_values(
 ) -> "np.ndarray":
     """Packed bit-plane tensor (n, n_planes, n_words) int64 → per-dim
     integer values (n, n_words·64) as `dtype`: v[d] = Σ_p 2^p · bit_p[d]
-    (bitorder little — the inverse of _prepare_probes' packbits)."""
+    (bitorder little — the inverse of quantize_probe_pairs' packbits)."""
     n, stored_planes, n_words = planes.shape
     # unpack EVERY plane's words in one contiguous pass (8× the per-plane
     # slice-copy-unpack loop: one C call over one buffer), then fold the
@@ -295,13 +380,16 @@ _FUSED_FLUSH_ROWS = 4_000_000
 
 def _fused_shortlist(
     model: RaBitQModel,
-    probes: DataFrame,
+    block: dict,
     r: int,
     theta_log_dim: int,
 ) -> DataFrame:
     """The Arrow plan for stages 5-6: rough-score candidates and keep a
     local top-R per query inside ONE mapInPandas over the index — the probe
     table rides as a broadcast keyed by cluster.
+
+    `block` is the probe table on the driver, as prepare_probe_block's
+    columns (probe_block_of turns a collected probe frame into one).
 
     Trades the JVM join+window for numpy batch math plus a much smaller
     window input (≤ R rows per query per index partition instead of every
@@ -317,23 +405,27 @@ def _fused_shortlist(
     is ~npairs×dim bit ops, noise. The rough formulas mirror
     rough_distance_expr (1-bit) and rough_distance_expr_multibit (B > 1).
     """
-    spark = probes.sparkSession
-    ppdf = probes.toPandas()
+    spark = model.index_df.sparkSession
+    ensure_package_on_executors(spark)
     n_words = model.n_words
     bits = model.config.bits_per_dim
     dim_pad = model.dim_pad
     dtype = value_gemm_dtype(dim_pad, theta_log_dim, bits)
+    # group the probe rows by cluster, rows in table order within a group
+    cid = block["cluster_id"]
+    order = np.argsort(cid, kind="stable")
+    groups = np.split(order, np.flatnonzero(np.diff(cid[order])) + 1)
     by_cluster: dict = {}
-    for cid, grp in ppdf.groupby("cluster_id"):
-        planes = np.vstack(grp["qplanes"].values).astype(np.int64)  # (p, 4w)
-        planes = planes.reshape(len(grp), theta_log_dim, n_words)
-        by_cluster[int(cid)] = (
-            grp["query_id"].values.astype(np.int64),
-            grp["y_c_dist_sq"].values.astype(np.float32),
-            grp["lower_bound"].values.astype(np.float32),
-            grp["delta"].values.astype(np.float32),
-            grp["scalar_sum"].values.astype(np.float32),
-            planes,
+    for sel in groups if len(order) else []:
+        by_cluster[int(cid[sel[0]])] = (
+            block["query_id"][sel].astype(np.int64),
+            block["y_c_dist_sq"][sel].astype(np.float32),
+            block["lower_bound"][sel].astype(np.float32),
+            block["delta"][sel].astype(np.float32),
+            block["scalar_sum"][sel].astype(np.float32),
+            block["qplanes"][sel]
+            .astype(np.int64)
+            .reshape(len(sel), theta_log_dim, n_words),
         )
     bc = spark.sparkContext.broadcast(by_cluster)
 
@@ -495,25 +587,39 @@ def _fused_shortlist(
         )
         yield pd.DataFrame({"query_id": q, "orig_id": i, "rough": ro})
 
-    # Partition pruning for free: the probe table is already on the driver,
-    # so the probed cluster set costs no extra Spark job (unlike the jvm
-    # path's distinct().collect()).
+    # Partition pruning for free: the probe table is already on the driver
     index = model.index_df
     if 2 * len(by_cluster) <= model.n_clusters:
-        index = index.filter(F.col("cluster_id").isin(list(by_cluster)))
+        index = index.filter(cluster_filter(by_cluster))
     return index.mapInPandas(
         score, "query_id bigint, orig_id bigint, rough double"
     )
 
 
+def probe_block_of(ppdf: pd.DataFrame) -> dict:
+    """A collected probe frame as prepare_probe_block's columns."""
+    block = {c: ppdf[c].to_numpy() for c in ppdf.columns if c != "qplanes"}
+    planes = ppdf["qplanes"].to_numpy()
+    block["qplanes"] = (
+        np.vstack(planes).astype(np.int64)
+        if len(planes)
+        else np.empty((0, 0), dtype=np.int64)
+    )
+    return block
+
+
 def exact_rerank(
     model: RaBitQModel,
     shortlist: DataFrame,
-    qv: DataFrame,
+    qv,
     metrics: "SearchMetrics | None" = None,
 ) -> DataFrame:
     """Stage 7: exact squared-L2 over the shortlist — (query_id,
     neighbor_id, dist), dist the deterministic double fold of l2_squared.
+
+    `qv` is the query batch: either on the driver, as an (ids, (nq, dim)
+    float64 matrix) pair with unique ids, or a DataFrame (query_id,
+    __qvec) of padded query vectors (the executor path).
 
     Two physically different plans, bit-identical results
     (tests/test_vecstore.py):
@@ -523,12 +629,19 @@ def exact_rerank(
       O(base): uniformly-spread candidate ids defeat row-group/page
       pruning (measured at 10M x 256: every row group holds candidates at
       1.6% density, so the rerank read the full 10 GB vector column).
+      With the query matrix on the driver, one mapInPandas (`rr`,
+      vecstore.matrix_rerank) folds each joined row against its broadcast
+      query; a DataFrame `qv` is joined back and scored by the l2_squared
+      Column fold.
     * vec-store (when model.vec_store is set): gather ONLY candidate rows
       from the fixed-width sidecar — O(candidates) reads, the disk
-      variant's point-read design (crates/disk/src/cache.rs:115-145). The
-      numpy fold mirrors l2_squared exactly: per-element float32→float64
-      cast, subtract, square, left-to-right accumulation (pad terms add
-      +0.0 and cancel bit-exactly, so the unpadded prefix suffices).
+      variant's point-read design (crates/disk/src/cache.rs:115-145),
+      scored by the same numpy fold (store_exact_rerank).
+
+    Both numpy forms use vecstore.l2_fold, which mirrors l2_squared
+    exactly: per-element float32→float64 cast, subtract, square,
+    left-to-right accumulation (pad terms add +0.0 and cancel bit-exactly,
+    so the unpadded prefix suffices).
 
     `metrics.rerank`, when wired, observes `rerank_base_rows` — the rows
     the rerank actually read from base storage (== base row count for the
@@ -536,24 +649,30 @@ def exact_rerank(
     candidate-bound property a measurable artifact line, not a claim.
     """
     store = model.vec_store
-    if store is None:
-        base = model.base_df
-        if metrics is not None:
-            base = base.observe(
-                metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
-            )
-        return shortlist.join(base, "orig_id").join(
-            F.broadcast(qv), "query_id"
-        ).select(
+    if store is not None:
+        return store_exact_rerank(
+            shortlist, qv, store, id_col="orig_id", metrics=metrics
+        )
+    base = model.base_df
+    if metrics is not None:
+        base = base.observe(
+            metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
+        )
+    rows = shortlist.join(base, "orig_id")
+    if isinstance(qv, DataFrame):
+        return rows.join(F.broadcast(qv), "query_id").select(
             "query_id",
             F.col("orig_id").alias("neighbor_id"),
             l2_squared(F.col("__qvec"), F.col("vec")).alias("dist"),
         )
-
-    from rabitq_spark.index.vecstore import store_exact_rerank
-
-    return store_exact_rerank(
-        shortlist, qv, store, id_col="orig_id", metrics=metrics
+    qids, qmat = qv
+    dim = model.dim
+    return matrix_rerank(
+        rows.select("query_id", "orig_id", "vec"),
+        qids,
+        qmat,
+        "orig_id",
+        lambda pdf, ids: np.vstack(pdf["vec"].to_numpy())[:, :dim],
     )
 
 
@@ -601,8 +720,10 @@ _ARROW_MIN_PAIRS_MULTIBIT = 2_000_000
 # popcount kernel ~30× slower per call than the value GEMM, so these floors
 # are conservative until re-measured.
 _ARROW_MIN_QUERIES_PER_CLUSTER = 12
-# Byte cap for the probe table the Arrow path collects to the driver and
-# broadcasts (≈ 1.7M probe rows at dim 256).
+# Byte cap for a probe table held on the driver (≈ 1.7M probe rows at dim
+# 256): search()'s driver path builds it there, and the Arrow plan
+# broadcasts it. Past the cap a batch keeps the executor path, whose
+# Arrow request is demoted to the jvm join.
 _ARROW_MAX_PROBE_BYTES = 256 << 20
 
 KERNELS = ("auto", "jvm", "arrow")
@@ -642,6 +763,98 @@ def choose_kernel(
     )
 
 
+
+
+def _probe_row_bytes(model: RaBitQModel) -> int:
+    """Driver bytes of one probe row: theta_log_dim × n_words packed-plane
+    int64s plus ~32 B of scalars."""
+    return model.config.theta_log_dim * model.n_words * 8 + 32
+
+
+def _driver_batch(
+    model: RaBitQModel,
+    queries: DataFrame,
+    query_id: str,
+    query_vec: str,
+    nprobe: int,
+):
+    """Stages 1-4 on the driver: ONE bounded collect of the query batch
+    (vecstore.collect_queries), then prepare_probe_block in numpy.
+    Returns (ids, (nq, dim) float64 query matrix, probe block), or None —
+    the batch keeps the executor path — when the query matrix or the
+    probe table would pass its driver byte cap, or the ids are not unique
+    integers (the rerank indexes the matrix by id)."""
+    pdf = collect_queries(queries, query_id, query_vec, model.dim)
+    if pdf is None:
+        return None
+    ids = pdf[query_id].to_numpy()
+    if not np.issubdtype(ids.dtype, np.integer) or len(np.unique(ids)) < len(ids):
+        return None
+    nb = min(nprobe, model.centroids_proj.shape[0])
+    if len(ids) * nb * _probe_row_bytes(model) > _ARROW_MAX_PROBE_BYTES:
+        return None
+    qmat = query_matrix(pdf[query_vec].to_numpy(), model.dim)
+    cfg = model.config
+    block = prepare_probe_block(
+        ids,
+        qmat,
+        model.rotation,
+        model.centroids_proj,
+        model.rand_bias,
+        np.float32(cfg.scalar),
+        cfg.theta_log_dim,
+        nprobe,
+    )
+    return ids, qmat, block
+
+
+def _probe_counts(probes: DataFrame) -> tuple[DataFrame, dict]:
+    """The executor path's probe geometry: checkpoint the probe table once
+    (executor blocks, lineage cut — the prep stage must not run twice),
+    then ONE groupBy(cluster_id).count() job (≤ n_clusters rows). Returns
+    the checkpointed table and {cluster_id: probe rows}."""
+    probes = probes.localCheckpoint(eager=True)
+    rows = probes.groupBy("cluster_id").count().collect()
+    return probes, {row["cluster_id"]: row["count"] for row in rows}
+
+
+def _padded_queries(model: RaBitQModel, queries: DataFrame, query_id, query_vec):
+    """The executor path's stage-7 query side: (query_id, __qvec) padded
+    like base_df (zeros cancel in the exact difference)."""
+    return queries.select(
+        F.col(query_id).alias("query_id"),
+        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
+    )
+
+
+def _prepare_batch(
+    model: RaBitQModel,
+    queries: DataFrame,
+    query_id: str,
+    query_vec: str,
+    nprobe: int,
+):
+    """Stages 1-4 for search() and range_search(): on the driver when
+    _driver_batch takes the batch, else on the executors. Returns (probes,
+    block, probe_counts, qv): the probe table, the driver probe block and
+    its {cluster_id: probe rows} (both None on the executor path), and the
+    stage-7 query side exact_rerank takes."""
+    spark = queries.sparkSession
+    ensure_package_on_executors(spark)
+    driver = _driver_batch(model, queries, query_id, query_vec, nprobe)
+    if driver is None:
+        return (
+            _prepare_probes(model, queries, query_id, query_vec, nprobe),
+            None,
+            None,
+            _padded_queries(model, queries, query_id, query_vec),
+        )
+    qids, qmat, block = driver
+    cids, counts = np.unique(block["cluster_id"], return_counts=True)
+    probe_counts = dict(zip(cids.tolist(), counts.tolist()))
+    return probe_frame(spark, block), block, probe_counts, (qids, qmat)
+
+
 def search(
     model: RaBitQModel,
     queries: DataFrame,
@@ -657,6 +870,11 @@ def search(
     allowed: "DataFrame | None" = None,
 ) -> DataFrame:
     """Batch top-k ANN: returns (query_id, neighbor_id, dist, rank).
+
+    A bounded batch is resolved on the driver (see the module docstring):
+    one collect job replaces the executor prep stage, its checkpoint and
+    the probe-geometry count; every other batch runs the executor path.
+    Both give identical frames.
 
     Filtered search (two forms, both applied BEFORE the top-R shortlist so
     filtered-out rows never consume rerank slots — post-filtering the final
@@ -693,7 +911,9 @@ def search(
     geometry. An explicit "arrow" is honoured unless the search is
     filtered or the probe table exceeds the driver byte cap; either
     demotes it to "jvm". `metrics.kernel` / `metrics.kernel_reason` report
-    the kernel that ran and why.
+    the kernel that ran and why; `metrics.probe_rows` /
+    `metrics.probed_clusters` the probe geometry whenever the search
+    resolved it (always on the driver path).
     """
     if impl not in KERNELS:
         raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
@@ -702,8 +922,9 @@ def search(
     nprobe = nprobe or cfg.nprobe
     if overfetch is None:
         overfetch = auto_overfetch(model, nprobe, topk)
-
-    probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
+    probes, block, probe_counts, qv = _prepare_batch(
+        model, queries, query_id, query_vec, nprobe
+    )
 
     index = model.index_df
     if index_predicate is not None:
@@ -712,13 +933,12 @@ def search(
     if impl == "auto":
         if nprobe * 2 > model.n_clusters:
             # High-coverage regime (the same gate that disables partition
-            # pruning): the batch scans most of the index, so the jvm path
-            # pays ZERO driver-side jobs here while resolving the Arrow
-            # geometry would add a checkpoint + collect per search — at
-            # the sf0.1 headline shape (nprobe 28 of 32 clusters, 2k rows)
-            # that job alone is ~10% of the whole search. Every remaining
-            # auto resolution below coincides with the pruning job the jvm
-            # path pays regardless — net added jobs from auto dispatch: 0.
+            # pruning): the batch scans most of the index, and the
+            # executor path would pay a checkpoint + count job per search
+            # to resolve the Arrow geometry — at the sf0.1 headline shape
+            # (nprobe 28 of 32 clusters, 2k rows) ~10% of the whole
+            # search. The rule holds on both paths, so the kernel never
+            # depends on where stages 1-4 ran.
             kernel, reason = "jvm", "nprobe covers over half the clusters"
         else:
             kernel = "arrow"  # tentative: choose_kernel settles it below
@@ -727,35 +947,23 @@ def search(
         # jvm-plan feature
         kernel, reason = "jvm", "filtered search runs on the jvm plan"
     r = max(topk * overfetch, topk)
-    probed_clusters: list | None = None  # collected once, reused by pruning
     if kernel == "arrow":
-        # The Arrow plan materializes the whole probe table on the driver.
-        # Checkpoint once (executor blocks), then ONE
-        # groupBy(cluster_id).count() job (≤ n_clusters result rows) yields
-        # the probe row count, the probed-cluster list AND the
-        # queries-per-cluster geometry.
-        probes = probes.localCheckpoint(eager=True)
-        cluster_rows = probes.groupBy("cluster_id").count().collect()
-        probed_clusters = [row["cluster_id"] for row in cluster_rows]
-        n_probe_rows = int(sum(row["count"] for row in cluster_rows))
-        # a probe row is theta_log_dim × n_words packed-plane int64s plus
-        # ~32 B of scalars
-        probe_bytes = n_probe_rows * (cfg.theta_log_dim * model.n_words * 8 + 32)
+        if probe_counts is None:
+            probes, probe_counts = _probe_counts(probes)
+        n_probe_rows = sum(probe_counts.values())
+        probe_bytes = n_probe_rows * _probe_row_bytes(model)
         if probe_bytes > _ARROW_MAX_PROBE_BYTES:
             kernel, reason = "jvm", (
                 f"probe table {probe_bytes} B > cap {_ARROW_MAX_PROBE_BYTES} B"
             )
         elif impl == "auto":
-            kernel, reason = choose_kernel(
-                model, n_probe_rows, len(probed_clusters)
-            )
-    if metrics is not None:
-        metrics.kernel, metrics.kernel_reason = kernel, reason
+            kernel, reason = choose_kernel(model, n_probe_rows, len(probe_counts))
     if kernel == "arrow":
-        # Stages 5-6 in one Arrow pass (see _fused_shortlist); it collects
-        # the probe table itself and derives partition pruning from it, so
-        # no separate pruning job here.
-        local = _fused_shortlist(model, probes, r, cfg.theta_log_dim)
+        # Stages 5-6 in one Arrow pass (see _fused_shortlist), over the
+        # probe table on the driver; it derives partition pruning itself
+        if block is None:
+            block = probe_block_of(probes.toPandas())
+        local = _fused_shortlist(model, block, r, cfg.theta_log_dim)
         if metrics is not None and metrics.observe_rough:
             local = local.observe(
                 metrics.rough, F.count(F.lit(1)).alias("rough_count")
@@ -769,18 +977,10 @@ def search(
             # nprobe); pushing it into the scan as an IN-filter prunes Parquet
             # partitions — the analogue of the reference's CSR offsets scan
             # (src/rabitq.rs:348). For very large query batches, skip (all
-            # clusters probed anyway). localCheckpoint materializes the
-            # mapInPandas probe prep ONCE (executor blocks, lineage cut);
-            # both the pruning collect and the broadcast join below read the
-            # blocks — previously the whole rotate/argpartition/quantize
-            # stage ran twice per search.
-            if probed_clusters is None:
-                probes = probes.localCheckpoint(eager=True)
-                probed_clusters = [
-                    row.cluster_id
-                    for row in probes.select("cluster_id").distinct().collect()
-                ]
-            index = index.filter(F.col("cluster_id").isin(probed_clusters))
+            # clusters probed anyway).
+            if probe_counts is None:
+                probes, probe_counts = _probe_counts(probes)
+            index = index.filter(cluster_filter(probe_counts))
         # Stage 5: J2 equi-join + D5 estimator. Typical query batches make
         # the probe table small → broadcast; a huge batch (probe table
         # ~ nq × nprobe rows, e.g. a full-table similarity join) must
@@ -809,6 +1009,11 @@ def search(
         shortlist = topk_per_group(
             cand, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
         ).select("query_id", "orig_id")
+    if metrics is not None:
+        metrics.kernel, metrics.kernel_reason = kernel, reason
+        if probe_counts is not None:
+            metrics.probed_clusters = probe_counts
+            metrics.probe_rows = sum(probe_counts.values())
     if metrics is not None and metrics.observe_precise:
         # CollectMetrics directly above the top-R filter defeats the
         # WindowGroupLimit pre-shuffle trim at scale — see
@@ -818,14 +1023,8 @@ def search(
         )
 
     # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k).
-    # base_df is padded; pad the query the same way (zeros cancel in the
-    # difference, so dist equals the unpadded exact distance). When the
-    # model carries a vec store, the rerank gathers candidate rows instead
-    # of scanning base — see exact_rerank.
-    qv = queries.select(
-        F.col(query_id).alias("query_id"),
-        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
-    )
+    # When the model carries a vec store, the rerank gathers candidate
+    # rows instead of scanning base — see exact_rerank.
     exact = exact_rerank(model, shortlist, qv, metrics=metrics)
     return topk_per_group(
         exact, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], topk
@@ -847,28 +1046,27 @@ def range_search(
     dist ≤ `radius_sq` among the probed clusters — the range-query sibling
     of top-k search (not in the reference; standard vector-store surface).
 
-    Same J1→J2→D5→J3 pipeline as search(), but the shortlist step is a
-    FILTER, not a top-R window — no per-query state, no window shuffle; the
-    exact rerank is bounded by the rough survivors. With `rough_cutoff`
-    the estimator screens candidates at `radius_sq + rough_margin`; the
-    estimator is a probabilistic lower bound (error-bound slack,
-    src/rabitq.rs:352-363), so a nonzero margin trades rerank volume
-    against the residual false-negative rate. `rough_cutoff=False` +
-    nprobe=n_clusters is the exhaustive configuration: provably equal to
-    the brute-force range scan (every candidate reranked exactly).
+    Same J1→J2→D5→J3 pipeline as search(), driver path included, but the
+    shortlist step is a FILTER, not a top-R window — no per-query state,
+    no window shuffle; the exact rerank is bounded by the rough survivors.
+    With `rough_cutoff` the estimator screens candidates at `radius_sq +
+    rough_margin`; the estimator is a probabilistic lower bound
+    (error-bound slack, src/rabitq.rs:352-363), so a nonzero margin trades
+    rerank volume against the residual false-negative rate.
+    `rough_cutoff=False` + nprobe=n_clusters is the exhaustive
+    configuration: provably equal to the brute-force range scan (every
+    candidate reranked exactly).
     """
     cfg = model.config
     nprobe = nprobe or cfg.nprobe
-    probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
-
+    probes, _, probe_counts, qv = _prepare_batch(
+        model, queries, query_id, query_vec, nprobe
+    )
     index = model.index_df
     if nprobe * 2 <= model.n_clusters:
-        probes = probes.localCheckpoint(eager=True)
-        probed = [
-            row.cluster_id
-            for row in probes.select("cluster_id").distinct().collect()
-        ]
-        index = index.filter(F.col("cluster_id").isin(probed))
+        if probe_counts is None:
+            probes, probe_counts = _probe_counts(probes)
+        index = index.filter(cluster_filter(probe_counts))
     probe_side = F.broadcast(probes) if broadcast_probes else probes
     cand = index.join(probe_side, "cluster_id").select(
         "query_id", "orig_id", rough_estimator_expr(model).alias("rough")
@@ -876,9 +1074,5 @@ def range_search(
     if rough_cutoff:
         cand = cand.filter(F.col("rough") <= F.lit(radius_sq + rough_margin))
 
-    qv = queries.select(
-        F.col(query_id).alias("query_id"),
-        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
-    )
     exact = exact_rerank(model, cand.select("query_id", "orig_id"), qv)
     return exact.filter(F.col("dist") <= F.lit(radius_sq))

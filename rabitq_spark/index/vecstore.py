@@ -138,11 +138,12 @@ def _fs_replace(fs, src: str, dst: str) -> None:
 # object-store branch.
 _URI_ID_CACHE: dict = {}
 
-# store_exact_rerank ships the query matrix as ONE broadcast variable up
-# to this many queries (dim 256 f64 → ≤ ~200 MB); larger batches fall
-# back to the broadcast-join form, whose per-candidate-row qvec traffic
-# is then amortized over a proportionally larger shortlist anyway
-_BC_MAX_QUERIES = 100_000
+#: Byte bound for a query matrix held on the driver: the (nq, dim) float64
+#: block search() resolves a batch from and the rerank ships as ONE
+#: broadcast. collect_queries turns it into a row limit for the geometry
+#: (≈ 131k queries at dim 256), so one bound governs every plan that
+#: collects queries; larger batches keep their Spark-side plans.
+QUERY_MATRIX_MAX_BYTES = 256 << 20
 
 
 def _uri_shard_ids(fs, path_in_fs: str, shard: dict) -> np.ndarray:
@@ -427,105 +428,84 @@ def build_vec_store(
     return VecStore(dir=store_dir, dim=dim, n_rows=n_rows, shards=shards)
 
 
-def store_exact_rerank(
-    shortlist: DataFrame,
-    qv: DataFrame,
-    store: VecStore,
-    id_col: str = "neighbor_id",
-    qvec_col: str = "__qvec",
-    metrics=None,
+def collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, dim: int
+) -> "pd.DataFrame | None":
+    """ONE bounded job: the (id, vec) rows of a query batch as pandas when
+    their float64 (n, dim) matrix fits QUERY_MATRIX_MAX_BYTES, else None
+    (the over-cap rows fetched to decide are discarded)."""
+    cap_rows = QUERY_MATRIX_MAX_BYTES // (8 * max(dim, 1))
+    pdf = queries.select(id_col, vec_col).limit(cap_rows + 1).toPandas()
+    return None if len(pdf) > cap_rows else pdf
+
+
+def query_matrix(vecs, dim: int) -> np.ndarray:
+    """(n, dim) float64 matrix of a column of query arrays, cut to the
+    first `dim` entries. f32→f64 is value-exact and f64 stays itself, so
+    l2_fold sees exactly the operands the Column fold's cast builds."""
+    if len(vecs) == 0:
+        return np.empty((0, dim), dtype=np.float64)
+    return np.vstack(vecs).astype(np.float64)[:, :dim]
+
+
+def l2_fold(q64: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Exact squared L2 per row — functions.vector.l2_squared in numpy:
+    elementwise f64 operands, (q−v)² in double, left-to-right accumulation
+    from 0.0, so the result is bit-identical to the Column fold. Folding
+    the unpadded prefix is safe: a zero tail on both sides adds exact +0.0
+    terms. The one fold of every numpy exact rerank (exact_rerank's base
+    join, the vec-store gather and its join form)."""
+    from rabitq_spark.functions.scratch import scratch
+
+    n, dim = v.shape
+    d = scratch("rerank_d", (n, dim))
+    np.subtract(q64, v.astype(np.float64), out=d)
+    np.multiply(d, d, out=d)
+    acc = np.zeros(n, dtype=np.float64)
+    for j in range(dim):
+        np.add(acc, d[:, j], out=acc)
+    return acc
+
+
+def _rerank_schema(rows: DataFrame):
+    """(query_id, neighbor_id bigint, dist double), query_id typed as in
+    `rows`."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    return StructType(
+        [
+            StructField("query_id", rows.schema["query_id"].dataType, True),
+            StructField("neighbor_id", LongType(), True),
+            StructField("dist", DoubleType(), True),
+        ]
+    )
+
+
+def matrix_rerank(
+    rows: DataFrame,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    id_col: str,
+    vectors,
 ) -> DataFrame:
-    """Generic candidate-bound exact rerank: gather each shortlist row's
-    base vector from `store` and emit (query_id, neighbor_id, dist) with
-    dist the l2_squared-mirroring double fold (elementwise f32→f64 cast,
-    (x-y)² in double, left-to-right accumulation — bit-identical to the
-    Column expression; a zero tail on both sides adds exact +0.0 terms,
-    so folding the store's dim-length prefix is safe for padded queries).
-
-    `shortlist` is (query_id, <id_col>); `qv` is (query_id, <qvec_col>),
-    one row per query id. Shared by the RaBitQ stage-7 rerank and the
-    PQ / SQ8 family reranks — any shortlist-then-exact plan whose base
-    join would otherwise scan O(base).
-
-    Physical shape (round 11): the query vectors ride ONE spark broadcast
-    variable as an (nq, dim) float64 matrix and the kernel indexes into it
-    by query_id. The previous broadcast-JOIN form duplicated each query's
-    vector onto every candidate row — at the 1M probe geometry (620
-    candidates/query x 256 dims) that was ~1.3 GB of Arrow traffic plus a
-    python-level np.vstack per batch, and the rerank stage's JVM threads
-    sat 90% idle waiting on Python (measured via task summaries). Past
-    _BC_MAX_QUERIES the matrix no longer broadcasts economically and the
-    join form is used instead (same results — the fold is identical)."""
+    """(query_id, neighbor_id, dist) for candidate `rows` (query_id,
+    <id_col>, ...): the (nq, dim) float64 query matrix rides ONE broadcast
+    variable, the kernel `rr` indexes it by query_id and folds each row
+    against `vectors(pdf, ids)` — its (n, dim) base rows — with l2_fold.
+    Rows whose query_id is not in `qids` contribute nothing (inner-join
+    semantics); `qids` must be unique. query_id passes through UNCAST —
+    the join plans this replaces preserve arbitrary query_id types."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from rabitq_spark._dist import ensure_package_on_executors
     from rabitq_spark.functions.scratch import scratch
 
-    spark = shortlist.sparkSession
+    spark = rows.sparkSession
     ensure_package_on_executors(spark)
-    dim = store.dim
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    def fold(q64: "np.ndarray", v: "np.ndarray") -> "np.ndarray":
-        # pooled-buffer form of
-        #   d = q.astype(f64) - v.astype(f64); d2 = d*d
-        #   acc = left-to-right sum of d2 columns
-        # — identical operands in identical order, bit-exact (scratch.py)
-        n = len(q64)
-        d = scratch("rerank_d", (n, dim))
-        np.subtract(q64, v.astype(np.float64), out=d)
-        np.multiply(d, d, out=d)
-        acc = np.zeros(n, dtype=np.float64)
-        for j in range(dim):
-            np.add(acc, d[:, j], out=acc)
-        return acc
-
-    # one bounded job decides the physical form AND fetches the matrix:
-    # ≤ _BC_MAX_QUERIES rows land driver-side for the broadcast path; an
-    # over-limit result is discarded and the join form runs instead
-    qpd = qv.select("query_id", qvec_col).limit(_BC_MAX_QUERIES + 1).toPandas()
-    if len(qpd) > _BC_MAX_QUERIES:
-        joined = shortlist.join(F.broadcast(qv), "query_id")
-        if metrics is not None:
-            joined = joined.observe(
-                metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
-            )
-
-        def rr_join(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy(dtype=np.int64)
-                q = np.vstack(pdf[qvec_col].to_numpy())[:, :dim]
-                acc = fold(q.astype(np.float64), store.gather(ids))
-                yield pd.DataFrame(
-                    {
-                        # query_id passes through UNCAST — the join plans
-                        # this rerank replaces preserve arbitrary query_id
-                        # types (an int64 cast would truncate float ids)
-                        "query_id": pdf["query_id"],
-                        "neighbor_id": ids,
-                        "dist": acc,
-                    }
-                )
-
-        out_schema = StructType(
-            [
-                StructField(
-                    "query_id", joined.schema["query_id"].dataType, True
-                ),
-                StructField("neighbor_id", LongType(), True),
-                StructField("dist", DoubleType(), True),
-            ]
-        )
-        return joined.mapInPandas(rr_join, out_schema)
-
-    # float64 up front: f32→f64 is value-exact, f64 stays itself — the
-    # kernel's fold sees exactly the operands the join form would build
-    qmat = np.vstack(qpd[qvec_col].to_numpy()).astype(np.float64)[:, :dim]
-    bc = spark.sparkContext.broadcast((qpd["query_id"].tolist(), qmat))
+    dim = qmat.shape[1]
+    bc = spark.sparkContext.broadcast(
+        (np.asarray(qids).tolist(), np.ascontiguousarray(qmat))
+    )
 
     def rr(it):
         posmap = None
@@ -533,14 +513,12 @@ def store_exact_rerank(
             if len(pdf) == 0:
                 continue
             if posmap is None:
-                qids, qm = bc.value
+                ids_q, qm = bc.value
                 posmap = pd.Series(
-                    np.arange(len(qids), dtype=np.int64), index=qids
+                    np.arange(len(ids_q), dtype=np.int64), index=ids_q
                 )
             pos = pdf["query_id"].map(posmap)
             if pos.isna().any():
-                # inner-join semantics: a shortlist query absent from qv
-                # contributes no rows
                 keep = pos.notna()
                 pdf = pdf[keep]
                 pos = pos[keep]
@@ -548,28 +526,67 @@ def store_exact_rerank(
                     continue
             ix = pos.to_numpy(dtype=np.int64)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            n = len(ids)
-            q64 = scratch("rerank_q", (n, dim))
+            q64 = scratch("rerank_q", (len(ids), dim))
             np.take(qm, ix, axis=0, out=q64)
-            acc = fold(q64, store.gather(ids))
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"],
                     "neighbor_id": ids,
-                    "dist": acc,
+                    "dist": l2_fold(q64, vectors(pdf, ids)),
                 }
             )
 
-    out_schema = StructType(
-        [
-            StructField(
-                "query_id", shortlist.schema["query_id"].dataType, True
-            ),
-            StructField("neighbor_id", LongType(), True),
-            StructField("dist", DoubleType(), True),
-        ]
+    return rows.mapInPandas(rr, _rerank_schema(rows))
+
+
+def store_exact_rerank(
+    shortlist: DataFrame,
+    qv,
+    store: VecStore,
+    id_col: str = "neighbor_id",
+    qvec_col: str = "__qvec",
+    metrics=None,
+) -> DataFrame:
+    """Generic candidate-bound exact rerank: gather each shortlist row's
+    base vector from `store` and emit (query_id, neighbor_id, dist) with
+    dist l2_fold's double fold — bit-identical to the l2_squared Column
+    expression.
+
+    `shortlist` is (query_id, <id_col>). `qv` is either the query batch
+    already on the driver — an (ids, (nq, dim) float64 matrix) pair with
+    unique ids, as search() collects it — or a DataFrame (query_id,
+    <qvec_col>) with one row per query id, which costs one bounded
+    collect_queries job here. Shared by the RaBitQ stage-7 rerank and the
+    PQ / SQ8 family reranks — any shortlist-then-exact plan whose base
+    join would otherwise scan O(base).
+
+    Physical shape (round 11): the query vectors ride ONE spark broadcast
+    variable (matrix_rerank). The previous broadcast-JOIN form duplicated
+    each query's vector onto every candidate row — at the 1M probe
+    geometry (620 candidates/query x 256 dims) that was ~1.3 GB of Arrow
+    traffic plus a python-level np.vstack per batch, and the rerank
+    stage's JVM threads sat 90% idle waiting on Python (measured via task
+    summaries). A DataFrame `qv` past QUERY_MATRIX_MAX_BYTES keeps that
+    join form (same results — the fold is identical)."""
+    from pyspark.sql import functions as F
+
+    from rabitq_spark._dist import ensure_package_on_executors
+
+    ensure_package_on_executors(shortlist.sparkSession)
+    dim = store.dim
+    if isinstance(qv, DataFrame):
+        qpd = collect_queries(qv, "query_id", qvec_col, dim)
+        if qpd is None:
+            return _store_join_rerank(shortlist, qv, store, id_col, qvec_col, metrics)
+        qv = (qpd["query_id"].to_numpy(), query_matrix(qpd[qvec_col], dim))
+    qids, qmat = qv
+    out = matrix_rerank(
+        shortlist.select("query_id", id_col),
+        qids,
+        qmat[:, :dim],
+        id_col,
+        lambda pdf, ids: store.gather(ids),
     )
-    out = shortlist.select("query_id", id_col).mapInPandas(rr, out_schema)
     if metrics is not None:
         # candidate rows read from base storage: the kernel emits exactly
         # one row per matched candidate, so counting ABOVE the mapInPandas
@@ -581,6 +598,38 @@ def store_exact_rerank(
             metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
         )
     return out
+
+
+def _store_join_rerank(shortlist, qv, store, id_col, qvec_col, metrics):
+    """store_exact_rerank's form for a query batch over the driver byte
+    bound: broadcast-join the query vectors onto the shortlist rows."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    dim = store.dim
+    joined = shortlist.join(F.broadcast(qv), "query_id")
+    if metrics is not None:
+        joined = joined.observe(
+            metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
+        )
+
+    def rr_join(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            yield pd.DataFrame(
+                {
+                    "query_id": pdf["query_id"],
+                    "neighbor_id": ids,
+                    "dist": l2_fold(
+                        query_matrix(pdf[qvec_col].to_numpy(), dim),
+                        store.gather(ids),
+                    ),
+                }
+            )
+
+    return joined.mapInPandas(rr_join, _rerank_schema(joined))
 
 
 def attach_vec_store(model, store_dir: str) -> "VecStore":

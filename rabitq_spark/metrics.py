@@ -42,6 +42,13 @@ class SearchMetrics:
     # Spark job.
     kernel: str | None = None
     kernel_reason: str | None = None
+    # The probe geometry — probe-table rows and {cluster_id: probe rows}
+    # over the probed clusters — set by search() from the arrays it
+    # already holds (the driver path's probe block, or the executor
+    # path's probe-count job when it ran one), so reading them costs no
+    # Spark job. None when the search did not resolve it.
+    probe_rows: int | None = None
+    probed_clusters: dict | None = None
 
     @property
     def rough_count(self) -> int:
