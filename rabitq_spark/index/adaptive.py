@@ -55,6 +55,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from rabitq_spark.index import vecstore
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import (
     KERNELS,
@@ -197,10 +198,10 @@ def search_adaptive(
     wave = max(1, int(wave0))
 
     # the rerank folds each candidate against the query matrix already on
-    # the driver when the ids can index it; otherwise it joins the padded
-    # query vectors back (zeros cancel in the exact difference, same as
-    # search() stage 7)
-    if len(np.unique(q_ids)) == nq:
+    # the driver when the ids can index it and the matrix fits the
+    # broadcast bound; otherwise it joins the padded query vectors back
+    # (zeros cancel in the exact difference, same as search() stage 7)
+    if len(np.unique(q_ids)) == nq and qmat.nbytes <= vecstore.QUERY_MATRIX_MAX_BYTES:
         qv = (q_ids, qmat)
     else:
         qv = _padded_queries(model, queries, query_id, query_vec)

@@ -5,9 +5,10 @@ A bounded batch (its float64 query matrix within
 vecstore.QUERY_MATRIX_MAX_BYTES, its probe table within
 _ARROW_MAX_PROBE_BYTES, unique integer query ids) is collected ONCE to the
 driver, where the reference runs stages 1-4 too: per query, before any
-scan. That one copy feeds every stage below. Any other batch keeps the
-executor path: stages 1-4 as a mapInPandas, a checkpoint and a count job
-for the probe geometry, the query vectors joined back for stage 7.
+scan. That one copy feeds every stage below. Any other batch, and any
+batch whose caller passes broadcast_probes=False, keeps the executor path:
+stages 1-4 as a mapInPandas, a checkpoint and a count job for the probe
+geometry, the query vectors joined back for stage 7.
 
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
@@ -51,6 +52,7 @@ from rabitq_spark.index.vecstore import (
     matrix_rerank,
     query_matrix,
     store_exact_rerank,
+    store_join_rerank,
 )
 from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.topk import topk_per_group
@@ -329,6 +331,8 @@ def cluster_filter(clusters) -> F.Column:
     an empty set keeps nothing."""
     listed = ", ".join(str(int(c)) for c in clusters)
     return F.expr(f"cluster_id IN ({listed})") if listed else F.lit(False)
+
+
 def value_gemm_dtype(dim_pad: int, theta_log_dim: int, bits: int):
     """The narrowest float dtype in which value_gemm_asym is integer-exact
     for this geometry: float32 while every partial sum
@@ -636,7 +640,8 @@ def exact_rerank(
     * vec-store (when model.vec_store is set): gather ONLY candidate rows
       from the fixed-width sidecar — O(candidates) reads, the disk
       variant's point-read design (crates/disk/src/cache.rs:115-145),
-      scored by the same numpy fold (store_exact_rerank).
+      scored by the same numpy fold (store_exact_rerank; a DataFrame `qv`
+      takes its join form, store_join_rerank, without a collect).
 
     Both numpy forms use vecstore.l2_fold, which mirrors l2_squared
     exactly: per-element float32→float64 cast, subtract, square,
@@ -650,6 +655,10 @@ def exact_rerank(
     """
     store = model.vec_store
     if store is not None:
+        if isinstance(qv, DataFrame):
+            # the batch stayed off the driver (over the cap, or the caller
+            # ruled a collect out): no second collect attempt here
+            return store_join_rerank(shortlist, qv, store, "orig_id", "__qvec", metrics)
         return store_exact_rerank(
             shortlist, qv, store, id_col="orig_id", metrics=metrics
         )
@@ -763,8 +772,6 @@ def choose_kernel(
     )
 
 
-
-
 def _probe_row_bytes(model: RaBitQModel) -> int:
     """Driver bytes of one probe row: theta_log_dim × n_words packed-plane
     int64s plus ~32 B of scalars."""
@@ -783,15 +790,16 @@ def _driver_batch(
     Returns (ids, (nq, dim) float64 query matrix, probe block), or None —
     the batch keeps the executor path — when the query matrix or the
     probe table would pass its driver byte cap, or the ids are not unique
-    integers (the rerank indexes the matrix by id)."""
-    pdf = collect_queries(queries, query_id, query_vec, model.dim)
+    integers (the rerank indexes the matrix by id). Both caps bound the
+    collect's row limit, so an over-cap batch fetches no row past the
+    tighter one."""
+    nb = min(nprobe, model.centroids_proj.shape[0])
+    max_rows = _ARROW_MAX_PROBE_BYTES // (max(nb, 1) * _probe_row_bytes(model))
+    pdf = collect_queries(queries, query_id, query_vec, model.dim, max_rows)
     if pdf is None:
         return None
     ids = pdf[query_id].to_numpy()
     if not np.issubdtype(ids.dtype, np.integer) or len(np.unique(ids)) < len(ids):
-        return None
-    nb = min(nprobe, model.centroids_proj.shape[0])
-    if len(ids) * nb * _probe_row_bytes(model) > _ARROW_MAX_PROBE_BYTES:
         return None
     qmat = query_matrix(pdf[query_vec].to_numpy(), model.dim)
     cfg = model.config
@@ -833,15 +841,20 @@ def _prepare_batch(
     query_id: str,
     query_vec: str,
     nprobe: int,
+    on_driver: bool,
 ):
     """Stages 1-4 for search() and range_search(): on the driver when
-    _driver_batch takes the batch, else on the executors. Returns (probes,
-    block, probe_counts, qv): the probe table, the driver probe block and
-    its {cluster_id: probe rows} (both None on the executor path), and the
-    stage-7 query side exact_rerank takes."""
+    `on_driver` holds and _driver_batch takes the batch, else on the
+    executors. Returns (probes, block, probe_counts, qv): the probe table,
+    the driver probe block and its {cluster_id: probe rows} (both None on
+    the executor path), and the stage-7 query side exact_rerank takes."""
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
-    driver = _driver_batch(model, queries, query_id, query_vec, nprobe)
+    driver = (
+        _driver_batch(model, queries, query_id, query_vec, nprobe)
+        if on_driver
+        else None
+    )
     if driver is None:
         return (
             _prepare_probes(model, queries, query_id, query_vec, nprobe),
@@ -875,6 +888,11 @@ def search(
     one collect job replaces the executor prep stage, its checkpoint and
     the probe-geometry count; every other batch runs the executor path.
     Both give identical frames.
+
+    `broadcast_probes=False` is for a caller that knows its batch is large
+    (the full-table self-joins): the stage-5 join then shuffles both sides
+    by cluster_id instead of broadcasting the probe table, and the batch
+    keeps the executor path without the driver path's collect.
 
     Filtered search (two forms, both applied BEFORE the top-R shortlist so
     filtered-out rows never consume rerank slots — post-filtering the final
@@ -923,7 +941,7 @@ def search(
     if overfetch is None:
         overfetch = auto_overfetch(model, nprobe, topk)
     probes, block, probe_counts, qv = _prepare_batch(
-        model, queries, query_id, query_vec, nprobe
+        model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
 
     index = model.index_df
@@ -1060,7 +1078,7 @@ def range_search(
     cfg = model.config
     nprobe = nprobe or cfg.nprobe
     probes, _, probe_counts, qv = _prepare_batch(
-        model, queries, query_id, query_vec, nprobe
+        model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
     index = model.index_df
     if nprobe * 2 <= model.n_clusters:

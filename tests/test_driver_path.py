@@ -5,6 +5,7 @@ onto the executor path (and the vec-store rerank onto its join form), so
 the two paths can be compared frame for frame."""
 
 import copy
+import importlib
 
 import pandas as pd
 import pytest
@@ -15,6 +16,9 @@ from rabitq_spark.index import build_index, range_search, search
 from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import build_vec_store
 from rabitq_spark.metrics import SearchMetrics
+
+# the module, not the search() function the package re-exports
+search_mod = importlib.import_module("rabitq_spark.index.search")
 
 K = 5
 NQ = 12
@@ -169,3 +173,72 @@ def test_duplicate_query_ids_keep_executor_path(spark, sf_dir, models):
         single[single.query_id >= 2].reset_index(drop=True),
         check_exact=True,
     )
+
+
+def test_broadcast_probes_false_keeps_executor_path(
+    spark, sf_dir, models, monkeypatch
+):
+    """A caller that turns the probe broadcast off (the full-table
+    self-joins) gets the executor path: the batch is never collected for
+    stages 1-4, the plan runs the `prep` stage, and the frame is the driver
+    path's."""
+    model = models[(1, False)]
+    queries = _queries(spark, sf_dir, "float")
+    driver = _sorted(search(model, queries, topk=K))
+
+    def no_collect(*args, **kwargs):
+        raise AssertionError("broadcast_probes=False collected the batch")
+
+    monkeypatch.setattr(search_mod, "collect_queries", no_collect)
+    executor = _sorted(search(model, queries, topk=K, broadcast_probes=False))
+    pd.testing.assert_frame_equal(driver, executor, check_exact=True)
+    df = search(
+        model, queries, topk=K, nprobe=model.n_clusters, broadcast_probes=False
+    )
+    assert "MapInPandas prep(" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_probe_cap_bounds_the_batch_collect(spark, sf_dir, models, monkeypatch):
+    """The probe-table cap turns into the collect's row limit, so a batch
+    one row over it is collected no further than that limit and keeps the
+    executor path."""
+    model = models[(1, False)]
+    queries = _queries(spark, sf_dir, "float")
+    fetched = []
+
+    def spy(queries, id_col, vec_col, dim, max_rows=None):
+        fetched.append(max_rows)
+        return vecstore.collect_queries(queries, id_col, vec_col, dim, max_rows)
+
+    monkeypatch.setattr(search_mod, "collect_queries", spy)
+    row_bytes = search_mod._probe_row_bytes(model)
+    monkeypatch.setattr(
+        search_mod, "_ARROW_MAX_PROBE_BYTES", (NQ - 1) * NPROBE * row_bytes
+    )
+    assert search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE) is None
+    assert fetched == [NQ - 1]
+    monkeypatch.setattr(
+        search_mod, "_ARROW_MAX_PROBE_BYTES", NQ * NPROBE * row_bytes
+    )
+    got = search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE)
+    assert got is not None and fetched == [NQ - 1, NQ]
+
+
+def test_over_cap_store_batch_collects_once(spark, sf_dir, models, monkeypatch):
+    """An over-cap batch pays one discarded collect, in search(): the
+    vec-store rerank takes its join form instead of trying again."""
+    model = models[(1, True)]
+    queries = _queries(spark, sf_dir, "float")
+    calls = []
+    real = vecstore.collect_queries
+
+    def spy(*args, **kwargs):
+        calls.append(args[0])
+        return real(*args, **kwargs)
+
+    _executor_path(monkeypatch)
+    monkeypatch.setattr(search_mod, "collect_queries", spy)
+    monkeypatch.setattr(vecstore, "collect_queries", spy)
+    got = search(model, queries, topk=K).toPandas()
+    assert len(got) == NQ * K
+    assert len(calls) == 1
