@@ -85,11 +85,12 @@ def combine_word_hashes(h: Column | str, n: int = 3) -> Column:
     bits. Equivalent to hashing the joined shingle string up to negligible
     collision probability, at one md5 per WORD instead of per shingle.
 
-    IMPORTANT: `h` must come from a separate, materialized projection (cache
-    or shuffle boundary). If the word_hashes expression is inlined here,
-    Catalyst's CollapseProject re-evaluates the whole md5 array once per
-    shingle element — measured 45 s vs 1 s at 5k docs. Mirror the exact
-    mixing in oracle SQL.
+    Take `h` from a separate projection: CollapseProject keeps the two
+    apart (one md5 transform in the optimized plan on Spark 4.1.2), while
+    word_hashes inlined here is evaluated once per reference to `h` (five
+    md5 transforms at n=3). This chain, with banded_minhash_key, is the
+    Column reference that operators.dedup's Arrow kernel must equal bit
+    for bit. Mirror the exact mixing in oracle SQL.
     """
     h = _c(h)
     mix = F.transform(
@@ -289,17 +290,19 @@ def bpe_token_count(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(_c(text), F.lit(BPE_PATTERN), F.lit(0)))
 
 
-def jaccard(a: Column | str, b: Column | str) -> Column:
-    """|a ∩ b| / |a ∪ b|; 0.0 when both empty. PRECONDITION: a and b hold
-    DISTINCT elements (true of every hash-set producer in this module), so
-    the union size is |a| + |b| − |a ∩ b| — one hash-set pass per pair
-    instead of two (array_union dropped; the verify stage is the banded
-    near-dup bottleneck, ~1 ms/pair at 200-element arrays)."""
-    a, b = _c(a), _c(b)
-    inter = F.size(F.array_intersect(a, b))
-    total = F.size(a) + F.size(b)
-    return F.when(total == 0, F.lit(0.0)).otherwise(
-        inter.cast("double") / (total - inter).cast("double")
+def jaccard(a: str, b: str) -> Column:
+    """|a ∩ b| / |a ∪ b| of the array columns named a and b; 0.0 when both
+    are empty. PRECONDITION: a and b hold DISTINCT elements (true of every
+    hash-set producer in this module), so the union size is
+    |a| + |b| − |a ∩ b| — one hash-set pass per pair instead of two
+    (array_union dropped; the verify stage is the banded near-dup
+    bottleneck, ~1 ms/pair at 200-element arrays). One SQL string, so a
+    verify plan pays one parse instead of a py4j call per operator."""
+    inter = f"size(array_intersect({a}, {b}))"
+    total = f"size({a}) + size({b})"
+    return F.expr(
+        f"CASE WHEN {total} = 0 THEN 0.0D"
+        f" ELSE CAST({inter} AS DOUBLE) / CAST({total} - {inter} AS DOUBLE) END"
     )
 
 

@@ -5,16 +5,19 @@ Four families, all shuffle-conscious:
 
 * exact     — hash-groupBy on a canonical fingerprint; one shuffle on the
               fingerprint, min-id wins.
-* minhash   — ONE pipeline of private stages: shingle hashes → banded
-              minhash keys → (band, key) equi-join candidates → exact
-              Jaccard verify on candidates only. Four callers run it: the
-              self-join (neardup_minhash_pairs, and neardup_ngram_pairs
-              from its own char-gram hashes), the cross-join
-              (neardup_minhash_pairs_cross), NearDupState, and the
-              admission stream (streaming/neardup_stream.py). The blocking
-              join is the only quadratic-risk step and is keyed, so it
-              shuffles by band key and scales horizontally; false-negative
-              rate decays exponentially with band count.
+* minhash   — ONE pipeline of private stages: one Arrow kernel per
+              document batch (tokenize, md5 each distinct word, shingle,
+              band) fills a cached (doc_id, hs, keys) table → (band,
+              key) equi-join candidates → exact Jaccard verify on
+              candidates only. Four callers run it: the self-join
+              (neardup_minhash_pairs, and neardup_ngram_pairs, which bands
+              its own char-gram hashes with the same numpy band-key
+              function), the cross-join (neardup_minhash_pairs_cross),
+              NearDupState, and the admission stream
+              (streaming/neardup_stream.py). The blocking join is the only
+              quadratic-risk step and is keyed, so it shuffles by band key
+              and scales horizontally; false-negative rate decays
+              exponentially with band count.
 * simhash   — 60-bit fingerprint; band the bits into (max_hamming + 1)
               segments so the pigeonhole principle makes the banded
               candidate join EXACTLY equivalent to the all-pairs hamming
@@ -63,9 +66,9 @@ import threading
 # invocation retires the previous one (round-1 verdict: these caches
 # leaked), and `release_caches()` drains the terminal generation once the
 # caller's final action has run (round-2 verdict: the last generation
-# stayed pinned forever). The caches are load-bearing for plan shape: the
-# InMemoryRelation barrier stops CollapseProject from inlining the per-word
-# md5 transform into every band expression (measured 45 s → 3 s), so they
+# stayed pinned forever). The caches are load-bearing: a MinHash table is
+# read by both sides of the band join and both sides of the verify join,
+# and without the barrier each read reruns the Python kernel, so they
 # cannot simply be dropped — only retired when no longer referenced.
 #
 # Contract (thread safety): registry mutation is lock-protected, so
@@ -155,9 +158,9 @@ def _existing_delta_tables(
 
 def _widen(df: DataFrame) -> DataFrame:
     """Spread a narrow input (e.g. a 2-file parquet table) to cluster
-    width so the hash/shingle projections that follow parallelize — the
-    md5/char-n-gram work is CPU-bound per row and otherwise runs on as
-    many cores as the table has files. No-op on already-wide inputs, so
+    width so the hashing that follows (the MinHash kernel, the char-n-gram
+    projections) parallelizes — it is CPU-bound per row and otherwise runs
+    on as many cores as the table has files. No-op on already-wide inputs, so
     the at-scale path never pays an extra shuffle."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
@@ -202,73 +205,196 @@ def _banded_candidates(keys_df, n_bands: int, carry: list[str]):
 # the module docstring); each caller owns its cache scope and id ordering.
 
 
-def _shingle_hashes(
-    docs: DataFrame, id_col: str, text_col: str, shingle_words: int, scope: list
+def _shift_xor(parts: list):
+    """numpy twin of functions.text._combine_hashes: xor of
+    parts[j] << (k-1-j) over k int64 arrays, wrapping in 64 bits and
+    masking the distance to 6 bits as Java's shiftleft does, then masked
+    to 60 bits."""
+    import numpy as np
+
+    from rabitq_spark.functions.text import _MASK60
+
+    k = len(parts)
+    out = np.zeros(len(parts[0]), dtype=np.uint64)
+    for j, p in enumerate(parts):
+        out ^= p.view(np.uint64) << np.uint64((k - 1 - j) & 63)
+    return (out & np.uint64(_MASK60)).view(np.int64)
+
+
+def _band_key_matrix(values, starts, n_bands: int, rows_per_band: int):
+    """(len(starts), n_bands) int64 banded xor-minhash keys of the hash
+    sets values[starts[i]:starts[i+1]] — the numpy form of
+    functions.text.banded_minhash_key, bit for bit. Every set must be
+    non-empty (np.minimum.reduceat reads one element of an empty one)."""
+    import numpy as np
+
+    from rabitq_spark.functions.text import band_xor_constant
+
+    keys = np.empty((len(starts), n_bands), dtype=np.int64)
+    if not len(starts):
+        return keys
+    for b in range(n_bands):
+        mins = [
+            np.minimum.reduceat(
+                values ^ np.int64(band_xor_constant(b * rows_per_band + j)),
+                starts,
+            )
+            for j in range(rows_per_band)
+        ]
+        keys[:, b] = mins[0] if rows_per_band == 1 else _shift_xor(mins)
+    return keys
+
+
+def _key_lists(keys):
+    """One list<int64> of band keys per row of a (docs, n_bands) matrix."""
+    import numpy as np
+    import pyarrow as pa
+
+    step = keys.shape[1]
+    offsets = np.arange(0, keys.size + 1, step, dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, keys.ravel())
+
+
+def _minhash_batch(text, shingle_words: int, n_bands: int):
+    """One document batch → (rows, hs offsets, hs values, keys): `rows`
+    the batch positions of the docs that have >= shingle_words words,
+    hs their distinct 60-bit word-shingle hashes in first-occurrence
+    order, keys their n_bands band keys. Bit-identical to the Column
+    reference word_hashes → combine_word_hashes → banded_minhash_key.
+
+    One md5 per DISTINCT word of the batch (dictionary-encoded), no
+    shingle strings: a shingle hash shift-xor-combines its word hashes,
+    and Jaccard over them equals the string Jaccard up to 2^-60 collision
+    probability. No memo outlives the batch, so memory stays bounded by
+    the batch whatever the corpus size."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = shingle_words
+    words = pc.split_pattern(text, " ")
+    tok = pc.list_flatten(words)
+    keep = pc.not_equal(pc.binary_length(tok), 0)
+    doc = pc.list_parent_indices(words).filter(keep).to_numpy()
+    enc = pc.dictionary_encode(tok.filter(keep))
+    digests = b"".join(
+        hashlib.md5(w).digest()[:8]
+        for w in enc.dictionary.cast(pa.binary()).to_pylist()
+    )
+    # first 15 hex digits of the md5 = its top 60 bits
+    word_hash = (np.frombuffer(digests, ">u8") >> np.uint64(4)).astype(np.int64)
+    wh = word_hash[enc.indices.to_numpy()]
+
+    n_words = np.bincount(doc, minlength=len(text))
+    first_word = np.cumsum(n_words) - n_words
+    n_sh = max(len(wh) - n + 1, 0)
+    sh = _shift_xor([wh[j : j + n_sh] for j in range(n)])
+    sdoc = doc[:n_sh]
+    # a shingle starts at word p of its doc when p + n <= the doc's words
+    inside = np.arange(n_sh) - first_word[sdoc] <= n_words[sdoc] - n
+    sh, sdoc = sh[inside], sdoc[inside]
+    # per-doc distinct, first occurrence kept (array_distinct's order);
+    # hashed, so a third of a stable two-key sort's time
+    distinct = ~pd.DataFrame({"d": sdoc, "h": sh}).duplicated().to_numpy()
+    hs, hdoc = sh[distinct], sdoc[distinct]
+
+    n_hs = np.bincount(hdoc, minlength=len(text))
+    rows = np.flatnonzero(n_hs)
+    offsets = np.zeros(len(rows) + 1, dtype=np.int32)
+    np.cumsum(n_hs[rows], out=offsets[1:])
+    return rows, offsets, hs, _band_key_matrix(hs, offsets[:-1], n_bands, 1)
+
+
+def _minhash_table(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_words: int,
+    n_bands: int,
+    scope: list,
 ) -> DataFrame:
-    """Hashing stage: a materialized (doc_id, hs) cache, hs the non-empty
-    set of 60-bit word-shingle hashes.
+    """Hash + key stage: a cached (doc_id, hs, keys) table, hs the
+    non-empty set of 60-bit word-shingle hashes and keys[b] its band-b
+    key, one row per doc with >= shingle_words words, computed by one
+    Arrow kernel per batch (_minhash_batch). Lazy: the cache fills at the
+    caller's first action. Registered in `scope`, so release_caches()
+    drains it.
 
-    One md5 per word, no shingle strings: shingle hashes combine per-word
-    hashes, and Jaccard over them equals the string Jaccard up to 2^-60
-    collision probability. The word-hash array must be materialized before
-    the combiner reads it — inlined, CollapseProject re-evaluates the md5
-    transform once per shingle element (measured 45 s vs 1 s at 5k docs).
-    Its one consumer is the shingle-hash cache, so it is dropped as soon as
-    that cache is built: at 10M docs the word-hash arrays are ~3 GB of
-    executor storage that would otherwise stay pinned across the whole
-    banding + verify tail. It is registered in `scope` first, so
-    release_caches() drains it even if the count fails.
-    """
-    from rabitq_spark.functions.text import combine_word_hashes, word_hashes
+    The keys are one array column, not n_bands scalar columns: Spark sizes
+    an unfilled cache, and a projection of a filled one, by default column
+    widths, where an array counts as one element. With n_bands scalar key
+    columns the (doc_id, hs) projection the verify joins read was sized at
+    a quarter of the table and broadcast — at 1M docs ~400 MB of hash
+    sets, which ran the driver out of memory."""
+    from rabitq_spark._dist import ensure_package_on_executors
 
-    wh = _scoped_cache(
-        _widen(docs).select(
-            F.col(id_col).alias("doc_id"), word_hashes(F.col(text_col)).alias("h")
-        ),
-        scope,
-    )
-    # a doc has shingles iff it has >= shingle_words words; a filter on
-    # size(hs) would be pushed below the projection and run the combiner
-    # twice per row
-    hashed = _scoped_cache(
-        wh.filter(F.size("h") >= shingle_words).select(
-            "doc_id", combine_word_hashes("h", shingle_words).alias("hs")
-        ),
-        scope,
-    )
-    hashed.count()
-    wh.unpersist(False)
-    return hashed
+    ensure_package_on_executors(docs.sparkSession)
+    src = _widen(docs).select(F.col(id_col).alias("doc_id"), F.col(text_col))
+
+    def minhash(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            rows, offsets, hs, keys = _minhash_batch(
+                rb.column(1), shingle_words, n_bands
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0).take(rows),
+                    pa.ListArray.from_arrays(offsets, hs),
+                    _key_lists(keys),
+                ],
+                names=["doc_id", "hs", "keys"],
+            )
+
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    schema = f"doc_id {id_type}, hs array<bigint>, keys array<bigint>"
+    return _scoped_cache(src.mapInArrow(minhash, schema), scope)
+
+
+def _explode_keys(table: DataFrame) -> DataFrame:
+    """Long-form (doc_id, b, k) rows, one per band, from the keys array —
+    NearDupState's on-disk `keys` schema and the band join's input."""
+    return table.select("doc_id", F.posexplode("keys").alias("b", "k"))
 
 
 def _band_keys(
     hashed: DataFrame, n_bands: int, rows_per_band: int = 1
 ) -> DataFrame:
-    """Key stage: long-form (doc_id, b, k) rows, one per band, k the
-    banded xor-minhash key of hs. rows_per_band > 1 AND-amplifies each band
-    (collision ~ J^r) for corpora whose baseline pairwise similarity would
-    otherwise flood the candidate join. This is also NearDupState's
-    on-disk `keys` schema."""
-    from rabitq_spark.functions.text import banded_minhash_key
+    """Key stage for a precomputed (doc_id, hs) table (the char-gram
+    hashes): long-form (doc_id, b, k) rows from the same numpy band-key
+    function as the MinHash kernel. rows_per_band > 1 AND-amplifies each
+    band (collision ~ J^r) for corpora whose baseline pairwise similarity
+    would otherwise flood the candidate join."""
+    from rabitq_spark._dist import ensure_package_on_executors
 
-    wide = hashed.select(
-        "doc_id",
-        *[
-            banded_minhash_key("hs", b, rows_per_band).alias(f"k{b}")
-            for b in range(n_bands)
-        ],
-    )
-    return wide.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("b"), F.col(f"k{b}").alias("k"))
-                    for b in range(n_bands)
-                ]
+    ensure_package_on_executors(hashed.sparkSession)
+    src = hashed.select("doc_id", "hs")
+
+    def band_keys(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for rb in batches:
+            hs = rb.column(1)
+            lengths = pc.list_value_length(hs).to_numpy(zero_copy_only=False)
+            keys = _band_key_matrix(
+                pc.list_flatten(hs).to_numpy(),
+                np.cumsum(lengths) - lengths,
+                n_bands,
+                rows_per_band,
             )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.b").alias("b"), F.col("bk.k").alias("k"))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), _key_lists(keys)], names=["doc_id", "keys"]
+            )
+
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    schema = f"doc_id {id_type}, keys array<bigint>"
+    return _explode_keys(src.mapInArrow(band_keys, schema))
 
 
 def _self_candidates(keys: DataFrame, min_band_hits: int = 1) -> DataFrame:
@@ -294,15 +420,9 @@ def _self_candidates(keys: DataFrame, min_band_hits: int = 1) -> DataFrame:
     P(Binomial(b, J^r) >= t); at r=5, b=12, t=2 that is 0.991 -> 0.944
     at J = 0.8 exactly and >= 0.9998 at J >= 0.9.
     """
-    l, r = keys.alias("l"), keys.alias("r")
-    matched = l.join(
-        r,
-        (F.col("l.b") == F.col("r.b"))
-        & (F.col("l.k") == F.col("r.k"))
-        & (F.col("l.doc_id") < F.col("r.doc_id")),
-    ).select(
-        F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
-    )
+    matched = keys.alias("l").join(
+        keys.alias("r"), F.expr("l.b = r.b AND l.k = r.k AND l.doc_id < r.doc_id")
+    ).selectExpr("l.doc_id AS id_a", "r.doc_id AS id_b")
     if min_band_hits <= 1:
         return matched.distinct()
     return (
@@ -318,8 +438,8 @@ def _cross_candidates(keys_a: DataFrame, keys_b: DataFrame) -> DataFrame:
     sharing a band key, each once — one equi-join on (b, k). A broadcast
     hint on either key table carries through to the join."""
     return (
-        keys_a.select(F.col("doc_id").alias("id_a"), "b", "k")
-        .join(keys_b.select(F.col("doc_id").alias("id_b"), "b", "k"), ["b", "k"])
+        keys_a.selectExpr("doc_id AS id_a", "b", "k")
+        .join(keys_b.selectExpr("doc_id AS id_b", "b", "k"), ["b", "k"])
         .select("id_a", "id_b")
         .distinct()
     )
@@ -346,8 +466,8 @@ def _jaccard_verify(
     measured 32 -> 13 s). Batch-sized callers, and joins whose streaming
     side is already wide, pass spread=False rather than pay the extra
     shuffle."""
-    sa = hashes_a.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"))
-    sb = hashes_b.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("hs_b"))
+    sa = hashes_a.selectExpr("doc_id AS id_a", "hs AS hs_a")
+    sb = hashes_b.selectExpr("doc_id AS id_b", "hs AS hs_b")
     pairs = cand.join(sa, "id_a").join(sb, "id_b")
     if spread:
         pairs = pairs.repartition(cand.sparkSession.sparkContext.defaultParallelism)
@@ -366,18 +486,20 @@ def neardup_minhash_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
 
-    Plan: per-doc shingle-hash set (codegen) → explode n_bands minhash keys →
-    self-equi-join on (band, key) for candidates → exact Jaccard verify.
-    Candidates shuffle by band key; the verify join brings only candidate
-    pairs' shingle sets together — never all-pairs.
+    Plan: one Arrow kernel per document batch computes each doc's
+    shingle-hash set and its n_bands minhash keys into one cached table →
+    explode the keys → self-equi-join on (band, key) for candidates → exact
+    Jaccard verify. Candidates shuffle by band key; the verify join brings
+    only candidate pairs' shingle sets together — never all-pairs. The
+    call is lazy: it runs no Spark job until the result is consumed.
     """
-    scope = _begin_scope("minhash")
-    hashed = _shingle_hashes(docs, id_col, text_col, shingle_words, scope)
-    # the self-join reads the key table twice; without a barrier each side
-    # recomputes all n_bands×r array-min transforms
-    keys = _scoped_cache(_band_keys(hashed, n_bands), scope)
+    table = _minhash_table(
+        docs, id_col, text_col, shingle_words, n_bands, _begin_scope("minhash")
+    )
+    hashed = table.select("doc_id", "hs")
     return _jaccard_verify(
-        _self_candidates(keys), hashed, hashed, threshold, spread=True
+        _self_candidates(_explode_keys(table)), hashed, hashed,
+        threshold, spread=True,
     )
 
 
@@ -402,10 +524,13 @@ def neardup_minhash_pairs_cross(
     shuffles at all (AQE decides).
     """
     scope = _begin_scope("minhash_cross")
-    ha = _shingle_hashes(docs_a, id_col, text_col, shingle_words, scope)
-    hb = _shingle_hashes(docs_b, id_col, text_col, shingle_words, scope)
-    cand = _cross_candidates(_band_keys(ha, n_bands), _band_keys(hb, n_bands))
-    return _jaccard_verify(cand, ha, hb, threshold, spread=True)
+    ta = _minhash_table(docs_a, id_col, text_col, shingle_words, n_bands, scope)
+    tb = _minhash_table(docs_b, id_col, text_col, shingle_words, n_bands, scope)
+    cand = _cross_candidates(_explode_keys(ta), _explode_keys(tb))
+    return _jaccard_verify(
+        cand, ta.select("doc_id", "hs"), tb.select("doc_id", "hs"), threshold,
+        spread=True,
+    )
 
 
 def neardup_ngram_pairs(
@@ -463,8 +588,8 @@ def neardup_ngram_pairs(
     codes = _scoped_cache(
         lowered.select("doc_id", char_codes(F.col("lt")).alias("cs")), scope
     )
-    # a text has grams iff it has >= n_chars chars (filter before the
-    # projection, as in _shingle_hashes)
+    # a text has grams iff it has >= n_chars chars; a filter on size(hs)
+    # would be pushed below the projection and run the fold twice per row
     hashed = _scoped_cache(
         codes.filter(F.size("cs") >= n_chars).select(
             "doc_id", rolling_gram_hashes(F.col("cs"), n_chars).alias("hs")
@@ -958,10 +1083,13 @@ class NearDupState(_LayeredState):
         band the corpus, materialize both projections, run the banded
         self-join once for the initial pair set. Every later batch is
         apply_delta and never repeats this corpus-sized work."""
-        scope = _begin_scope("neardup_state")
-        hashed = _shingle_hashes(docs, id_col, text_col, self.shingle_words, scope)
+        table = _minhash_table(
+            docs, id_col, text_col, self.shingle_words, self.n_bands,
+            _begin_scope("neardup_state"),
+        )
+        hashed = table.select("doc_id", "hs")
         hashed.write.mode("overwrite").parquet(f"{self.base_dir}/hashes")
-        keys = _scoped_cache(_band_keys(hashed, self.n_bands), scope)
+        keys = _explode_keys(table)
         keys.write.mode("overwrite").parquet(f"{self.base_dir}/keys")
         _jaccard_verify(
             _self_candidates(keys), hashed, hashed, self.threshold, spread=True
@@ -977,11 +1105,12 @@ class NearDupState(_LayeredState):
         contributed (already appended, with Δ hashes/keys, to delta_dir).
         Reads the pre-batch state lazily, so sequential batches in one
         session compose (batch 2's cross join sees batch 1's appends)."""
-        scope = _begin_scope("neardup_state_delta")
-        d_hashed = _shingle_hashes(
-            delta_docs, id_col, text_col, self.shingle_words, scope
+        d_table = _minhash_table(
+            delta_docs, id_col, text_col, self.shingle_words, self.n_bands,
+            _begin_scope("neardup_state_delta"),
         )
-        d_keys = _scoped_cache(_band_keys(d_hashed, self.n_bands), scope)
+        d_hashed = d_table.select("doc_id", "hs")
+        d_keys = _explode_keys(d_table)
         self_pairs = _jaccard_verify(
             _self_candidates(d_keys), d_hashed, d_hashed, self.threshold,
             spread=False,

@@ -9,7 +9,7 @@ State is a pair of append-only Parquet tables under `store_path`:
 
 Each micro-batch (foreachBatch) runs the same stages as
 operators/dedup.neardup_minhash_pairs:
-  1. shingle hashes and banded minhash keys for the batch,
+  1. one cached MinHash table (shingle hashes + band keys) for the batch,
   2. candidates = batch keys ⨝ store keys on (b, k) PLUS the banded
      in-batch self-join (id_a < id_b) — never all-pairs,
   3. exact Jaccard verify on candidates; canonical_id = least(self, every
@@ -68,12 +68,11 @@ def neardup_maintenance_stream(
     """Run the admission stream to completion (availableNow). Read
     `{store_path}/decisions` afterwards for the verdict log."""
     from rabitq_spark.operators.dedup import (
-        _band_keys,
         _cross_candidates,
+        _explode_keys,
         _jaccard_verify,
-        _scoped_cache,
+        _minhash_table,
         _self_candidates,
-        _shingle_hashes,
     )
 
     spark = doc_stream.sparkSession
@@ -87,8 +86,11 @@ def neardup_maintenance_stream(
         scope: list = []
         try:
             batch = batch_df.localCheckpoint(eager=True)
-            hashed = _shingle_hashes(batch, "doc_id", "text", shingle_words, scope)
-            keys = _scoped_cache(_band_keys(hashed, n_bands), scope)
+            table = _minhash_table(
+                batch, "doc_id", "text", shingle_words, n_bands, scope
+            )
+            hashed = table.select("doc_id", "hs")
+            keys = _explode_keys(table)
             matches = _jaccard_verify(
                 _self_candidates(keys), hashed, hashed, threshold, spread=False
             ).select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("match_id"))

@@ -355,43 +355,76 @@ def test_release_caches_drains_text_generations(spark, sf_dir):
 
 
 def test_cross_join_and_state_drop_word_hash_cache(spark, sf_dir, tmp_path):
-    """The word-hash arrays (~3 GB at 10M docs) have one consumer, the
-    shingle-hash cache: once it is built no persisted RDD may still hold
-    them — in the cross-join and NearDupState.bootstrap as in the
-    self-join. Only shingle-hash and key caches stay live, and
-    release_caches() drains those."""
+    """No MinHash caller ever caches the (doc_id, h) word-hash arrays
+    (~3 GB at 10M docs): the only live caches are one MinHash table
+    (doc_id, hs, keys) per input side — in the self-join, the cross-join
+    and NearDupState.bootstrap alike — and release_caches() drains them."""
     from rabitq_spark.operators import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
     jsc = spark.sparkContext._jsc
+    table_cols = ["doc_id", "hs", "keys"]
 
     def persistent_ids():
         return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
 
-    def new_caches(family, run):
+    def check_caches(family, sides, run):
+        # every family hashes the same docs, so each drains before the next
+        # (equal plans would share one cache entry)
+        dedup.release_caches()
         before = persistent_ids()
         run()
         created = persistent_ids() - before
         scope = dedup._SCOPES[family]
-        assert any(df.columns == ["doc_id", "h"] for df in scope)
-        live = [tuple(df.columns) for df in scope if df.storageLevel.useMemory]
-        assert set(live) <= {("doc_id", "hs"), ("doc_id", "b", "k")}, live
-        assert len(created) == len(live)
-        return created
+        assert [df.columns for df in scope] == [table_cols] * sides
+        assert all(df.storageLevel.useMemory for df in scope)
+        assert len(created) == sides
+        dedup.release_caches()
+        assert not (persistent_ids() & created)
 
-    created = new_caches(
+    check_caches(
+        "minhash", 1, lambda: dedup.neardup_minhash_pairs(docs).count()
+    )
+    check_caches(
         "minhash_cross",
+        2,
         lambda: dedup.neardup_minhash_pairs_cross(
             docs.filter(F.col("doc_id") % 2 == 0),
             docs.filter(F.col("doc_id") % 2 == 1),
         ).count(),
     )
-    created |= new_caches(
+    check_caches(
         "neardup_state",
+        1,
         lambda: dedup.NearDupState(spark, str(tmp_path / "base")).bootstrap(docs),
     )
-    dedup.release_caches()
-    assert not (persistent_ids() & created)
+
+
+def test_minhash_call_is_lazy_and_hashes_in_one_arrow_kernel(spark):
+    """neardup_minhash_pairs runs no Spark job until its result is
+    consumed, and the executed plan hashes, shingles and bands in one
+    Python MapInArrow node — no md5 expression is left in the JVM plan."""
+    import re
+
+    docs = _docs(
+        spark, [f"w{i % 7} a b c d e f g w{i % 5}" for i in range(50)]
+    ).cache()
+    docs.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash_call", "minhash_call")
+    try:
+        pairs = neardup_minhash_pairs(docs, threshold=0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup("minhash_call")
+    assert pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    # the cached table's plan is printed once per scan of it; the node
+    # (same expression ids every time) is one
+    assert len(set(re.findall(r"MapInArrow \w+\(.*", plan))) == 1
+    assert "md5" not in plan.lower()
+    docs.unpersist()
 
 
 def test_release_caches_drains_blocked_embedding_index(spark, sf_dir):

@@ -125,3 +125,107 @@ def test_rolling_gram_hash_sql_mirrors_spark(spark):
     # DuckDB's list_distinct does not preserve order; downstream consumers
     # (array_min bands, intersect sizes) are order-free set operations
     assert sorted(got) == sorted(want)
+
+
+def _edge_corpus(spark):
+    """400 docs mixing null, empty, blank, runs of spaces, tabs,
+    non-ASCII and emoji tokens, repeated words and short docs."""
+    import random
+
+    rng = random.Random(7)
+    vocab = ["a", "the", "x", "émigré", "naïve", "日本語", "🙂", "🙂🙂",
+             "tab\there", "b", "c", "zz", "Ω"]
+    texts = [None, "", " ", "   ", "\t", "a", "a a", "a a a", "  a  b  ",
+             "🙂 🙂 🙂 🙂"]
+    while len(texts) < 400:
+        n = rng.choice([0, 1, 2, 3, 4, 6, 8, 12, 30])
+        t = "".join(
+            rng.choice(vocab) + rng.choice([" ", " ", "  ", "   "])
+            for _ in range(n)
+        )
+        texts.append(" " + t if rng.random() < 0.3 else t)
+    return spark.createDataFrame(
+        list(enumerate(texts)), "doc_id bigint, text string"
+    ).repartition(3)
+
+
+def _band_columns(grid):
+    from rabitq_spark.functions.text import banded_minhash_key
+
+    return [
+        banded_minhash_key("hs", b, r).alias(f"k{n}_{r}_{b}")
+        for n, r in grid
+        for b in range(n)
+    ]
+
+
+_BAND_GRID = [(8, 1), (12, 5), (4, 2)]
+
+
+@pytest.mark.parametrize("shingle_words", [1, 2, 3, 5, 7])
+def test_minhash_kernel_equals_column_reference(spark, shingle_words):
+    """The Arrow kernel's hash sets (in order) and band keys equal the
+    Column reference word_hashes → combine_word_hashes →
+    banded_minhash_key, bit for bit; docs with fewer than shingle_words
+    words get no row in either. The band-key function is checked at every
+    (n_bands, rows_per_band) of the grid through _band_keys."""
+    from rabitq_spark.functions.text import combine_word_hashes, word_hashes
+    from rabitq_spark.operators.dedup import (
+        _band_keys,
+        _minhash_table,
+        release_caches,
+    )
+
+    docs = _edge_corpus(spark)
+    ref_hs = (
+        docs.select("doc_id", word_hashes("text").alias("h"))
+        .filter(F.size("h") >= shingle_words)
+        .select("doc_id", combine_word_hashes("h", shingle_words).alias("hs"))
+        .localCheckpoint()
+    )
+    want = {
+        r["doc_id"]: r.asDict()
+        for r in ref_hs.select("doc_id", "hs", *_band_columns(_BAND_GRID)).collect()
+    }
+    table = _minhash_table(docs, "doc_id", "text", shingle_words, 8, scope=[])
+    got = {r["doc_id"]: r for r in table.collect()}
+    table.unpersist()
+    assert want and set(got) == set(want)
+    for d, w in want.items():
+        assert got[d]["hs"] == w["hs"]
+        assert got[d]["keys"] == [w[f"k8_1_{b}"] for b in range(8)]
+    for n, r in _BAND_GRID:
+        keys = {
+            (row["doc_id"], row["b"]): row["k"]
+            for row in _band_keys(ref_hs, n, r).collect()
+        }
+        assert keys == {
+            (d, b): w[f"k{n}_{r}_{b}"] for d, w in want.items() for b in range(n)
+        }
+    release_caches()
+
+
+def test_ngram_band_keys_equal_column_reference(spark):
+    """_band_keys over rolling char-gram hashes (the ngram pipeline's
+    AND-amplified 12 × 5 bands) equals banded_minhash_key."""
+    from rabitq_spark.functions.text import char_codes, rolling_gram_hashes
+    from rabitq_spark.operators.dedup import _band_keys
+
+    hashed = (
+        _edge_corpus(spark)
+        .select("doc_id", char_codes(F.lower("text")).alias("cs"))
+        .filter(F.size("cs") >= 5)
+        .select("doc_id", rolling_gram_hashes("cs", 5).alias("hs"))
+        .localCheckpoint()
+    )
+    want = {
+        r["doc_id"]: r.asDict()
+        for r in hashed.select("doc_id", *_band_columns([(12, 5)])).collect()
+    }
+    keys = {
+        (row["doc_id"], row["b"]): row["k"]
+        for row in _band_keys(hashed, 12, 5).collect()
+    }
+    assert want and keys == {
+        (d, b): w[f"k12_5_{b}"] for d, w in want.items() for b in range(12)
+    }
