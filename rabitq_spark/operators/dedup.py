@@ -81,14 +81,30 @@ _SCOPES: dict[str, list] = {}
 _SCOPES_LOCK = threading.Lock()
 
 
+def _retire(dfs: list) -> None:
+    """Unpersist `dfs`, except those whose plan a live generation also
+    cached: equal plans (two families hashing the same docs) share one
+    cache entry, and unpersisting it would strip that generation's
+    barrier too."""
+    with _SCOPES_LOCK:
+        live = [
+            df._jdf.queryExecution().analyzed()
+            for scope in _SCOPES.values()
+            for df in scope
+        ]
+    for df in dfs:
+        plan = df._jdf.queryExecution().analyzed()
+        if not any(plan.sameResult(other) for other in live):
+            df.unpersist(False)
+
+
 def _begin_scope(family: str) -> list:
     """Open a new cache generation for `family`, retiring the previous one."""
     with _SCOPES_LOCK:
         old = _SCOPES.pop(family, [])
         scope: list = []
         _SCOPES[family] = scope
-    for df in old:
-        df.unpersist(False)
+    _retire(old)
     return scope
 
 
@@ -265,8 +281,10 @@ def _minhash_batch(text, shingle_words: int, n_bands: int):
     One md5 per DISTINCT word of the batch (dictionary-encoded), no
     shingle strings: a shingle hash shift-xor-combines its word hashes,
     and Jaccard over them equals the string Jaccard up to 2^-60 collision
-    probability. No memo outlives the batch, so memory stays bounded by
-    the batch whatever the corpus size."""
+    probability. The saving depends on words repeating within the batch.
+    Working memory is ~100 bytes per word (about ten int64 temporaries);
+    no memo outlives the call, and _word_slices bounds the words per
+    call."""
     import hashlib
 
     import numpy as np
@@ -308,6 +326,30 @@ def _minhash_batch(text, shingle_words: int, n_bands: int):
     return rows, offsets, hs, _band_key_matrix(hs, offsets[:-1], n_bands, 1)
 
 
+# words per _minhash_batch call: ~100 MB of kernel temporaries per Python
+# worker, whatever the documents' length (Arrow batches are cut by rows)
+_KERNEL_WORDS = 1 << 20
+
+
+def _word_slices(text, max_words: int = _KERNEL_WORDS):
+    """(start, stop) row ranges cutting `text` into runs of at most
+    `max_words` words, counted as spaces + 1 (an upper bound); a longer
+    doc forms a range alone. Docs hash independently, so hashing the
+    ranges one by one equals hashing the whole batch."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    bound = pc.fill_null(pc.count_substring(text, " "), 0).to_numpy(
+        zero_copy_only=False
+    )
+    ends = np.cumsum(bound + 1)
+    start, done = 0, 0
+    while start < len(text):
+        stop = max(int(np.searchsorted(ends, done + max_words, "right")), start + 1)
+        yield start, stop
+        start, done = stop, ends[stop - 1]
+
+
 def _minhash_table(
     docs: DataFrame,
     id_col: str,
@@ -323,12 +365,9 @@ def _minhash_table(
     caller's first action. Registered in `scope`, so release_caches()
     drains it.
 
-    The keys are one array column, not n_bands scalar columns: Spark sizes
-    an unfilled cache, and a projection of a filled one, by default column
-    widths, where an array counts as one element. With n_bands scalar key
-    columns the (doc_id, hs) projection the verify joins read was sized at
-    a quarter of the table and broadcast — at 1M docs ~400 MB of hash
-    sets, which ran the driver out of memory."""
+    The table is sized by default column widths until it fills, so its
+    corpus-sized readers must not plan from that estimate; see
+    _jaccard_verify."""
     from rabitq_spark._dist import ensure_package_on_executors
 
     ensure_package_on_executors(docs.sparkSession)
@@ -337,18 +376,20 @@ def _minhash_table(
     def minhash(batches):
         import pyarrow as pa
 
-        for rb in batches:
-            rows, offsets, hs, keys = _minhash_batch(
-                rb.column(1), shingle_words, n_bands
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(0).take(rows),
-                    pa.ListArray.from_arrays(offsets, hs),
-                    _key_lists(keys),
-                ],
-                names=["doc_id", "hs", "keys"],
-            )
+        for batch in batches:
+            for start, stop in _word_slices(batch.column(1)):
+                rb = batch.slice(start, stop - start)
+                rows, offsets, hs, keys = _minhash_batch(
+                    rb.column(1), shingle_words, n_bands
+                )
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        rb.column(0).take(rows),
+                        pa.ListArray.from_arrays(offsets, hs),
+                        _key_lists(keys),
+                    ],
+                    names=["doc_id", "hs", "keys"],
+                )
 
     id_type = src.schema["doc_id"].dataType.simpleString()
     schema = f"doc_id {id_type}, hs array<bigint>, keys array<bigint>"
@@ -465,9 +506,17 @@ def _jaccard_verify(
     every core (same rule as the embedding near-dup verify, where it
     measured 32 -> 13 s). Batch-sized callers, and joins whose streaming
     side is already wide, pass spread=False rather than pay the extra
-    shuffle."""
+    shuffle.
+
+    `spread` sides are corpus-sized hash-set tables, so they join by
+    sort-merge, never broadcast: an unfilled cache is sized by default
+    column widths, which count an array as one element, and the
+    estimate can fall far below the real size (at 1M docs ~400 MB of
+    hash sets were broadcast)."""
     sa = hashes_a.selectExpr("doc_id AS id_a", "hs AS hs_a")
     sb = hashes_b.selectExpr("doc_id AS id_b", "hs AS hs_b")
+    if spread:
+        sa, sb = sa.hint("merge"), sb.hint("merge")
     pairs = cand.join(sa, "id_a").join(sb, "id_b")
     if spread:
         pairs = pairs.repartition(cand.sparkSession.sparkContext.defaultParallelism)

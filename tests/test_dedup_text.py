@@ -400,6 +400,31 @@ def test_cross_join_and_state_drop_word_hash_cache(spark, sf_dir, tmp_path):
     )
 
 
+def test_retiring_one_family_keeps_its_shared_table_cached(
+    spark, sf_dir, tmp_path
+):
+    """Two families hashing the same docs cache equal plans, which share
+    one cache entry. Retiring one family's generation leaves the entry
+    cached while the other family still holds it; release_caches() then
+    drains it."""
+    from rabitq_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
+    dedup.release_caches()
+    dedup.neardup_minhash_pairs(docs).count()
+    dedup.NearDupState(spark, str(tmp_path / "base")).bootstrap(docs)
+    shared = dedup._SCOPES["neardup_state"][0]
+    first = dedup._SCOPES["minhash"][0]
+    assert first._jdf.queryExecution().analyzed().sameResult(
+        shared._jdf.queryExecution().analyzed()
+    )
+    assert shared.storageLevel.useMemory
+    dedup._begin_scope("minhash")  # the self-join family's next call
+    assert shared.storageLevel.useMemory
+    dedup.release_caches()
+    assert not shared.storageLevel.useMemory
+
+
 def test_minhash_call_is_lazy_and_hashes_in_one_arrow_kernel(spark):
     """neardup_minhash_pairs runs no Spark job until its result is
     consumed, and the executed plan hashes, shingles and bands in one
@@ -425,6 +450,40 @@ def test_minhash_call_is_lazy_and_hashes_in_one_arrow_kernel(spark):
     assert len(set(re.findall(r"MapInArrow \w+\(.*", plan))) == 1
     assert "md5" not in plan.lower()
     docs.unpersist()
+
+
+def test_corpus_verify_joins_never_broadcast_hash_sets(spark, tmp_path):
+    """Until its cache fills, the MinHash table is sized by default column
+    widths, which count a hash-set array as one element. With the
+    broadcast threshold above that estimate and below the hash sets' real
+    size, both verify joins still sort-merge: no hash-set table is
+    broadcast."""
+    import re
+
+    from rabitq_spark.operators import dedup
+
+    texts = [" ".join(f"w{i}_{j}" for j in range(300)) for i in range(200)]
+    path = str(tmp_path / "docs")
+    _docs(spark, texts + texts[:5]).write.parquet(path)
+    docs = spark.read.parquet(path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        pairs = neardup_minhash_pairs(docs)
+        hashed = dedup._SCOPES["minhash"][0].select("doc_id", "hs")
+        stats = hashed._jdf.queryExecution().optimizedPlan().stats()
+        threshold = 2 * int(stats.sizeInBytes())
+        spark.conf.set(key, str(threshold))
+        assert len(pairs.collect()) == 5  # runs the plan read below
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        real = 8 * hashed.selectExpr("sum(size(hs))").first()[0]
+    finally:
+        spark.conf.set(key, old)
+        dedup.release_caches()
+    assert real > threshold
+    for side in ("id_a", "id_b"):
+        assert re.search(rf"SortMergeJoin \[{side}#", plan)
+        assert not re.search(rf"BroadcastHashJoin \[{side}#", plan)
 
 
 def test_release_caches_drains_blocked_embedding_index(spark, sf_dir):

@@ -127,8 +127,8 @@ def test_rolling_gram_hash_sql_mirrors_spark(spark):
     assert sorted(got) == sorted(want)
 
 
-def _edge_corpus(spark):
-    """400 docs mixing null, empty, blank, runs of spaces, tabs,
+def _edge_texts():
+    """400 texts mixing null, empty, blank, runs of spaces, tabs,
     non-ASCII and emoji tokens, repeated words and short docs."""
     import random
 
@@ -144,8 +144,12 @@ def _edge_corpus(spark):
             for _ in range(n)
         )
         texts.append(" " + t if rng.random() < 0.3 else t)
+    return texts
+
+
+def _edge_corpus(spark):
     return spark.createDataFrame(
-        list(enumerate(texts)), "doc_id bigint, text string"
+        list(enumerate(_edge_texts())), "doc_id bigint, text string"
     ).repartition(3)
 
 
@@ -229,3 +233,36 @@ def test_ngram_band_keys_equal_column_reference(spark):
     assert want and keys == {
         (d, b): w[f"k12_5_{b}"] for d, w in want.items() for b in range(12)
     }
+
+
+@pytest.mark.parametrize("max_words", [1, 7, 50, 1 << 20])
+def test_word_slices_hash_like_the_whole_batch(max_words):
+    """_word_slices tiles a batch into row ranges of at most max_words
+    words (spaces + 1), or one longer doc, and the kernel's outputs over
+    the ranges concatenate to its output over the whole batch."""
+    import numpy as np
+    import pyarrow as pa
+
+    from rabitq_spark.operators.dedup import _minhash_batch, _word_slices
+
+    texts = _edge_texts()
+    text = pa.array(texts)
+    ranges = list(_word_slices(text, max_words))
+    assert [a for a, _ in ranges] == [0] + [b for _, b in ranges[:-1]]
+    assert ranges[-1][1] == len(texts)
+    for a, b in ranges:
+        words = sum((t or "").count(" ") + 1 for t in texts[a:b])
+        assert b - a == 1 or words <= max_words
+    if max_words == 1 << 20:
+        assert len(ranges) == 1
+
+    whole = _minhash_batch(text, 3, 8)
+    parts = [_minhash_batch(text.slice(a, b - a), 3, 8) for a, b in ranges]
+    np.testing.assert_array_equal(
+        np.concatenate([p[0] + a for p, (a, _) in zip(parts, ranges)]), whole[0]
+    )
+    np.testing.assert_array_equal(
+        np.concatenate([np.diff(p[1]) for p in parts]), np.diff(whole[1])
+    )
+    np.testing.assert_array_equal(np.concatenate([p[2] for p in parts]), whole[2])
+    np.testing.assert_array_equal(np.vstack([p[3] for p in parts]), whole[3])
