@@ -36,8 +36,10 @@ side, same contract as knn_exact_fast and the fused shortlist), the
 (nq x n_clusters) centroid-distance matrix, per-cluster radii
 (n_clusters floats, one tiny agg job, memoized on the model), and the
 accumulated top-k (nq x k rows). Each wave is ONE Spark job over the
-wave's clusters only — partition-pruned scan, fused Arrow shortlist,
-exact rerank — so total index rows touched is exactly the probed set.
+wave's clusters only — search()'s own stages 5-7 on the wave's probe
+table: the partition-pruned jvm scan or the fused Arrow shortlist
+(search._shortlist), then vecstore.exact_topk — so total index rows
+touched is exactly the probed set.
 Wave sizes double, bounding the number of jobs at O(log n_clusters) per
 batch even when a hard query needs wide coverage.
 
@@ -55,22 +57,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from rabitq_spark.index import vecstore
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import (
     KERNELS,
-    _fused_shortlist,
-    _padded_queries,
+    _query_side,
+    _shortlist,
     auto_overfetch,
     choose_kernel,
-    cluster_filter,
-    exact_rerank,
-    probe_frame,
     quantize_probe_pairs,
     query_geometry,
-    rough_estimator_expr,
 )
-from rabitq_spark.index.vecstore import query_matrix
+from rabitq_spark.index.vecstore import exact_topk, query_matrix
 from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.topk import topk_per_group
 from rabitq_spark._dist import ensure_package_on_executors
@@ -198,13 +195,9 @@ def search_adaptive(
     wave = max(1, int(wave0))
 
     # the rerank folds each candidate against the query matrix already on
-    # the driver when the ids can index it and the matrix fits the
-    # broadcast bound; otherwise it joins the padded query vectors back
-    # (zeros cancel in the exact difference, same as search() stage 7)
-    if len(np.unique(q_ids)) == nq and qmat.nbytes <= vecstore.QUERY_MATRIX_MAX_BYTES:
-        qv = (q_ids, qmat)
-    else:
-        qv = _padded_queries(model, queries, query_id, query_vec)
+    # the driver when search()'s driver check lets it stay there;
+    # otherwise it joins the padded query vectors back
+    qv = _query_side(model, queries, query_id, query_vec, (q_ids, qmat))
 
     forced_final = False
     while live.any() and waves < 64:
@@ -284,34 +277,17 @@ def search_adaptive(
         wave_kernels.append(wave_kernel)
         if metrics is not None:
             metrics.kernel, metrics.kernel_reason = wave_kernel, reason
-        if wave_kernel == "jvm":
-            # JVM wave scorer — search()'s stages 5-6 on the wave's probe
-            # table, with the same estimator expression (shared helper —
-            # the frame-identity contract depends on it)
-            index = model.index_df
-            if 2 * len(probed_set) <= ncl:
-                index = index.filter(cluster_filter(probed_set))
-            probes_df = probe_frame(spark, block)
-            local = index.join(F.broadcast(probes_df), "cluster_id").select(
-                "query_id", "orig_id",
-                rough_estimator_expr(model).alias("rough"),
-            )
-        else:
-            local = _fused_shortlist(model, block, r, cfg.theta_log_dim)
-        shortlist = topk_per_group(
-            local,
-            ["query_id"],
-            [F.col("rough").asc(), F.col("orig_id").asc()],
+        # search()'s stages 5-7 on the wave's probe table: the jvm scan is
+        # pruned to the wave's clusters when they are at most half
+        shortlist = _shortlist(
+            model,
+            wave_kernel,
             r,
-        ).select("query_id", "orig_id")
-        # exact rerank: candidate-bound via the vec store when the model
-        # carries one, base join otherwise (bit-identical — exact_rerank)
-        exact = exact_rerank(model, shortlist, qv)
-        wave_res = topk_per_group(
-            exact,
-            ["query_id"],
-            [F.col("dist").asc(), F.col("neighbor_id").asc()],
-            topk,
+            block=block,
+            clusters=probed_set if 2 * len(probed_set) <= ncl else None,
+        )
+        wave_res = exact_topk(
+            shortlist, qv, model.rerank_base, topk, id_col="orig_id"
         ).select("query_id", "neighbor_id", "dist").toPandas()
 
         acc = (

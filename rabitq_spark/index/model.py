@@ -51,6 +51,12 @@ class RaBitQModel:
     def n_words(self) -> int:
         return self.dim_pad // 64
 
+    @property
+    def rerank_base(self):
+        """Where stage 7 reads base vectors (vecstore.exact_rerank): the
+        vec store when one is attached, else base_df."""
+        return self.base_df if self.vec_store is None else self.vec_store
+
     # -- persistence -------------------------------------------------------
 
     def save(self, path: str, store_min_rows: int | None = None) -> None:

@@ -57,9 +57,20 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from rabitq_spark.functions.vector import l2_squared
-from rabitq_spark.index.vecstore import store_exact_rerank
+from rabitq_spark.index.vecstore import exact_topk
 from rabitq_spark.operators.topk import topk_per_group
+
+
+def coded_rerank_base(coded_base: DataFrame, vec_store=None):
+    """What the exact rerank of a coded base (__bid, __bvec, ...: the PQ,
+    IVF-PQ and SQ8 tables) reads base vectors from: the vec store's
+    candidate-bound point reads when given (index/vecstore.py), else the
+    coded base's raw vectors (an O(base) join)."""
+    if vec_store is not None:
+        return vec_store
+    return coded_base.select(
+        F.col("__bid").alias("neighbor_id"), F.col("__bvec").alias("vec")
+    )
 
 
 def _kmeans_1sub(x: np.ndarray, ksub: int, seed: int, iters: int) -> np.ndarray:
@@ -513,24 +524,7 @@ def ivfpq_search(
         max(shortlist, k),
     ).select("query_id", "neighbor_id")
     qv = probe_df.select("query_id", "__qvec").dropDuplicates(["query_id"])
-    if vec_store is not None:
-        # candidate-bound point reads (index/vecstore.py) instead of the
-        # O(base) __bvec join — bit-identical fold, same output
-        scored = store_exact_rerank(short, qv, vec_store)
-    else:
-        bv = coded_base.select(F.col("__bid").alias("neighbor_id"), "__bvec")
-        scored = (
-            short.join(bv, "neighbor_id")
-            .join(F.broadcast(qv), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                l2_squared(F.col("__qvec"), F.col("__bvec")).alias("dist"),
-            )
-        )
-    return topk_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    ).select("query_id", "neighbor_id", "dist", "rank")
+    return exact_topk(short, qv, coded_rerank_base(coded_base, vec_store), k)
 
 
 def pq_search(
@@ -587,22 +581,7 @@ def pq_search(
             max(shortlist, k),
         ).select("query_id", "neighbor_id")
         qv = q.select("query_id", "__qvec")
-    if vec_store is not None:
-        scored = store_exact_rerank(short, qv, vec_store)
-    else:
-        bv = coded_base.select(F.col("__bid").alias("neighbor_id"), "__bvec")
-        scored = (
-            short.join(bv, "neighbor_id")
-            .join(F.broadcast(qv), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                l2_squared(F.col("__qvec"), F.col("__bvec")).alias("dist"),
-            )
-        )
-    return topk_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    ).select("query_id", "neighbor_id", "dist", "rank")
+    return exact_topk(short, qv, coded_rerank_base(coded_base, vec_store), k)
 
 
 def _pq_arrow_shortlist(
@@ -830,19 +809,4 @@ def _ivfpq_search_arrow(
     qv = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qvec")
     )
-    if vec_store is not None:
-        scored = store_exact_rerank(short, qv, vec_store)
-    else:
-        bv = coded_base.select(F.col("__bid").alias("neighbor_id"), "__bvec")
-        scored = (
-            short.join(bv, "neighbor_id")
-            .join(F.broadcast(qv), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                l2_squared(F.col("__qvec"), F.col("__bvec")).alias("dist"),
-            )
-        )
-    return topk_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    ).select("query_id", "neighbor_id", "dist", "rank")
+    return exact_topk(short, qv, coded_rerank_base(coded_base, vec_store), k)

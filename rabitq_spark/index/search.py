@@ -21,17 +21,23 @@ Stages:
   5.   rough scoring — equi-join probes ⋈ index on cluster_id (probe side
        broadcast; index side partition-pruned by the probed cluster set),
        then the D5 estimator as one SQL expression (whole-stage codegen;
-       src/rabitq.rs:336-367), or the Arrow value-GEMM kernel.
+       src/rabitq.rs:336-367) — _rough_candidates — or the Arrow
+       value-GEMM kernel (_fused_shortlist).
   6.   top-R rough candidates per query (WindowGroupLimit) — the batch
        substitute for the sequential heap threshold (src/rerank.rs:62-114).
-  7.   exact rerank: the shortlist's base vectors (base join or vec-store
-       gather) against the query vectors, exact squared-L2 in double
-       precision — one numpy fold (vecstore.l2_fold) for both plans when
-       the query matrix is on the driver — then top-k per query.
+       _shortlist builds stages 5-6 for search() and every
+       search_adaptive wave; range_search filters _rough_candidates
+       instead.
+  7.   exact rerank and the final top-k per query — vecstore.exact_rerank
+       and exact_topk, the one rerank of every shortlist-then-exact plan:
+       the shortlist's base vectors (vec-store gather or base join)
+       against the query vectors, exact squared-L2 in double precision.
 
-Scale notes: the only shuffles are the two window top-ks and (if the probe
-table outgrows broadcast) the cluster_id join. The index never moves; probes
-move to it. Cluster-size skew is handled by AQE skew-join splitting.
+Scale notes: the only shuffles are the two window top-ks and, when neither
+side fits a broadcast, the cluster_id join and the rerank's base join (a
+model with a vec store gathers candidate rows instead). The index never
+moves; probes move to it. Cluster-size skew is handled by AQE skew-join
+splitting.
 """
 
 from __future__ import annotations
@@ -44,15 +50,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rabitq_spark._dist import ensure_package_on_executors
-from rabitq_spark.functions.vector import l2_squared, pad_to_multiple
+from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.rotation import apply_rot
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.vecstore import (
+    QUERY_MATRIX_MAX_BYTES,
     collect_queries,
-    matrix_rerank,
+    exact_rerank,
+    exact_topk,
     query_matrix,
-    store_exact_rerank,
-    store_join_rerank,
 )
 from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.topk import topk_per_group
@@ -612,77 +618,61 @@ def probe_block_of(ppdf: pd.DataFrame) -> dict:
     return block
 
 
-def exact_rerank(
+def _rough_candidates(
     model: RaBitQModel,
-    shortlist: DataFrame,
-    qv,
-    metrics: "SearchMetrics | None" = None,
+    probes: DataFrame,
+    clusters=None,
+    broadcast: bool = True,
+    index: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Stage 7: exact squared-L2 over the shortlist — (query_id,
-    neighbor_id, dist), dist the deterministic double fold of l2_squared.
-
-    `qv` is the query batch: either on the driver, as an (ids, (nq, dim)
-    float64 matrix) pair with unique ids, or a DataFrame (query_id,
-    __qvec) of padded query vectors (the executor path).
-
-    Two physically different plans, bit-identical results
-    (tests/test_vecstore.py):
-
-    * base-join (default): shortlist ⋈ base_df on orig_id. The shortlist
-      side broadcasts, so the base never shuffles — but the scan is
-      O(base): uniformly-spread candidate ids defeat row-group/page
-      pruning (measured at 10M x 256: every row group holds candidates at
-      1.6% density, so the rerank read the full 10 GB vector column).
-      With the query matrix on the driver, one mapInPandas (`rr`,
-      vecstore.matrix_rerank) folds each joined row against its broadcast
-      query; a DataFrame `qv` is joined back and scored by the l2_squared
-      Column fold.
-    * vec-store (when model.vec_store is set): gather ONLY candidate rows
-      from the fixed-width sidecar — O(candidates) reads, the disk
-      variant's point-read design (crates/disk/src/cache.rs:115-145),
-      scored by the same numpy fold (store_exact_rerank; a DataFrame `qv`
-      takes its join form, store_join_rerank, without a collect).
-
-    Both numpy forms use vecstore.l2_fold, which mirrors l2_squared
-    exactly: per-element float32→float64 cast, subtract, square,
-    left-to-right accumulation (pad terms add +0.0 and cancel bit-exactly,
-    so the unpadded prefix suffices).
-
-    `metrics.rerank`, when wired, observes `rerank_base_rows` — the rows
-    the rerank actually read from base storage (== base row count for the
-    join plan, == candidate count for the store plan), making the
-    candidate-bound property a measurable artifact line, not a claim.
-    """
-    store = model.vec_store
-    if store is not None:
-        if isinstance(qv, DataFrame):
-            # the batch stayed off the driver (over the cap, or the caller
-            # ruled a collect out): no second collect attempt here
-            return store_join_rerank(shortlist, qv, store, "orig_id", "__qvec", metrics)
-        return store_exact_rerank(
-            shortlist, qv, store, id_col="orig_id", metrics=metrics
-        )
-    base = model.base_df
-    if metrics is not None:
-        base = base.observe(
-            metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
-        )
-    rows = shortlist.join(base, "orig_id")
-    if isinstance(qv, DataFrame):
-        return rows.join(F.broadcast(qv), "query_id").select(
-            "query_id",
-            F.col("orig_id").alias("neighbor_id"),
-            l2_squared(F.col("__qvec"), F.col("vec")).alias("dist"),
-        )
-    qids, qmat = qv
-    dim = model.dim
-    return matrix_rerank(
-        rows.select("query_id", "orig_id", "vec"),
-        qids,
-        qmat,
-        "orig_id",
-        lambda pdf, ids: np.vstack(pdf["vec"].to_numpy())[:, :dim],
+    """Stage 5 on the jvm: the J2 equi-join index ⋈ probes on cluster_id,
+    then the D5 estimator (rough_estimator_expr) — (query_id, orig_id,
+    rough). `clusters`, when given, prunes the scan to the probed clusters:
+    an IN-filter pushed into the Parquet scan, the analogue of the
+    reference's CSR offsets scan (src/rabitq.rs:348). The probe side
+    broadcasts unless `broadcast` is off: a huge batch (a full-table
+    self-join) then shuffles BOTH sides by cluster_id, the index side
+    bounded by the pruned posting lists. `index` defaults to the model's;
+    search() passes it filtered by its index predicate."""
+    index = model.index_df if index is None else index
+    if clusters is not None:
+        index = index.filter(cluster_filter(clusters))
+    probe_side = F.broadcast(probes) if broadcast else probes
+    return index.join(probe_side, "cluster_id").select(
+        "query_id", "orig_id", rough_estimator_expr(model).alias("rough")
     )
+
+
+def _shortlist(
+    model: RaBitQModel,
+    kernel: str,
+    r: int,
+    block: "dict | None" = None,
+    probes: "DataFrame | None" = None,
+    clusters=None,
+    broadcast: bool = True,
+    index: "DataFrame | None" = None,
+    tap=None,
+) -> DataFrame:
+    """Stages 5-6 for search() and every search_adaptive wave: rough-score
+    with `kernel` — "arrow" runs _fused_shortlist over the driver probe
+    `block` (which prunes to the block's clusters itself), "jvm" runs
+    _rough_candidates over the probe frame `probes` (built from `block`
+    when None) with the caller's pruning set `clusters` — then keep the
+    top-R per query on (rough, orig_id). `tap`, when given, wraps the
+    candidate stream just before the top-R (search()'s allowed-id filter
+    and rough observer). Returns (query_id, orig_id)."""
+    if kernel == "arrow":
+        local = _fused_shortlist(model, block, r, model.config.theta_log_dim)
+    else:
+        if probes is None:
+            probes = probe_frame(model.index_df.sparkSession, block)
+        local = _rough_candidates(model, probes, clusters, broadcast, index)
+    if tap is not None:
+        local = tap(local)
+    return topk_per_group(
+        local, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
+    ).select("query_id", "orig_id")
 
 
 def auto_overfetch(model: RaBitQModel, nprobe: int, topk: int) -> int:
@@ -799,9 +789,9 @@ def _driver_batch(
     if pdf is None:
         return None
     ids = pdf[query_id].to_numpy()
-    if not np.issubdtype(ids.dtype, np.integer) or len(np.unique(ids)) < len(ids):
-        return None
     qmat = query_matrix(pdf[query_vec].to_numpy(), model.dim)
+    if not _driver_matrix(ids, qmat):
+        return None
     cfg = model.config
     block = prepare_probe_block(
         ids,
@@ -826,9 +816,26 @@ def _probe_counts(probes: DataFrame) -> tuple[DataFrame, dict]:
     return probes, {row["cluster_id"]: row["count"] for row in rows}
 
 
-def _padded_queries(model: RaBitQModel, queries: DataFrame, query_id, query_vec):
-    """The executor path's stage-7 query side: (query_id, __qvec) padded
-    like base_df (zeros cancel in the exact difference)."""
+def _driver_matrix(ids: "np.ndarray", qmat: "np.ndarray") -> bool:
+    """Whether a collected query batch can stay on the driver for stage 7:
+    unique integer ids (the rerank indexes the matrix by id) and a matrix
+    within QUERY_MATRIX_MAX_BYTES."""
+    return (
+        np.issubdtype(ids.dtype, np.integer)
+        and len(np.unique(ids)) == len(ids)
+        and qmat.nbytes <= QUERY_MATRIX_MAX_BYTES
+    )
+
+
+def _query_side(
+    model: RaBitQModel, queries: DataFrame, query_id, query_vec, driver=None
+):
+    """Stage 7's query side, as exact_rerank takes it: `driver`, a
+    collected (ids, (nq, dim) float64 matrix) pair, when _driver_matrix
+    lets it stay there; else the frame (query_id, __qvec), padded like
+    base_df (zeros cancel in the exact difference)."""
+    if driver is not None and _driver_matrix(*driver):
+        return driver
     return queries.select(
         F.col(query_id).alias("query_id"),
         pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
@@ -860,7 +867,7 @@ def _prepare_batch(
             _prepare_probes(model, queries, query_id, query_vec, nprobe),
             None,
             None,
-            _padded_queries(model, queries, query_id, query_vec),
+            _query_side(model, queries, query_id, query_vec),
         )
     qids, qmat, block = driver
     cids, counts = np.unique(block["cluster_id"], return_counts=True)
@@ -976,40 +983,20 @@ def search(
             )
         elif impl == "auto":
             kernel, reason = choose_kernel(model, n_probe_rows, len(probe_counts))
+    clusters = None
     if kernel == "arrow":
-        # Stages 5-6 in one Arrow pass (see _fused_shortlist), over the
-        # probe table on the driver; it derives partition pruning itself
+        # the Arrow plan reads the probe table on the driver
         if block is None:
             block = probe_block_of(probes.toPandas())
-        local = _fused_shortlist(model, block, r, cfg.theta_log_dim)
-        if metrics is not None and metrics.observe_rough:
-            local = local.observe(
-                metrics.rough, F.count(F.lit(1)).alias("rough_count")
-            )
-        shortlist = topk_per_group(
-            local, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
-        ).select("query_id", "orig_id")
-    else:
-        if nprobe * 2 <= model.n_clusters:
-            # Static partition pruning: the probed cluster set is tiny (≤ nq ×
-            # nprobe); pushing it into the scan as an IN-filter prunes Parquet
-            # partitions — the analogue of the reference's CSR offsets scan
-            # (src/rabitq.rs:348). For very large query batches, skip (all
-            # clusters probed anyway).
-            if probe_counts is None:
-                probes, probe_counts = _probe_counts(probes)
-            index = index.filter(cluster_filter(probe_counts))
-        # Stage 5: J2 equi-join + D5 estimator. Typical query batches make
-        # the probe table small → broadcast; a huge batch (probe table
-        # ~ nq × nprobe rows, e.g. a full-table similarity join) must
-        # instead shuffle BOTH sides by cluster_id (broadcast_probes=False)
-        # — the join key is the same either way, and the index side's
-        # shuffle is bounded by the pruned posting lists.
-        probe_side = F.broadcast(probes) if broadcast_probes else probes
-        cand = index.join(probe_side, "cluster_id")
-        cand = cand.select(
-            "query_id", "orig_id", rough_estimator_expr(model).alias("rough")
-        )
+    elif nprobe * 2 <= model.n_clusters:
+        # Static partition pruning: the probed cluster set is tiny (≤ nq ×
+        # nprobe). For very large query batches, skip (all clusters probed
+        # anyway).
+        if probe_counts is None:
+            probes, probe_counts = _probe_counts(probes)
+        clusters = probe_counts
+
+    def tap(cand: DataFrame) -> DataFrame:
         if allowed is not None:
             ok = allowed.select(
                 F.col(allowed.columns[0]).alias("orig_id")
@@ -1022,11 +1009,19 @@ def search(
             cand = cand.observe(
                 metrics.rough, F.count(F.lit(1)).alias("rough_count")
             )
+        return cand
 
-        # Stage 6: top-R rough per query (WindowGroupLimit ≥ Spark 3.5).
-        shortlist = topk_per_group(
-            cand, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
-        ).select("query_id", "orig_id")
+    shortlist = _shortlist(
+        model,
+        kernel,
+        r,
+        block=block,
+        probes=probes,
+        clusters=clusters,
+        broadcast=broadcast_probes,
+        index=index,
+        tap=tap,
+    )
     if metrics is not None:
         metrics.kernel, metrics.kernel_reason = kernel, reason
         if probe_counts is not None:
@@ -1039,14 +1034,10 @@ def search(
         shortlist = shortlist.observe(
             metrics.precise, F.count(F.lit(1)).alias("precise_count")
         )
-
-    # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k).
-    # When the model carries a vec store, the rerank gathers candidate
-    # rows instead of scanning base — see exact_rerank.
-    exact = exact_rerank(model, shortlist, qv, metrics=metrics)
-    return topk_per_group(
-        exact, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], topk
-    ).select("query_id", "neighbor_id", "dist", "rank")
+    # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k)
+    return exact_topk(
+        shortlist, qv, model.rerank_base, topk, metrics, id_col="orig_id"
+    )
 
 
 def range_search(
@@ -1080,17 +1071,15 @@ def range_search(
     probes, _, probe_counts, qv = _prepare_batch(
         model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
-    index = model.index_df
+    clusters = None
     if nprobe * 2 <= model.n_clusters:
         if probe_counts is None:
             probes, probe_counts = _probe_counts(probes)
-        index = index.filter(cluster_filter(probe_counts))
-    probe_side = F.broadcast(probes) if broadcast_probes else probes
-    cand = index.join(probe_side, "cluster_id").select(
-        "query_id", "orig_id", rough_estimator_expr(model).alias("rough")
-    )
+        clusters = probe_counts
+    cand = _rough_candidates(model, probes, clusters, broadcast_probes)
     if rough_cutoff:
         cand = cand.filter(F.col("rough") <= F.lit(radius_sq + rough_margin))
-
-    exact = exact_rerank(model, cand.select("query_id", "orig_id"), qv)
+    exact = exact_rerank(
+        cand.select("query_id", "orig_id"), qv, model.rerank_base, id_col="orig_id"
+    )
     return exact.filter(F.col("dist") <= F.lit(radius_sq))

@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rabitq_spark.functions.vector import l2_squared
-from rabitq_spark.index.vecstore import store_exact_rerank
+from rabitq_spark.index.pq import coded_rerank_base
+from rabitq_spark.index.vecstore import exact_topk
 from rabitq_spark.operators.topk import topk_per_group
 
 
@@ -161,23 +161,9 @@ def sq8_search(
         [F.col("__rough").asc(), F.col("neighbor_id").asc()],
         max(shortlist, k),
     ).select("query_id", "neighbor_id")
-    qv = q.select("query_id", "__qvec")
-    if vec_store is not None:
-        # candidate-bound point reads (index/vecstore.py) — same fold
-        scored = store_exact_rerank(short, qv, vec_store)
-    else:
-        bv = coded_base.select(
-            F.col("__bid").alias("neighbor_id"), F.col("__bvec").alias("__bvec")
-        )
-        scored = (
-            short.join(bv, "neighbor_id")
-            .join(F.broadcast(qv), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                l2_squared(F.col("__qvec"), F.col("__bvec")).alias("dist"),
-            )
-        )
-    return topk_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    ).select("query_id", "neighbor_id", "dist", "rank")
+    return exact_topk(
+        short,
+        q.select("query_id", "__qvec"),
+        coded_rerank_base(coded_base, vec_store),
+        k,
+    )

@@ -37,6 +37,11 @@ fold over padded arrays only ever adds (0-0)^2 = +0.0 terms at the tail,
 and x + 0.0 == x bit-for-bit for the non-negative partial sums involved,
 so folding the unpadded prefix is bit-identical to the padded fold
 (asserted in tests/test_vecstore.py).
+
+The module also holds the one exact rerank (exact_rerank, and exact_topk
+with the final top-k): every shortlist-then-exact plan in the package
+scores its shortlist there, against a store or a base DataFrame, with the
+query batch on the driver or in a DataFrame.
 """
 
 from __future__ import annotations
@@ -47,6 +52,9 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from rabitq_spark.functions.vector import l2_squared
 
 # Rows at or past this count get a store built automatically on
 # RaBitQModel.save(): the O(base) rerank join is measurably the scale
@@ -323,7 +331,6 @@ def build_vec_store(
     Both branches use attempt-unique temp names + move-with-overwrite;
     note the weaker atomicity of object-store "rename" (_fs_replace)."""
     from pyspark import TaskContext
-    from pyspark.sql import functions as F
 
     is_uri = _is_uri(store_dir)
     if is_uri:
@@ -466,8 +473,8 @@ def l2_fold(q64: np.ndarray, v: np.ndarray) -> np.ndarray:
     elementwise f64 operands, (q−v)² in double, left-to-right accumulation
     from 0.0, so the result is bit-identical to the Column fold. Folding
     the unpadded prefix is safe: a zero tail on both sides adds exact +0.0
-    terms. The one fold of every numpy exact rerank (exact_rerank's base
-    join, the vec-store gather and its join form)."""
+    terms. The fold of exact_rerank's two numpy kernels, `rr` and
+    `rr_join`."""
     from rabitq_spark.functions.scratch import scratch
 
     n, dim = v.shape
@@ -552,97 +559,125 @@ def matrix_rerank(
     return rows.mapInPandas(rr, _rerank_schema(rows))
 
 
-def store_exact_rerank(
+def exact_rerank(
     shortlist: DataFrame,
     qv,
-    store: VecStore,
-    id_col: str = "neighbor_id",
-    qvec_col: str = "__qvec",
+    base,
     metrics=None,
+    id_col: str = "neighbor_id",
 ) -> DataFrame:
-    """Generic candidate-bound exact rerank: gather each shortlist row's
-    base vector from `store` and emit (query_id, neighbor_id, dist) with
-    dist l2_fold's double fold — bit-identical to the l2_squared Column
-    expression.
+    """The exact rerank of every shortlist-then-exact plan (search,
+    range_search, each search_adaptive wave, the PQ and SQ8 families, the
+    JL-projected IVF): (query_id, neighbor_id, dist), dist the exact
+    squared L2 of functions.vector.l2_squared (reference
+    src/utils.rs:139-152, src/rerank.rs:62-114). Never collects.
 
-    `shortlist` is (query_id, <id_col>). `qv` is either the query batch
-    already on the driver — an (ids, (nq, dim) float64 matrix) pair with
-    unique ids, as search() collects it — or a DataFrame (query_id,
-    <qvec_col>) with one row per query id, which costs one bounded
-    collect_queries job here. Shared by the RaBitQ stage-7 rerank and the
-    PQ / SQ8 family reranks — any shortlist-then-exact plan whose base
-    join would otherwise scan O(base).
+    `shortlist` is (query_id, <id_col>). `qv` is the query batch, either
+    on the driver as an (ids, (nq, dim) float64 matrix) pair with unique
+    ids, or a DataFrame (query_id, __qvec). `base` is a VecStore or a
+    DataFrame (<id_col>, vec, ...); a vector may be zero-padded past the
+    query's width (the tail adds +0.0 terms).
 
-    Physical shape (round 11): the query vectors ride ONE spark broadcast
-    variable (matrix_rerank). The previous broadcast-JOIN form duplicated
-    each query's vector onto every candidate row — at the 1M probe
-    geometry (620 candidates/query x 256 dims) that was ~1.3 GB of Arrow
-    traffic plus a python-level np.vstack per batch, and the rerank
-    stage's JVM threads sat 90% idle waiting on Python (measured via task
-    summaries). A DataFrame `qv` past QUERY_MATRIX_MAX_BYTES keeps that
-    join form (same results — the fold is identical)."""
-    from pyspark.sql import functions as F
+    One plan per cell, all bit-identical (tests/test_vecstore.py):
 
-    from rabitq_spark._dist import ensure_package_on_executors
+    * matrix + store: `rr` gathers each candidate's row from the store,
+      O(candidates) reads (the disk variant's point reads,
+      crates/disk/src/cache.rs:115-145), and folds it against its query's
+      row of the matrix, which rides ONE broadcast variable.
+    * matrix + base: shortlist ⋈ base, then `rr`. The scan is O(base):
+      spread-out candidate ids defeat row-group pruning (10M x 256 read
+      the full 10 GB vector column).
+    * DataFrame + store: shortlist ⋈ broadcast(qv), then `rr_join`
+      gathers and folds.
+    * DataFrame + base: shortlist ⋈ base ⋈ broadcast(qv), then the
+      l2_squared Column fold.
 
-    ensure_package_on_executors(shortlist.sparkSession)
-    dim = store.dim
-    if isinstance(qv, DataFrame):
-        qpd = collect_queries(qv, "query_id", qvec_col, dim)
-        if qpd is None:
-            return store_join_rerank(shortlist, qv, store, id_col, qvec_col, metrics)
-        qv = (qpd["query_id"].to_numpy(), query_matrix(qpd[qvec_col], dim))
-    qids, qmat = qv
-    out = matrix_rerank(
-        shortlist.select("query_id", id_col),
-        qids,
-        qmat[:, :dim],
-        id_col,
-        lambda pdf, ids: store.gather(ids),
-    )
-    if metrics is not None:
-        # candidate rows read from base storage: the kernel emits exactly
-        # one row per matched candidate, so counting ABOVE the mapInPandas
-        # equals the join form's post-join count — and, like that form,
-        # keeps the CollectMetrics node away from the top-R filter (a node
-        # directly above the filter defeats the WindowGroupLimit
-        # pre-shuffle trim; bisected +135 s at 10M — metrics.py)
-        out = out.observe(
-            metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
-        )
-    return out
+    `metrics.rerank`, when wired, observes `rerank_base_rows`: the rows the
+    rerank read from base storage (the base row count for a DataFrame, the
+    candidate count for a store)."""
 
-
-def store_join_rerank(shortlist, qv, store, id_col, qvec_col, metrics=None):
-    """store_exact_rerank's form for a query batch that stays off the
-    driver: broadcast-join the query vectors onto the shortlist rows."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    dim = store.dim
-    joined = shortlist.join(F.broadcast(qv), "query_id")
-    if metrics is not None:
-        joined = joined.observe(
+    def observed(df: DataFrame) -> DataFrame:
+        if metrics is None:
+            return df
+        return df.observe(
             metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
         )
 
-    def rr_join(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": ids,
-                    "dist": l2_fold(
-                        query_matrix(pdf[qvec_col].to_numpy(), dim),
-                        store.gather(ids),
-                    ),
-                }
+    if isinstance(base, VecStore):
+        dim = base.dim
+        if isinstance(qv, DataFrame):
+            from rabitq_spark._dist import ensure_package_on_executors
+
+            ensure_package_on_executors(shortlist.sparkSession)
+            joined = observed(shortlist.join(F.broadcast(qv), "query_id"))
+
+            def rr_join(it):
+                import pandas as pd
+
+                for pdf in it:
+                    if len(pdf) == 0:
+                        continue
+                    ids = pdf[id_col].to_numpy(dtype=np.int64)
+                    yield pd.DataFrame(
+                        {
+                            "query_id": pdf["query_id"],
+                            "neighbor_id": ids,
+                            "dist": l2_fold(
+                                query_matrix(pdf["__qvec"].to_numpy(), dim),
+                                base.gather(ids),
+                            ),
+                        }
+                    )
+
+            return joined.mapInPandas(rr_join, _rerank_schema(joined))
+        qids, qmat = qv
+        # counted ABOVE the kernel, which emits one row per candidate: a
+        # CollectMetrics node directly above the top-R filter would defeat
+        # the WindowGroupLimit pre-shuffle trim (bisected +135 s at 10M —
+        # metrics.py)
+        return observed(
+            matrix_rerank(
+                shortlist.select("query_id", id_col),
+                qids,
+                qmat[:, :dim],
+                id_col,
+                lambda pdf, ids: base.gather(ids),
             )
+        )
+    rows = shortlist.join(observed(base), id_col)
+    if isinstance(qv, DataFrame):
+        return rows.join(F.broadcast(qv), "query_id").select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            l2_squared(F.col("__qvec"), F.col("vec")).alias("dist"),
+        )
+    qids, qmat = qv
+    dim = qmat.shape[1]
+    return matrix_rerank(
+        rows.select("query_id", id_col, "vec"),
+        qids,
+        qmat,
+        id_col,
+        lambda pdf, ids: np.vstack(pdf["vec"].to_numpy())[:, :dim],
+    )
 
-    return joined.mapInPandas(rr_join, _rerank_schema(joined))
+
+def exact_topk(
+    shortlist: DataFrame,
+    qv,
+    base,
+    k: int,
+    metrics=None,
+    id_col: str = "neighbor_id",
+) -> DataFrame:
+    """exact_rerank, then the final top-k per query on (dist, neighbor_id):
+    (query_id, neighbor_id, dist, rank), rank 1-based."""
+    from rabitq_spark.operators.topk import topk_per_group
+
+    exact = exact_rerank(shortlist, qv, base, metrics, id_col)
+    return topk_per_group(
+        exact, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
+    ).select("query_id", "neighbor_id", "dist", "rank")
 
 
 def attach_vec_store(model, store_dir: str) -> "VecStore":

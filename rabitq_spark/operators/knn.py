@@ -117,9 +117,10 @@ def knn_exact_fast(
     `local_k` (default k) widens the per-partition shortlist without
     widening the final answer; `exact_fold` recomputes the shortlisted
     rows' distances with the l2_squared-mirroring fold (elementwise f32→f64
-    cast, (x-y)² in double, left-to-right accumulation — the same
-    numpy pattern store_exact_rerank proves bit-identical to the Column
-    expression) so the emitted dists are hash-stable against any engine.
+    cast, (x-y)² in double, left-to-right accumulation — the pattern of
+    vecstore.l2_fold, which tests/test_vecstore.py proves bit-identical to
+    the Column expression) so the emitted dists are hash-stable against
+    any engine.
     """
     spark = queries.sparkSession
     ensure_package_on_executors(spark)

@@ -565,8 +565,8 @@ def q_ann_jl_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole table, rerank-all) so the output equals brute force bit-for-bit
     while the full project→index→search→rerank path executes."""
     from rabitq_spark.functions.project import jl_project
-    from rabitq_spark.functions.vector import l2_squared
     from rabitq_spark.index import search
+    from rabitq_spark.index.vecstore import exact_topk
 
     model, signs = prepared(spark, sf_dir, "jl_ivf")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -578,23 +578,12 @@ def q_ann_jl_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         model, proj_q, topk=10**6, nprobe=model.n_clusters, overfetch=10**6
     ).select("query_id", "neighbor_id")
     orig_q = emb.filter(F.col("vec_id") < _KNN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
     orig_b = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__bv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vec")
     )
-    scored = (
-        short.join(orig_b, "neighbor_id")
-        .join(F.broadcast(orig_q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_squared(F.col("__qv"), F.col("__bv")).alias("dist"),
-        )
-    )
-    return topk_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], _KNN_K
-    ).select("query_id", "neighbor_id", "dist", "rank")
+    return exact_topk(short, orig_q, orig_b, _KNN_K)
 
 
 def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3435,16 +3424,24 @@ def q_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _JEST_NDOCS
     )
-    hashed = docs.select(
-        "doc_id", combine_word_hashes(word_hashes(F.col("text")), 3).alias("hs")
-    ).filter(F.size("hs") > 0)
-    sig = hashed.select(
-        "doc_id",
-        "hs",
-        F.array(
-            *[banded_minhash_key("hs", b) for b in range(_JEST_K)]
-        ).alias("sig"),
-    ).localCheckpoint(eager=True)
+    # word hashes in their own projection, and the empty-set filter after
+    # the checkpoint: inlined into combine_word_hashes, or pushed below
+    # the projections by a filter on hs, word_hashes is evaluated once
+    # per reference (10 md5 transforms per doc instead of 1)
+    hashed = docs.select("doc_id", word_hashes(F.col("text")).alias("wh")).select(
+        "doc_id", combine_word_hashes("wh", 3).alias("hs")
+    )
+    sig = (
+        hashed.select(
+            "doc_id",
+            "hs",
+            F.array(
+                *[banded_minhash_key("hs", b) for b in range(_JEST_K)]
+            ).alias("sig"),
+        )
+        .localCheckpoint(eager=True)
+        .filter(F.size("hs") > 0)
+    )
     a = sig.select(
         F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"), F.col("sig").alias("sig_a")
     )

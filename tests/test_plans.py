@@ -275,3 +275,23 @@ def test_pq_adc_is_codegen_lookups(spark, sf_dir):
     )
     assert "aggregate(" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_jaccard_estimate_hashes_each_word_once(spark, sf_dir, monkeypatch):
+    """jaccard_estimate's checkpointed signature table evaluates the word
+    hashes once per doc: one md5 in its optimized plan. Inlined into
+    combine_word_hashes, or under a filter on the shingle set pushed below
+    the projections, they would be evaluated once per reference."""
+    from rabitq_spark.queries import SPARK_QUERIES
+
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    SPARK_QUERIES["jaccard_estimate"](spark, sf_dir)
+    assert [p.count("md5(") for p in plans] == [1]

@@ -1,9 +1,10 @@
 """Vec-store point-read rerank (index/vecstore.py): gather round-trip on
 gappy ids, search()/search_adaptive() with a store bit-identical to the
 base-join plan, candidate-bound rerank_base_rows metric, save/load carries
-the store, missing-id loudness, and the unpadded-fold bit-exactness claim
+the store, missing-id loudness, the unpadded-fold bit-exactness claim
 (the Spark analogue of the disk variant's candidate point reads,
-crates/disk/src/cache.rs:115-145)."""
+crates/disk/src/cache.rs:115-145), and exact_rerank's four cells against
+brute force."""
 
 import os
 
@@ -14,7 +15,13 @@ from pyspark.sql import functions as F
 
 from rabitq_spark.config import RaBitQConfig
 from rabitq_spark.index import RaBitQModel, build_index, search
-from rabitq_spark.index.vecstore import VecStore, attach_vec_store, build_vec_store
+from rabitq_spark.index.vecstore import (
+    VecStore,
+    attach_vec_store,
+    build_vec_store,
+    exact_rerank,
+    exact_topk,
+)
 from rabitq_spark.metrics import SearchMetrics
 
 K = 5
@@ -327,11 +334,9 @@ def test_overwrite_save_removes_stale_sidecar(spark, gappy_base, stored_model, t
 
 
 def test_store_rerank_preserves_query_id_dtype(spark, gappy_base, stored_model):
-    # the join plans the store rerank replaces preserve arbitrary query_id
-    # types; an int64 cast would silently truncate float ids (review
-    # finding, round 9)
-    from rabitq_spark.index.vecstore import store_exact_rerank
-
+    # the rerank keeps arbitrary query_id types; an int64 cast would
+    # silently truncate float ids (review finding, round 9). String ids
+    # cannot index a driver matrix, so they take the frame cells.
     _, ids, vecs = gappy_base
     qv = spark.createDataFrame(
         pd.DataFrame({"query_id": ["qa", "qb"], "__qvec": [vecs[0], vecs[1]]}),
@@ -343,12 +348,92 @@ def test_store_rerank_preserves_query_id_dtype(spark, gappy_base, stored_model):
         ),
         "query_id string, neighbor_id bigint",
     )
-    out = store_exact_rerank(shortlist, qv, stored_model.vec_store)
-    assert dict(out.dtypes)["query_id"] == "string"
-    pdf = out.toPandas().sort_values("query_id", ignore_index=True)
-    assert list(pdf["query_id"]) == ["qa", "qb"]
-    # each query's own vector is its neighbor at distance 0
-    assert pdf["dist"].max() == 0.0
+    base, _, _ = gappy_base
+    for vectors in (
+        stored_model.vec_store,
+        base.select(F.col("id").alias("neighbor_id"), "vec"),
+    ):
+        out = exact_rerank(shortlist, qv, vectors)
+        assert dict(out.dtypes)["query_id"] == "string"
+        pdf = out.toPandas().sort_values("query_id", ignore_index=True)
+        assert list(pdf["query_id"]) == ["qa", "qb"]
+        # each query's own vector is its neighbor at distance 0
+        assert pdf["dist"].max() == 0.0
+
+
+@pytest.mark.parametrize("qv_form", ["matrix", "frame"])
+@pytest.mark.parametrize("base_form", ["store", "base"])
+def test_exact_rerank_cells_equal_brute_force(
+    spark, gappy_base, stored_model, qv_form, base_form
+):
+    """Each of exact_rerank's four (query side x base side) cells scores
+    the exhaustive shortlist (every query x every base row) exactly like
+    the DataFrame + base Column fold, and its top-k is brute force
+    bit-for-bit."""
+    from rabitq_spark.operators.knn import knn_exact
+
+    base, ids, vecs = gappy_base
+    queries = _queries(spark, gappy_base)
+    shortlist = queries.select("query_id").crossJoin(
+        base.select(F.col("id").alias("neighbor_id"))
+    )
+    base_vecs = base.select(F.col("id").alias("neighbor_id"), "vec")
+    frame = queries.select("query_id", F.col("qvec").alias("__qvec"))
+    qv = (ids[:NQ], vecs[:NQ].astype(np.float64)) if qv_form == "matrix" else frame
+    vectors = stored_model.vec_store if base_form == "store" else base_vecs
+
+    def ordered(df, cols):
+        return df.toPandas().sort_values(cols, ignore_index=True)
+
+    pairs = ["query_id", "neighbor_id"]
+    pd.testing.assert_frame_equal(
+        ordered(exact_rerank(shortlist, qv, vectors), pairs),
+        ordered(exact_rerank(shortlist, frame, base_vecs), pairs),
+        check_exact=True,
+    )
+    pd.testing.assert_frame_equal(
+        ordered(exact_topk(shortlist, qv, vectors, K), ["query_id", "rank"]),
+        ordered(knn_exact(queries, base, K), ["query_id", "rank"]),
+        check_exact=True,
+    )
+
+
+def test_pq_family_store_rerank_collects_no_queries(
+    spark, gappy_base, stored_model, monkeypatch
+):
+    """With a vec store, the PQ, IVF-PQ and SQ8 reranks take the query
+    frame as it is: no collect_queries job."""
+    from rabitq_spark.index import vecstore
+    from rabitq_spark.index.pq import (
+        ivfpq_encode,
+        ivfpq_search,
+        ivfpq_train,
+        pq_search,
+        pq_train,
+    )
+    from rabitq_spark.index.sq8 import sq8_search, sq8_train
+
+    base, _, _ = gappy_base
+    queries = _queries(spark, gappy_base)
+    store = stored_model.vec_store
+    cb = pq_train(base, m=4, ksub=8, max_sample_rows=600)
+    coarse, cb2 = ivfpq_train(base, n_clusters=8, m=4, ksub=8, max_sample_rows=600)
+    coded2 = ivfpq_encode(base, coarse, cb2)
+    lo, hi = sq8_train(base)
+
+    def spy(*args, **kwargs):
+        raise AssertionError("the store rerank collected the query batch")
+
+    monkeypatch.setattr(vecstore, "collect_queries", spy)
+    for df in (
+        pq_search(queries, base, K, cb, shortlist=32, vec_store=store),
+        ivfpq_search(
+            queries, coded2, K, coarse, cb2, nprobe=4, shortlist=32,
+            vec_store=store,
+        ),
+        sq8_search(queries, base, K, lo, hi, shortlist=32, vec_store=store),
+    ):
+        assert len(df.collect()) == NQ * K
 
 
 def test_uri_gather_equals_memmap(gappy_base, stored_model):
