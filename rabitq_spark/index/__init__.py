@@ -1,3 +1,10 @@
+# operators FIRST: index/search.py imports rabitq_spark.operators.topk,
+# and the operators package init imports ann/simjoin, which import
+# build_index, RaBitQModel and search from their index submodules. Loaded
+# from here, those submodules finish before ann/simjoin bind the names;
+# loaded mid-way through search.py, `search` would bind to the submodule.
+import rabitq_spark.operators  # noqa: F401
+
 from rabitq_spark.index.build import (
     append_to_index,
     build_index,
@@ -8,11 +15,7 @@ from rabitq_spark.index.build import (
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import range_search, search
 from rabitq_spark.index.vecstore import VecStore, attach_vec_store, build_vec_store
-
-# imported LAST: adaptive pulls in rabitq_spark.operators, whose ann/simjoin
-# modules import RaBitQModel/search back from THIS package — the names above
-# must already be bound
-from rabitq_spark.index.adaptive import search_adaptive  # noqa: E402
+from rabitq_spark.index.adaptive import search_adaptive
 
 __all__ = [
     "RaBitQModel",

@@ -17,16 +17,19 @@ Train:   per-subspace Lloyd k-means on a driver-bounded sample (seeded,
          correctness, same argument as sq8_train).
 Encode:  codes[j] = argmin_c ||x_j − C_j[c]||² — Arrow-batched numpy GEMM
          per subspace (mapInPandas); one narrow scan, no shuffle.
-Search:  asymmetric distance computation (ADC). Each query precomputes a
-         flattened LUT of length m·ksub (squared distance from its j-th
-         subvector to every centroid of subspace j — numpy on the tiny
-         query side). The hot base × query cross join then scores
+Search:  asymmetric distance computation (ADC), one Arrow scan for flat PQ
+         and IVF-PQ. The driver collects the query batch once (bounded by
+         vecstore.QUERY_MATRIX_MAX_BYTES). adc_luts builds the (nq, m,
+         ksub) tables of squared subspace distances: of the queries, on
+         the driver, for flat PQ; of their residuals against a cell, per
+         scoring task, for IVF-PQ. adc_shortlist scores each batch of
+         codes:
 
-             d_hat(q, b) = Σ_j LUT[j·ksub + codes[j]]
+             d_hat(q, b) = Σ_j LUT[q, j, codes[b, j]]
 
-         as `m` unrolled element_at lookups — pure JVM codegen, no Python
-         in the per-pair path (the same unrolling lesson as
-         sq8_rough_dist_expr). Top-R shortlist per query → exact
+         as one one-hot GEMM at ksub ≤ 32 and m transposed-LUT gathers
+         above it, keeping every row at or under its query's R-th rough
+         value (ties kept). Global top-R on (rough, neighbor_id) → exact
          double-fold rerank → final top-k.
 
 Exactness contract: with shortlist ≥ |base| the rough ADC phase is a
@@ -36,9 +39,10 @@ configuration is the DuckDB oracle anchor; bounded shortlists are the
 scale path, recall asserted in tests/test_pq.py.
 
 Scale shape: codes are m ints/row (vs d doubles) — the coded base scan
-reads ~m/(8·d)-th of the raw bytes; the query batch plus LUTs broadcast;
-only O(nq × R) shortlist rows shuffle. At 1000 executors the base never
-moves, exactly like the SQ8 and IVF paths.
+reads ~m/(8·d)-th of the raw bytes; the query batch (flat PQ: its LUTs)
+broadcasts; only the local cuts, O(nq × R) rows per scoring batch,
+shuffle. At 1000 executors the base never moves, exactly like the SQ8
+and IVF paths.
 """
 
 from __future__ import annotations
@@ -49,15 +53,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-from rabitq_spark.index.vecstore import exact_topk
+from rabitq_spark._dist import ensure_package_on_executors
+from rabitq_spark.index.search import cluster_filter
+from rabitq_spark.index.vecstore import collect_queries, exact_topk, query_matrix
 from rabitq_spark.operators.topk import topk_per_group
 
 
@@ -182,59 +182,6 @@ def pq_encode(
     return base.select(
         F.col(id_col).alias("__i"), F.col(vec_col).alias("__v")
     ).mapInPandas(encode, schema)
-
-
-def pq_lut(
-    queries: DataFrame,
-    codebook: np.ndarray,
-    query_id: str = "query_id",
-    query_vec: str = "qvec",
-) -> DataFrame:
-    """(query_id, __qvec, __lut) with __lut the flattened m·ksub ADC table:
-    __lut[j·ksub + c] = ||q_j − C_j[c]||². Query batches are small; this is
-    the only Arrow hop in the search path."""
-    m, ksub, dsub = codebook.shape
-    cb = codebook
-    cnorm = [(cb[j] * cb[j]).sum(axis=1) for j in range(m)]
-    schema = StructType(
-        [
-            StructField("query_id", queries.schema[query_id].dataType),
-            StructField("__qvec", queries.schema[query_vec].dataType),
-            StructField("__lut", ArrayType(DoubleType())),
-        ]
-    )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            q = np.asarray(list(pdf["__v"]), dtype=np.float64)
-            luts: list[np.ndarray] = []
-            for row in q:
-                lut = np.empty(m * ksub, dtype=np.float64)
-                for j in range(m):
-                    qs = row[j * dsub : (j + 1) * dsub]
-                    lut[j * ksub : (j + 1) * ksub] = (
-                        cnorm[j] - 2.0 * (cb[j] @ qs) + (qs @ qs)
-                    )
-                luts.append(lut)
-            yield pd.DataFrame(
-                {"query_id": pdf["__i"], "__qvec": pdf["__v"], "__lut": luts}
-            )
-
-    return queries.select(
-        F.col(query_id).alias("__i"), F.col(query_vec).alias("__v")
-    ).mapInPandas(build, schema)
-
-
-def pq_adc_expr(code: Column | str, lut: Column | str, m: int, ksub: int) -> Column:
-    """Σ_j lut[j·ksub + code[j]] unrolled to m element_at lookups — the
-    whole ADC estimator stays inside whole-stage codegen."""
-    code = F.col(code) if isinstance(code, str) else code
-    lut = F.col(lut) if isinstance(lut, str) else lut
-    total: Column | None = None
-    for j in range(m):
-        term = F.element_at(lut, code[j] + F.lit(j * ksub + 1))
-        total = term if total is None else total + term
-    return F.lit(0.0) if total is None else total
 
 
 def ivfpq_train(
@@ -408,6 +355,138 @@ def ivfpq_load(spark, path: str) -> tuple[np.ndarray, np.ndarray, DataFrame]:
     return arrays["coarse"], arrays["codebook"], coded
 
 
+
+
+#: Entries of one query block's float64 rough accumulator in adc_shortlist
+#: (256 MB): the batch's queries are scored in blocks of this many
+#: entries over the Arrow batch's rows.
+_ADC_BLOCK_ENTRIES = 1 << 25
+
+
+def adc_luts(codebook: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """(n, m, ksub) ADC tables of the rows of `x` (n, dim): the query batch
+    for flat PQ, its residuals against one coarse cell for IVF-PQ.
+    lut[i, j, c] = ||x_ij − C_j[c]||², expanded as |C_j[c]|² − 2·x_ij·C_j[c]
+    + |x_ij|²."""
+    m, ksub, dsub = codebook.shape
+    luts = np.empty((x.shape[0], m, ksub), dtype=np.float64)
+    for j in range(m):
+        cb = codebook[j]
+        xs = x[:, j * dsub : (j + 1) * dsub]
+        luts[:, j, :] = (
+            (cb * cb).sum(axis=1)[None, :]
+            - 2.0 * (xs @ cb.T)
+            + (xs * xs).sum(axis=1)[:, None]
+        )
+    return luts
+
+
+def adc_shortlist(
+    luts: np.ndarray,
+    q_ids: np.ndarray,
+    codes: np.ndarray,
+    b_ids: np.ndarray,
+    r: int,
+) -> Iterator[pd.DataFrame]:
+    """The ADC scorer of both PQ scans: the rough distance
+    Σ_j luts[q, j, codes[b, j]] of every (query, coded row) pair, cut to a
+    local top-R per query. Yields (query_id, neighbor_id, __rough) frames.
+
+    The cut keeps EVERY row whose rough value is ≤ its query's R-th
+    smallest, as index/search.py::_fused_shortlist does. Identical codes
+    tie exactly, and the rows tied at the R-th value are all kept, so the
+    downstream top-R on (rough, neighbor_id) returns the same shortlist
+    whatever rows share an Arrow batch or a partition.
+
+    Kernel by ksub (PLAN.md, Round 7, part 8): at ksub ≤ 32 the whole ADC
+    is ONE one-hot GEMM per query block (the FAISS PQx4fs regime, 3-32×
+    over per-subspace gathers at ksub 16); above it, the 256× flop blow-up
+    loses 6×, and m gathers from the (m, ksub, nq) transposed LUT read one
+    contiguous row per code (2.9-3.9× over the column gather at m 16,
+    ksub 256). Queries are blocked so the accumulator stays ≤ 256 MB."""
+    nq, m, ksub = luts.shape
+    rows = codes.shape[0]
+    onehot = None
+    if ksub <= 32:
+        onehot = np.zeros((rows, m * ksub), dtype=np.float64)
+        onehot[np.arange(rows)[:, None], codes + ksub * np.arange(m)] = 1.0
+    qblock = max(1, _ADC_BLOCK_ENTRIES // max(rows, 1))
+    for lo in range(0, nq, qblock):
+        blk = luts[lo : lo + qblock]
+        if onehot is not None:
+            acc = blk.reshape(len(blk), -1) @ onehot.T
+        else:
+            lut_t = np.ascontiguousarray(blk.transpose(1, 2, 0))
+            acc_t = np.zeros((rows, len(blk)), dtype=np.float64)
+            for j in range(m):
+                acc_t += lut_t[j][codes[:, j]]
+            acc = acc_t.T
+        if r < rows:
+            kth = np.partition(acc, r - 1, axis=1)[:, r - 1 : r]
+            qi, bi = np.nonzero(acc <= kth)
+        else:
+            qi, bi = np.divmod(np.arange(acc.size), rows)
+        yield pd.DataFrame(
+            {
+                "query_id": q_ids[lo + qi],
+                "neighbor_id": b_ids[bi],
+                "__rough": acc[qi, bi],
+            }
+        )
+
+
+_ROUGH_SCHEMA = "query_id bigint, neighbor_id bigint, __rough double"
+
+
+def _batch_codes(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(codes (rows, m) int64, ids int64) of a coded-row batch."""
+    return (
+        np.vstack(pdf["__bcode"].values).astype(np.int64),
+        pdf["__bid"].to_numpy(np.int64),
+    )
+
+
+def _query_batch(
+    queries: DataFrame, query_id: str, query_vec: str, dim: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The query batch on the driver as (int64 ids, (nq, dim) float64):
+    ONE collect, bounded by vecstore.QUERY_MATRIX_MAX_BYTES."""
+    pdf = collect_queries(queries, query_id, query_vec, dim)
+    if pdf is None:
+        raise ValueError(
+            f"the PQ query batch's float64 (nq, {dim}) matrix passes "
+            "vecstore.QUERY_MATRIX_MAX_BYTES; search it in smaller batches"
+        )
+    return (
+        pdf[query_id].to_numpy(np.int64),
+        query_matrix(pdf[query_vec].to_numpy(), dim),
+    )
+
+
+def _shortlist_topk(
+    rough: DataFrame,
+    r: int,
+    k: int,
+    queries: DataFrame,
+    query_id: str,
+    query_vec: str,
+    coded_base: DataFrame,
+    vec_store,
+) -> DataFrame:
+    """Global top-R of the scans' local cuts on (rough, neighbor_id), then
+    the exact rerank and final top-k."""
+    short = topk_per_group(
+        rough,
+        ["query_id"],
+        [F.col("__rough").asc(), F.col("neighbor_id").asc()],
+        r,
+    ).select("query_id", "neighbor_id")
+    qv = queries.select(
+        F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qvec")
+    )
+    return exact_topk(short, qv, coded_rerank_base(coded_base, vec_store), k)
+
+
 def ivfpq_search(
     queries: DataFrame,
     coded_base: DataFrame,
@@ -418,22 +497,25 @@ def ivfpq_search(
     shortlist: int = 64,
     query_id: str = "query_id",
     query_vec: str = "qvec",
-    broadcast_probes: bool | None = None,
-    broadcast_max_bytes: int = 256 * 1024 * 1024,
-    impl: str = "jvm",
     predicate: Column | None = None,
     vec_store=None,
 ) -> DataFrame:
-    """IVF-PQ k-NN: per query, probe the `nprobe` nearest coarse cells;
-    each probe carries a residual ADC LUT for (q − centroid), so the hot
-    cluster-keyed join scores codes with the same m unrolled element_at
-    lookups as flat PQ — only rows in probed cells are ever touched (at a
-    partitioned serving table that is a partition-pruned scan). Shortlist →
-    exact rerank → top-k; with nprobe = n_clusters and shortlist ≥ |base|
-    the output equals brute force bit-for-bit (the oracle anchor)."""
-    m, ksub, dsub = codebook.shape
-    cb, co = codebook, coarse
-    nprobe = min(nprobe, co.shape[0])
+    """IVF-PQ k-NN. The driver collects the query batch (integer ids,
+    bounded by vecstore.QUERY_MATRIX_MAX_BYTES) and picks each query's
+    `nprobe` nearest coarse cells. The codes scan is filtered to the
+    probed cells (cluster_id partition pruning on a saved index) and
+    repartitioned by cluster_id, so each task builds a cell's residual
+    LUTs (q − centroid) once per batch for the queries probing it, and
+    adc_shortlist scores the cell's codes. Shortlist → exact rerank →
+    top-k; with nprobe = n_clusters and shortlist ≥ |base| the output
+    equals brute force bit-for-bit (the oracle anchor).
+
+    Ships query vectors, not LUTs: a plan that materializes one m·ksub
+    LUT per (query, probe) is O(nq × nprobe × m × ksub) bytes and killed
+    an 8 GB driver at nq=1000, nprobe=62, m=32 (PLAN.md, IVF-PQ scale
+    probe)."""
+    spark = queries.sparkSession
+    ensure_package_on_executors(spark)
     if predicate is not None:
         # metadata-filtered ANN: the predicate restricts the CODES SCAN
         # before any scoring (attrs ride the coded rows, ivfpq_encode
@@ -442,89 +524,42 @@ def ivfpq_search(
         # exhaustive settings the result provably equals brute force over
         # the filtered base.
         coded_base = coded_base.filter(predicate)
-    if impl == "arrow":
-        return _ivfpq_search_arrow(
-            queries, coded_base, k, coarse, codebook, nprobe,
-            max(shortlist, k), query_id, query_vec, vec_store=vec_store,
-        )
-    cnorm = [(cb[j] * cb[j]).sum(axis=1) for j in range(m)]
-    conorm = (co * co).sum(axis=1)
-    schema = StructType(
-        [
-            StructField("query_id", queries.schema[query_id].dataType),
-            StructField("cluster_id", IntegerType()),
-            StructField("__qvec", queries.schema[query_vec].dataType),
-            StructField("__lut", ArrayType(DoubleType())),
-        ]
+    q_ids, q_mat = _query_batch(queries, query_id, query_vec, coarse.shape[1])
+    nprobe = min(nprobe, coarse.shape[0])
+    cd = (
+        (q_mat * q_mat).sum(axis=1)[:, None]
+        - 2.0 * (q_mat @ coarse.T)
+        + (coarse * coarse).sum(axis=1)[None, :]
     )
+    probes = np.argpartition(cd, nprobe - 1, axis=1)[:, :nprobe]
+    cell_queries = {
+        int(c): np.flatnonzero((probes == c).any(axis=1)) for c in np.unique(probes)
+    }
+    if nprobe < coarse.shape[0]:
+        coded_base = coded_base.filter(cluster_filter(cell_queries))
+    bc = spark.sparkContext.broadcast((q_ids, q_mat, cell_queries))
+    r = max(shortlist, k)
 
-    def probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, mat, cells = bc.value
         for pdf in batches:
-            for qid, qv in zip(pdf["__i"], pdf["__v"]):
-                q = np.asarray(qv, dtype=np.float64)
-                cd = conorm - 2.0 * (co @ q) + (q @ q)
-                cells = np.argpartition(cd, min(nprobe, len(cd)) - 1)[:nprobe]
-                out_lut = []
-                for c in cells:
-                    r = q - co[c]
-                    lut = np.empty(m * ksub, dtype=np.float64)
-                    for j in range(m):
-                        rs = r[j * dsub : (j + 1) * dsub]
-                        lut[j * ksub : (j + 1) * ksub] = (
-                            cnorm[j] - 2.0 * (cb[j] @ rs) + (rs @ rs)
-                        )
-                    out_lut.append(lut)
-                yield pd.DataFrame(
-                    {
-                        "query_id": [qid] * len(cells),
-                        "cluster_id": cells.astype(np.int32),
-                        "__qvec": [qv] * len(cells),
-                        "__lut": out_lut,
-                    }
-                )
+            for c, grp in pdf.groupby("cluster_id"):
+                qidx = cells.get(int(c))
+                if qidx is None:
+                    continue
+                luts = adc_luts(codebook, mat[qidx] - coarse[int(c)][None, :])
+                yield from adc_shortlist(luts, ids[qidx], *_batch_codes(grp), r)
 
-    probe_df = queries.select(
-        F.col(query_id).alias("__i"), F.col(query_vec).alias("__v")
-    ).mapInPandas(probes, schema)
-    # materialize once: referenced by the rough join AND the rerank
-    probe_df = probe_df.localCheckpoint(eager=True)
-    if nprobe < co.shape[0]:
-        # static partition pruning: the probed cell set is tiny (≤ nq ×
-        # nprobe ids) — an IN-filter on the scan side prunes cluster_id
-        # partitions of a saved index before any join runs, same as the
-        # RaBitQ search path (index/search.py). Collecting it reads the
-        # already-checkpointed probe table, not the query pipeline.
-        cells = [
-            r["cluster_id"]
-            for r in probe_df.select("cluster_id").distinct().collect()
-        ]
-        coded_base = coded_base.filter(F.col("cluster_id").isin(cells))
-    if broadcast_probes is None:
-        # each probe row carries an m·ksub-double LUT (~64 KB at m=32,
-        # ksub=256); a large query batch × nprobe makes the probe table far
-        # too big to broadcast — the count on the checkpointed probe table
-        # is a local scan, and past the byte budget the rough join flips to
-        # a shuffle keyed by cluster_id (the J2 dispatch of the RaBitQ
-        # path, index/search.py)
-        lut_bytes = m * ksub * 8
-        broadcast_probes = probe_df.count() * lut_bytes <= broadcast_max_bytes
-    probe_sel = probe_df.select("query_id", "cluster_id", "__lut")
-    rough = coded_base.join(
-        F.broadcast(probe_sel) if broadcast_probes else probe_sel,
-        "cluster_id",
-    ).select(
-        "query_id",
-        F.col("__bid").alias("neighbor_id"),
-        pq_adc_expr("__bcode", "__lut", m, ksub).alias("__rough"),
+    # cells contiguous per task: one small shuffle of the CODES (m ints +
+    # id per row) so each cell's LUTs are built once per Arrow batch
+    rough = (
+        coded_base.select("cluster_id", "__bid", "__bcode")
+        .repartition(spark.sparkContext.defaultParallelism, "cluster_id")
+        .mapInPandas(score, _ROUGH_SCHEMA)
     )
-    short = topk_per_group(
-        rough,
-        ["query_id"],
-        [F.col("__rough").asc(), F.col("neighbor_id").asc()],
-        max(shortlist, k),
-    ).select("query_id", "neighbor_id")
-    qv = probe_df.select("query_id", "__qvec").dropDuplicates(["query_id"])
-    return exact_topk(short, qv, coded_rerank_base(coded_base, vec_store), k)
+    return _shortlist_topk(
+        rough, r, k, queries, query_id, query_vec, coded_base, vec_store
+    )
 
 
 def pq_search(
@@ -538,7 +573,6 @@ def pq_search(
     base_id: str = "id",
     base_vec: str = "vec",
     coded_base: DataFrame | None = None,
-    impl: str = "jvm",
     vec_store=None,
 ) -> DataFrame:
     """Two-phase PQ k-NN: ADC shortlist on m-byte codes → exact rerank.
@@ -547,266 +581,34 @@ def pq_search(
     across query batches — the serving configuration. Output schema matches
     `knn_exact`: (query_id, neighbor_id, dist, rank).
 
-    impl="jvm": the rough phase is m unrolled element_at lookups in
-    whole-stage codegen over a broadcast of per-query LUT rows. Right for
-    moderate batches and small m; the per-(row, query) JVM cost is m ops.
-    impl="arrow": the rough phase is Arrow-batched numpy — per base
-    partition, LUT[q, j, codes[:, j]] gathers accumulated across j, local
-    top-R, global top-R. Measured 1M × 256 (PLAN.md, IVF-PQ scale probe): the
-    columnar gather path is the one that competes with the BLAS brute
-    force; per-row JVM scans (SQ8 at 345 s/100 q, and jvm-ADC in
-    proportion) lose at that density. Same results either way — the exact
-    rerank makes the output impl-independent for any fixed shortlist
-    content, and bit-identical to brute force when shortlist ≥ |base|."""
-    m, ksub, _ = codebook.shape
+    The driver collects the query batch (integer ids, bounded by
+    vecstore.QUERY_MATRIX_MAX_BYTES) and broadcasts its (nq, m, ksub) LUTs;
+    each base partition runs adc_shortlist over its Arrow batches. Only
+    the local cuts shuffle; the coded base never moves. Measured 1M × 256
+    (PLAN.md, Round 4, part 1): 42.3 s per 1000 queries at shortlist 64,
+    where m element_at LUT lookups per (row, query) in JVM codegen took
+    ~1,381 s. With shortlist ≥ |base| the output is bit-identical to brute
+    force."""
     if coded_base is None:
         coded_base = pq_encode(base, codebook, base_id, base_vec)
-    if impl == "arrow":
-        short, qv = _pq_arrow_shortlist(
-            queries, coded_base, codebook, max(shortlist, k), query_id, query_vec
-        )
-    else:
-        q = pq_lut(queries, codebook, query_id, query_vec)
-        rough = coded_base.crossJoin(
-            F.broadcast(q.select("query_id", "__lut"))
-        ).select(
-            "query_id",
-            F.col("__bid").alias("neighbor_id"),
-            pq_adc_expr("__bcode", "__lut", m, ksub).alias("__rough"),
-        )
-        short = topk_per_group(
-            rough,
-            ["query_id"],
-            [F.col("__rough").asc(), F.col("neighbor_id").asc()],
-            max(shortlist, k),
-        ).select("query_id", "neighbor_id")
-        qv = q.select("query_id", "__qvec")
-    return exact_topk(short, qv, coded_rerank_base(coded_base, vec_store), k)
-
-
-def _pq_arrow_shortlist(
-    queries: DataFrame,
-    coded_base: DataFrame,
-    codebook: np.ndarray,
-    shortlist: int,
-    query_id: str,
-    query_vec: str,
-) -> tuple[DataFrame, DataFrame]:
-    """(shortlist (query_id, neighbor_id), query-vector DF) via the
-    columnar ADC scan: queries collect to the driver (the same contract as
-    knn_exact_fast — a query BATCH, not the corpus), their LUT tensor
-    (nq, m, ksub) broadcasts, and each base partition accumulates m
-    row-indexed gathers then keeps its local top-R per query. The shuffle
-    carries O(nq × R × n_partitions) rows; the coded base never moves."""
-    import pandas as _pd
-
-    m, ksub, dsub = codebook.shape
-    cb = codebook
-    cnorm = [(cb[j] * cb[j]).sum(axis=1) for j in range(m)]
     spark = queries.sparkSession
-    qpd = queries.select(query_id, query_vec).toPandas()
-    q_ids = np.asarray(qpd[query_id].values, dtype=np.int64)
-    q_mat = np.ascontiguousarray(np.vstack(qpd[query_vec].values).astype(np.float64))
-    nq = q_mat.shape[0]
-    luts = np.empty((nq, m, ksub), dtype=np.float64)
-    for j in range(m):
-        qs = q_mat[:, j * dsub : (j + 1) * dsub]
-        luts[:, j, :] = (
-            cnorm[j][None, :]
-            - 2.0 * (qs @ cb[j].T)
-            + (qs * qs).sum(axis=1)[:, None]
-        )
-    bc = spark.sparkContext.broadcast((q_ids, luts))
-
-    def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, lut_b = bc.value
-        nq_b, m_b, ksub_b = lut_b.shape
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            b_ids = np.asarray(pdf["__bid"].values, dtype=np.int64)
-            C = np.vstack(pdf["__bcode"].values).astype(np.int64)
-            rows = C.shape[0]
-            kk = min(shortlist, rows)
-            # fastscan regime (4-bit PQ, FAISS PQx4fs lineage): at small
-            # ksub the ADC is ONE one-hot GEMM per query block — measured
-            # 3-32× over the per-subspace gathers at ksub=16, while at
-            # ksub=256 the 256× flop blow-up loses 6× (so gathers stay the
-            # 8-bit path). Same LUT values; float64 summation order
-            # differs (BLAS), exhaustive configs remain provably exact.
-            onehot = None
-            if ksub_b <= 32:
-                onehot = np.zeros((rows, m_b * ksub_b), dtype=np.float64)
-                flat = C + ksub_b * np.arange(m_b, dtype=np.int64)[None, :]
-                onehot[np.arange(rows)[:, None], flat] = 1.0
-            # block queries so the (nq, rows) accumulator stays ≤ ~256 MB
-            qblock = max(1, 33_554_432 // max(rows, 1))
-            for lo in range(0, nq_b, qblock):
-                hi = min(lo + qblock, nq_b)
-                if onehot is not None:
-                    acc = lut_b[lo:hi].reshape(hi - lo, -1) @ onehot.T
-                    part = np.argpartition(acc, kk - 1, axis=1)[:, :kk]
-                    rws = np.repeat(np.arange(hi - lo), kk)
-                    cols = part.ravel()
-                    yield _pd.DataFrame(
-                        {
-                            "query_id": ids_b[lo + rws],
-                            "neighbor_id": b_ids[cols],
-                            "__rough": acc[rws, cols],
-                        }
-                    )
-                    continue
-                # ksub=256 regime (u8 codes, the common FAISS-PQ shape):
-                # TRANSPOSED-LUT gather — lay the LUT out (m, ksub, nq) so
-                # each code gathers a CONTIGUOUS nq-length row instead of
-                # a strided column (memcpy-friendly; measured 2.9-3.9×
-                # over the column gather at m=16 ksub=256 rows=8192,
-                # nq∈{32,256}). Accumulation order over j is unchanged,
-                # so every float64 sum is bit-identical to the column
-                # gather's.
-                lutT = np.ascontiguousarray(
-                    lut_b[lo:hi].transpose(1, 2, 0)
-                )  # (m, ksub, qb) — ~m·ksub·qb·8 bytes, trivial
-                accT = np.zeros((rows, hi - lo), dtype=np.float64)
-                for j in range(m_b):
-                    accT += lutT[j][C[:, j]]
-                part = np.argpartition(accT, kk - 1, axis=0)[:kk, :]
-                vals = np.take_along_axis(accT, part, axis=0)
-                qidx = np.broadcast_to(
-                    np.arange(hi - lo), (kk, hi - lo)
-                ).ravel()
-                yield _pd.DataFrame(
-                    {
-                        "query_id": ids_b[lo + qidx],
-                        "neighbor_id": b_ids[part.ravel()],
-                        "__rough": vals.ravel(),
-                    }
-                )
-
-    par = spark.sparkContext.defaultParallelism
-    slim = coded_base.select("__bid", "__bcode")
-    if slim.rdd.getNumPartitions() < par:
-        slim = slim.repartition(par)
-    local = slim.mapInPandas(
-        score_partition, "query_id bigint, neighbor_id bigint, __rough double"
-    )
-    short = topk_per_group(
-        local,
-        ["query_id"],
-        [F.col("__rough").asc(), F.col("neighbor_id").asc()],
-        shortlist,
-    ).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qvec")
-    )
-    return short, qv
-
-
-def _ivfpq_search_arrow(
-    queries: DataFrame,
-    coded_base: DataFrame,
-    k: int,
-    coarse: np.ndarray,
-    codebook: np.ndarray,
-    nprobe: int,
-    shortlist: int,
-    query_id: str,
-    query_vec: str,
-    vec_store=None,
-) -> DataFrame:
-    """Large-batch IVF-PQ: ship QUERY VECTORS (2 KB each), not LUTs (64 KB
-    per probe row) — the materialized-LUT plan is O(nq × nprobe × m × ksub)
-    bytes and killed an 8 GB driver at nq=1000, nprobe=62, m=32
-    (PLAN.md, IVF-PQ scale probe). Here the driver computes only the probe
-    ASSIGNMENT (nq × n_clusters argpartition — trivial), broadcasts
-    (query ids, query matrix, cell → query-index lists, codebooks), and
-    each scoring task builds the residual LUT per (cell, probing-queries)
-    on the fly, gathers rough distances columnar, and keeps a local top-R
-    per (cell, query). Shuffle = O(Σ_cell probes(cell) × R) candidate rows.
-    Exact rerank restores exactness exactly as the jvm path."""
-    import pandas as _pd
-
-    m, ksub, dsub = codebook.shape
-    cb, co = codebook, coarse
-    spark = queries.sparkSession
-    qpd = queries.select(query_id, query_vec).toPandas()
-    q_ids = np.asarray(qpd[query_id].values, dtype=np.int64)
-    q_mat = np.ascontiguousarray(np.vstack(qpd[query_vec].values).astype(np.float64))
-    cd = (
-        (q_mat * q_mat).sum(axis=1)[:, None]
-        - 2.0 * (q_mat @ co.T)
-        + (co * co).sum(axis=1)[None, :]
-    )
-    nq = q_mat.shape[0]
-    npb = min(nprobe, co.shape[0])
-    probe_cells = np.argpartition(cd, npb - 1, axis=1)[:, :npb]
-    cell_to_q: dict[int, list[int]] = {}
-    for qi in range(nq):
-        for c in probe_cells[qi]:
-            cell_to_q.setdefault(int(c), []).append(qi)
-    bc = spark.sparkContext.broadcast(
-        (q_ids, q_mat, {c: np.asarray(v) for c, v in cell_to_q.items()})
-    )
-    cnorm = [(cb[j] * cb[j]).sum(axis=1) for j in range(m)]
+    ensure_package_on_executors(spark)
+    m, _, dsub = codebook.shape
+    q_ids, q_mat = _query_batch(queries, query_id, query_vec, m * dsub)
+    bc = spark.sparkContext.broadcast((q_ids, adc_luts(codebook, q_mat)))
+    r = max(shortlist, k)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, mat_b, cmap = bc.value
+        ids, luts = bc.value
         for pdf in batches:
-            if pdf.empty:
-                continue
-            for c, grp in pdf.groupby("cluster_id"):
-                qidx = cmap.get(int(c))
-                if qidx is None:
-                    continue
-                C = np.vstack(grp["__bcode"].values).astype(np.int64)
-                b_ids = np.asarray(grp["__bid"].values, dtype=np.int64)
-                rows = C.shape[0]
-                resid = mat_b[qidx] - co[int(c)][None, :]
-                lut = np.empty((len(qidx), m, ksub), dtype=np.float64)
-                for j in range(m):
-                    rs = resid[:, j * dsub : (j + 1) * dsub]
-                    lut[:, j, :] = (
-                        cnorm[j][None, :]
-                        - 2.0 * (rs @ cb[j].T)
-                        + (rs * rs).sum(axis=1)[:, None]
-                    )
-                # transposed-LUT gather (see _pq_arrow_shortlist): each
-                # code reads a contiguous nq-length row; same j-order
-                # accumulation, bit-identical sums to the column gather
-                lutT = np.ascontiguousarray(lut.transpose(1, 2, 0))
-                accT = np.zeros((rows, len(qidx)), dtype=np.float64)
-                for j in range(m):
-                    accT += lutT[j][C[:, j]]
-                kk = min(shortlist, rows)
-                part = np.argpartition(accT, kk - 1, axis=0)[:kk, :]
-                vals = np.take_along_axis(accT, part, axis=0)
-                qcols = np.broadcast_to(
-                    np.arange(len(qidx)), (kk, len(qidx))
-                ).ravel()
-                yield _pd.DataFrame(
-                    {
-                        "query_id": ids_b[qidx][qcols],
-                        "neighbor_id": b_ids[part.ravel()],
-                        "__rough": vals.ravel(),
-                    }
-                )
+            if not pdf.empty:
+                yield from adc_shortlist(luts, ids, *_batch_codes(pdf), r)
 
-    # cells contiguous per task: one small shuffle of the CODES (m ints +
-    # id per row) so each cell's LUT is built once, not once per Arrow
-    # batch that happens to contain a slice of it
-    slim = coded_base.select("cluster_id", "__bid", "__bcode").repartition(
-        spark.sparkContext.defaultParallelism, "cluster_id"
+    slim = coded_base.select("__bid", "__bcode")
+    par = spark.sparkContext.defaultParallelism
+    if slim.rdd.getNumPartitions() < par:
+        slim = slim.repartition(par)
+    return _shortlist_topk(
+        slim.mapInPandas(score, _ROUGH_SCHEMA),
+        r, k, queries, query_id, query_vec, coded_base, vec_store,
     )
-    local = slim.mapInPandas(
-        score, "query_id bigint, neighbor_id bigint, __rough double"
-    )
-    short = topk_per_group(
-        local,
-        ["query_id"],
-        [F.col("__rough").asc(), F.col("neighbor_id").asc()],
-        shortlist,
-    ).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qvec")
-    )
-    return exact_topk(short, qv, coded_rerank_base(coded_base, vec_store), k)

@@ -16,7 +16,9 @@ import weakref
 from pyspark.sql import DataFrame
 
 from rabitq_spark.config import RaBitQConfig
-from rabitq_spark.index import RaBitQModel, build_index, search
+from rabitq_spark.index.build import build_index
+from rabitq_spark.index.model import RaBitQModel
+from rabitq_spark.index.search import search
 from rabitq_spark.operators.knn import knn_exact_refined
 
 BRUTE_FORCE_MAX_BASE = 100_000

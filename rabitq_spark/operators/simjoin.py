@@ -15,7 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from rabitq_spark.config import RaBitQConfig
-from rabitq_spark.index import RaBitQModel, build_index, search
+from rabitq_spark.index.build import build_index
+from rabitq_spark.index.model import RaBitQModel
+from rabitq_spark.index.search import search
 
 
 def _base_only_model(right: DataFrame, right_id: str, right_vec: str):

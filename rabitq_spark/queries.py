@@ -304,9 +304,14 @@ def _search_all(model, emb: DataFrame, **kw) -> DataFrame:
 def _build_ivf(spark: SparkSession, sf_dir: str):
     from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.index import build_index
+    from rabitq_spark.index.adaptive import cluster_radii_sq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return _cached_index(build_index(_base(emb), RaBitQConfig()))
+    model = _cached_index(build_index(_base(emb), RaBitQConfig()))
+    # the early-stop bound's per-cluster radii are trained state too: paid
+    # here, every run of ann_ivf_earlystop runs the same jobs
+    cluster_radii_sq(model)
+    return model
 
 
 def q_ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -441,7 +446,8 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-fold rerank covers every row and the output is bit-identical to
     brute-force `knn_exact` — the whole train→encode→LUT→ADC→rerank path
     still executes. Bounded-shortlist recall is asserted in
-    tests/test_pq.py."""
+    tests/test_pq.py. At ksub=64 the Arrow ADC scan runs its
+    transposed-LUT gathers."""
     from rabitq_spark.index.pq import pq_search
 
     cb, coded = prepared(spark, sf_dir, "pq_codebook")
@@ -467,7 +473,7 @@ def q_ann_pq4_fastscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_search(
         _knn_queries(emb), _base(emb), _KNN_K, cb, shortlist=10**9,
-        coded_base=coded, impl="arrow",
+        coded_base=coded,
     )
 
 
@@ -484,8 +490,9 @@ def _build_ivfpq(spark: SparkSession, sf_dir: str):
 
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (coarse cells + residual PQ codes — the FAISS IVFPQ layout,
-    index/pq.py::ivfpq_*): probes carry per-(query, cell) residual ADC LUTs,
-    the hot join is cluster-keyed codegen lookups. Registered exhaustively
+    index/pq.py::ivfpq_*): the codes scan is repartitioned by cell and each
+    task scores a cell's codes against the residual ADC LUTs of the
+    queries probing it (the Arrow ADC scan). Registered exhaustively
     (nprobe = all cells, shortlist ≥ |base|) so the exact rerank makes the
     output bit-identical to brute force while the whole coarse-assign →
     residual-encode → probe → ADC → rerank path executes; bounded-budget

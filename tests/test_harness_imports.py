@@ -73,3 +73,19 @@ def test_the_guard_sees_a_missing_name():
     assert _resolves("rabitq_spark.index.vecstore", "exact_rerank")
     assert not _resolves("rabitq_spark.index.vecstore", "store_exact_rerank")
     assert not _resolves("rabitq_spark.no_such_module", None)
+
+
+def test_index_first_binds_search_functions():
+    """A process that imports rabitq_spark.index before rabitq_spark.operators
+    must bind ann.search and simjoin.search to the search() function, not
+    to the rabitq_spark.index.search submodule."""
+    import subprocess
+    import sys
+
+    code = (
+        "import rabitq_spark.index\n"
+        "from rabitq_spark.operators import ann, simjoin\n"
+        "assert callable(ann.search), type(ann.search)\n"
+        "assert callable(simjoin.search), type(simjoin.search)\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=ROOT, check=True)

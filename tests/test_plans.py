@@ -253,30 +253,6 @@ def test_weighted_sample_single_scan_topk(spark, sf_dir):
     assert "TakeOrdered" in plan or "WindowGroupLimit" in plan
 
 
-def test_pq_adc_is_codegen_lookups(spark, sf_dir):
-    """The ADC estimator is m element_at lookups in a projection — no
-    higher-order fold, no cartesian on the base side."""
-    from rabitq_spark.index.pq import pq_adc_expr, pq_encode, pq_lut, pq_train
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    cb = pq_train(base, "vec", m=8, ksub=16, iters=2)
-    coded = pq_encode(base, cb)
-    q = pq_lut(
-        emb.limit(1).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-        ),
-        cb,
-    )
-    plan = _fmt(
-        coded.crossJoin(F.broadcast(q.select("query_id", "__lut"))).select(
-            pq_adc_expr("__bcode", "__lut", 8, 16).alias("d")
-        )
-    )
-    assert "aggregate(" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_jaccard_estimate_hashes_each_word_once(spark, sf_dir, monkeypatch):
     """jaccard_estimate's checkpointed signature table evaluates the word
     hashes once per doc: one md5 in its optimized plan. Inlined into

@@ -1,13 +1,15 @@
-"""PQ quantizer family: codebook shape, code range, encode-vs-numpy ADC
-agreement, exhaustive exactness, bounded-shortlist recall."""
+"""PQ quantizer family: codebook shape, code range, ADC table values,
+exhaustive exactness, bounded-shortlist recall, tie-exact shortlists."""
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from rabitq_spark.index.pq import (
-    pq_adc_expr,
+    adc_luts,
+    adc_shortlist,
     pq_encode,
-    pq_lut,
     pq_search,
     pq_train,
 )
@@ -36,27 +38,36 @@ def test_pq_codebook_and_code_range(spark, sf_dir):
     assert 0 <= mn and mx <= 15 and sz == 8
 
 
-def test_pq_adc_matches_numpy(spark, sf_dir):
-    """The JVM-side unrolled ADC expression equals the numpy LUT sum."""
-    base, queries = _base_queries(spark, sf_dir, nq=4)
-    m, ksub = 4, 8
-    cb = pq_train(base, "vec", m=m, ksub=ksub, iters=3)
-    coded = pq_encode(base.limit(50), cb)
-    q = pq_lut(queries, cb)
-    got = (
-        coded.crossJoin(F.broadcast(q.select("query_id", "__lut")))
-        .select(
-            "query_id",
-            F.col("__bid").alias("nid"),
-            F.col("__bcode").alias("code"),
-            F.col("__lut").alias("lut"),
-            pq_adc_expr("__bcode", "__lut", m, ksub).alias("rough"),
-        )
-        .toPandas()
+@pytest.mark.parametrize("ksub", [16, 64])
+def test_adc_shortlist_sums_the_tables_and_keeps_ties(ksub):
+    """Both kernels of the scorer (one-hot GEMM at ksub 16, gathers at 64)
+    return Σ_j lut[q, j, code_j] (up to BLAS summation order), and the cut
+    keeps every row tied at a query's R-th value."""
+    rng = np.random.default_rng(5)
+    nq, m, rows, r = 3, 4, 50, 5
+    luts = rng.random((nq, m, ksub))
+    codes = rng.integers(0, ksub, (rows, m))
+    codes[10:20] = codes[0]  # rows 0 and 10-19 share one code
+    q_ids, b_ids = np.arange(nq) + 100, np.arange(rows) + 1000
+    want = luts[:, np.arange(m), codes].sum(axis=2)  # (nq, rows) reference
+
+    full = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, rows))
+    assert len(full) == nq * rows
+    np.testing.assert_allclose(
+        full["__rough"], want[full.query_id - 100, full.neighbor_id - 1000],
+        rtol=1e-12,
     )
-    for _, r in got.iterrows():
-        expect = sum(r["lut"][j * ksub + r["code"][j]] for j in range(m))
-        assert abs(r["rough"] - expect) < 1e-9
+    cut = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, r))
+    for q in q_ids:
+        rough = full[full.query_id == q]
+        kth = np.sort(rough["__rough"])[r - 1]
+        kept = rough.neighbor_id[rough["__rough"] <= kth]
+        assert set(cut.neighbor_id[cut.query_id == q]) == set(kept)
+    # the shared code scores 0 for query 100: all 11 copies tie below R=5
+    luts[0, np.arange(m), codes[0]] = 0.0
+    cut = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, r))
+    tied = cut[cut.query_id == 100].neighbor_id - 1000
+    assert set(tied) == {0, *range(10, 20)}
 
 
 def test_pq_exhaustive_equals_bruteforce(spark, sf_dir):
@@ -86,19 +97,19 @@ def test_pq_bounded_shortlist_recall(spark, sf_dir):
 
 
 def test_pq_lut_values(spark, sf_dir):
-    """LUT entries are true subspace squared distances."""
+    """ADC table entries are true subspace squared distances."""
     base, queries = _base_queries(spark, sf_dir, nq=2)
     m, ksub = 4, 8
     cb = pq_train(base, "vec", m=m, ksub=ksub, iters=3)
     dsub = cb.shape[2]
-    rows = pq_lut(queries, cb).collect()
-    for r in rows:
-        qv = np.asarray(r["__qvec"], dtype=np.float64)
-        lut = np.asarray(r["__lut"])
+    q = np.asarray([r["qvec"] for r in queries.collect()], dtype=np.float64)
+    luts = adc_luts(cb, q)
+    assert luts.shape == (len(q), m, ksub)
+    for qv, lut in zip(q, luts):
         for j in range(m):
             qs = qv[j * dsub : (j + 1) * dsub]
             d = ((cb[j] - qs[None, :]) ** 2).sum(axis=1)
-            assert np.allclose(lut[j * ksub : (j + 1) * ksub], d, atol=1e-9)
+            assert np.allclose(lut[j], d, atol=1e-9)
 
 
 def test_ivfpq_exhaustive_equals_bruteforce(spark, sf_dir):
@@ -178,29 +189,6 @@ def test_ivfpq_save_load_and_partition_pruning(spark, sf_dir, tmp_path):
     assert want.equals(got)
 
 
-def test_ivfpq_shuffle_probe_path_equals_broadcast(spark, sf_dir):
-    """Past the LUT byte budget the rough join flips to a shuffle keyed by
-    cluster_id — results must be identical to the broadcast path."""
-    from rabitq_spark.index.pq import ivfpq_encode, ivfpq_search, ivfpq_train
-
-    base, queries = _base_queries(spark, sf_dir, nq=6)
-    coarse, cb = ivfpq_train(base, "vec", n_clusters=8, m=8, ksub=16, iters=3)
-    coded = ivfpq_encode(base, coarse, cb).cache()
-    kw = dict(nprobe=4, shortlist=30)
-    a = (
-        ivfpq_search(queries, coded, 5, coarse, cb, broadcast_probes=True, **kw)
-        .toPandas()
-        .sort_values(["query_id", "rank"], ignore_index=True)
-    )
-    b = (
-        ivfpq_search(queries, coded, 5, coarse, cb, broadcast_max_bytes=1, **kw)
-        .toPandas()
-        .sort_values(["query_id", "rank"], ignore_index=True)
-    )
-    assert a.equals(b)
-    coded.unpersist()
-
-
 def test_pq_arrow_impl_equals_bruteforce_and_jvm(spark, sf_dir):
     from rabitq_spark.index.pq import pq_encode, pq_search, pq_train
 
@@ -211,23 +199,11 @@ def test_pq_arrow_impl_equals_bruteforce_and_jvm(spark, sf_dir):
         ["query_id", "rank"], ignore_index=True
     )
     arrow = (
-        pq_search(queries, base, 5, cb, shortlist=10**9, coded_base=coded, impl="arrow")
+        pq_search(queries, base, 5, cb, shortlist=10**9, coded_base=coded)
         .toPandas()
         .sort_values(["query_id", "rank"], ignore_index=True)
     )
     assert exact.equals(arrow)
-    # bounded shortlists: the two impls agree on the reranked output
-    a = (
-        pq_search(queries, base, 5, cb, shortlist=64, coded_base=coded, impl="arrow")
-        .toPandas()
-        .sort_values(["query_id", "rank"], ignore_index=True)
-    )
-    j = (
-        pq_search(queries, base, 5, cb, shortlist=64, coded_base=coded, impl="jvm")
-        .toPandas()
-        .sort_values(["query_id", "rank"], ignore_index=True)
-    )
-    assert a.equals(j)
     coded.unpersist()
 
 
@@ -237,32 +213,15 @@ def test_ivfpq_arrow_impl_matches_jvm(spark, sf_dir):
     base, queries = _base_queries(spark, sf_dir, nq=8)
     coarse, cb = ivfpq_train(base, "vec", n_clusters=8, m=8, ksub=32, iters=4)
     coded = ivfpq_encode(base, coarse, cb).cache()
-    # exhaustive: both impls == brute force
     exact = knn_exact(queries, base, 5).toPandas().sort_values(
         ["query_id", "rank"], ignore_index=True
     )
     arrow = (
-        ivfpq_search(
-            queries, coded, 5, coarse, cb, nprobe=8, shortlist=10**9, impl="arrow"
-        )
+        ivfpq_search(queries, coded, 5, coarse, cb, nprobe=8, shortlist=10**9)
         .toPandas()
         .sort_values(["query_id", "rank"], ignore_index=True)
     )
     assert exact.equals(arrow)
-    # bounded: arrow == jvm at the same budget
-    a = (
-        ivfpq_search(
-            queries, coded, 5, coarse, cb, nprobe=4, shortlist=40, impl="arrow"
-        )
-        .toPandas()
-        .sort_values(["query_id", "rank"], ignore_index=True)
-    )
-    j = (
-        ivfpq_search(queries, coded, 5, coarse, cb, nprobe=4, shortlist=40)
-        .toPandas()
-        .sort_values(["query_id", "rank"], ignore_index=True)
-    )
-    assert a.equals(j)
     coded.unpersist()
 
 
@@ -400,15 +359,77 @@ def test_pq4_fastscan_exhaustive_equals_bruteforce(spark, sf_dir):
         ["query_id", "rank"], ignore_index=True
     )
     got = (
-        pq_search(queries, base, 5, cb, shortlist=10**9, coded_base=coded,
-                  impl="arrow")
+        pq_search(queries, base, 5, cb, shortlist=10**9, coded_base=coded)
         .toPandas()
         .sort_values(["query_id", "rank"], ignore_index=True)
     )
     assert exact.equals(got)
     # bounded shortlist through the GEMM kernel still ranks usefully
-    approx = pq_search(queries, base, 5, cb, shortlist=64, coded_base=coded,
-                       impl="arrow").toPandas()
+    approx = pq_search(
+        queries, base, 5, cb, shortlist=64, coded_base=coded
+    ).toPandas()
     recall = len(approx.merge(exact, on=["query_id", "neighbor_id"])) / len(exact)
     assert recall >= 0.5, recall
     coded.unpersist()
+
+
+def _tied_base(spark):
+    """1000 random 32-d vectors plus 40 copies of one more vector under
+    the shuffled ids 5000-5039, and that vector as the only query."""
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((1000, 32))
+    dup = rng.standard_normal(32)
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    rows += [(int(i), dup.tolist()) for i in 5000 + rng.permutation(40)]
+    base = spark.createDataFrame(rows, "id bigint, vec array<double>")
+    queries = spark.createDataFrame(
+        [(0, dup.tolist())], "query_id bigint, qvec array<double>"
+    )
+    return base, queries
+
+
+@pytest.mark.parametrize("ksub", [16, 64])
+@pytest.mark.parametrize("parts", [1, 3, 7])
+def test_tied_codes_keep_the_smallest_ids(spark, parts, ksub):
+    """Identical codes tie exactly on the rough ADC value. Whatever the
+    coded base's partitioning, both scans must shortlist the smallest tied
+    ids, so k=5 from a shortlist of 10 is 5000-5004. ksub 16 runs the
+    one-hot GEMM, ksub 64 the gathers."""
+    from rabitq_spark.index.pq import ivfpq_encode, ivfpq_search, ivfpq_train
+
+    base, queries = _tied_base(spark)
+    cb = pq_train(base, "vec", m=4, ksub=ksub, iters=4)
+    coarse, rcb = ivfpq_train(base, "vec", n_clusters=8, m=4, ksub=ksub, iters=4)
+    coded = pq_encode(base, cb).cache()
+    icoded = ivfpq_encode(base, coarse, rcb).cache()
+    flat = pq_search(
+        queries, base, 5, cb, shortlist=10, coded_base=coded.repartition(parts)
+    )
+    ivf = ivfpq_search(
+        queries, icoded.repartition(parts), 5, coarse, rcb, nprobe=2, shortlist=10
+    )
+    for got in (flat, ivf):
+        rows = got.orderBy("rank").collect()
+        assert [r.neighbor_id for r in rows] == [5000, 5001, 5002, 5003, 5004]
+        assert all(r.dist == 0.0 for r in rows)
+    coded.unpersist()
+    icoded.unpersist()
+
+
+def test_query_batch_past_the_byte_cap_raises(spark, sf_dir, monkeypatch):
+    """The scans collect the query batch once, bounded by
+    QUERY_MATRIX_MAX_BYTES: past the cap they raise instead of pulling it
+    to the driver."""
+    from rabitq_spark.index import vecstore
+    from rabitq_spark.index.pq import ivfpq_encode, ivfpq_search, ivfpq_train
+
+    base, queries = _base_queries(spark, sf_dir, nq=4)
+    cb = pq_train(base, "vec", m=8, ksub=16, iters=2)
+    coarse, rcb = ivfpq_train(base, "vec", n_clusters=4, m=8, ksub=16, iters=2)
+    coded = ivfpq_encode(base, coarse, rcb)
+    # room for 3 float64 64-d query rows: the 4-query batch is over the cap
+    monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", 3 * 64 * 8)
+    with pytest.raises(ValueError, match="QUERY_MATRIX_MAX_BYTES"):
+        pq_search(queries, base, 5, cb)
+    with pytest.raises(ValueError, match="QUERY_MATRIX_MAX_BYTES"):
+        ivfpq_search(queries, coded, 5, coarse, rcb, nprobe=2)

@@ -13,6 +13,7 @@ _ENTRY_KIND = {
     "bpe_merges": "bpe",
     "ann_sq8": "sq8_bounds",
     "ann_ivf_multibit": "multibit2",
+    "ann_ivf_earlystop": "ivf",
 }
 
 

@@ -276,19 +276,15 @@ def test_pq_family_store_rerank_bitexact(spark, gappy_base, tmp_path):
 
     coarse, cb2 = ivfpq_train(base, n_clusters=8, m=4, ksub=8, max_sample_rows=600)
     coded2 = ivfpq_encode(base, coarse, cb2).cache()
-    for impl in ("jvm", "arrow"):
-        a = ivfpq_search(
-            queries, coded2, K, coarse, cb2, nprobe=4, shortlist=32, impl=impl
-        )
-        b = ivfpq_search(
-            queries, coded2, K, coarse, cb2, nprobe=4, shortlist=32,
-            impl=impl, vec_store=store,
-        )
-        pd.testing.assert_frame_equal(
-            b.toPandas().sort_values(["query_id", "rank"], ignore_index=True),
-            a.toPandas().sort_values(["query_id", "rank"], ignore_index=True),
-            check_exact=True,
-        )
+    a = ivfpq_search(queries, coded2, K, coarse, cb2, nprobe=4, shortlist=32)
+    b = ivfpq_search(
+        queries, coded2, K, coarse, cb2, nprobe=4, shortlist=32, vec_store=store
+    )
+    pd.testing.assert_frame_equal(
+        b.toPandas().sort_values(["query_id", "rank"], ignore_index=True),
+        a.toPandas().sort_values(["query_id", "rank"], ignore_index=True),
+        check_exact=True,
+    )
 
     lo, hi = sq8_train(base)
     a = sq8_search(queries, base, K, lo, hi, shortlist=32)
