@@ -35,12 +35,13 @@ Scale shape: the driver holds only the query batch (the documented small
 side, same contract as knn_exact_fast and the fused shortlist), the
 (nq x n_clusters) centroid-distance matrix, per-cluster radii
 (n_clusters floats, one tiny agg job, memoized on the model), and the
-accumulated top-k (nq x k rows). Each wave is ONE Spark job over the
-wave's clusters only — search()'s own stages 5-7 on the wave's probe
-table: the partition-pruned jvm scan or the fused Arrow shortlist
-(search._shortlist), then vecstore.exact_topk — so total index rows
-touched is exactly the probed set.
-Wave sizes double, bounding the number of jobs at O(log n_clusters) per
+accumulated top-k (nq x k rows). Each wave runs over the wave's
+clusters only — search()'s own stages 5-7 on the wave's probe table: the
+partition-pruned jvm scan or the fused Arrow shortlist
+(search._candidates), then search()'s driver tail when its bounds fit
+(search._driver_tail), else the window top-R and vecstore.exact_topk —
+so total index rows touched is exactly the probed set.
+Wave sizes double, bounding the number of waves at O(log n_clusters) per
 batch even when a hard query needs wide coverage.
 
 Floating-point soundness: ||q-c|| comes from a float32 GEMM and radii
@@ -60,6 +61,9 @@ from pyspark.sql import DataFrame, functions as F
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import (
     KERNELS,
+    _candidates,
+    _driver_tail,
+    _driver_tail_fits,
     _query_side,
     _shortlist,
     auto_overfetch,
@@ -277,18 +281,25 @@ def search_adaptive(
         wave_kernels.append(wave_kernel)
         if metrics is not None:
             metrics.kernel, metrics.kernel_reason = wave_kernel, reason
-        # search()'s stages 5-7 on the wave's probe table: the jvm scan is
-        # pruned to the wave's clusters when they are at most half
-        shortlist = _shortlist(
-            model,
-            wave_kernel,
-            r,
+        # search()'s stages 5-7 on the wave's probe table, on the driver
+        # when its bounds fit: the jvm scan is pruned to the wave's
+        # clusters when they are at most half
+        stage5 = dict(
             block=block,
             clusters=probed_set if 2 * len(probed_set) <= ncl else None,
         )
-        wave_res = exact_topk(
-            shortlist, qv, model.rerank_base, topk, id_col="orig_id"
-        ).select("query_id", "neighbor_id", "dist").toPandas()
+        max_cluster_probes = int(np.unique(ci_arr, return_counts=True)[1].max())
+        if not isinstance(qv, DataFrame) and _driver_tail_fits(
+            model, max_cluster_probes, nq, r
+        ):
+            cand = _candidates(model, wave_kernel, r, **stage5)
+            wave_res = _driver_tail(model, cand, qv, r, topk).to_pandas()
+        else:
+            shortlist = _shortlist(model, wave_kernel, r, **stage5)
+            wave_res = exact_topk(
+                shortlist, qv, model.rerank_base, topk, id_col="orig_id"
+            ).toPandas()
+        wave_res = wave_res[["query_id", "neighbor_id", "dist"]]
 
         acc = (
             wave_res

@@ -5,10 +5,14 @@ A bounded batch (its float64 query matrix within
 vecstore.QUERY_MATRIX_MAX_BYTES, its probe table within
 _ARROW_MAX_PROBE_BYTES, unique integer query ids) is collected ONCE to the
 driver, where the reference runs stages 1-4 too: per query, before any
-scan. That one copy feeds every stage below. Any other batch, and any
-batch whose caller passes broadcast_probes=False, keeps the executor path:
-stages 1-4 as a mapInPandas, a checkpoint and a count job for the probe
-geometry, the query vectors joined back for stage 7.
+scan. That one copy feeds every stage below. When the model knows n_rows
+and the batch's candidate stream and shortlisted base rows fit their
+driver caps (_driver_tail_fits), stages 6-7 finish on the driver as well,
+the way the reference reranks in process (src/rerank.rs:62-114). Any
+other batch, and any batch whose caller passes broadcast_probes=False,
+keeps the executor path: stages 1-4 as a mapInPandas, a checkpoint and a
+count job for the probe geometry, the query vectors joined back for
+stage 7.
 
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
@@ -22,22 +26,32 @@ Stages:
        broadcast; index side partition-pruned by the probed cluster set),
        then the D5 estimator as one SQL expression (whole-stage codegen;
        src/rabitq.rs:336-367) — _rough_candidates — or the Arrow
-       value-GEMM kernel (_fused_shortlist).
-  6.   top-R rough candidates per query (WindowGroupLimit) — the batch
+       value-GEMM kernel (_fused_shortlist). _candidates builds stage 5
+       for search() and every search_adaptive wave; range_search filters
+       _rough_candidates instead.
+  6.   top-R rough candidates per query on (rough, orig_id) — the batch
        substitute for the sequential heap threshold (src/rerank.rs:62-114).
-       _shortlist builds stages 5-6 for search() and every
-       search_adaptive wave; range_search filters _rough_candidates
-       instead.
-  7.   exact rerank and the final top-k per query — vecstore.exact_rerank
-       and exact_topk, the one rerank of every shortlist-then-exact plan:
-       the shortlist's base vectors (vec-store gather or base join)
-       against the query vectors, exact squared-L2 in double precision.
+       The driver tail (_driver_tail) collects the stage-5 stream once and
+       cuts it with top_n in numpy; the executor tail (_shortlist) cuts it
+       with a WindowGroupLimit window.
+  7.   exact rerank and the final top-k per query on (dist, neighbor_id),
+       exact squared-L2 in double precision (vecstore.l2_fold). The driver
+       tail reads each distinct shortlisted id's base row once — a
+       vec-store gather on the driver, or one collect of base_df — folds
+       every pair and ranks with top_n; it returns a local relation. The
+       executor tail is vecstore.exact_topk, the one rerank of every other
+       shortlist-then-exact plan: vec-store gather or base join, then a
+       window top-k.
 
-Scale notes: the only shuffles are the two window top-ks and, when neither
-side fits a broadcast, the cluster_id join and the rerank's base join (a
-model with a vec store gathers candidate rows instead). The index never
-moves; probes move to it. Cluster-size skew is handled by AQE skew-join
-splitting.
+Both tails keep the same order and arithmetic, so their frames are
+bit-identical (tests/test_driver_path.py).
+
+Scale notes: a driver-tail batch runs no shuffle at all and moves each
+base row to the driver at most once. On the executor tail the only
+shuffles are the two window top-ks and, when neither side fits a
+broadcast, the cluster_id join and the rerank's base join (a model with a
+vec store gathers candidate rows instead). The index never moves; probes
+move to it. Cluster-size skew is handled by AQE skew-join splitting.
 """
 
 from __future__ import annotations
@@ -48,16 +62,25 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from rabitq_spark._dist import ensure_package_on_executors
 from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.rotation import apply_rot
 from rabitq_spark.index.model import RaBitQModel
+from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import (
-    QUERY_MATRIX_MAX_BYTES,
+    VecStore,
     collect_queries,
     exact_rerank,
     exact_topk,
+    l2_fold,
     query_matrix,
 )
 from rabitq_spark.metrics import SearchMetrics
@@ -382,6 +405,25 @@ def value_gemm_asym(qvals: "np.ndarray", bvals: "np.ndarray") -> "np.ndarray":
     return (qvals @ bvals.T).astype(np.int64)
 
 
+def top_n(group, key, tie, n: int, ranks: bool = False):
+    """Positions of the first `n` rows per `group` value under ascending
+    (key, tie) — topk_per_group's row_number window in numpy, for parallel
+    arrays. The order is total when `tie` is unique within a group, so the
+    cut is associative: applied per batch and again over the survivors, it
+    equals one global pass. Positions come in (group, key, tie) order; with
+    `ranks`, also each kept row's 1-based rank within its group."""
+    order = np.lexsort((tie, key, group))
+    g = np.asarray(group)[order]
+    pos = np.arange(len(g))
+    head = np.ones(len(g), dtype=bool)
+    head[1:] = g[1:] != g[:-1]
+    rank = pos - np.maximum.accumulate(np.where(head, pos, 0))
+    keep = rank < n
+    if ranks:
+        return order[keep], rank[keep] + 1
+    return order[keep]
+
+
 #: Worker-buffer row budget for _fused_shortlist's partition-level top-R
 #: accumulation (~100 MB at 24 bytes/row). Exhaustive configs (r ≥ buffer)
 #: emit partial chunks instead of holding the whole partition.
@@ -440,17 +482,7 @@ def _fused_shortlist(
     bc = spark.sparkContext.broadcast(by_cluster)
 
     def topr(q, i, ro):
-        """Local top-R per query over (query, rough, id)-lexsorted arrays —
-        stable total order, so top-R is associative: applying it per batch
-        and again per partition equals one global pass."""
-        order = np.lexsort((i, ro, q))
-        q, i, ro = q[order], i[order], ro[order]
-        boundaries = np.flatnonzero(np.diff(q)) + 1
-        starts = np.concatenate(([0], boundaries))
-        ends = np.concatenate((boundaries, [len(q)]))
-        keep = np.concatenate(
-            [np.arange(s, min(s + r, e)) for s, e in zip(starts, ends)]
-        )
+        keep = top_n(q, ro, i, r)
         return q[keep], i[keep], ro[keep]
 
     def score(batches):
@@ -643,7 +675,7 @@ def _rough_candidates(
     )
 
 
-def _shortlist(
+def _candidates(
     model: RaBitQModel,
     kernel: str,
     r: int,
@@ -654,25 +686,165 @@ def _shortlist(
     index: "DataFrame | None" = None,
     tap=None,
 ) -> DataFrame:
-    """Stages 5-6 for search() and every search_adaptive wave: rough-score
+    """Stage 5 for search() and every search_adaptive wave: rough-score
     with `kernel` — "arrow" runs _fused_shortlist over the driver probe
-    `block` (which prunes to the block's clusters itself), "jvm" runs
-    _rough_candidates over the probe frame `probes` (built from `block`
-    when None) with the caller's pruning set `clusters` — then keep the
-    top-R per query on (rough, orig_id). `tap`, when given, wraps the
-    candidate stream just before the top-R (search()'s allowed-id filter
-    and rough observer). Returns (query_id, orig_id)."""
+    `block` (which prunes to the block's clusters itself and already cuts
+    each partition to its local top-R), "jvm" runs _rough_candidates over
+    the probe frame `probes` (built from `block` when None) with the
+    caller's pruning set `clusters`. `tap`, when given, wraps the stream
+    (search()'s allowed-id filter and rough observer). Returns (query_id,
+    orig_id, rough)."""
     if kernel == "arrow":
-        local = _fused_shortlist(model, block, r, model.config.theta_log_dim)
+        cand = _fused_shortlist(model, block, r, model.config.theta_log_dim)
     else:
         if probes is None:
             probes = probe_frame(model.index_df.sparkSession, block)
-        local = _rough_candidates(model, probes, clusters, broadcast, index)
-    if tap is not None:
-        local = tap(local)
+        cand = _rough_candidates(model, probes, clusters, broadcast, index)
+    return cand if tap is None else tap(cand)
+
+
+def _shortlist(model: RaBitQModel, kernel: str, r: int, **kw) -> DataFrame:
+    """Stages 5-6 on the executors: _candidates, then the top-R per query
+    on (rough, orig_id) as a window. Returns (query_id, orig_id)."""
     return topk_per_group(
-        local, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
+        _candidates(model, kernel, r, **kw),
+        ["query_id"],
+        [F.col("rough").asc(), F.col("orig_id").asc()],
+        r,
     ).select("query_id", "orig_id")
+
+
+#: The driver tail's result schema: exact_topk's for a driver batch's
+#: bigint query ids (row_number ranks are non-null).
+_RESULT_SCHEMA = StructType(
+    [
+        StructField("query_id", LongType(), True),
+        StructField("neighbor_id", LongType(), True),
+        StructField("dist", DoubleType(), True),
+        StructField("rank", IntegerType(), False),
+    ]
+)
+
+
+def _driver_tail_fits(
+    model: RaBitQModel, max_cluster_probes: int, nq: int, r: int
+) -> bool:
+    """Whether stages 6-7 of a batch whose query matrix is on the driver
+    finish there (_driver_tail), by two byte bounds that need no job:
+
+    * the candidate stream, at most max(probe rows per cluster) × n_rows
+      rows for either kernel (no cluster holds more than n_rows rows),
+      within _ARROW_MAX_PROBE_BYTES, the cap on the probe table: both are
+      one copy on the driver. The query matrix's cap, which bounds a copy
+      in every Python worker, is too tight for this loose bound: at 250
+      queries, nprobe 2 of 71 clusters and 5k rows the busiest cluster
+      drew 44-139 probe rows across five seeds, and 8 MiB admits 69.
+    * the shortlisted base rows, at most min(nq × R, n_rows) rows of
+      dim_pad float32s (base_df's padded width), within
+      vecstore.QUERY_MATRIX_MAX_BYTES like the query matrix.
+
+    A model that does not know n_rows bounds neither."""
+    if model.n_rows is None:
+        return False
+    # a candidate row is query_id, orig_id and rough: 8 B each
+    cand_bytes = max_cluster_probes * model.n_rows * 24
+    base_bytes = min(nq * r, model.n_rows) * model.dim_pad * 4
+    return (
+        cand_bytes <= _ARROW_MAX_PROBE_BYTES
+        and base_bytes <= vecstore.QUERY_MATRIX_MAX_BYTES
+    )
+
+
+def _base_rows(model: RaBitQModel, ids: "np.ndarray", metrics=None):
+    """The base rows of sorted unique `ids` for the driver tail: (positions
+    into `ids` of the rows read, their vectors, base rows read or None when
+    `metrics.rerank` observed them). A vec store gathers exactly those rows
+    on the driver, zero jobs. base_df takes ONE collect: the whole frame
+    when all n_rows fit vecstore.QUERY_MATRIX_MAX_BYTES — the scan reads
+    every row either way, and a long `orig_id IN (...)` list costs more to
+    analyze (~100 ms at 3.5k ids) than shipping the rest of a small base —
+    else that IN filter. The extra rows are dropped here; an id the frame
+    lacks drops its pairs, the base join's semantics."""
+    base = model.rerank_base
+    if isinstance(base, VecStore):
+        return np.arange(len(ids)), base.gather(ids), len(ids)
+    if len(ids) == 0:
+        return ids, np.empty((0, model.dim_pad), dtype=np.float32), 0
+    if metrics is not None:
+        base = base.observe(
+            metrics.rerank, F.count(F.lit(1)).alias("rerank_base_rows")
+        )
+    if model.n_rows * model.dim_pad * 4 > vecstore.QUERY_MATRIX_MAX_BYTES:
+        listed = ", ".join(str(int(i)) for i in ids)
+        base = base.filter(F.expr(f"orig_id IN ({listed})"))
+    t = base.select("orig_id", "vec").toArrow()
+    got = t["orig_id"].to_numpy()
+    if len(got) == 0:
+        return got, np.empty((0, model.dim_pad), dtype=np.float32), None
+    vecs = t["vec"].combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    vecs = vecs.reshape(len(got), -1)
+    where = np.minimum(np.searchsorted(ids, got), len(ids) - 1)
+    hit = ids[where] == got
+    return where[hit], vecs[hit], None
+
+
+def _driver_tail(
+    model: RaBitQModel,
+    cand: DataFrame,
+    qv: tuple,
+    r: int,
+    k: int,
+    metrics: "SearchMetrics | None" = None,
+):
+    """Stages 6-7 on the driver, for a batch whose query matrix is there
+    and whose bounds _driver_tail_fits: ONE collect of the stage-5
+    candidates `cand` (query_id, orig_id, rough); the top-R per query on
+    (rough, orig_id) in numpy (top_n); each DISTINCT shortlisted id's base
+    row read once (_base_rows); vecstore.l2_fold per (query, candidate)
+    pair; the top-k per query on (dist, neighbor_id). Same order and
+    arithmetic as the executor tail (_shortlist + exact_topk), so the rows
+    are bit-identical. Returns a pyarrow Table with exact_topk's columns
+    (query_id, neighbor_id, dist, rank). `metrics` gets the rough,
+    precise and rerank counts from the arrays, at no extra job."""
+    import pyarrow as pa
+
+    qids, qmat = qv
+    t = cand.select("query_id", "orig_id", "rough").toArrow()
+    q = t["query_id"].to_numpy()
+    ids = t["orig_id"].to_numpy()
+    keep = top_n(q, t["rough"].to_numpy(), ids, r)
+    q, ids = q[keep], ids[keep]
+    uniq, inv = np.unique(ids, return_inverse=True)
+    found, vecs, read = _base_rows(model, uniq, metrics)
+    # the `vecs` row of each shortlisted pair; an id base_df lacks drops
+    # its pairs
+    row = np.full(len(uniq), -1, dtype=np.int64)
+    row[found] = np.arange(len(found))
+    row = row[inv]
+    ok = row >= 0
+    q, ids, row = q[ok], ids[ok], row[ok]
+    qorder = np.argsort(qids)
+    qrow = qorder[np.searchsorted(qids, q, sorter=qorder)]
+    dim = qmat.shape[1]
+    dist = np.empty(len(q), dtype=np.float64)
+    step = max(1, vecstore.QUERY_MATRIX_MAX_BYTES // (8 * dim))
+    for s in range(0, len(q), step):
+        e = min(s + step, len(q))
+        dist[s:e] = l2_fold(qmat[qrow[s:e]], vecs[row[s:e], :dim])
+    sel, rank = top_n(q, dist, ids, k, ranks=True)
+    if metrics is not None:
+        metrics.counts["rough_count"] = t.num_rows
+        metrics.counts["precise_count"] = len(keep)
+        if read is not None:
+            metrics.counts["rerank_base_rows"] = read
+    return pa.table(
+        {
+            "query_id": pa.array(q[sel], pa.int64()),
+            "neighbor_id": pa.array(ids[sel], pa.int64()),
+            "dist": pa.array(dist[sel], pa.float64()),
+            "rank": pa.array(rank, pa.int32()),
+        }
+    )
 
 
 def auto_overfetch(model: RaBitQModel, nprobe: int, topk: int) -> int:
@@ -823,7 +995,7 @@ def _driver_matrix(ids: "np.ndarray", qmat: "np.ndarray") -> bool:
     return (
         np.issubdtype(ids.dtype, np.integer)
         and len(np.unique(ids)) == len(ids)
-        and qmat.nbytes <= QUERY_MATRIX_MAX_BYTES
+        and qmat.nbytes <= vecstore.QUERY_MATRIX_MAX_BYTES
     )
 
 
@@ -894,7 +1066,12 @@ def search(
     A bounded batch is resolved on the driver (see the module docstring):
     one collect job replaces the executor prep stage, its checkpoint and
     the probe-geometry count; every other batch runs the executor path.
-    Both give identical frames.
+    When the driver tail's bounds fit (_driver_tail_fits), such a batch
+    also finishes stages 6-7 on the driver: its Spark jobs then run INSIDE
+    this call (the stage-5 candidate collect and, without a vec store, one
+    base collect) and the returned frame is a local relation, which
+    collects without a job. Otherwise the returned frame is the lazy
+    executor-tail plan. All give identical frames.
 
     `broadcast_probes=False` is for a caller that knows its batch is large
     (the full-table self-joins): the stage-5 join then shuffles both sides
@@ -938,7 +1115,10 @@ def search(
     demotes it to "jvm". `metrics.kernel` / `metrics.kernel_reason` report
     the kernel that ran and why; `metrics.probe_rows` /
     `metrics.probed_clusters` the probe geometry whenever the search
-    resolved it (always on the driver path).
+    resolved it (always on the driver path). On the driver tail the
+    rough, precise and vec-store rerank counts come from its arrays
+    (`metrics.counts`), and a base_df rerank is observed inside its one
+    base job.
     """
     if impl not in KERNELS:
         raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
@@ -996,12 +1176,35 @@ def search(
             probes, probe_counts = _probe_counts(probes)
         clusters = probe_counts
 
+    def allow(cand: DataFrame) -> DataFrame:
+        if allowed is None:
+            return cand
+        ok = allowed.select(F.col(allowed.columns[0]).alias("orig_id")).distinct()
+        return cand.join(ok, "orig_id", "left_semi")
+
+    if metrics is not None:
+        metrics.kernel, metrics.kernel_reason = kernel, reason
+        if probe_counts is not None:
+            metrics.probed_clusters = probe_counts
+            metrics.probe_rows = sum(probe_counts.values())
+    stage5 = dict(
+        block=block,
+        probes=probes,
+        clusters=clusters,
+        broadcast=broadcast_probes,
+        index=index,
+    )
+    if not isinstance(qv, DataFrame) and _driver_tail_fits(
+        model, max(probe_counts.values(), default=0), len(qv[0]), r
+    ):
+        # stages 6-7 on the driver: the rough and precise counts come from
+        # its arrays, so the stream carries no observer
+        cand = _candidates(model, kernel, r, tap=allow, **stage5)
+        table = _driver_tail(model, cand, qv, r, topk, metrics)
+        return queries.sparkSession.createDataFrame(table, _RESULT_SCHEMA)
+
     def tap(cand: DataFrame) -> DataFrame:
-        if allowed is not None:
-            ok = allowed.select(
-                F.col(allowed.columns[0]).alias("orig_id")
-            ).distinct()
-            cand = cand.join(ok, "orig_id", "left_semi")
+        cand = allow(cand)
         if metrics is not None and metrics.observe_rough:
             # A10 rough-candidate counter (src/metrics.rs analogue, no
             # extra pass — but the CollectMetrics node splits the codegen
@@ -1011,22 +1214,7 @@ def search(
             )
         return cand
 
-    shortlist = _shortlist(
-        model,
-        kernel,
-        r,
-        block=block,
-        probes=probes,
-        clusters=clusters,
-        broadcast=broadcast_probes,
-        index=index,
-        tap=tap,
-    )
-    if metrics is not None:
-        metrics.kernel, metrics.kernel_reason = kernel, reason
-        if probe_counts is not None:
-            metrics.probed_clusters = probe_counts
-            metrics.probe_rows = sum(probe_counts.values())
+    shortlist = _shortlist(model, kernel, r, tap=tap, **stage5)
     if metrics is not None and metrics.observe_precise:
         # CollectMetrics directly above the top-R filter defeats the
         # WindowGroupLimit pre-shuffle trim at scale — see

@@ -49,24 +49,35 @@ class SearchMetrics:
     # Spark job. None when the search did not resolve it.
     probe_rows: int | None = None
     probed_clusters: dict | None = None
+    # Counts a search records from arrays it already holds on the driver
+    # (search()'s driver tail: "rough_count", "precise_count", and
+    # "rerank_base_rows" for a vec store), read before the Observations —
+    # no CollectMetrics node and no Spark job.
+    counts: dict = field(default_factory=dict)
+
+    def _count(self, obs: Observation, name: str) -> int:
+        if name in self.counts:
+            return int(self.counts[name])
+        return int(obs.get[name])
 
     @property
     def rough_count(self) -> int:
         """Candidates scored by the quantized estimator (METRICS.rough)."""
-        return int(self.rough.get["rough_count"])
+        return self._count(self.rough, "rough_count")
 
     @property
     def precise_count(self) -> int:
         """Candidates exactly reranked (METRICS.precise)."""
-        return int(self.precise.get["precise_count"])
+        return self._count(self.precise, "precise_count")
 
     @property
     def rerank_base_rows(self) -> int:
         """Rows the exact rerank read from base storage: the full base row
         count under the join plan, the candidate count under the vec-store
-        point-read plan — the measurable form of 'candidate-bound rerank'
-        (round-8 verdict item 5)."""
-        return int(self.rerank.get["rerank_base_rows"])
+        point-read plan (the distinct candidate ids on search()'s driver
+        tail) — the measurable form of 'candidate-bound rerank' (round-8
+        verdict item 5)."""
+        return self._count(self.rerank, "rerank_base_rows")
 
     @property
     def ratio(self) -> float:

@@ -73,10 +73,12 @@ class SearchService:
         qdf = self.spark.createDataFrame(
             [(0, [float(x) for x in vec])], "query_id long, qvec array<double>"
         )
-        rows = (
-            search(self.model, qdf, topk=topk, nprobe=nprobe)
-            .orderBy("rank")
-            .collect()
+        # ranked on the driver: a bounded search() returns a local
+        # relation, which collects without a job, and a Spark sort over it
+        # would run one
+        rows = sorted(
+            search(self.model, qdf, topk=topk, nprobe=nprobe).collect(),
+            key=lambda r: r["rank"],
         )
         self.n_queries += 1
         return {

@@ -1,8 +1,9 @@
 """search()'s driver path — a bounded batch collected once, stages 1-4 in
-numpy on the driver, one numpy rerank fold — against the executor path it
-replaces. Patching vecstore.QUERY_MATRIX_MAX_BYTES to 0 forces every batch
-onto the executor path (and the vec-store rerank onto its join form), so
-the two paths can be compared frame for frame."""
+numpy on the driver, stages 6-7 finished there too (the driver tail) —
+against the executor path it replaces. Patching
+vecstore.QUERY_MATRIX_MAX_BYTES to 0 forces every batch onto the executor
+path (and the vec-store rerank onto its join form), so the two paths can
+be compared frame for frame."""
 
 import copy
 import importlib
@@ -12,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rabitq_spark.config import RaBitQConfig
-from rabitq_spark.index import build_index, range_search, search
+from rabitq_spark.index import RaBitQModel, build_index, range_search, search
 from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import build_vec_store
 from rabitq_spark.metrics import SearchMetrics
@@ -27,17 +28,19 @@ NPROBE = 3  # of 8 clusters: partition pruning on
 
 @pytest.fixture(scope="module")
 def models(spark, sf_dir, tmp_path_factory):
-    """{(bits_per_dim, vec store on): model} over one attr-carrying base."""
+    """{(bits_per_dim, vec store on): model} over one attr-carrying base.
+    The models know their row count, which the driver tail's bounds need."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label"
     )
+    n_rows = base.count()
     out = {}
     for bits in (1, 4):
         cfg = RaBitQConfig(
             n_clusters=8, nprobe=NPROBE, topk=K, overfetch=8, bits_per_dim=bits
         )
-        model = build_index(base, cfg, attr_cols=["label"])
+        model = build_index(base, cfg, attr_cols=["label"], n_rows=n_rows)
         model.index_df = model.index_df.cache()
         store_dir = str(tmp_path_factory.mktemp(f"store{bits}"))
         stored = copy.copy(model)
@@ -73,6 +76,29 @@ def _jobs(spark, tag, run) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def _executed_plans(spark, run) -> list:
+    """The final physical plan of every SQL execution `run()` started, as
+    the SQL status store describes it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()
+        seq = store.executionsList()
+        return {
+            seq.apply(i).executionId(): seq.apply(i) for i in range(seq.size())
+        }
+
+    before = set(ids())
+    run()
+    after = ids()
+    return [e.physicalPlanDescription() for i, e in after.items() if i not in before]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.mark.parametrize("filt", ["none", "index_predicate", "allowed"])
@@ -125,7 +151,8 @@ def test_range_search_driver_path_equals_executor_path(
 def test_driver_path_drops_prep_stage_and_two_jobs(spark, sf_dir, models, monkeypatch):
     """A small batch runs no `prep` Python stage and at least two fewer
     Spark jobs than the executor path (its checkpoint and probe-count jobs
-    are gone); the probe geometry in the metrics costs no extra job."""
+    are gone). The probe geometry and the driver tail's counts in the
+    metrics cost no extra job."""
     model = models[(1, False)]
     queries = _queries(spark, sf_dir, "float")
 
@@ -134,25 +161,108 @@ def test_driver_path_drops_prep_stage_and_two_jobs(spark, sf_dir, models, monkey
 
     run_search()  # warm: codegen and Python workers are per-process costs
     driver_jobs = _jobs(spark, "driver_path:driver", run_search)
-    with_metrics = _jobs(
-        spark, "driver_path:metrics", lambda: run_search(SearchMetrics())
-    )
+    met = SearchMetrics()
+    with_metrics = _jobs(spark, "driver_path:metrics", lambda: run_search(met))
     with monkeypatch.context() as m:
         _executor_path(m)
         executor_jobs = _jobs(spark, "driver_path:executor", run_search)
     assert driver_jobs <= executor_jobs - 2, (driver_jobs, executor_jobs)
     assert with_metrics == driver_jobs
+    # through the driver tail: rough and precise counted from its arrays,
+    # the base rows observed inside its one base job (a base join reads
+    # the whole base)
+    assert set(met.counts) == {"rough_count", "precise_count"}
+    assert 0 < met.precise_count <= met.rough_count
+    assert met.rerank_base_rows == model.n_rows
 
     # at full coverage the executor path keeps prep in the search plan (no
     # checkpoint cuts it off), so the plan check below can see it
     def plan(nprobe):
-        df = search(model, queries, topk=K, nprobe=nprobe)
-        return df._jdf.queryExecution().executedPlan().toString()
+        return _plan(search(model, queries, topk=K, nprobe=nprobe))
 
     assert "MapInPandas prep(" not in plan(model.n_clusters)
     with monkeypatch.context() as m:
         _executor_path(m)
         assert "MapInPandas prep(" in plan(model.n_clusters)
+
+
+def test_driver_batch_returns_local_relation(
+    spark, sf_dir, models, monkeypatch, tmp_path
+):
+    """A driver batch runs its jobs inside search() and returns a local
+    relation: over a saved model's plain scans, no executor ran a Python
+    stage or a window, where the executor path runs the `rr` rerank and
+    two window top-ks."""
+    path = str(tmp_path / "model")
+    models[(1, False)].save(path)
+    model = RaBitQModel.load(spark, path)
+    queries = _queries(spark, sf_dir, "float")
+    met = SearchMetrics()
+    out = []
+    plans = _executed_plans(
+        spark, lambda: out.append(search(model, queries, topk=K, metrics=met))
+    )
+    assert met.kernel == "jvm"
+    assert _plan(out[0]).startswith("LocalTableScan")
+    assert plans
+    for p in plans:
+        assert "MapInPandas" not in p and "Window" not in p, p
+    with monkeypatch.context() as m:
+        _executor_path(m)
+        plans = _executed_plans(
+            spark, lambda: search(model, queries, topk=K).collect()
+        )
+    assert any("MapInPandas" in p for p in plans)
+    assert any("Window" in p for p in plans)
+
+
+@pytest.mark.parametrize("bound", ["candidates", "base_rows"])
+def test_over_bound_batch_takes_executor_tail(
+    spark, sf_dir, models, monkeypatch, bound
+):
+    """A driver batch whose candidate-stream or base-row bound passes its
+    cap keeps the executor tail (window top-R, `rr` rerank, window top-k)
+    over the same driver query matrix, and returns the same frame."""
+    model = models[(1, False)]
+    queries = _queries(spark, sf_dir, "float")
+    want = _sorted(search(model, queries, topk=K))
+    if bound == "candidates":
+        # the probe table still fits: the batch stays on the driver path
+        row_bytes = search_mod._probe_row_bytes(model)
+        monkeypatch.setattr(
+            search_mod, "_ARROW_MAX_PROBE_BYTES", NQ * NPROBE * row_bytes
+        )
+    else:
+        # the query matrix still fits, the shortlisted base rows do not
+        monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", NQ * model.dim * 8)
+    assert search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE)
+    df = search(model, queries, topk=K)
+    plan = _plan(df)
+    assert not plan.startswith("LocalTableScan") and "Window" in plan
+    pd.testing.assert_frame_equal(_sorted(df), want, check_exact=True)
+
+
+@pytest.mark.parametrize("bits", [1, 4])
+def test_driver_tail_filtered_base_collect(spark, sf_dir, models, monkeypatch, bits):
+    """A base too large to collect whole is read through one `orig_id IN
+    (...)` filter over the distinct shortlisted ids; the frame is the
+    executor path's and the metric still counts every base row scanned."""
+    model = models[(bits, False)]
+    queries = _queries(spark, sf_dir, "float")
+    r = K * search_mod.auto_overfetch(model, NPROBE, K)
+    # the shortlist's rows fit the cap, the whole base does not
+    shortlist_bytes = NQ * r * model.dim_pad * 4
+    assert shortlist_bytes < model.n_rows * model.dim_pad * 4
+    monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", shortlist_bytes)
+    met = SearchMetrics()
+    df = search(model, queries, topk=K, metrics=met)
+    assert _plan(df).startswith("LocalTableScan")
+    driver = _sorted(df)
+    with monkeypatch.context() as m:
+        _executor_path(m)
+        executor = _sorted(search(model, queries, topk=K))
+    pd.testing.assert_frame_equal(driver, executor, check_exact=True)
+    assert met.rerank_base_rows == model.n_rows
 
 
 def test_duplicate_query_ids_keep_executor_path(spark, sf_dir, models):

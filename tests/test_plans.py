@@ -82,9 +82,15 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS test_customer_bkt")
 
 
-def test_ann_search_plan_shape(spark, sf_dir):
+def test_ann_search_plan_shape(spark, sf_dir, monkeypatch):
+    """The executor tail's plan: a batch past the driver caps (patched to
+    0 here) broadcasts its probes and cuts both top-ks with
+    WindowGroupLimit. A driver batch finishes on the driver instead
+    (tests/test_driver_path.py)."""
     from rabitq_spark.config import RaBitQConfig
-    from rabitq_spark.index import build_index, search
+    from rabitq_spark.index import build_index, search, vecstore
+
+    monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", 0)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))

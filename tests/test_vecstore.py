@@ -127,13 +127,33 @@ def test_adaptive_with_store_bitexact(spark, gappy_base, stored_model):
     pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
+def _shortlist_ids(model, queries) -> pd.Series:
+    """The orig_ids of search()'s default top-R shortlist for `queries`,
+    built by the executor tail's window plan (every kernel shortlists the
+    same rows)."""
+    import importlib
+
+    search_mod = importlib.import_module("rabitq_spark.index.search")
+    nprobe = model.config.nprobe
+    probes, _, counts, _ = search_mod._prepare_batch(
+        model, queries, "query_id", "qvec", nprobe, True
+    )
+    r = K * search_mod.auto_overfetch(model, nprobe, K)
+    shortlist = search_mod._shortlist(
+        model, "jvm", r, probes=probes, clusters=counts
+    )
+    return shortlist.toPandas()["orig_id"]
+
+
 def test_rerank_rows_candidate_bound(spark, gappy_base, stored_model):
     queries = _queries(spark, gappy_base)
     m = SearchMetrics()
     res = search(stored_model, queries, topk=K, metrics=m).toPandas()
     assert len(res) > 0
-    # store plan: rows read == candidates (== precise_count), never ~base
-    assert m.rerank_base_rows == m.precise_count
+    # store plan: each distinct shortlisted id is read once, never ~base
+    ids = _shortlist_ids(stored_model, queries)
+    assert m.precise_count == len(ids)
+    assert m.rerank_base_rows == ids.nunique()
     assert m.rerank_base_rows < 600
 
     m2 = SearchMetrics()
@@ -524,7 +544,8 @@ def test_save_auto_builds_store_at_threshold(spark, gappy_base, tmp_path):
         search(loaded, queries, topk=K, metrics=m)
         .toPandas().sort_values(["query_id", "rank"], ignore_index=True)
     )
-    assert m.rerank_base_rows == m.precise_count  # candidate-bound
+    # candidate-bound: each distinct shortlisted id read once
+    assert m.rerank_base_rows == _shortlist_ids(loaded, queries).nunique()
     assert m.rerank_base_rows < len(ids)
     want = (
         search(model, queries, topk=K)
