@@ -1440,6 +1440,16 @@ def _gaussian_base(spark, n_base: int, dim: int):
     )
 
 
+def _require_kernel(arm: str, want: str, ran: list, reason=None) -> None:
+    """A bench arm that forces a kernel must run it: `ran` is the kernel
+    of each search (metrics.kernel) or wave (stats["wave_kernels"]). An
+    arm that silently ran another kernel would measure the wrong thing,
+    so it fails loudly instead."""
+    wrong = sorted(set(ran) - {want})
+    if wrong:
+        raise RuntimeError(f"{arm} forced {want} but ran {wrong}: {reason}")
+
+
 def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
     """Gaussian-mixture base; measures the IVF and brute paths at a base
     size past BRUTE_FORCE_MAX_BASE, where the cost rule switches to IVF."""
@@ -1650,10 +1660,12 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
         search(model, batches[0].limit(10)).write.format("noop").mode(
             "overwrite"
         ).save()
+        warm: dict = {}
         search_adaptive(
             model, batches[0].limit(10), topk=TOPK, wave0=16,
-            wave_growth=4.0, max_probes=cfg.nprobe, kernel="jvm",
+            wave_growth=4.0, max_probes=cfg.nprobe, kernel="jvm", stats=warm,
         ).write.format("noop").mode("overwrite").save()
+        _require_kernel("seq_latency warm-up", "jvm", warm["wave_kernels"])
         t0 = time.perf_counter()
         static_res = [
             search(model, b, topk=TOPK).toPandas() for b in batches
@@ -1675,6 +1687,7 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
                     max_probes=cfg.nprobe, kernel="jvm", stats=st,
                 ).toPandas()
             )
+            _require_kernel("seq_latency adaptive", "jvm", st["wave_kernels"])
             probes_total += st["avg_probes_per_query"] * seq_bs
         seq_adaptive_s = time.perf_counter() - t0
         exact_keys = exact[["query_id", "neighbor_id"]]
@@ -1735,20 +1748,21 @@ def _scale_probe(spark, n_base: int, nq: int, dim: int = 256) -> dict:
     )
     recall4 = len(hits4) / max(len(exact), 1)
     sub4 = queries.limit(200).localCheckpoint(eager=True)
+    met4_jvm = SearchMetrics(observe_rough=False, observe_precise=False)
     t0 = time.perf_counter()
-    jvm4 = search(model4, sub4, impl="jvm").toPandas()
+    jvm4 = search(model4, sub4, impl="jvm", metrics=met4_jvm).toPandas()
     slice4_jvm_s = time.perf_counter() - t0
+    _require_kernel(
+        "multibit4 jvm slice", "jvm", [met4_jvm.kernel], met4_jvm.kernel_reason
+    )
     met4_arrow = SearchMetrics(observe_rough=False, observe_precise=False)
     t0 = time.perf_counter()
     arrow4 = search(model4, sub4, impl="arrow", metrics=met4_arrow).toPandas()
     slice4_arrow_s = time.perf_counter() - t0
-    if met4_arrow.kernel != "arrow":
-        # a forced arm that silently ran another kernel would measure the
-        # wrong thing — fail loudly instead
-        raise RuntimeError(
-            f"multibit4 arrow slice ran {met4_arrow.kernel}: "
-            f"{met4_arrow.kernel_reason}"
-        )
+    _require_kernel(
+        "multibit4 arrow slice", "arrow", [met4_arrow.kernel],
+        met4_arrow.kernel_reason,
+    )
     mb_equal = arrow4.sort_values(
         ["query_id", "rank"], ignore_index=True
     ).equals(jvm4.sort_values(["query_id", "rank"], ignore_index=True))

@@ -35,12 +35,12 @@ Scale shape: the driver holds only the query batch (the documented small
 side, same contract as knn_exact_fast and the fused shortlist), the
 (nq x n_clusters) centroid-distance matrix, per-cluster radii
 (n_clusters floats, one tiny agg job, memoized on the model), and the
-accumulated top-k (nq x k rows). Each wave runs over the wave's
-clusters only — search()'s own stages 5-7 on the wave's probe table: the
-partition-pruned jvm scan or the fused Arrow shortlist
-(search._candidates), then search()'s driver tail when its bounds fit
-(search._driver_tail), else the window top-R and vecstore.exact_topk —
-so total index rows touched is exactly the probed set.
+accumulated top-k (nq x k rows). Each wave is one pass of search()'s
+planner over the wave's probe table: search.choose_kernel picks its
+kernel from the wave's geometry, and search._tail runs stages 5-7 with
+search()'s pruning rule and tail — the driver tail when its bounds fit,
+else the window top-R and vecstore.exact_topk. A wave takes the tail's
+rows as pandas, which costs no Spark job on the driver tail.
 Wave sizes double, bounding the number of waves at O(log n_clusters) per
 batch even when a hard query needs wide coverage.
 
@@ -60,18 +60,15 @@ from pyspark.sql import DataFrame, functions as F
 
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import (
-    KERNELS,
-    _candidates,
-    _driver_tail,
-    _driver_tail_fits,
     _query_side,
-    _shortlist,
+    _tail,
     auto_overfetch,
     choose_kernel,
+    cluster_counts,
     quantize_probe_pairs,
     query_geometry,
 )
-from rabitq_spark.index.vecstore import exact_topk, query_matrix
+from rabitq_spark.index.vecstore import query_matrix
 from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark.operators.topk import topk_per_group
 from rabitq_spark._dist import ensure_package_on_executors
@@ -135,19 +132,18 @@ def search_adaptive(
     that retire earlier, which PROVABLY lose nothing). Leave None for the
     exact contract.
 
-    `kernel` picks the per-wave rough scorer: "arrow" runs the value-GEMM
-    Arrow shortlist; "jvm" runs the codegen join (identical results —
-    same estimator, same global top-R trim); "auto" (default) asks
-    search.choose_kernel PER WAVE with the wave's probe geometry — the
-    same rule search() applies. `metrics.kernel` / `kernel_reason`, when
+    `kernel` picks the per-wave rough scorer like search()'s `impl`:
+    "arrow" runs the value-GEMM Arrow shortlist; "jvm" runs the codegen
+    join (identical results — same estimator, same global top-R trim);
+    "auto" (default). search.choose_kernel settles it PER WAVE from the
+    wave's probe geometry — the rule search() applies, with the wave's
+    widest query as its nprobe. `metrics.kernel` / `kernel_reason`, when
     `metrics` is passed, report the last wave's choice.
 
     Reference parity: README.md:20 ("early stop", the one unchecked
     feature the reference never built); the wave loop is the batch
     analogue of a sequential scan breaking out of its posting-list loop.
     """
-    if kernel not in KERNELS:
-        raise ValueError(f"kernel must be one of {KERNELS}, got {kernel!r}")
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
     cfg = model.config
@@ -192,7 +188,9 @@ def search_adaptive(
     live = np.ones(nq, dtype=bool)
     early_retired = np.zeros(nq, dtype=bool)
     id_to_row = {v: i for i, v in enumerate(q_ids)}
-    acc: pd.DataFrame | None = None
+    acc = pd.DataFrame(
+        {"query_id": [], "neighbor_id": [], "dist": []}
+    ).astype({"query_id": np.int64, "neighbor_id": np.int64})
     waves = 0
     wave_kernels: list[str] = []
     probed_total = 0
@@ -271,47 +269,23 @@ def search_adaptive(
                 cfg.theta_log_dim,
             ),
         }
-        probed_set = [int(c) for c in np.unique(ci_arr)]
-        if kernel == "auto":
-            wave_kernel, reason = choose_kernel(
-                model, len(ci_arr), len(probed_set)
-            )
-        else:
-            wave_kernel, reason = kernel, "requested"
+        # search()'s kernel rule and stages 5-7 on the wave's probe table;
+        # a wave probes at most its widest query's clusters per query
+        probe_counts = cluster_counts(ci_arr)
+        wave_kernel, reason = choose_kernel(
+            model, kernel, probe_counts, int(np.bincount(qi_arr).max())
+        )
         wave_kernels.append(wave_kernel)
         if metrics is not None:
             metrics.kernel, metrics.kernel_reason = wave_kernel, reason
-        # search()'s stages 5-7 on the wave's probe table, on the driver
-        # when its bounds fit: the jvm scan is pruned to the wave's
-        # clusters when they are at most half
-        stage5 = dict(
-            block=block,
-            clusters=probed_set if 2 * len(probed_set) <= ncl else None,
-        )
-        max_cluster_probes = int(np.unique(ci_arr, return_counts=True)[1].max())
-        if not isinstance(qv, DataFrame) and _driver_tail_fits(
-            model, max_cluster_probes, nq, r
-        ):
-            cand = _candidates(model, wave_kernel, r, **stage5)
-            wave_res = _driver_tail(model, cand, qv, r, topk).to_pandas()
-        else:
-            shortlist = _shortlist(model, wave_kernel, r, **stage5)
-            wave_res = exact_topk(
-                shortlist, qv, model.rerank_base, topk, id_col="orig_id"
-            ).toPandas()
-        wave_res = wave_res[["query_id", "neighbor_id", "dist"]]
+        wave_res = _tail(
+            model, wave_kernel, r, topk, qv, probe_counts, local=True, block=block
+        )[["query_id", "neighbor_id", "dist"]]
 
         acc = (
-            wave_res
-            if acc is None
-            else pd.concat([acc, wave_res], ignore_index=True).drop_duplicates(
-                ["query_id", "neighbor_id"]
-            )
-        )
-        acc = (
-            acc.sort_values(
-                ["query_id", "dist", "neighbor_id"], ignore_index=True
-            )
+            pd.concat([acc, wave_res], ignore_index=True)
+            .drop_duplicates(["query_id", "neighbor_id"])
+            .sort_values(["query_id", "dist", "neighbor_id"], ignore_index=True)
             .groupby("query_id", sort=False)
             .head(topk)
             .reset_index(drop=True)
@@ -331,10 +305,6 @@ def search_adaptive(
         stats["forced_final_wave"] = forced_final
         stats["wave_kernels"] = wave_kernels
 
-    if acc is None:
-        acc = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "dist": []}
-        )
     out = spark.createDataFrame(
         acc, "query_id bigint, neighbor_id bigint, dist double"
     )

@@ -28,6 +28,7 @@ from rabitq_spark._dist import ensure_package_on_executors
 from rabitq_spark.config import RaBitQConfig
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.rotation import apply_rot, apply_rot_T
+from rabitq_spark.index.search import pack_planes
 
 INDEX_SCHEMA = (
     "cluster_id int, orig_id bigint, code array<bigint>, "
@@ -453,7 +454,6 @@ def build_index(
         dim_sqrt = np.float32(np.sqrt(np.float32(dim_pad)))
         # error_base = 2ε/sqrt(dim-1)  (src/rabitq.rs:220)
         error_base = np.float32(2.0 * epsilon / np.sqrt(dim_pad - 1.0))
-        n_words = dim_pad // 64
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -484,21 +484,10 @@ def build_index(
                     (resid - b_lb[:, None]) * mult[:, None] + bias[None, :]
                 ).astype(np.uint16)
                 b_sum = u.sum(axis=1, dtype=np.uint32).astype(np.float32)
-                planes = np.empty((bits, len(u), n_words), dtype=np.uint64)
-                for p in range(bits):
-                    pb = ((u >> p) & 1).astype(np.uint8)
-                    planes[p] = np.packbits(pb, axis=1, bitorder="little").view(
-                        np.uint64
-                    )
-                mcodes = (
-                    planes.transpose(1, 0, 2)
-                    .reshape(len(u), bits * n_words)
-                    .view(np.int64)
-                )
                 out = {
                     "cluster_id": labels.astype(np.int32),
                     "orig_id": pdf["orig_id"].values,
-                    "code": list(mcodes),
+                    "code": list(pack_planes(u, bits)),
                     "b_lb": b_lb,
                     "b_delta": b_delta,
                     "b_sum": b_sum,

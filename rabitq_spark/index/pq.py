@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from rabitq_spark._dist import ensure_package_on_executors
-from rabitq_spark.index.search import cluster_filter
+from rabitq_spark.index.search import cluster_filter, local_cut
 from rabitq_spark.index.vecstore import collect_queries, exact_topk, query_matrix
 from rabitq_spark.operators.topk import topk_per_group
 
@@ -392,11 +392,10 @@ def adc_shortlist(
     Σ_j luts[q, j, codes[b, j]] of every (query, coded row) pair, cut to a
     local top-R per query. Yields (query_id, neighbor_id, __rough) frames.
 
-    The cut keeps EVERY row whose rough value is ≤ its query's R-th
-    smallest, as index/search.py::_fused_shortlist does. Identical codes
-    tie exactly, and the rows tied at the R-th value are all kept, so the
-    downstream top-R on (rough, neighbor_id) returns the same shortlist
-    whatever rows share an Arrow batch or a partition.
+    The cut is index/search.py::local_cut, the one of the RaBitQ Arrow
+    plan: identical codes tie exactly, and the rows tied at the R-th value
+    are all kept, so the downstream top-R on (rough, neighbor_id) returns
+    the same shortlist whatever rows share an Arrow batch or a partition.
 
     Kernel by ksub (PLAN.md, Round 7, part 8): at ksub ≤ 32 the whole ADC
     is ONE one-hot GEMM per query block (the FAISS PQx4fs regime, 3-32×
@@ -421,11 +420,7 @@ def adc_shortlist(
             for j in range(m):
                 acc_t += lut_t[j][codes[:, j]]
             acc = acc_t.T
-        if r < rows:
-            kth = np.partition(acc, r - 1, axis=1)[:, r - 1 : r]
-            qi, bi = np.nonzero(acc <= kth)
-        else:
-            qi, bi = np.divmod(np.arange(acc.size), rows)
+        qi, bi = local_cut(acc, r)
         yield pd.DataFrame(
             {
                 "query_id": q_ids[lo + qi],

@@ -5,14 +5,18 @@ A bounded batch (its float64 query matrix within
 vecstore.QUERY_MATRIX_MAX_BYTES, its probe table within
 _ARROW_MAX_PROBE_BYTES, unique integer query ids) is collected ONCE to the
 driver, where the reference runs stages 1-4 too: per query, before any
-scan. That one copy feeds every stage below. When the model knows n_rows
-and the batch's candidate stream and shortlisted base rows fit their
-driver caps (_driver_tail_fits), stages 6-7 finish on the driver as well,
-the way the reference reranks in process (src/rerank.rs:62-114). Any
-other batch, and any batch whose caller passes broadcast_probes=False,
-keeps the executor path: stages 1-4 as a mapInPandas, a checkpoint and a
-count job for the probe geometry, the query vectors joined back for
-stage 7.
+scan. That one copy feeds every stage below. Any other batch, and any
+batch whose caller passes broadcast_probes=False, keeps the executor path:
+stages 1-4 as a mapInPandas, a checkpoint and a count job for the probe
+geometry (only while nprobe·2 ≤ n_clusters), the query vectors joined back
+for stage 7.
+
+The planner: like the reference, a batch takes one decision per stage,
+and search(), range_search() and every search_adaptive wave take it in
+the same function — the kernel in choose_kernel (validation, coverage,
+filtering, unknown geometry, the probe-byte cap, the floors), the index
+pruning in _pruning_set, and the tail of stages 5-7 in _tail (range_search
+filters its candidates instead of cutting a top-R).
 
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
@@ -26,14 +30,13 @@ Stages:
        broadcast; index side partition-pruned by the probed cluster set),
        then the D5 estimator as one SQL expression (whole-stage codegen;
        src/rabitq.rs:336-367) — _rough_candidates — or the Arrow
-       value-GEMM kernel (_fused_shortlist). _candidates builds stage 5
-       for search() and every search_adaptive wave; range_search filters
-       _rough_candidates instead.
+       value-GEMM kernel (_fused_shortlist), both behind _candidates.
   6.   top-R rough candidates per query on (rough, orig_id) — the batch
        substitute for the sequential heap threshold (src/rerank.rs:62-114).
-       The driver tail (_driver_tail) collects the stage-5 stream once and
-       cuts it with top_n in numpy; the executor tail (_shortlist) cuts it
-       with a WindowGroupLimit window.
+       The driver tail (_driver_tail, when _driver_tail_fits) collects the
+       stage-5 stream once and cuts it with top_n in numpy — REPOSE's
+       local top-R and one merge (PAPERS.md); the executor tail
+       (_shortlist) cuts it with a WindowGroupLimit window.
   7.   exact rerank and the final top-k per query on (dist, neighbor_id),
        exact squared-L2 in double precision (vecstore.l2_fold). The driver
        tail reads each distinct shortlisted id's base row once — a
@@ -110,9 +113,6 @@ def quantize_probe_pairs(
     pairs, `d2` the (nq, n_clusters) squared centroid distances. Every op
     is elementwise per pair. `qplanes` comes back as one (npairs,
     theta_log_dim·n_words) int64 array."""
-    dim_pad = cp.shape[1]
-    n_words = dim_pad // 64
-    npairs = len(qi)
     resid = (yp[qi] - cp[ci]).astype(np.float32)  # (npairs, dim_pad)
     lb = resid.min(axis=1).astype(np.float32)
     ub = resid.max(axis=1).astype(np.float32)
@@ -123,15 +123,6 @@ def quantize_probe_pairs(
         np.uint8
     )
     scalar_sum = qu.sum(axis=1, dtype=np.uint32).astype(np.float32)
-    planes = np.empty((theta_log_dim, npairs, n_words), dtype=np.uint64)
-    for p in range(theta_log_dim):
-        bits = ((qu >> p) & 1).astype(np.uint8)
-        planes[p] = np.packbits(bits, axis=1, bitorder="little").view(np.uint64)
-    qplanes = (
-        planes.transpose(1, 0, 2)
-        .reshape(npairs, theta_log_dim * n_words)
-        .view(np.int64)
-    )
     y_c = d2[qi, ci].astype(np.float32)
     np.maximum(y_c, 0.0, out=y_c)
     return {
@@ -140,7 +131,7 @@ def quantize_probe_pairs(
         "lower_bound": lb,
         "delta": delta,
         "scalar_sum": scalar_sum,
-        "qplanes": qplanes,
+        "qplanes": pack_planes(qu, theta_log_dim),
     }
 
 
@@ -371,12 +362,27 @@ def value_gemm_dtype(dim_pad: int, theta_log_dim: int, bits: int):
     return np.float32 if bound < 1 << 24 else np.float64
 
 
+def pack_planes(u: "np.ndarray", n_planes: int) -> "np.ndarray":
+    """Per-dim unsigned integer values (n, n_words·64) → their low
+    `n_planes` bit-planes, packed bitorder little into one (n,
+    n_planes·n_words) int64 array, plane-major words per row — the query
+    planes of stage 4 and build_index's multi-bit codes. The inverse of
+    unpack_plane_values."""
+    n, width = u.shape
+    n_words = width // 64
+    planes = np.empty((n_planes, n, n_words), dtype=np.uint64)
+    for p in range(n_planes):
+        bits = ((u >> p) & 1).astype(np.uint8)
+        planes[p] = np.packbits(bits, axis=1, bitorder="little").view(np.uint64)
+    return planes.transpose(1, 0, 2).reshape(n, n_planes * n_words).view(np.int64)
+
+
 def unpack_plane_values(
     planes: "np.ndarray", n_planes: int, dtype=np.float32
 ) -> "np.ndarray":
     """Packed bit-plane tensor (n, n_planes, n_words) int64 → per-dim
     integer values (n, n_words·64) as `dtype`: v[d] = Σ_p 2^p · bit_p[d]
-    (bitorder little — the inverse of quantize_probe_pairs' packbits)."""
+    (bitorder little — the inverse of pack_planes)."""
     n, stored_planes, n_words = planes.shape
     # unpack EVERY plane's words in one contiguous pass (8× the per-plane
     # slice-copy-unpack loop: one C call over one buffer), then fold the
@@ -424,6 +430,20 @@ def top_n(group, key, tie, n: int, ranks: bool = False):
     return order[keep]
 
 
+def local_cut(rough: "np.ndarray", r: int) -> tuple:
+    """The local top-R cut of a (queries, rows) rough matrix: (qi, ci),
+    row-major, of every entry ≤ its query's R-th smallest value — all of
+    them when a query has at most R rows. Every row tied at the R-th value
+    is kept, so a later top-R on (rough, id) over the survivors equals one
+    global pass, whatever rows shared a batch or a partition. np.partition
+    is O(rows) per query, against a full sort of every candidate."""
+    m = rough.shape[1]
+    if r < m:
+        kth = np.partition(rough, r - 1, axis=1)[:, r - 1 : r]
+        return np.nonzero(rough <= kth)
+    return np.divmod(np.arange(rough.size), m)
+
+
 #: Worker-buffer row budget for _fused_shortlist's partition-level top-R
 #: accumulation (~100 MB at 24 bytes/row). Exhaustive configs (r ≥ buffer)
 #: emit partial chunks instead of holding the whole partition.
@@ -434,14 +454,15 @@ def _fused_shortlist(
     model: RaBitQModel,
     block: dict,
     r: int,
-    theta_log_dim: int,
+    clusters=None,
 ) -> DataFrame:
     """The Arrow plan for stages 5-6: rough-score candidates and keep a
     local top-R per query inside ONE mapInPandas over the index — the probe
     table rides as a broadcast keyed by cluster.
 
     `block` is the probe table on the driver, as prepare_probe_block's
-    columns (probe_block_of turns a collected probe frame into one).
+    columns (probe_block_of turns a collected probe frame into one);
+    `clusters`, when given, prunes the index scan (_pruning_set).
 
     Trades the JVM join+window for numpy batch math plus a much smaller
     window input (≤ R rows per query per index partition instead of every
@@ -460,6 +481,7 @@ def _fused_shortlist(
     spark = model.index_df.sparkSession
     ensure_package_on_executors(spark)
     n_words = model.n_words
+    theta_log_dim = model.config.theta_log_dim
     bits = model.config.bits_per_dim
     dim_pad = model.dim_pad
     dtype = value_gemm_dtype(dim_pad, theta_log_dim, bits)
@@ -568,26 +590,13 @@ def _fused_shortlist(
                         - eb[None, :]
                         * np.sqrt(ycd.astype(np.float64))[:, None]
                     )
-                ids = grp["orig_id"].values.astype(np.int64)
-                if m > r:
-                    # EXACT per-query prefilter before the lexsort-based
-                    # top-R: keep rows with rough <= the r-th smallest per
-                    # query (np.partition is O(m) per row vs the previous
-                    # full-matrix lexsort feed). Every boundary TIE is
-                    # kept, so this is a superset of the true top-R and
-                    # the stable (rough, orig_id) trim below is unchanged
-                    # in semantics — it just runs on ~nq×r rows instead
-                    # of nq×m (the round-7 Amdahl item: selection, not
-                    # the estimator, dominated the Arrow path)
-                    kth = np.partition(rough, r - 1, axis=1)[:, r - 1 : r]
-                    qi, ci = np.nonzero(rough <= kth)
-                    out_q.append(qids[qi])
-                    out_id.append(ids[ci])
-                    out_rough.append(rough[qi, ci])
-                else:
-                    out_q.append(np.repeat(qids, m))
-                    out_id.append(np.tile(ids, len(qids)))
-                    out_rough.append(rough.ravel())
+                # the lexsort-based top-R below then runs on ~nq×r rows
+                # instead of nq×m (the round-7 Amdahl item: selection, not
+                # the estimator, dominated the Arrow path)
+                qi, ci = local_cut(rough, r)
+                out_q.append(qids[qi])
+                out_id.append(grp["orig_id"].values.astype(np.int64)[ci])
+                out_rough.append(rough[qi, ci])
             if not out_q:
                 continue
             # per-batch trim bounds the buffer; the partition-level trim
@@ -629,10 +638,9 @@ def _fused_shortlist(
         )
         yield pd.DataFrame({"query_id": q, "orig_id": i, "rough": ro})
 
-    # Partition pruning for free: the probe table is already on the driver
     index = model.index_df
-    if 2 * len(by_cluster) <= model.n_clusters:
-        index = index.filter(cluster_filter(by_cluster))
+    if clusters is not None:
+        index = index.filter(cluster_filter(clusters))
     return index.mapInPandas(
         score, "query_id bigint, orig_id bigint, rough double"
     )
@@ -687,15 +695,16 @@ def _candidates(
     tap=None,
 ) -> DataFrame:
     """Stage 5 for search() and every search_adaptive wave: rough-score
-    with `kernel` — "arrow" runs _fused_shortlist over the driver probe
-    `block` (which prunes to the block's clusters itself and already cuts
-    each partition to its local top-R), "jvm" runs _rough_candidates over
-    the probe frame `probes` (built from `block` when None) with the
-    caller's pruning set `clusters`. `tap`, when given, wraps the stream
-    (search()'s allowed-id filter and rough observer). Returns (query_id,
+    with `kernel` over the index pruned to `clusters` — "arrow" runs
+    _fused_shortlist (a local top-R per partition) over the driver probe
+    `block`, "jvm" _rough_candidates over the probe frame `probes`; either
+    is built from the other when None. `tap`, when given, wraps the stream
+    (_tail's allowed-id filter and rough observer). Returns (query_id,
     orig_id, rough)."""
     if kernel == "arrow":
-        cand = _fused_shortlist(model, block, r, model.config.theta_log_dim)
+        if block is None:
+            block = probe_block_of(probes.toPandas())
+        cand = _fused_shortlist(model, block, r, clusters)
     else:
         if probes is None:
             probes = probe_frame(model.index_df.sparkSession, block)
@@ -901,13 +910,43 @@ KERNELS = ("auto", "jvm", "arrow")
 
 
 def choose_kernel(
-    model: RaBitQModel, n_probe_rows: int, n_probed_clusters: int
+    model: RaBitQModel,
+    impl: str,
+    probe_counts: "dict | None",
+    nprobe: int,
+    filtered: bool = False,
 ) -> tuple[str, str]:
-    """The auto-dispatch rule — the one place the jvm/Arrow floors live.
-    Returns ("jvm" | "arrow", reason) for a probe table of `n_probe_rows`
-    (query, cluster) pairs over `n_probed_clusters` distinct clusters.
-    search() and every search_adaptive wave call it; every kernel is
-    bit-identical, so the choice can never change a result row."""
+    """The kernel rule of search() and every search_adaptive wave — the one
+    place a kernel is validated, chosen or demoted. Returns ("jvm" |
+    "arrow", reason) for `impl` (one of KERNELS) over a probe table with
+    {cluster_id: probe rows} `probe_counts` (None when the executor path
+    did not resolve it) and at most `nprobe` probed clusters per query.
+    Every kernel is bit-identical, so the choice never changes a result
+    row. In order: "jvm" is honoured; "auto" keeps the jvm join when
+    nprobe covers over half the clusters — the batch scans most of the
+    index, and the executor path would pay a checkpoint and a count job
+    to resolve the geometry (at the sf0.1 headline shape, nprobe 28 of 32
+    clusters, ~10% of the whole search); a filtered search runs on the
+    jvm plan, as the Arrow plan reads the unfiltered model tables; so
+    does an unknown geometry, or a probe table over _ARROW_MAX_PROBE_BYTES
+    (the Arrow plan broadcasts it from the driver); then "arrow" is
+    honoured, and "auto" asks the floors below."""
+    if impl not in KERNELS:
+        raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
+    if impl == "jvm":
+        return "jvm", "requested"
+    if impl == "auto" and 2 * nprobe > model.n_clusters:
+        return "jvm", "nprobe covers over half the clusters"
+    if filtered:
+        return "jvm", "filtered search runs on the jvm plan"
+    if probe_counts is None:
+        return "jvm", "probe geometry unknown"
+    n_probe_rows = sum(probe_counts.values())
+    probe_bytes = n_probe_rows * _probe_row_bytes(model)
+    if probe_bytes > _ARROW_MAX_PROBE_BYTES:
+        return "jvm", f"probe table {probe_bytes} B > cap {_ARROW_MAX_PROBE_BYTES} B"
+    if impl == "arrow":
+        return "arrow", "requested"
     # avg cluster size uses model.n_rows when the builder recorded it, else
     # n_clusters (exact under k ≈ √n sizing)
     avg_cluster = (
@@ -923,7 +962,7 @@ def choose_kernel(
         return "arrow", f"est_pairs {est_pairs:.3g} >= {floor:.3g}"
     if est_pairs < _ARROW_MIN_PAIRS:
         return "jvm", f"est_pairs {est_pairs:.3g} < {_ARROW_MIN_PAIRS:.3g}"
-    q_per_cluster = n_probe_rows / max(n_probed_clusters, 1)
+    q_per_cluster = n_probe_rows / max(len(probe_counts), 1)
     if q_per_cluster < _ARROW_MIN_QUERIES_PER_CLUSTER:
         return "jvm", (
             f"{q_per_cluster:.3g} queries/cluster < "
@@ -932,6 +971,76 @@ def choose_kernel(
     return "arrow", (
         f"est_pairs {est_pairs:.3g}, {q_per_cluster:.3g} queries/cluster"
     )
+
+
+def _pruning_set(model: RaBitQModel, probe_counts: "dict | None"):
+    """The pruning rule of every stage-5 scan, either kernel: the probed
+    clusters as the `cluster_id IN (...)` set when they are at most half
+    the index, else None — a wider set prunes little, and its literal list
+    costs analysis. nprobe·2 > n_clusters already rules pruning out, so
+    the executor path pays its count job only below it."""
+    if probe_counts is not None and 2 * len(probe_counts) <= model.n_clusters:
+        return probe_counts
+    return None
+
+
+def _tail(
+    model: RaBitQModel,
+    kernel: str,
+    r: int,
+    k: int,
+    qv,
+    probe_counts: "dict | None",
+    metrics: "SearchMetrics | None" = None,
+    allowed: "DataFrame | None" = None,
+    local: bool = False,
+    **stage5,
+):
+    """Stages 5-7 of search() and every search_adaptive wave, the one place
+    that picks their tail: _driver_tail, as a local relation, when the
+    query side `qv` is a driver matrix and _driver_tail_fits; else the
+    window top-R (_shortlist) and vecstore.exact_topk, with `metrics`'
+    observers. `allowed`, a one-column frame of permitted ids, is
+    semi-joined against the candidates; `stage5` goes to _candidates,
+    pruned by _pruning_set. Returns (query_id, neighbor_id, dist, rank) —
+    as pandas with `local`: the driver tail's table at no job (toPandas()
+    of its local relation would start one), else one collect."""
+    stage5["clusters"] = _pruning_set(model, probe_counts)
+    on_driver = not isinstance(qv, DataFrame) and _driver_tail_fits(
+        model, max(probe_counts.values(), default=0), len(qv[0]), r
+    )
+
+    def tap(cand: DataFrame) -> DataFrame:
+        if allowed is not None:
+            ok = allowed.select(F.col(allowed.columns[0]).alias("orig_id"))
+            cand = cand.join(ok.distinct(), "orig_id", "left_semi")
+        if not on_driver and metrics is not None and metrics.observe_rough:
+            # A10 rough-candidate counter (src/metrics.rs analogue, no
+            # extra pass — but the CollectMetrics node splits the codegen
+            # span; see SearchMetrics.observe_rough for the at-scale cost).
+            # The driver tail counts from its arrays instead.
+            cand = cand.observe(
+                metrics.rough, F.count(F.lit(1)).alias("rough_count")
+            )
+        return cand
+
+    if on_driver:
+        cand = _candidates(model, kernel, r, tap=tap, **stage5)
+        table = _driver_tail(model, cand, qv, r, k, metrics)
+        if local:
+            return table.to_pandas()
+        return model.index_df.sparkSession.createDataFrame(table, _RESULT_SCHEMA)
+    shortlist = _shortlist(model, kernel, r, tap=tap, **stage5)
+    if metrics is not None and metrics.observe_precise:
+        # CollectMetrics directly above the top-R filter defeats the
+        # WindowGroupLimit pre-shuffle trim at scale — see
+        # SearchMetrics.observe_precise for the bisected cost
+        shortlist = shortlist.observe(
+            metrics.precise, F.count(F.lit(1)).alias("precise_count")
+        )
+    # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k)
+    out = exact_topk(shortlist, qv, model.rerank_base, k, metrics, id_col="orig_id")
+    return out.toPandas() if local else out
 
 
 def _probe_row_bytes(model: RaBitQModel) -> int:
@@ -976,6 +1085,12 @@ def _driver_batch(
         nprobe,
     )
     return ids, qmat, block
+
+
+def cluster_counts(cluster_ids: "np.ndarray") -> dict:
+    """A driver probe table's geometry: {cluster_id: probe rows}."""
+    cids, counts = np.unique(cluster_ids, return_counts=True)
+    return dict(zip(cids.tolist(), counts.tolist()))
 
 
 def _probe_counts(probes: DataFrame) -> tuple[DataFrame, dict]:
@@ -1025,8 +1140,9 @@ def _prepare_batch(
     """Stages 1-4 for search() and range_search(): on the driver when
     `on_driver` holds and _driver_batch takes the batch, else on the
     executors. Returns (probes, block, probe_counts, qv): the probe table,
-    the driver probe block and its {cluster_id: probe rows} (both None on
-    the executor path), and the stage-7 query side exact_rerank takes."""
+    the driver probe block (else None), its {cluster_id: probe rows} (None
+    on the executor path unless nprobe·2 ≤ n_clusters: _pruning_set), and
+    the stage-7 query side exact_rerank takes."""
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
     driver = (
@@ -1034,17 +1150,15 @@ def _prepare_batch(
         if on_driver
         else None
     )
-    if driver is None:
-        return (
-            _prepare_probes(model, queries, query_id, query_vec, nprobe),
-            None,
-            None,
-            _query_side(model, queries, query_id, query_vec),
-        )
-    qids, qmat, block = driver
-    cids, counts = np.unique(block["cluster_id"], return_counts=True)
-    probe_counts = dict(zip(cids.tolist(), counts.tolist()))
-    return probe_frame(spark, block), block, probe_counts, (qids, qmat)
+    if driver is not None:
+        qids, qmat, block = driver
+        probes = probe_frame(spark, block)
+        return probes, block, cluster_counts(block["cluster_id"]), (qids, qmat)
+    probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
+    probe_counts = None
+    if 2 * nprobe <= model.n_clusters:
+        probes, probe_counts = _probe_counts(probes)
+    return probes, None, probe_counts, _query_side(model, queries, query_id, query_vec)
 
 
 def search(
@@ -1105,23 +1219,17 @@ def search(
     model.n_rows when the builder recorded it and otherwise n_clusters
     itself (exact under the standard n_clusters ≈ √n sizing).
 
-    `impl` picks the rough-scoring kernel — both produce bit-identical
-    frames (impl-equality tests): "jvm" is the codegen broadcast-join
-    plan, "arrow" the value-GEMM mapInPandas plan (_fused_shortlist). The
-    default "auto" keeps the jvm join when nprobe covers more than half
-    the clusters and otherwise asks choose_kernel, which reads the probe
-    geometry. An explicit "arrow" is honoured unless the search is
-    filtered or the probe table exceeds the driver byte cap; either
-    demotes it to "jvm". `metrics.kernel` / `metrics.kernel_reason` report
-    the kernel that ran and why; `metrics.probe_rows` /
+    `impl` asks for the rough-scoring kernel — "jvm", the codegen
+    broadcast-join plan, "arrow", the value-GEMM mapInPandas plan
+    (_fused_shortlist), or "auto" — under choose_kernel's rule; both give
+    bit-identical frames. `metrics.kernel` / `metrics.kernel_reason`
+    report the kernel that ran and why; `metrics.probe_rows` /
     `metrics.probed_clusters` the probe geometry whenever the search
     resolved it (always on the driver path). On the driver tail the
     rough, precise and vec-store rerank counts come from its arrays
     (`metrics.counts`), and a base_df rerank is observed inside its one
     base job.
     """
-    if impl not in KERNELS:
-        raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
     cfg = model.config
     topk = topk or cfg.topk
     nprobe = nprobe or cfg.nprobe
@@ -1130,101 +1238,20 @@ def search(
     probes, block, probe_counts, qv = _prepare_batch(
         model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
-
-    index = model.index_df
-    if index_predicate is not None:
-        index = index.filter(index_predicate)
-    kernel, reason = impl, "requested"
-    if impl == "auto":
-        if nprobe * 2 > model.n_clusters:
-            # High-coverage regime (the same gate that disables partition
-            # pruning): the batch scans most of the index, and the
-            # executor path would pay a checkpoint + count job per search
-            # to resolve the Arrow geometry — at the sf0.1 headline shape
-            # (nprobe 28 of 32 clusters, 2k rows) ~10% of the whole
-            # search. The rule holds on both paths, so the kernel never
-            # depends on where stages 1-4 ran.
-            kernel, reason = "jvm", "nprobe covers over half the clusters"
-        else:
-            kernel = "arrow"  # tentative: choose_kernel settles it below
-    if kernel == "arrow" and (index_predicate is not None or allowed is not None):
-        # the Arrow plan reads the unfiltered model tables; filtering is a
-        # jvm-plan feature
-        kernel, reason = "jvm", "filtered search runs on the jvm plan"
-    r = max(topk * overfetch, topk)
-    if kernel == "arrow":
-        if probe_counts is None:
-            probes, probe_counts = _probe_counts(probes)
-        n_probe_rows = sum(probe_counts.values())
-        probe_bytes = n_probe_rows * _probe_row_bytes(model)
-        if probe_bytes > _ARROW_MAX_PROBE_BYTES:
-            kernel, reason = "jvm", (
-                f"probe table {probe_bytes} B > cap {_ARROW_MAX_PROBE_BYTES} B"
-            )
-        elif impl == "auto":
-            kernel, reason = choose_kernel(model, n_probe_rows, len(probe_counts))
-    clusters = None
-    if kernel == "arrow":
-        # the Arrow plan reads the probe table on the driver
-        if block is None:
-            block = probe_block_of(probes.toPandas())
-    elif nprobe * 2 <= model.n_clusters:
-        # Static partition pruning: the probed cluster set is tiny (≤ nq ×
-        # nprobe). For very large query batches, skip (all clusters probed
-        # anyway).
-        if probe_counts is None:
-            probes, probe_counts = _probe_counts(probes)
-        clusters = probe_counts
-
-    def allow(cand: DataFrame) -> DataFrame:
-        if allowed is None:
-            return cand
-        ok = allowed.select(F.col(allowed.columns[0]).alias("orig_id")).distinct()
-        return cand.join(ok, "orig_id", "left_semi")
-
+    filtered = index_predicate is not None or allowed is not None
+    kernel, reason = choose_kernel(model, impl, probe_counts, nprobe, filtered)
     if metrics is not None:
         metrics.kernel, metrics.kernel_reason = kernel, reason
         if probe_counts is not None:
             metrics.probed_clusters = probe_counts
             metrics.probe_rows = sum(probe_counts.values())
-    stage5 = dict(
-        block=block,
-        probes=probes,
-        clusters=clusters,
-        broadcast=broadcast_probes,
-        index=index,
-    )
-    if not isinstance(qv, DataFrame) and _driver_tail_fits(
-        model, max(probe_counts.values(), default=0), len(qv[0]), r
-    ):
-        # stages 6-7 on the driver: the rough and precise counts come from
-        # its arrays, so the stream carries no observer
-        cand = _candidates(model, kernel, r, tap=allow, **stage5)
-        table = _driver_tail(model, cand, qv, r, topk, metrics)
-        return queries.sparkSession.createDataFrame(table, _RESULT_SCHEMA)
-
-    def tap(cand: DataFrame) -> DataFrame:
-        cand = allow(cand)
-        if metrics is not None and metrics.observe_rough:
-            # A10 rough-candidate counter (src/metrics.rs analogue, no
-            # extra pass — but the CollectMetrics node splits the codegen
-            # span; see SearchMetrics.observe_rough for the at-scale cost)
-            cand = cand.observe(
-                metrics.rough, F.count(F.lit(1)).alias("rough_count")
-            )
-        return cand
-
-    shortlist = _shortlist(model, kernel, r, tap=tap, **stage5)
-    if metrics is not None and metrics.observe_precise:
-        # CollectMetrics directly above the top-R filter defeats the
-        # WindowGroupLimit pre-shuffle trim at scale — see
-        # SearchMetrics.observe_precise for the bisected cost
-        shortlist = shortlist.observe(
-            metrics.precise, F.count(F.lit(1)).alias("precise_count")
-        )
-    # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k)
-    return exact_topk(
-        shortlist, qv, model.rerank_base, topk, metrics, id_col="orig_id"
+    index = model.index_df
+    if index_predicate is not None:
+        index = index.filter(index_predicate)
+    return _tail(
+        model, kernel, max(topk * overfetch, topk), topk, qv, probe_counts,
+        metrics, allowed, block=block, probes=probes,
+        broadcast=broadcast_probes, index=index,
     )
 
 
@@ -1259,12 +1286,9 @@ def range_search(
     probes, _, probe_counts, qv = _prepare_batch(
         model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
-    clusters = None
-    if nprobe * 2 <= model.n_clusters:
-        if probe_counts is None:
-            probes, probe_counts = _probe_counts(probes)
-        clusters = probe_counts
-    cand = _rough_candidates(model, probes, clusters, broadcast_probes)
+    cand = _rough_candidates(
+        model, probes, _pruning_set(model, probe_counts), broadcast_probes
+    )
     if rough_cutoff:
         cand = cand.filter(F.col("rough") <= F.lit(radius_sq + rough_margin))
     exact = exact_rerank(

@@ -879,24 +879,26 @@ def embedding_neardup_pairs(
 
 def _probe_broadcast_ok(
     row_count: int | None,
-    dim_pad: int,
+    model,
     nprobe: int,
-    bits_per_dim: int,
     max_bytes: int = 128 << 20,
 ) -> bool:
-    """Whether a |table| × nprobe probe table is small enough to broadcast.
+    """Whether a |table| × nprobe probe table of `model` is small enough to
+    broadcast.
 
-    Byte-aware, not row-count-aware: a probe row carries the padded query
-    vector (dim_pad float64), the multi-bit query codes (dim_pad ×
-    bits_per_dim bits) and ~96 B of scalars/overhead, so a fixed row cutoff
-    scales its memory cost with dim × nprobe. Unknown row_count (streaming
-    caller) keeps the historical broadcast default; oversized tables take
-    the shuffle-by-cluster_id join, which is memory-bounded at any size.
+    Byte-aware, not row-count-aware: each probe row is priced by
+    index/search.py::_probe_row_bytes, the one byte model of the probe
+    table (its packed query planes grow with dim), so a fixed row cutoff
+    would scale its memory cost with dim × nprobe. Unknown row_count
+    (streaming caller) keeps the historical broadcast default; oversized
+    tables take the shuffle-by-cluster_id join, which is memory-bounded at
+    any size.
     """
+    from rabitq_spark.index.search import _probe_row_bytes
+
     if row_count is None:
         return True
-    per_row = dim_pad * 8 + (dim_pad * bits_per_dim + 7) // 8 + 96
-    return row_count * nprobe * per_row <= max_bytes
+    return row_count * nprobe * _probe_row_bytes(model) <= max_bytes
 
 
 def _embedding_neardup_blocked(
@@ -964,8 +966,7 @@ def _embedding_neardup_blocked(
     nn = search(
         model, queries, topk=k_per_row + 1, nprobe=nprobe, overfetch=overfetch,
         broadcast_probes=_probe_broadcast_ok(
-            row_count, model.dim_pad, nprobe or config.nprobe,
-            config.bits_per_dim,
+            row_count, model, nprobe or config.nprobe
         ),
     )
     cand = (

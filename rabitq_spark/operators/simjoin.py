@@ -161,8 +161,7 @@ def similarity_join(
         nprobe=nprobe,
         overfetch=overfetch,
         broadcast_probes=_probe_broadcast_ok(
-            left_count, model.dim_pad, nprobe or model.config.nprobe,
-            model.config.bits_per_dim,
+            left_count, model, nprobe or model.config.nprobe
         ),
     )
 

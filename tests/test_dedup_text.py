@@ -517,21 +517,35 @@ def test_connected_components_raises_when_unconverged(spark):
 
 
 def test_probe_broadcast_gate_is_byte_aware():
-    """The probe-broadcast decision prices BYTES (dim × nprobe × codes),
-    not row count (round-6: a fixed 500k-row cutoff broadcast ~1.7 GB at
-    200k × 64 × nprobe=12 and OOMed an 8 GB heap)."""
+    """The probe-broadcast decision prices BYTES (dim × nprobe × the probe
+    row), not row count (round-6: a fixed 500k-row cutoff broadcast ~1.7 GB
+    at 200k × 64 × nprobe=12 and OOMed an 8 GB heap). A row is priced as
+    search prices it (_probe_row_bytes: theta_log_dim packed query planes
+    plus scalars)."""
+    from types import SimpleNamespace
+
+    from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.operators.dedup import _probe_broadcast_ok
 
+    def model(dim_pad):
+        return SimpleNamespace(
+            config=RaBitQConfig(bits_per_dim=4), n_words=dim_pad // 64
+        )
+
     # unknown row count (streaming caller): historical default = broadcast
-    assert _probe_broadcast_ok(None, 64, 12, 4)
+    assert _probe_broadcast_ok(None, model(64), 12)
     # small table: broadcast fine
-    assert _probe_broadcast_ok(10_000, 64, 12, 4)
-    # the OOM shape: 200k rows x 64 dims x nprobe 12 -> far past 128 MB
-    assert not _probe_broadcast_ok(200_000, 64, 12, 4)
-    # same rows, tiny nprobe and dim: back under the cap
-    assert _probe_broadcast_ok(200_000, 8, 1, 1, max_bytes=128 << 20) == (
-        200_000 * 1 * (8 * 8 + (8 * 1 + 7) // 8 + 96) <= 128 << 20
+    assert _probe_broadcast_ok(10_000, model(64), 12)
+    # the OOM shape: 200k rows x 64 dims x nprobe 12 -> 153.6 MB, past 128 MiB
+    assert not _probe_broadcast_ok(200_000, model(64), 12)
+    # same rows, tiny nprobe: back under the cap — 4 planes × 1 word × 8 B
+    # plus 32 B of scalars per row
+    assert _probe_broadcast_ok(200_000, model(64), 1, max_bytes=128 << 20) == (
+        200_000 * 1 * (4 * 1 * 8 + 32) <= 128 << 20
     )
+    # a 100k-row self-join at dim 64 and nprobe 12 now broadcasts (the old
+    # padded-vector price of 640 B/row shuffled it)
+    assert _probe_broadcast_ok(100_000, model(64), 12)
     # widening any factor flips the decision monotonically
-    assert _probe_broadcast_ok(100_000, 64, 2, 1)
-    assert not _probe_broadcast_ok(100_000, 1024, 2, 1, max_bytes=1 << 20)
+    assert _probe_broadcast_ok(100_000, model(64), 2)
+    assert not _probe_broadcast_ok(100_000, model(1024), 2, max_bytes=1 << 20)

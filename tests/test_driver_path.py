@@ -13,7 +13,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from rabitq_spark.config import RaBitQConfig
-from rabitq_spark.index import RaBitQModel, build_index, range_search, search
+from rabitq_spark.index import (
+    RaBitQModel,
+    build_index,
+    range_search,
+    search,
+    search_adaptive,
+)
 from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import build_vec_store
 from rabitq_spark.metrics import SearchMetrics
@@ -214,6 +220,30 @@ def test_driver_batch_returns_local_relation(
         )
     assert any("MapInPandas" in p for p in plans)
     assert any("Window" in p for p in plans)
+
+
+def test_adaptive_wave_runs_the_search_jobs(spark, sf_dir, models):
+    """A search_adaptive wave over every cluster runs the Spark jobs of one
+    search() at full coverage and no more: both collect the batch once and
+    run the same stages 5-7 through the same driver tail. The wave takes
+    the driver tail's rows without a job, where toPandas() of its local
+    relation would start one per wave."""
+    model = models[(1, False)]
+    queries = _queries(spark, sf_dir, "float")
+    ncl = model.n_clusters
+    stats: dict = {}
+
+    def adaptive():
+        search_adaptive(model, queries, topk=K, wave0=ncl, stats=stats)
+
+    def static():
+        search(model, queries, topk=K, nprobe=ncl)
+
+    adaptive()  # warm: the radii memo, codegen and Python workers
+    static()
+    assert stats["waves"] == 1
+    wave_jobs = _jobs(spark, "driver_path:adaptive", adaptive)
+    assert wave_jobs <= _jobs(spark, "driver_path:static", static)
 
 
 @pytest.mark.parametrize("bound", ["candidates", "base_rows"])

@@ -1,12 +1,16 @@
 """Degenerate-input robustness: empty query batches, no-match corpora,
 empty deltas — the operators must return empty/identity results, not throw."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
-def test_search_empty_query_batch(spark, sf_dir):
+@pytest.mark.parametrize(
+    "entry", ["search", "range_search", "adaptive_jvm", "adaptive_arrow"]
+)
+def test_search_empty_query_batch(spark, sf_dir, entry):
     from rabitq_spark.config import RaBitQConfig
-    from rabitq_spark.index import build_index, search
+    from rabitq_spark.index import build_index, range_search, search, search_adaptive
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
@@ -14,7 +18,14 @@ def test_search_empty_query_batch(spark, sf_dir):
     empty_q = emb.filter("vec_id < 0").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    assert search(model, empty_q, topk=5).count() == 0
+    if entry == "search":
+        out = search(model, empty_q, topk=5)
+    elif entry == "range_search":
+        out = range_search(model, empty_q, 1.0)
+    else:
+        kernel = entry.split("_")[1]
+        out = search_adaptive(model, empty_q, topk=5, kernel=kernel)
+    assert out.count() == 0
 
 
 def test_minhash_no_pairs_corpus(spark):

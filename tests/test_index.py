@@ -273,26 +273,91 @@ def test_fused_gate_falls_back_to_jvm(spark, model_and_data, monkeypatch):
     pd.testing.assert_frame_equal(gated, jvm, check_exact=True)
 
 
-def test_choose_kernel_floors():
-    """The one auto-dispatch rule: 1-bit codes need both the pair-volume
-    floor and 12 probing queries per cluster; multi-bit codes only their
-    lower pair floor. Pure geometry — no Spark."""
+def test_choose_kernel_floors(monkeypatch):
+    """The one kernel rule, for search() and every search_adaptive wave:
+    the request is validated; "jvm" is honoured; "auto" keeps the jvm
+    join past half coverage; a filtered search, an unknown geometry and a
+    probe table over the byte cap demote any request; "arrow" is then
+    honoured, and "auto" asks the floors — 1-bit codes need both the
+    pair-volume floor and 12 probing queries per cluster, multi-bit codes
+    only their lower pair floor. Pure geometry — no Spark."""
+    import importlib
     from types import SimpleNamespace
 
-    from rabitq_spark.index.search import choose_kernel
+    from rabitq_spark.index.search import choose_kernel, cluster_counts
+
+    search_mod = importlib.import_module("rabitq_spark.index.search")
 
     def model(bits, n_rows=1_000_000, n_clusters=1000):
         return SimpleNamespace(
-            n_rows=n_rows, n_clusters=n_clusters,
+            n_rows=n_rows, n_clusters=n_clusters, n_words=1,
             config=RaBitQConfig(bits_per_dim=bits),
         )
 
+    def counts(rows, clusters):
+        """A probe table of `rows` rows spread over `clusters` clusters."""
+        return cluster_counts(np.arange(rows) % clusters)
+
+    def auto(m, rows, clusters):
+        return choose_kernel(m, "auto", counts(rows, clusters), 8)
+
     # 1-bit, avg cluster 1000 rows: 8M pairs needs 8000 probe rows
-    assert choose_kernel(model(1), 7_999, 10)[0] == "jvm"
-    assert choose_kernel(model(1), 8_000, 10)[0] == "arrow"
-    assert choose_kernel(model(1), 12_000, 1000)[0] == "arrow"
-    kernel, reason = choose_kernel(model(1), 11_999, 1000)
+    assert auto(model(1), 7_999, 10)[0] == "jvm"
+    assert auto(model(1), 8_000, 10)[0] == "arrow"
+    assert auto(model(1), 12_000, 1000)[0] == "arrow"
+    kernel, reason = auto(model(1), 11_999, 1000)
     assert kernel == "jvm" and "queries/cluster" in reason
     # multi-bit: 2M pairs, queries per cluster ignored
-    assert choose_kernel(model(4), 1_999, 1000)[0] == "jvm"
-    assert choose_kernel(model(4), 2_000, 1000)[0] == "arrow"
+    assert auto(model(4), 1_999, 1000)[0] == "jvm"
+    assert auto(model(4), 2_000, 1000)[0] == "arrow"
+
+    # the rule table: (impl, geometry, nprobe, filtered) -> kernel, with a
+    # geometry over every auto floor and one under them all
+    big, small = counts(12_000, 1000), counts(8, 8)
+    for impl, geometry, nprobe, filtered, want in [
+        ("jvm", big, 8, False, "jvm"),
+        ("auto", big, 8, False, "arrow"),
+        ("auto", small, 8, False, "jvm"),
+        ("arrow", small, 8, False, "arrow"),
+        # over half coverage: "auto" keeps the jvm join, "arrow" holds
+        ("auto", big, 501, False, "jvm"),
+        ("auto", None, 501, False, "jvm"),
+        ("arrow", big, 501, False, "arrow"),
+        # filtered search and unknown geometry demote any request
+        ("auto", big, 8, True, "jvm"),
+        ("arrow", small, 8, True, "jvm"),
+        ("arrow", None, 501, False, "jvm"),
+        ("auto", None, 8, False, "jvm"),
+    ]:
+        got = choose_kernel(model(1), impl, geometry, nprobe, filtered)
+        assert got[0] == want, (impl, nprobe, filtered, got)
+    assert choose_kernel(model(1), "jvm", None, 8)[1] == "requested"
+    assert "half" in choose_kernel(model(1), "auto", big, 501)[1]
+    assert "filtered" in choose_kernel(model(1), "arrow", small, 8, True)[1]
+    assert "unknown" in choose_kernel(model(1), "arrow", None, 501)[1]
+
+    # a wave's geometry: 3000 queries probing 4 clusters each over 1000
+    # clusters — 12 queries per cluster, 12M pairs
+    qi = np.repeat(np.arange(3000), 4)
+    ci = (qi * 7 + np.tile(np.arange(4), 3000)) % 1000
+    wave = cluster_counts(ci)
+    widest = int(np.bincount(qi).max())
+    assert choose_kernel(model(1), "auto", wave, widest)[0] == "arrow"
+    # a wave of 12 queries probing 4 of 7 clusters each covers over half
+    qi = np.repeat(np.arange(12), 4)
+    ci = (qi + np.tile(np.arange(4), 12)) % 7
+    kernel, reason = choose_kernel(
+        model(1, n_clusters=7), "auto", cluster_counts(ci), 4
+    )
+    assert kernel == "jvm" and "half" in reason
+
+    # over the probe-table byte cap: every non-jvm request is demoted
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 12_000 * 64 - 1)
+    for impl in ("auto", "arrow"):
+        kernel, reason = choose_kernel(model(1), impl, big, 8)
+        assert kernel == "jvm" and "cap" in reason
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 12_000 * 64)
+    assert choose_kernel(model(1), "arrow", big, 8)[0] == "arrow"
+
+    with pytest.raises(ValueError):
+        choose_kernel(model(1), "gpu", big, 8)
