@@ -38,9 +38,11 @@ side, same contract as knn_exact_fast and the fused shortlist), the
 accumulated top-k (nq x k rows). Each wave is one pass of search()'s
 planner over the wave's probe table: search.choose_kernel picks its
 kernel from the wave's geometry, and search._tail runs stages 5-7 with
-search()'s pruning rule and tail — the driver tail when its bounds fit,
-else the window top-R and vecstore.exact_topk. A wave takes the tail's
-rows as pandas, which costs no Spark job on the driver tail.
+search()'s pruning rule and tail — the resident arrays of a small loaded
+model, else the driver tail when its bounds fit, else the window top-R
+and vecstore.exact_topk. A wave takes the tail's rows as pandas, which
+costs no Spark job on the driver tail, and none at all on the resident
+arrays.
 Wave sizes double, bounding the number of waves at O(log n_clusters) per
 batch even when a hard query needs wide coverage.
 
@@ -60,6 +62,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import (
+    _driver_tail_fits,
     _query_side,
     _tail,
     auto_overfetch,
@@ -273,7 +276,8 @@ def search_adaptive(
         # a wave probes at most its widest query's clusters per query
         probe_counts = cluster_counts(ci_arr)
         wave_kernel, reason = choose_kernel(
-            model, kernel, probe_counts, int(np.bincount(qi_arr).max())
+            model, kernel, probe_counts, int(np.bincount(qi_arr).max()),
+            on_driver=_driver_tail_fits(model, qv, probe_counts, r),
         )
         wave_kernels.append(wave_kernel)
         if metrics is not None:

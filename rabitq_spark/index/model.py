@@ -5,6 +5,16 @@ Big state lives in DataFrames (index codes+factors, base vectors); small
 state (rotation matrix, dither bias, projected centroids) is driver-held
 numpy, broadcast to executors — mirroring SURVEY.md §1.1's mapping.
 
+One exception: a SMALL saved model — its base within
+vecstore.QUERY_MATRIX_MAX_BYTES (n_rows × dim_pad × 4 B, the bound under
+which a driver-tail search collects the whole base anyway) and no vec
+store — is also read once by load() into driver arrays
+(`RaBitQModel.resident`, a ResidentIndex): the reference's in-process CSR
+index (src/rabitq.rs:240-252). search() then scores stages 5-7 of a
+driver batch on them in numpy (index/search.py). The arrays describe the
+two frames they were read with and serve only while the model holds
+those same objects.
+
 Persistence (S6/S7 analogue, src/rabitq.rs:84-156): a directory of
   index/   Parquet, partitioned by cluster_id   (codes + factors + orig_id)
   base/    Parquet                              (orig_id, vec  — unrotated, padded)
@@ -15,12 +25,126 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from rabitq_spark.config import RaBitQConfig
+
+
+@dataclass(eq=False)
+class ResidentIndex:
+    """A small saved model's index and base as driver arrays, read by
+    RaBitQModel.load with zero Spark jobs. Index rows are in CSR order:
+    cluster c owns rows offsets[c]:offsets[c+1] of `orig_id`, `codes`
+    (plane-major int64 words, build_index's `code`) and every `factors`
+    column (float32); `base_ids` is sorted and `base_vecs` holds its rows
+    (base_df's padded vectors). `index_df`/`base_df` are the frames the
+    arrays were read with (describes)."""
+
+    index_df: DataFrame
+    base_df: DataFrame
+    offsets: np.ndarray
+    orig_id: np.ndarray
+    codes: np.ndarray
+    factors: dict
+    base_ids: np.ndarray
+    base_vecs: np.ndarray
+
+    @property
+    def nbytes(self) -> int:
+        arrays = [self.offsets, self.orig_id, self.codes, self.base_ids, self.base_vecs]
+        return sum(a.nbytes for a in arrays + list(self.factors.values()))
+
+    def describes(self, model: "RaBitQModel") -> bool:
+        """Whether the arrays still stand for `model`'s frames: any
+        reassignment of index_df or base_df (a cache(), a tombstone
+        resolve, a filter) hands search back to the Spark plans."""
+        return model.index_df is self.index_df and model.base_df is self.base_df
+
+    def cluster(self, c: int) -> tuple:
+        """(orig_id, codes, factors) of cluster `c`'s rows, as views."""
+        lo, hi = self.offsets[c], self.offsets[c + 1]
+        return (
+            self.orig_id[lo:hi],
+            self.codes[lo:hi],
+            {k: v[lo:hi] for k, v in self.factors.items()},
+        )
+
+    def gather(self, ids: np.ndarray) -> tuple:
+        """For sorted unique `ids`: (positions into `ids` the base holds,
+        their vectors). An id the base lacks is dropped, the base join's
+        semantics."""
+        if len(self.base_ids) == 0:
+            return np.empty(0, dtype=np.int64), self.base_vecs[:0]
+        where = np.minimum(np.searchsorted(self.base_ids, ids), len(self.base_ids) - 1)
+        hit = self.base_ids[where] == ids
+        return np.flatnonzero(hit), self.base_vecs[where[hit]]
+
+    @classmethod
+    def read(
+        cls, path: str, model: "RaBitQModel"
+    ) -> "ResidentIndex | None":
+        """The arrays of the model saved at `path` (posix or URI, through
+        vecstore._fs_path like the vec store), read with pyarrow: the
+        hive-partitioned index/ and base/. None when the Parquet footers'
+        row counts differ from model.n_rows — a stale or wrong count must
+        not admit a model past the byte bound it was checked against — or
+        a column does not have the model's width."""
+        import pyarrow.dataset as ds
+
+        from rabitq_spark.index.vecstore import _fs_path, _is_uri
+
+        fs, root = _fs_path(path) if _is_uri(path) else (None, path)
+        index = ds.dataset(
+            f"{root}/index", filesystem=fs, format="parquet", partitioning="hive"
+        )
+        base = ds.dataset(f"{root}/base", filesystem=fs, format="parquet")
+        n = model.n_rows
+        if index.count_rows() != n or base.count_rows() != n:
+            return None
+        # the estimator's factor columns (index/build.py's two schemas)
+        factors = (
+            ("center_dist_sq", "b_lb", "b_delta", "b_sum")
+            if model.config.bits_per_dim > 1
+            else ("center_dist_sq", "factor_ip", "factor_ppc", "error_bound")
+        )
+        t = index.to_table(columns=["cluster_id", "orig_id", "code", *factors])
+        b = base.to_table(columns=["orig_id", "vec"])
+        codes, vecs = _list_matrix(t["code"]), _list_matrix(b["vec"])
+        if (
+            codes is None
+            or vecs is None
+            or codes.shape[1] != model.config.bits_per_dim * model.n_words
+            or vecs.shape[1] != model.dim_pad
+        ):
+            return None
+        cid = t["cluster_id"].to_numpy()
+        order = np.argsort(cid, kind="stable")
+        ids = b["orig_id"].to_numpy()
+        border = np.argsort(ids, kind="stable")
+        return cls(
+            index_df=model.index_df,
+            base_df=model.base_df,
+            offsets=np.searchsorted(cid[order], np.arange(model.n_clusters + 1)),
+            orig_id=t["orig_id"].to_numpy()[order],
+            codes=codes[order],
+            factors={f: t[f].to_numpy()[order] for f in factors},
+            base_ids=ids[border],
+            base_vecs=vecs[border],
+        )
+
+
+def _list_matrix(col) -> "np.ndarray | None":
+    """A list column whose lists share one width as an (n, width) array,
+    else None."""
+    arr = col.combine_chunks()
+    lengths = arr.value_lengths().to_numpy(zero_copy_only=False)
+    width = int(lengths[0]) if len(arr) else 0
+    if (lengths != width).any():
+        return None
+    return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), width)
 
 
 @dataclass
@@ -42,6 +166,9 @@ class RaBitQModel:
     # variant's point-read design (crates/disk/src/cache.rs:115-145). When
     # set, search() stage 7 gathers ONLY candidate rows instead of joining
     # (and thus fully scanning) base_df.
+    resident: "ResidentIndex | None" = field(default=None, repr=False)
+    # a small loaded model's index and base as driver arrays (load()); see
+    # the module docstring
 
     @property
     def n_clusters(self) -> int:
@@ -230,7 +357,12 @@ class RaBitQModel:
     def load(cls, spark: SparkSession, path: str) -> RaBitQModel:
         from rabitq_spark.index.rotation import BlockRotation
 
-        from rabitq_spark.index.vecstore import VecStore, _fs_path, _is_uri
+        from rabitq_spark.index.vecstore import (
+            QUERY_MATRIX_MAX_BYTES,
+            VecStore,
+            _fs_path,
+            _is_uri,
+        )
 
         if _is_uri(path):
             # URI model dir (object/cluster storage): numpy/JSON sidecars
@@ -255,7 +387,7 @@ class RaBitQModel:
             rotation = BlockRotation(
                 [arrays[f"rotation_block_{i}"] for i in range(n_blocks)]
             )
-        return cls(
+        model = cls(
             config=RaBitQConfig(**meta["config"]),
             dim=meta["dim"],
             dim_pad=meta["dim_pad"],
@@ -271,3 +403,38 @@ class RaBitQModel:
                 else None
             ),
         )
+        # a small model also lives on the driver (module docstring); index
+        # rows are narrower than base rows at every bits_per_dim, so the
+        # base bound covers both
+        if (
+            model.vec_store is None
+            and model.n_rows is not None
+            and model.n_rows * model.dim_pad * 4 <= QUERY_MATRIX_MAX_BYTES
+        ):
+            model.resident = ResidentIndex.read(path, model)
+        return model
+
+
+def forget_row_count(path: str) -> None:
+    """Rewrite the meta.json of the model saved at `path` (posix or URI)
+    with n_rows null, atomically (a temp file, then a replace, as the vec
+    store writes its meta): for writers that append rows to index/ and
+    base/ in place, after which the saved count no longer holds."""
+    from rabitq_spark.index.vecstore import _fs_path, _fs_replace, _is_uri
+
+    if _is_uri(path):
+        fs, root = _fs_path(path)
+        with fs.open_input_file(f"{root}/meta.json") as f:
+            meta = json.load(f)
+    else:
+        with open(f"{path}/meta.json") as f:
+            meta = json.load(f)
+    meta["n_rows"] = None
+    if _is_uri(path):
+        with fs.open_output_stream(f"{root}/meta.json.tmp") as f:
+            f.write(json.dumps(meta).encode())
+        _fs_replace(fs, f"{root}/meta.json.tmp", f"{root}/meta.json")
+    else:
+        with open(f"{path}/meta.json.tmp", "w") as f:
+            json.dump(meta, f)
+        os.replace(f"{path}/meta.json.tmp", f"{path}/meta.json")

@@ -13,10 +13,20 @@ for stage 7.
 
 The planner: like the reference, a batch takes one decision per stage,
 and search(), range_search() and every search_adaptive wave take it in
-the same function — the kernel in choose_kernel (validation, coverage,
-filtering, unknown geometry, the probe-byte cap, the floors), the index
-pruning in _pruning_set, and the tail of stages 5-7 in _tail (range_search
-filters its candidates instead of cutting a top-R).
+the same function — the kernel in choose_kernel (the resident arrays,
+validation, coverage, filtering, unknown geometry, the probe-byte cap,
+the floors), the index pruning in _pruning_set, and the tail of stages
+5-7 in _tail (range_search filters its candidates instead of cutting a
+top-R).
+
+Where stages 5-7 run: a small loaded model also lives on the driver
+(RaBitQModel.resident: CSR index arrays and the sorted base, read once by
+load() within vecstore.QUERY_MATRIX_MAX_BYTES), like the reference's
+in-process index. An unfiltered "auto" batch on the driver path then
+scores, cuts and reranks in numpy over those arrays — the "resident"
+kernel — so its only Spark job is the query collect. Every other batch
+runs stage 5 as a Spark plan (jvm or Arrow) and stages 6-7 on the driver
+tail or the executor tail.
 
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
@@ -30,27 +40,32 @@ Stages:
        broadcast; index side partition-pruned by the probed cluster set),
        then the D5 estimator as one SQL expression (whole-stage codegen;
        src/rabitq.rs:336-367) — _rough_candidates — or the Arrow
-       value-GEMM kernel (_fused_shortlist), both behind _candidates.
+       value-GEMM kernel (_fused_shortlist), both behind _candidates. The
+       resident kernel (_resident_candidates) scores each probed
+       cluster's CSR rows with the Arrow kernel's numpy estimator,
+       cluster_rough.
   6.   top-R rough candidates per query on (rough, orig_id) — the batch
        substitute for the sequential heap threshold (src/rerank.rs:62-114).
-       The driver tail (_driver_tail, when _driver_tail_fits) collects the
-       stage-5 stream once and cuts it with top_n in numpy — REPOSE's
+       The driver tail (_driver_tail, when _driver_tail_fits) takes the
+       stage-5 stream as arrays — one collect, or the resident kernel's
+       per-cluster local_cut — and cuts it with top_n in numpy — REPOSE's
        local top-R and one merge (PAPERS.md); the executor tail
        (_shortlist) cuts it with a WindowGroupLimit window.
   7.   exact rerank and the final top-k per query on (dist, neighbor_id),
        exact squared-L2 in double precision (vecstore.l2_fold). The driver
-       tail reads each distinct shortlisted id's base row once — a
-       vec-store gather on the driver, or one collect of base_df — folds
+       tail reads each distinct shortlisted id's base row once — a gather
+       from the resident base or a vec store, or one collect of base_df —
+       folds
        every pair and ranks with top_n; it returns a local relation. The
        executor tail is vecstore.exact_topk, the one rerank of every other
        shortlist-then-exact plan: vec-store gather or base join, then a
        window top-k.
 
-Both tails keep the same order and arithmetic, so their frames are
-bit-identical (tests/test_driver_path.py).
+All kernels and both tails keep the same order and arithmetic, so their
+frames are bit-identical (tests/test_driver_path.py).
 
 Scale notes: a driver-tail batch runs no shuffle at all and moves each
-base row to the driver at most once. On the executor tail the only
+base row to the driver at most once; a resident batch moves none. On the executor tail the only
 shuffles are the two window top-ks and, when neither side fits a
 broadcast, the cluster_id join and the rerank's base join (a model with a
 vec store gathers candidate rows instead). The index never moves; probes
@@ -444,6 +459,97 @@ def local_cut(rough: "np.ndarray", r: int) -> tuple:
     return np.divmod(np.arange(rough.size), m)
 
 
+def cluster_rough(
+    qvals: "np.ndarray",
+    ycd: "np.ndarray",
+    lb: "np.ndarray",
+    delta: "np.ndarray",
+    ssum: "np.ndarray",
+    codes: "np.ndarray",
+    factors,
+    bits: int,
+    dim_pad: int,
+    dtype,
+) -> "np.ndarray":
+    """The D5 estimator of one cluster in numpy: the (probe rows, index
+    rows) float64 rough matrix, bit-identical to rough_estimator_expr. The
+    probe side is its unpacked query values `qvals` (unpack_plane_values,
+    in `dtype` = value_gemm_dtype) and its float32 y_c_dist_sq, lower
+    bound, delta and scalar sum; the index side its `codes` ((m, bits ×
+    n_words) plane-major int64 words) and `factors`, a mapping from
+    factor column to its m values (a pandas group or arrays). The one
+    scorer of the Arrow plan (_fused_shortlist) and the resident path
+    (_resident_candidates)."""
+    m = codes.shape[0]
+    # the cross/asym term is ONE value GEMM of the unpacked base values
+    cross = value_gemm_asym(
+        qvals,
+        unpack_plane_values(
+            codes.reshape(m, bits, codes.shape[1] // bits), bits, dtype
+        ),
+    )
+    cds = np.asarray(factors["center_dist_sq"], dtype=np.float32)
+    if bits > 1:
+        b_lb = np.asarray(factors["b_lb"], dtype=np.float32)
+        b_delta = np.asarray(factors["b_delta"], dtype=np.float32)
+        b_sum = np.asarray(factors["b_sum"], dtype=np.float32)
+        # mirror rough_distance_expr_multibit's ASSOCIATION exactly: Spark
+        # left-associates each product and float multiply is
+        # non-associative, so jvm-vs-numpy frame identity must hold by
+        # construction, not incidentally — (lb·b_delta)·b_sum and
+        # (b_lb·delta)·scalar_sum in float32, the dim_pad term all-double,
+        # the cross term (delta·b_delta) in float32 then promoted by the
+        # int64 cross (numpy float32×int64 → float64, matching the jvm's
+        # cast(cross as double))
+        est_ip = (
+            (float(dim_pad) * lb[:, None].astype(np.float64)) * b_lb[None, :]
+            + (lb[:, None] * b_delta[None, :]) * b_sum[None, :]
+            + (b_lb[None, :] * delta[:, None]) * ssum[:, None]
+            + (delta[:, None] * b_delta[None, :]) * cross
+        )
+        # (cds + ycd) is a FLOAT32 add in the jvm (both cols are float),
+        # promoted only when the double est_ip term joins — mirror that
+        # promotion point
+        return (cds[None, :] + ycd[:, None]).astype(np.float64) - 2.0 * est_ip
+    f_ip = np.asarray(factors["factor_ip"], dtype=np.float32)
+    f_ppc = np.asarray(factors["factor_ppc"], dtype=np.float32)
+    eb = np.asarray(factors["error_bound"], dtype=np.float32)
+    # mirror rough_distance_expr's association and promotion points exactly
+    # (see the multibit comment): ((cds+ycd)+lb·f_ppc) in float32; the asym
+    # term left-associated all-double ((2a−s)·f_ip)·delta; sqrt in double
+    # (F.sqrt always returns double)
+    return (
+        ((cds[None, :] + ycd[:, None]) + lb[:, None] * f_ppc[None, :]).astype(
+            np.float64
+        )
+        + (2.0 * cross - ssum[:, None]) * f_ip[None, :] * delta[:, None]
+        - eb[None, :] * np.sqrt(ycd.astype(np.float64))[:, None]
+    )
+
+
+def probes_by_cluster(block: dict, theta_log_dim: int, n_words: int) -> dict:
+    """A driver probe block grouped by cluster, rows in table order within
+    a group: {cluster_id: (query_id int64, y_c_dist_sq, lower_bound,
+    delta, scalar_sum float32, (rows, theta_log_dim, n_words) int64 query
+    planes)} — the probe side of cluster_rough."""
+    cid = block["cluster_id"]
+    order = np.argsort(cid, kind="stable")
+    groups = np.split(order, np.flatnonzero(np.diff(cid[order])) + 1)
+    return {
+        int(cid[sel[0]]): (
+            block["query_id"][sel].astype(np.int64),
+            block["y_c_dist_sq"][sel].astype(np.float32),
+            block["lower_bound"][sel].astype(np.float32),
+            block["delta"][sel].astype(np.float32),
+            block["scalar_sum"][sel].astype(np.float32),
+            block["qplanes"][sel]
+            .astype(np.int64)
+            .reshape(len(sel), theta_log_dim, n_words),
+        )
+        for sel in (groups if len(order) else [])
+    }
+
+
 #: Worker-buffer row budget for _fused_shortlist's partition-level top-R
 #: accumulation (~100 MB at 24 bytes/row). Exhaustive configs (r ≥ buffer)
 #: emit partial chunks instead of holding the whole partition.
@@ -485,30 +591,16 @@ def _fused_shortlist(
     bits = model.config.bits_per_dim
     dim_pad = model.dim_pad
     dtype = value_gemm_dtype(dim_pad, theta_log_dim, bits)
-    # group the probe rows by cluster, rows in table order within a group
-    cid = block["cluster_id"]
-    order = np.argsort(cid, kind="stable")
-    groups = np.split(order, np.flatnonzero(np.diff(cid[order])) + 1)
-    by_cluster: dict = {}
-    for sel in groups if len(order) else []:
-        by_cluster[int(cid[sel[0]])] = (
-            block["query_id"][sel].astype(np.int64),
-            block["y_c_dist_sq"][sel].astype(np.float32),
-            block["lower_bound"][sel].astype(np.float32),
-            block["delta"][sel].astype(np.float32),
-            block["scalar_sum"][sel].astype(np.float32),
-            block["qplanes"][sel]
-            .astype(np.int64)
-            .reshape(len(sel), theta_log_dim, n_words),
-        )
-    bc = spark.sparkContext.broadcast(by_cluster)
+    bc = spark.sparkContext.broadcast(
+        probes_by_cluster(block, theta_log_dim, n_words)
+    )
 
     def topr(q, i, ro):
         keep = top_n(q, ro, i, r)
         return q[keep], i[keep], ro[keep]
 
     def score(batches):
-        probes_by_cluster = bc.value
+        by_cluster = bc.value
         qv_cache: dict = {}
         buf_q, buf_id, buf_rough = [], [], []
         for pdf in batches:
@@ -516,18 +608,13 @@ def _fused_shortlist(
                 continue
             out_q, out_id, out_rough = [], [], []
             for cid, grp in pdf.groupby("cluster_id"):
-                pr = probes_by_cluster.get(int(cid))
+                pr = by_cluster.get(int(cid))
                 if pr is None:
                     continue
                 qids, ycd, lb, delta, ssum, planes = pr
-                codes = np.vstack(grp["code"].values).astype(np.int64)
-                m = codes.shape[0]  # codes: (m, bits·w), plane-major words
-
-                # the cross/asym term is ONE value GEMM: unpack the query
-                # values once per cluster (cached, bounded at 64 MB per
-                # worker: past it, rebuild per group, correctness
-                # unaffected) and the base values once per (cluster,
-                # batch) group
+                # unpack the query values once per cluster (cached,
+                # bounded at 64 MB per worker: past it, rebuild per group,
+                # correctness unaffected)
                 qvals = qv_cache.get(int(cid))
                 if qvals is None:
                     qvals = unpack_plane_values(planes, theta_log_dim, dtype)
@@ -536,60 +623,11 @@ def _fused_shortlist(
                         <= 64 << 20
                     ):
                         qv_cache[int(cid)] = qvals
-                cross = value_gemm_asym(
-                    qvals,
-                    unpack_plane_values(
-                        codes.reshape(m, bits, n_words), bits, dtype
-                    ),
+                rough = cluster_rough(
+                    qvals, ycd, lb, delta, ssum,
+                    np.vstack(grp["code"].values).astype(np.int64),
+                    grp, bits, dim_pad, dtype,
                 )
-
-                cds = grp["center_dist_sq"].values.astype(np.float32)
-                if bits > 1:
-                    b_lb = grp["b_lb"].values.astype(np.float32)
-                    b_delta = grp["b_delta"].values.astype(np.float32)
-                    b_sum = grp["b_sum"].values.astype(np.float32)
-                    # mirror rough_distance_expr_multibit's ASSOCIATION
-                    # exactly: Spark left-associates each product and float
-                    # multiply is non-associative, so jvm-vs-arrow frame
-                    # identity must hold by construction, not incidentally
-                    # — (lb·b_delta)·b_sum and (b_lb·delta)·scalar_sum in
-                    # float32, the dim_pad term all-double, the cross term
-                    # (delta·b_delta) in float32 then promoted by the int64
-                    # cross (numpy float32×int64 → float64, matching the
-                    # jvm's cast(cross as double))
-                    est_ip = (
-                        (float(dim_pad) * lb[:, None].astype(np.float64))
-                        * b_lb[None, :]
-                        + (lb[:, None] * b_delta[None, :]) * b_sum[None, :]
-                        + (b_lb[None, :] * delta[:, None]) * ssum[:, None]
-                        + (delta[:, None] * b_delta[None, :]) * cross
-                    )
-                    # (cds + ycd) is a FLOAT32 add in the jvm (both cols
-                    # are float), promoted only when the double est_ip term
-                    # joins — mirror that promotion point
-                    rough = (cds[None, :] + ycd[:, None]).astype(
-                        np.float64
-                    ) - 2.0 * est_ip
-                else:
-                    f_ip = grp["factor_ip"].values.astype(np.float32)
-                    f_ppc = grp["factor_ppc"].values.astype(np.float32)
-                    eb = grp["error_bound"].values.astype(np.float32)
-                    # mirror rough_distance_expr's association and
-                    # promotion points exactly (see the multibit comment):
-                    # ((cds+ycd)+lb·f_ppc) in float32; the asym term
-                    # left-associated all-double ((2a−s)·f_ip)·delta; sqrt
-                    # in double (F.sqrt always returns double)
-                    rough = (
-                        (
-                            (cds[None, :] + ycd[:, None])
-                            + lb[:, None] * f_ppc[None, :]
-                        ).astype(np.float64)
-                        + (2.0 * cross - ssum[:, None])
-                        * f_ip[None, :]
-                        * delta[:, None]
-                        - eb[None, :]
-                        * np.sqrt(ycd.astype(np.float64))[:, None]
-                    )
                 # the lexsort-based top-R below then runs on ~nq×r rows
                 # instead of nq×m (the round-7 Amdahl item: selection, not
                 # the estimator, dominated the Arrow path)
@@ -736,13 +774,14 @@ _RESULT_SCHEMA = StructType(
 
 
 def _driver_tail_fits(
-    model: RaBitQModel, max_cluster_probes: int, nq: int, r: int
+    model: RaBitQModel, qv, probe_counts: "dict | None", r: int
 ) -> bool:
-    """Whether stages 6-7 of a batch whose query matrix is on the driver
-    finish there (_driver_tail), by two byte bounds that need no job:
+    """Whether stages 6-7 of a batch finish on the driver (_driver_tail):
+    its query side `qv` is a driver matrix, and two byte bounds hold that
+    need no job:
 
     * the candidate stream, at most max(probe rows per cluster) × n_rows
-      rows for either kernel (no cluster holds more than n_rows rows),
+      rows for any kernel (no cluster holds more than n_rows rows),
       within _ARROW_MAX_PROBE_BYTES, the cap on the probe table: both are
       one copy on the driver. The query matrix's cap, which bounds a copy
       in every Python worker, is too tight for this loose bound: at 250
@@ -753,27 +792,61 @@ def _driver_tail_fits(
       vecstore.QUERY_MATRIX_MAX_BYTES like the query matrix.
 
     A model that does not know n_rows bounds neither."""
-    if model.n_rows is None:
+    if isinstance(qv, DataFrame) or model.n_rows is None:
         return False
     # a candidate row is query_id, orig_id and rough: 8 B each
-    cand_bytes = max_cluster_probes * model.n_rows * 24
-    base_bytes = min(nq * r, model.n_rows) * model.dim_pad * 4
+    cand_bytes = max(probe_counts.values(), default=0) * model.n_rows * 24
+    base_bytes = min(len(qv[0]) * r, model.n_rows) * model.dim_pad * 4
     return (
         cand_bytes <= _ARROW_MAX_PROBE_BYTES
         and base_bytes <= vecstore.QUERY_MATRIX_MAX_BYTES
     )
 
 
-def _base_rows(model: RaBitQModel, ids: "np.ndarray", metrics=None):
+def _resident_candidates(model: RaBitQModel, block: dict, r: int) -> tuple:
+    """Stage 5 and the local cut of stage 6 over the resident arrays: each
+    probed cluster's CSR rows scored by cluster_rough, then local_cut to
+    its top-R per query (ties kept). Returns ((query_id, orig_id, rough)
+    arrays, pairs scored)."""
+    res = model.resident
+    theta_log_dim = model.config.theta_log_dim
+    bits = model.config.bits_per_dim
+    dtype = value_gemm_dtype(model.dim_pad, theta_log_dim, bits)
+    # seeded with empty arrays: a batch that probes only empty clusters
+    out_q, out_id = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    out_rough, scored = [np.empty(0)], 0
+    by_cluster = probes_by_cluster(block, theta_log_dim, model.n_words)
+    for c, (qids, ycd, lb, delta, ssum, planes) in by_cluster.items():
+        ids, codes, factors = res.cluster(c)
+        if len(ids) == 0:
+            continue
+        rough = cluster_rough(
+            unpack_plane_values(planes, theta_log_dim, dtype),
+            ycd, lb, delta, ssum, codes, factors, bits, model.dim_pad, dtype,
+        )
+        scored += rough.size
+        qi, ci = local_cut(rough, r)
+        out_q.append(qids[qi])
+        out_id.append(ids[ci])
+        out_rough.append(rough[qi, ci])
+    cand = tuple(map(np.concatenate, (out_q, out_id, out_rough)))
+    return cand, scored
+
+
+def _base_rows(model: RaBitQModel, ids: "np.ndarray", metrics=None, resident=None):
     """The base rows of sorted unique `ids` for the driver tail: (positions
     into `ids` of the rows read, their vectors, base rows read or None when
-    `metrics.rerank` observed them). A vec store gathers exactly those rows
-    on the driver, zero jobs. base_df takes ONE collect: the whole frame
-    when all n_rows fit vecstore.QUERY_MATRIX_MAX_BYTES — the scan reads
-    every row either way, and a long `orig_id IN (...)` list costs more to
-    analyze (~100 ms at 3.5k ids) than shipping the rest of a small base —
-    else that IN filter. The extra rows are dropped here; an id the frame
-    lacks drops its pairs, the base join's semantics."""
+    `metrics.rerank` observed them). The `resident` arrays and a vec store
+    gather exactly those rows on the driver, zero jobs. base_df takes ONE
+    collect: the whole frame when all n_rows fit
+    vecstore.QUERY_MATRIX_MAX_BYTES — the scan reads every row either way,
+    and a long `orig_id IN (...)` list costs more to analyze (~100 ms at
+    3.5k ids) than shipping the rest of a small base — else that IN
+    filter. The extra rows are dropped here; an id the frame lacks drops
+    its pairs, the base join's semantics."""
+    if resident is not None:
+        found, vecs = resident.gather(ids)
+        return found, vecs, len(found)
     base = model.rerank_base
     if isinstance(base, VecStore):
         return np.arange(len(ids)), base.gather(ids), len(ids)
@@ -799,32 +872,34 @@ def _base_rows(model: RaBitQModel, ids: "np.ndarray", metrics=None):
 
 def _driver_tail(
     model: RaBitQModel,
-    cand: DataFrame,
+    cand: tuple,
     qv: tuple,
     r: int,
     k: int,
     metrics: "SearchMetrics | None" = None,
+    rough_count: int = 0,
+    resident=None,
 ):
     """Stages 6-7 on the driver, for a batch whose query matrix is there
-    and whose bounds _driver_tail_fits: ONE collect of the stage-5
-    candidates `cand` (query_id, orig_id, rough); the top-R per query on
+    and whose bounds _driver_tail_fits, over its stage-5 candidates `cand`,
+    parallel (query_id, orig_id, rough) arrays: the top-R per query on
     (rough, orig_id) in numpy (top_n); each DISTINCT shortlisted id's base
-    row read once (_base_rows); vecstore.l2_fold per (query, candidate)
-    pair; the top-k per query on (dist, neighbor_id). Same order and
-    arithmetic as the executor tail (_shortlist + exact_topk), so the rows
-    are bit-identical. Returns a pyarrow Table with exact_topk's columns
-    (query_id, neighbor_id, dist, rank). `metrics` gets the rough,
-    precise and rerank counts from the arrays, at no extra job."""
+    row read once (_base_rows, from the `resident` arrays when given);
+    vecstore.l2_fold per (query, candidate) pair; the top-k per query on
+    (dist, neighbor_id). Same order and arithmetic as the executor tail
+    (_shortlist + exact_topk), so the rows are bit-identical. Returns a
+    pyarrow Table with exact_topk's columns (query_id, neighbor_id, dist,
+    rank). `metrics` gets the counts from the arrays, at no extra job:
+    `rough_count` (the pairs stage 5 scored), the top-R rows, and the
+    base rows a gather read."""
     import pyarrow as pa
 
     qids, qmat = qv
-    t = cand.select("query_id", "orig_id", "rough").toArrow()
-    q = t["query_id"].to_numpy()
-    ids = t["orig_id"].to_numpy()
-    keep = top_n(q, t["rough"].to_numpy(), ids, r)
+    q, ids, rough = cand
+    keep = top_n(q, rough, ids, r)
     q, ids = q[keep], ids[keep]
     uniq, inv = np.unique(ids, return_inverse=True)
-    found, vecs, read = _base_rows(model, uniq, metrics)
+    found, vecs, read = _base_rows(model, uniq, metrics, resident)
     # the `vecs` row of each shortlisted pair; an id base_df lacks drops
     # its pairs
     row = np.full(len(uniq), -1, dtype=np.int64)
@@ -842,7 +917,7 @@ def _driver_tail(
         dist[s:e] = l2_fold(qmat[qrow[s:e]], vecs[row[s:e], :dim])
     sel, rank = top_n(q, dist, ids, k, ranks=True)
     if metrics is not None:
-        metrics.counts["rough_count"] = t.num_rows
+        metrics.counts["rough_count"] = rough_count
         metrics.counts["precise_count"] = len(keep)
         if read is not None:
             metrics.counts["rerank_base_rows"] = read
@@ -906,6 +981,7 @@ _ARROW_MIN_QUERIES_PER_CLUSTER = 12
 # Arrow request is demoted to the jvm join.
 _ARROW_MAX_PROBE_BYTES = 256 << 20
 
+#: What a caller may ask for; choose_kernel also returns "resident".
 KERNELS = ("auto", "jvm", "arrow")
 
 
@@ -915,24 +991,36 @@ def choose_kernel(
     probe_counts: "dict | None",
     nprobe: int,
     filtered: bool = False,
+    on_driver: bool = False,
 ) -> tuple[str, str]:
     """The kernel rule of search() and every search_adaptive wave — the one
-    place a kernel is validated, chosen or demoted. Returns ("jvm" |
-    "arrow", reason) for `impl` (one of KERNELS) over a probe table with
-    {cluster_id: probe rows} `probe_counts` (None when the executor path
-    did not resolve it) and at most `nprobe` probed clusters per query.
-    Every kernel is bit-identical, so the choice never changes a result
-    row. In order: "jvm" is honoured; "auto" keeps the jvm join when
-    nprobe covers over half the clusters — the batch scans most of the
-    index, and the executor path would pay a checkpoint and a count job
-    to resolve the geometry (at the sf0.1 headline shape, nprobe 28 of 32
-    clusters, ~10% of the whole search); a filtered search runs on the
-    jvm plan, as the Arrow plan reads the unfiltered model tables; so
-    does an unknown geometry, or a probe table over _ARROW_MAX_PROBE_BYTES
-    (the Arrow plan broadcasts it from the driver); then "arrow" is
-    honoured, and "auto" asks the floors below."""
+    place a kernel is validated, chosen or demoted. Returns ("resident" |
+    "jvm" | "arrow", reason) for `impl` (one of KERNELS) over a probe table
+    with {cluster_id: probe rows} `probe_counts` (None when the executor
+    path did not resolve it) and at most `nprobe` probed clusters per
+    query; `on_driver` says the batch's query matrix is on the driver and
+    its stages 6-7 fit there (_driver_tail_fits). Every kernel is
+    bit-identical, so the choice never changes a result row. In order:
+    "auto" runs "resident" — stages 5-7 in numpy over the model's resident
+    arrays (RaBitQModel.resident, no job) — when those arrays still
+    describe the model, the batch is on_driver and unfiltered; "jvm" is
+    honoured; "auto" keeps the jvm join when nprobe covers over half the
+    clusters — the batch scans most of the index, and the executor path
+    would pay a checkpoint and a count job to resolve the geometry (at the
+    sf0.1 headline shape, nprobe 28 of 32 clusters, ~10% of the whole
+    search); a filtered search runs on the jvm plan, as the Arrow plan
+    reads the unfiltered model tables; so does an unknown geometry, or a
+    probe table over _ARROW_MAX_PROBE_BYTES (the Arrow plan broadcasts it
+    from the driver); then "arrow" is honoured, and "auto" asks the floors
+    below."""
     if impl not in KERNELS:
         raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
+    res = model.resident if impl == "auto" and on_driver and not filtered else None
+    if res is not None and res.describes(model):
+        return "resident", (
+            f"resident index and base {res.nbytes} B, base within "
+            f"{vecstore.QUERY_MATRIX_MAX_BYTES} B"
+        )
     if impl == "jvm":
         return "jvm", "requested"
     if impl == "auto" and 2 * nprobe > model.n_clusters:
@@ -997,18 +1085,29 @@ def _tail(
     **stage5,
 ):
     """Stages 5-7 of search() and every search_adaptive wave, the one place
-    that picks their tail: _driver_tail, as a local relation, when the
-    query side `qv` is a driver matrix and _driver_tail_fits; else the
-    window top-R (_shortlist) and vecstore.exact_topk, with `metrics`'
-    observers. `allowed`, a one-column frame of permitted ids, is
-    semi-joined against the candidates; `stage5` goes to _candidates,
-    pruned by _pruning_set. Returns (query_id, neighbor_id, dist, rank) —
-    as pandas with `local`: the driver tail's table at no job (toPandas()
-    of its local relation would start one), else one collect."""
+    that picks their tail. The "resident" kernel scores the driver probe
+    `block` over the model's resident arrays (_resident_candidates) and
+    finishes in _driver_tail — no Spark job. Otherwise _driver_tail, as a
+    local relation, after one collect of the stage-5 stream, when
+    _driver_tail_fits; else the window top-R (_shortlist) and
+    vecstore.exact_topk, with `metrics`' observers. `allowed`, a one-column
+    frame of permitted ids, is semi-joined against the candidates;
+    `stage5` goes to _candidates, pruned by _pruning_set. Returns
+    (query_id, neighbor_id, dist, rank) — as pandas with `local`: a driver
+    tail's table at no job (toPandas() of its local relation would start
+    one), else one collect."""
+    def result(table):
+        if local:
+            return table.to_pandas()
+        return model.index_df.sparkSession.createDataFrame(table, _RESULT_SCHEMA)
+
+    if kernel == "resident":
+        cand, scored = _resident_candidates(model, stage5["block"], r)
+        return result(
+            _driver_tail(model, cand, qv, r, k, metrics, scored, model.resident)
+        )
     stage5["clusters"] = _pruning_set(model, probe_counts)
-    on_driver = not isinstance(qv, DataFrame) and _driver_tail_fits(
-        model, max(probe_counts.values(), default=0), len(qv[0]), r
-    )
+    on_driver = _driver_tail_fits(model, qv, probe_counts, r)
 
     def tap(cand: DataFrame) -> DataFrame:
         if allowed is not None:
@@ -1025,11 +1124,13 @@ def _tail(
         return cand
 
     if on_driver:
-        cand = _candidates(model, kernel, r, tap=tap, **stage5)
-        table = _driver_tail(model, cand, qv, r, k, metrics)
-        if local:
-            return table.to_pandas()
-        return model.index_df.sparkSession.createDataFrame(table, _RESULT_SCHEMA)
+        t = (
+            _candidates(model, kernel, r, tap=tap, **stage5)
+            .select("query_id", "orig_id", "rough")
+            .toArrow()
+        )
+        cand = tuple(t[c].to_numpy() for c in ("query_id", "orig_id", "rough"))
+        return result(_driver_tail(model, cand, qv, r, k, metrics, t.num_rows))
     shortlist = _shortlist(model, kernel, r, tap=tap, **stage5)
     if metrics is not None and metrics.observe_precise:
         # CollectMetrics directly above the top-R filter defeats the
@@ -1139,10 +1240,12 @@ def _prepare_batch(
 ):
     """Stages 1-4 for search() and range_search(): on the driver when
     `on_driver` holds and _driver_batch takes the batch, else on the
-    executors. Returns (probes, block, probe_counts, qv): the probe table,
-    the driver probe block (else None), its {cluster_id: probe rows} (None
-    on the executor path unless nprobe·2 ≤ n_clusters: _pruning_set), and
-    the stage-7 query side exact_rerank takes."""
+    executors. Returns (probes, block, probe_counts, qv): exactly one of
+    the executor probe frame and the driver probe block (the frame is
+    built from the block only by a jvm stage 5, in _candidates: the
+    resident kernel needs none), the {cluster_id: probe rows} (None on the
+    executor path unless nprobe·2 ≤ n_clusters: _pruning_set), and the
+    stage-7 query side exact_rerank takes."""
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
     driver = (
@@ -1152,8 +1255,7 @@ def _prepare_batch(
     )
     if driver is not None:
         qids, qmat, block = driver
-        probes = probe_frame(spark, block)
-        return probes, block, cluster_counts(block["cluster_id"]), (qids, qmat)
+        return None, block, cluster_counts(block["cluster_id"]), (qids, qmat)
     probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
     probe_counts = None
     if 2 * nprobe <= model.n_clusters:
@@ -1183,9 +1285,9 @@ def search(
     When the driver tail's bounds fit (_driver_tail_fits), such a batch
     also finishes stages 6-7 on the driver: its Spark jobs then run INSIDE
     this call (the stage-5 candidate collect and, without a vec store, one
-    base collect) and the returned frame is a local relation, which
-    collects without a job. Otherwise the returned frame is the lazy
-    executor-tail plan. All give identical frames.
+    base collect; none on the resident arrays) and the returned frame is a
+    local relation, which collects without a job. Otherwise the returned
+    frame is the lazy executor-tail plan. All give identical frames.
 
     `broadcast_probes=False` is for a caller that knows its batch is large
     (the full-table self-joins): the stage-5 join then shuffles both sides
@@ -1221,14 +1323,17 @@ def search(
 
     `impl` asks for the rough-scoring kernel — "jvm", the codegen
     broadcast-join plan, "arrow", the value-GEMM mapInPandas plan
-    (_fused_shortlist), or "auto" — under choose_kernel's rule; both give
-    bit-identical frames. `metrics.kernel` / `metrics.kernel_reason`
-    report the kernel that ran and why; `metrics.probe_rows` /
-    `metrics.probed_clusters` the probe geometry whenever the search
-    resolved it (always on the driver path). On the driver tail the
-    rough, precise and vec-store rerank counts come from its arrays
-    (`metrics.counts`), and a base_df rerank is observed inside its one
-    base job.
+    (_fused_shortlist), or "auto" — under choose_kernel's rule, which
+    also runs "auto" batches of a small loaded model on its resident
+    arrays ("resident": stages 5-7 in numpy, no job past the query
+    collect); all give bit-identical frames. `metrics.kernel` /
+    `metrics.kernel_reason` report the kernel that ran and why;
+    `metrics.probe_rows` / `metrics.probed_clusters` the probe geometry
+    whenever the search resolved it (always on the driver path). On the
+    driver tail the rough, precise and gather rerank counts come from its
+    arrays (`metrics.counts`: resident rough_count is every pair scored,
+    rerank_base_rows the distinct ids gathered), and a base_df rerank is
+    observed inside its one base job.
     """
     cfg = model.config
     topk = topk or cfg.topk
@@ -1239,7 +1344,11 @@ def search(
         model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
     filtered = index_predicate is not None or allowed is not None
-    kernel, reason = choose_kernel(model, impl, probe_counts, nprobe, filtered)
+    r = max(topk * overfetch, topk)
+    kernel, reason = choose_kernel(
+        model, impl, probe_counts, nprobe, filtered,
+        _driver_tail_fits(model, qv, probe_counts, r),
+    )
     if metrics is not None:
         metrics.kernel, metrics.kernel_reason = kernel, reason
         if probe_counts is not None:
@@ -1249,9 +1358,8 @@ def search(
     if index_predicate is not None:
         index = index.filter(index_predicate)
     return _tail(
-        model, kernel, max(topk * overfetch, topk), topk, qv, probe_counts,
-        metrics, allowed, block=block, probes=probes,
-        broadcast=broadcast_probes, index=index,
+        model, kernel, r, topk, qv, probe_counts, metrics, allowed,
+        block=block, probes=probes, broadcast=broadcast_probes, index=index,
     )
 
 
@@ -1283,9 +1391,11 @@ def range_search(
     """
     cfg = model.config
     nprobe = nprobe or cfg.nprobe
-    probes, _, probe_counts, qv = _prepare_batch(
+    probes, block, probe_counts, qv = _prepare_batch(
         model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
+    if probes is None:
+        probes = probe_frame(queries.sparkSession, block)
     cand = _rough_candidates(
         model, probes, _pruning_set(model, probe_counts), broadcast_probes
     )

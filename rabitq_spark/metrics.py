@@ -36,7 +36,8 @@ class SearchMetrics:
     # window/codegen interaction and measured free, so it has no flag.
     observe_rough: bool = True
     observe_precise: bool = True
-    # The rough kernel that ran ("jvm" | "arrow") and why it was chosen —
+    # The rough kernel that ran ("resident" | "jvm" | "arrow") and why it
+    # was chosen —
     # set by search() (and search_adaptive(), for its last wave) from
     # choose_kernel when the plan is built, so reading them costs no
     # Spark job.
@@ -51,8 +52,8 @@ class SearchMetrics:
     probed_clusters: dict | None = None
     # Counts a search records from arrays it already holds on the driver
     # (search()'s driver tail: "rough_count", "precise_count", and
-    # "rerank_base_rows" for a vec store), read before the Observations —
-    # no CollectMetrics node and no Spark job.
+    # "rerank_base_rows" for a vec store or the resident base), read
+    # before the Observations — no CollectMetrics node and no Spark job.
     counts: dict = field(default_factory=dict)
 
     def _count(self, obs: Observation, name: str) -> int:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, FloatType, LongType, StructField, StructType
 
 from rabitq_spark.index.build import build_index
-from rabitq_spark.index.model import RaBitQModel
+from rabitq_spark.index.model import RaBitQModel, forget_row_count
 
 
 def read_vector_stream(
@@ -61,7 +61,9 @@ def maintain_index_stream(
     model's frozen transform and appended to its index/base Parquet.
 
     Returns the finished StreamingQuery. Re-load the model afterwards to
-    search over the union of bootstrapped and streamed vectors.
+    search over the union of bootstrapped and streamed vectors. The first
+    micro-batch clears the saved n_rows (forget_row_count): the reloaded
+    model's count is unknown, not the bootstrap's.
     """
     spark = vec_stream.sparkSession
     from rabitq_spark.index.rotation import apply_rot_T
@@ -70,6 +72,9 @@ def maintain_index_stream(
     centroids = apply_rot_T(frozen.centroids_proj, frozen.rotation)  # undo projection
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
+        if frozen.n_rows is not None:
+            forget_row_count(model_path)
+            frozen.n_rows = None
         appended = build_index(
             batch_df,
             frozen.config,
@@ -153,6 +158,8 @@ def maintain_index_cdc_stream(
 
     Scale shape per batch: one id-list append + one shuffle-free quantize
     append — identical to maintain_index_stream plus a tiny tombstone file.
+    Like maintain_index_stream, the first micro-batch clears the saved
+    n_rows.
     """
     spark = cdc_stream.sparkSession
     from pyspark.sql import functions as F
@@ -163,6 +170,9 @@ def maintain_index_cdc_stream(
     centroids = apply_rot_T(frozen.centroids_proj, frozen.rotation)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if frozen.n_rows is not None:
+            forget_row_count(model_path)
+            frozen.n_rows = None
         seq = int(batch_id)
         (
             batch_df.select("vec_id", F.lit(seq).alias("seq"))

@@ -1,9 +1,10 @@
 """search()'s driver path — a bounded batch collected once, stages 1-4 in
 numpy on the driver, stages 6-7 finished there too (the driver tail) —
-against the executor path it replaces. Patching
-vecstore.QUERY_MATRIX_MAX_BYTES to 0 forces every batch onto the executor
-path (and the vec-store rerank onto its join form), so the two paths can
-be compared frame for frame."""
+against the executor path it replaces, and a small loaded model's
+resident arrays (stages 5-7 in numpy, the "resident" kernel) against both.
+Patching vecstore.QUERY_MATRIX_MAX_BYTES to 0 forces every batch onto the
+executor path (and the vec-store rerank onto its join form), so the paths
+can be compared frame for frame."""
 
 import copy
 import importlib
@@ -206,7 +207,10 @@ def test_driver_batch_returns_local_relation(
     met = SearchMetrics()
     out = []
     plans = _executed_plans(
-        spark, lambda: out.append(search(model, queries, topk=K, metrics=met))
+        spark,
+        lambda: out.append(
+            search(model, queries, topk=K, metrics=met, impl="jvm")
+        ),
     )
     assert met.kernel == "jvm"
     assert _plan(out[0]).startswith("LocalTableScan")
@@ -382,3 +386,157 @@ def test_over_cap_store_batch_collects_once(spark, sf_dir, models, monkeypatch):
     got = search(model, queries, topk=K).toPandas()
     assert len(got) == NQ * K
     assert len(calls) == 1
+
+
+@pytest.fixture(scope="module")
+def loaded(spark, models, tmp_path_factory):
+    """{bits_per_dim: the store-less model, saved and reloaded}: it knows
+    n_rows and fits the resident bound, so load() reads its arrays."""
+    out = {}
+    for bits in (1, 4):
+        path = str(tmp_path_factory.mktemp(f"resident{bits}"))
+        models[(bits, False)].save(path)
+        out[bits] = RaBitQModel.load(spark, path)
+        assert out[bits].resident is not None
+    return out
+
+
+@pytest.mark.parametrize("bits", [1, 4])
+def test_resident_equals_spark_tails(spark, sf_dir, loaded, monkeypatch, bits):
+    """An "auto" search of a loaded small model runs the resident kernel,
+    and its frame equals the forced Spark driver tails (jvm and arrow) and
+    the executor path bit for bit, for float and double queries."""
+    model = loaded[bits]
+    for elem in ("float", "double"):
+        queries = _queries(spark, sf_dir, elem)
+        met = SearchMetrics()
+        resident = _sorted(search(model, queries, topk=K, metrics=met))
+        assert met.kernel == "resident"
+        assert f"{model.resident.nbytes} B" in met.kernel_reason
+        assert len(resident) == NQ * K
+        for impl in ("jvm", "arrow"):
+            met_s = SearchMetrics()
+            spark_tail = _sorted(search(model, queries, topk=K, impl=impl, metrics=met_s))
+            assert met_s.kernel == impl
+            pd.testing.assert_frame_equal(resident, spark_tail, check_exact=True)
+        with monkeypatch.context() as m:
+            _executor_path(m)
+            met_x = SearchMetrics()
+            executor = _sorted(search(model, queries, topk=K, metrics=met_x))
+        assert met_x.kernel == "jvm"
+        pd.testing.assert_frame_equal(resident, executor, check_exact=True)
+
+
+@pytest.mark.parametrize("bits", [1, 4])
+def test_resident_adaptive_equals_jvm_waves(spark, sf_dir, loaded, bits):
+    """Every search_adaptive wave over a resident model runs the resident
+    kernel, and the result equals the same waves on the jvm join."""
+    model = loaded[bits]
+    queries = _queries(spark, sf_dir, "float")
+    stats: dict = {}
+    got = _sorted(search_adaptive(model, queries, topk=K, stats=stats))
+    assert stats["waves"] >= 1
+    assert set(stats["wave_kernels"]) == {"resident"}
+    jvm_stats: dict = {}
+    want = _sorted(
+        search_adaptive(model, queries, topk=K, kernel="jvm", stats=jvm_stats)
+    )
+    assert set(jvm_stats["wave_kernels"]) == {"jvm"}
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def test_resident_search_runs_one_job(spark, sf_dir, loaded):
+    """A resident search runs ONE Spark job, the query collect, with the
+    metrics on or off. Its counts: rough_count is every pair scored, the
+    Spark driver tail's count of its jvm candidate stream; precise_count
+    the top-R rows; rerank_base_rows the distinct shortlisted ids the
+    resident base gathered."""
+    model = loaded[1]
+    queries = _queries(spark, sf_dir, "float")
+
+    def run(metrics=None):
+        search(model, queries, topk=K, metrics=metrics).collect()
+
+    run()  # warm
+    assert _jobs(spark, "resident:bare", run) == 1
+    met = SearchMetrics()
+    assert _jobs(spark, "resident:metrics", lambda: run(met)) == 1
+    assert met.kernel == "resident"
+    jvm = SearchMetrics()
+    search(model, queries, topk=K, impl="jvm", metrics=jvm).collect()
+    sizes = {
+        r["cluster_id"]: r["count"]
+        for r in model.index_df.groupBy("cluster_id").count().collect()
+    }
+    pairs = sum(n * sizes.get(c, 0) for c, n in met.probed_clusters.items())
+    assert met.rough_count == jvm.rough_count == pairs
+    assert met.precise_count == jvm.precise_count
+    r = K * search_mod.auto_overfetch(model, NPROBE, K)
+    probes, block, counts, _ = search_mod._prepare_batch(
+        model, queries, "query_id", "qvec", NPROBE, True
+    )
+    ids = search_mod._shortlist(
+        model, "jvm", r, probes=probes, block=block, clusters=counts
+    ).toPandas()["orig_id"]
+    assert met.precise_count == len(ids)
+    assert met.rerank_base_rows == ids.nunique() < model.n_rows
+    assert set(met.counts) == {"rough_count", "precise_count", "rerank_base_rows"}
+
+
+def test_resident_arrays_follow_the_frames(spark, sf_dir, models, loaded, tmp_path):
+    """The arrays serve only the frames they were read with: reassigning
+    index_df or base_df, or a tombstone-resolving load, runs the Spark
+    plans again, with the same rows where the data is the same."""
+    from rabitq_spark.streaming.index_stream import load_index_with_tombstones
+
+    model = loaded[1]
+    queries = _queries(spark, sf_dir, "float")
+    want = _sorted(search(model, queries, topk=K))
+    for frame in ("index_df", "base_df"):
+        moved = copy.copy(model)
+        setattr(moved, frame, getattr(model, frame).select("*"))
+        met = SearchMetrics()
+        got = _sorted(search(moved, queries, topk=K, metrics=met))
+        assert met.kernel == "jvm", frame
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+    path = str(tmp_path / "model")
+    models[(1, False)].save(path)
+    spark.createDataFrame([(0, 0)], "vec_id long, seq long").write.parquet(
+        f"{path}/tombstones"
+    )
+    tomb = load_index_with_tombstones(spark, path)
+    met = SearchMetrics()
+    got = _sorted(search(tomb, queries, topk=K, metrics=met))
+    assert met.kernel == "jvm"
+    assert len(got) == NQ * K and 0 not in set(got["neighbor_id"])
+
+
+def test_service_answers_from_resident_arrays(spark, sf_dir, loaded):
+    """A SearchService over a resident model answers each query with the
+    rows search() returns for it, ids and dists bit for bit."""
+    import json
+    import urllib.request
+
+    from rabitq_spark.service import SearchService
+
+    model = loaded[1]
+    rows = _queries(spark, sf_dir, "double").filter("query_id < 3").collect()
+    with SearchService(spark, model) as svc:
+        for row in rows:
+            vec = [float(x) for x in row["qvec"]]
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{svc.port}/query",
+                data=json.dumps({"query": vec, "top_k": K}).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            got = json.loads(urllib.request.urlopen(req).read())
+            qdf = spark.createDataFrame([(0, vec)], "query_id long, qvec array<double>")
+            met = SearchMetrics()
+            want = sorted(
+                search(model, qdf, topk=K, metrics=met).collect(),
+                key=lambda r: r["rank"],
+            )
+            assert met.kernel == "resident"
+            assert got["ids"] == [r["neighbor_id"] for r in want]
+            assert got["scores"] == [r["dist"] for r in want]

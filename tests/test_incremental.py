@@ -133,3 +133,34 @@ def test_neardup_incremental_equals_full_recompute(spark):
     assert full == inc and len(full) > 0
     # straddling pairs exist (one side divisible by 3, the other not)
     assert any((a % 3 == 0) != (b % 3 == 0) for a, b in full)
+
+
+def test_stream_append_forgets_saved_row_count(spark, sf_dir, tmp_path):
+    """A model saved with n_rows, then streamed into, reloads with n_rows
+    None: the bootstrap count no longer holds, so nothing sizes a plan by
+    it and load() reads no resident arrays."""
+    from rabitq_spark.index import RaBitQModel
+    from rabitq_spark.streaming.index_stream import (
+        maintain_index_stream,
+        read_vector_stream,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    seed = emb.filter(F.col("vec_id") < 100).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    )
+    path = str(tmp_path / "model")
+    build_index(seed, RaBitQConfig(n_clusters=4, topk=5), n_rows=100).save(path)
+    before = RaBitQModel.load(spark, path)
+    assert before.n_rows == 100 and before.resident is not None
+
+    stream_in = str(tmp_path / "in")
+    emb.filter(F.col("vec_id").between(100, 149)).select(
+        "vec_id", "embedding"
+    ).write.parquet(stream_in)
+    maintain_index_stream(
+        path, read_vector_stream(spark, stream_in), checkpoint=str(tmp_path / "ckpt")
+    )
+    after = RaBitQModel.load(spark, path)
+    assert after.n_rows is None and after.resident is None
+    assert after.index_df.count() == 150

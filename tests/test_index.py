@@ -361,3 +361,38 @@ def test_choose_kernel_floors(monkeypatch):
 
     with pytest.raises(ValueError):
         choose_kernel(model(1), "gpu", big, 8)
+
+
+def test_choose_kernel_resident_rule():
+    """The first "auto" rule: the resident kernel runs an unfiltered batch
+    whose stages 6-7 fit the driver, while the model's resident arrays
+    still describe its frames — before the coverage rule, since it scans
+    no Spark table. Forced "jvm" and "arrow" keep the Spark plans."""
+    from types import SimpleNamespace
+
+    from rabitq_spark.index.search import choose_kernel, cluster_counts
+
+    class Arrays:
+        nbytes = 4321
+
+        def __init__(self, current):
+            self.current = current
+
+        def describes(self, model):
+            return self.current
+
+    m = SimpleNamespace(
+        n_rows=5000, n_clusters=8, n_words=1, config=RaBitQConfig(),
+        resident=Arrays(True),
+    )
+    geometry = cluster_counts(np.arange(40) % 8)
+    kernel, reason = choose_kernel(m, "auto", geometry, 8, on_driver=True)
+    assert kernel == "resident" and "4321 B" in reason
+    assert choose_kernel(m, "auto", geometry, 2, on_driver=True)[0] == "resident"
+    assert choose_kernel(m, "auto", geometry, 8)[0] == "jvm"
+    assert choose_kernel(m, "auto", geometry, 2, True, on_driver=True)[0] == "jvm"
+    for impl in ("jvm", "arrow"):
+        assert choose_kernel(m, impl, geometry, 2, on_driver=True)[0] == impl
+    for stale in (Arrays(False), None):
+        m.resident = stale
+        assert choose_kernel(m, "auto", geometry, 2, on_driver=True)[0] == "jvm"

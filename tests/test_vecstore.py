@@ -135,12 +135,12 @@ def _shortlist_ids(model, queries) -> pd.Series:
 
     search_mod = importlib.import_module("rabitq_spark.index.search")
     nprobe = model.config.nprobe
-    probes, _, counts, _ = search_mod._prepare_batch(
+    probes, block, counts, _ = search_mod._prepare_batch(
         model, queries, "query_id", "qvec", nprobe, True
     )
     r = K * search_mod.auto_overfetch(model, nprobe, K)
     shortlist = search_mod._shortlist(
-        model, "jvm", r, probes=probes, clusters=counts
+        model, "jvm", r, probes=probes, block=block, clusters=counts
     )
     return shortlist.toPandas()["orig_id"]
 
