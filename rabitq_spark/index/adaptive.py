@@ -36,13 +36,11 @@ side, same contract as knn_exact_fast and the fused shortlist), the
 (nq x n_clusters) centroid-distance matrix, per-cluster radii
 (n_clusters floats, one tiny agg job, memoized on the model), and the
 accumulated top-k (nq x k rows). Each wave is one pass of search()'s
-planner over the wave's probe table: search.choose_kernel picks its
-kernel from the wave's geometry, and search._tail runs stages 5-7 with
-search()'s pruning rule and tail — the resident arrays of a small loaded
-model, else the driver tail when its bounds fit, else the window top-R
-and vecstore.exact_topk. A wave takes the tail's rows as pandas, which
-costs no Spark job on the driver tail, and none at all on the resident
-arrays.
+planner over the wave's probe table: search.stage5_kernel picks its
+kernel and index source from the wave's geometry, and search._tail runs
+stages 5-7 with search()'s pruning rule and tail. A wave takes the tail's
+rows as pandas, which costs no Spark job on the driver tail; the query
+collect is bounded by bytes, and the result is a local relation.
 Wave sizes double, bounding the number of waves at O(log n_clusters) per
 batch even when a hard query needs wide coverage.
 
@@ -62,18 +60,18 @@ from pyspark.sql import DataFrame, functions as F
 
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import (
-    _driver_tail_fits,
+    _RESULT_SCHEMA,
     _query_side,
     _tail,
     auto_overfetch,
-    choose_kernel,
     cluster_counts,
     quantize_probe_pairs,
     query_geometry,
+    result_table,
+    stage5_kernel,
 )
-from rabitq_spark.index.vecstore import query_matrix
+from rabitq_spark.index.vecstore import collect_queries, query_matrix
 from rabitq_spark.metrics import SearchMetrics
-from rabitq_spark.operators.topk import topk_per_group
 from rabitq_spark._dist import ensure_package_on_executors
 
 
@@ -138,10 +136,11 @@ def search_adaptive(
     `kernel` picks the per-wave rough scorer like search()'s `impl`:
     "arrow" runs the value-GEMM Arrow shortlist; "jvm" runs the codegen
     join (identical results — same estimator, same global top-R trim);
-    "auto" (default). search.choose_kernel settles it PER WAVE from the
+    "auto" (default). search.stage5_kernel settles it PER WAVE from the
     wave's probe geometry — the rule search() applies, with the wave's
     widest query as its nprobe. `metrics.kernel` / `kernel_reason`, when
-    `metrics` is passed, report the last wave's choice.
+    `metrics` is passed, report the last wave's choice. A batch whose
+    query matrix passes vecstore.QUERY_MATRIX_MAX_BYTES raises ValueError.
 
     Reference parity: README.md:20 ("early stop", the one unchecked
     feature the reference never built); the wave loop is the batch
@@ -158,7 +157,12 @@ def search_adaptive(
     ncl = cp.shape[0]
     scalar = np.float32(cfg.scalar)
 
-    qpd = queries.select(query_id, query_vec).toPandas()
+    qpd = collect_queries(queries, query_id, query_vec, model.dim)
+    if qpd is None:
+        raise ValueError(
+            f"the adaptive query batch's float64 (nq, {model.dim}) matrix passes "
+            "vecstore.QUERY_MATRIX_MAX_BYTES; search it in smaller batches"
+        )
     q_ids = np.asarray(qpd[query_id].values)
     qmat = query_matrix(qpd[query_vec].to_numpy(), model.dim)
     nq = qmat.shape[0]
@@ -275,15 +279,15 @@ def search_adaptive(
         # search()'s kernel rule and stages 5-7 on the wave's probe table;
         # a wave probes at most its widest query's clusters per query
         probe_counts = cluster_counts(ci_arr)
-        wave_kernel, reason = choose_kernel(
-            model, kernel, probe_counts, int(np.bincount(qi_arr).max()),
-            on_driver=_driver_tail_fits(model, qv, probe_counts, r),
+        wave_kernel, reason, csr = stage5_kernel(
+            model, kernel, r, qv, probe_counts, int(np.bincount(qi_arr).max()),
+            model.index_df,
         )
         wave_kernels.append(wave_kernel)
         if metrics is not None:
             metrics.kernel, metrics.kernel_reason = wave_kernel, reason
         wave_res = _tail(
-            model, wave_kernel, r, topk, qv, probe_counts, local=True, block=block
+            model, wave_kernel, r, topk, qv, probe_counts, local=True, csr=csr, block=block
         )[["query_id", "neighbor_id", "dist"]]
 
         acc = (
@@ -309,12 +313,7 @@ def search_adaptive(
         stats["forced_final_wave"] = forced_final
         stats["wave_kernels"] = wave_kernels
 
-    out = spark.createDataFrame(
-        acc, "query_id bigint, neighbor_id bigint, dist double"
-    )
-    return topk_per_group(
-        out,
-        ["query_id"],
-        [F.col("dist").asc(), F.col("neighbor_id").asc()],
-        topk,
-    ).select("query_id", "neighbor_id", "dist", "rank")
+    # acc is deduplicated and cut to topk per query: only the ranks are
+    # left to add, as the driver tail adds them
+    q, ids, dist = (acc[c].to_numpy() for c in ("query_id", "neighbor_id", "dist"))
+    return spark.createDataFrame(result_table(q, ids, dist, topk), _RESULT_SCHEMA)

@@ -5,15 +5,12 @@ Big state lives in DataFrames (index codes+factors, base vectors); small
 state (rotation matrix, dither bias, projected centroids) is driver-held
 numpy, broadcast to executors — mirroring SURVEY.md §1.1's mapping.
 
-One exception: a SMALL saved model — its base within
-vecstore.QUERY_MATRIX_MAX_BYTES (n_rows × dim_pad × 4 B, the bound under
-which a driver-tail search collects the whole base anyway) and no vec
-store — is also read once by load() into driver arrays
-(`RaBitQModel.resident`, a ResidentIndex): the reference's in-process CSR
-index (src/rabitq.rs:240-252). search() then scores stages 5-7 of a
-driver batch on them in numpy (index/search.py). The arrays describe the
-two frames they were read with and serve only while the model holds
-those same objects.
+One exception: a SMALL saved model (its base within
+vecstore.QUERY_MATRIX_MAX_BYTES, no vec store) is also read once by load()
+into driver arrays (`RaBitQModel.resident`, a ResidentIndex), which serve
+search() only while the model holds the two frames they were read with.
+Index rows on the driver, those arrays or a collect, are a CSRIndex: the
+reference's in-process CSR index (src/rabitq.rs:240-252).
 
 Persistence (S6/S7 analogue, src/rabitq.rs:84-156): a directory of
   index/   Parquet, partitioned by cluster_id   (codes + factors + orig_id)
@@ -33,35 +30,30 @@ from pyspark.sql import DataFrame, SparkSession
 from rabitq_spark.config import RaBitQConfig
 
 
-@dataclass(eq=False)
-class ResidentIndex:
-    """A small saved model's index and base as driver arrays, read by
-    RaBitQModel.load with zero Spark jobs. Index rows are in CSR order:
-    cluster c owns rows offsets[c]:offsets[c+1] of `orig_id`, `codes`
-    (plane-major int64 words, build_index's `code`) and every `factors`
-    column (float32); `base_ids` is sorted and `base_vecs` holds its rows
-    (base_df's padded vectors). `index_df`/`base_df` are the frames the
-    arrays were read with (describes)."""
+def factor_columns(config: RaBitQConfig) -> tuple:
+    """The estimator's factor columns of an index row (index/build.py's
+    two schemas)."""
+    if config.bits_per_dim > 1:
+        return ("center_dist_sq", "b_lb", "b_delta", "b_sum")
+    return ("center_dist_sq", "factor_ip", "factor_ppc", "error_bound")
 
-    index_df: DataFrame
-    base_df: DataFrame
+
+@dataclass(eq=False)
+class CSRIndex:
+    """Index rows in CSR order: cluster c owns rows offsets[c]:offsets[c+1]
+    of `orig_id`, `codes` (plane-major int64 words, build_index's `code`)
+    and every `factors` column (float32) — what search.score_clusters
+    reads, built by `of` from any Arrow table or batch of index rows."""
+
     offsets: np.ndarray
     orig_id: np.ndarray
     codes: np.ndarray
     factors: dict
-    base_ids: np.ndarray
-    base_vecs: np.ndarray
 
     @property
     def nbytes(self) -> int:
-        arrays = [self.offsets, self.orig_id, self.codes, self.base_ids, self.base_vecs]
-        return sum(a.nbytes for a in arrays + list(self.factors.values()))
-
-    def describes(self, model: "RaBitQModel") -> bool:
-        """Whether the arrays still stand for `model`'s frames: any
-        reassignment of index_df or base_df (a cache(), a tombstone
-        resolve, a filter) hands search back to the Spark plans."""
-        return model.index_df is self.index_df and model.base_df is self.base_df
+        arrays = (self.offsets, self.orig_id, self.codes, *self.factors.values())
+        return sum(a.nbytes for a in arrays)
 
     def cluster(self, c: int) -> tuple:
         """(orig_id, codes, factors) of cluster `c`'s rows, as views."""
@@ -72,20 +64,51 @@ class ResidentIndex:
             {k: v[lo:hi] for k, v in self.factors.items()},
         )
 
-    def gather(self, ids: np.ndarray) -> tuple:
-        """For sorted unique `ids`: (positions into `ids` the base holds,
-        their vectors). An id the base lacks is dropped, the base join's
-        semantics."""
-        if len(self.base_ids) == 0:
-            return np.empty(0, dtype=np.int64), self.base_vecs[:0]
-        where = np.minimum(np.searchsorted(self.base_ids, ids), len(self.base_ids) - 1)
-        hit = self.base_ids[where] == ids
-        return np.flatnonzero(hit), self.base_vecs[where[hit]]
+    @classmethod
+    def of(cls, t, n_clusters: int, width: int, factors) -> "CSRIndex | None":
+        """The rows of `t`, a pyarrow Table or RecordBatch holding
+        cluster_id, orig_id, `code` lists of `width` words and the
+        `factors` columns, in CSR order (a stable sort by cluster). None
+        when a code list has another width."""
+        codes = _list_matrix(t.column("code"), width)
+        if codes is None:
+            return None
+        cid = t.column("cluster_id").to_numpy()
+        order = np.argsort(cid, kind="stable")
+        return cls(
+            offsets=np.searchsorted(cid[order], np.arange(n_clusters + 1)),
+            orig_id=t.column("orig_id").to_numpy()[order],
+            codes=codes[order],
+            factors={f: t.column(f).to_numpy()[order] for f in factors},
+        )
+
+
+@dataclass(eq=False)
+class ResidentIndex:
+    """A small saved model's index and base as driver arrays, read by
+    RaBitQModel.load with zero Spark jobs: the index rows as a CSRIndex;
+    `base_ids` is sorted and `base_vecs` holds its rows (base_df's padded
+    vectors). `index_df`/`base_df` are the frames the arrays were read
+    with (describes)."""
+
+    index_df: DataFrame
+    base_df: DataFrame
+    index: CSRIndex
+    base_ids: np.ndarray
+    base_vecs: np.ndarray
+
+    @property
+    def nbytes(self) -> int:
+        return self.index.nbytes + self.base_ids.nbytes + self.base_vecs.nbytes
+
+    def describes(self, model: "RaBitQModel") -> bool:
+        """Whether the arrays still stand for `model`'s frames: any
+        reassignment of index_df or base_df (a cache(), a tombstone
+        resolve, a filter) hands search back to the frames."""
+        return model.index_df is self.index_df and model.base_df is self.base_df
 
     @classmethod
-    def read(
-        cls, path: str, model: "RaBitQModel"
-    ) -> "ResidentIndex | None":
+    def read(cls, path: str, model: "RaBitQModel") -> "ResidentIndex | None":
         """The arrays of the model saved at `path` (posix or URI, through
         vecstore._fs_path like the vec store), read with pyarrow: the
         hive-partitioned index/ and base/. None when the Parquet footers'
@@ -104,47 +127,38 @@ class ResidentIndex:
         n = model.n_rows
         if index.count_rows() != n or base.count_rows() != n:
             return None
-        # the estimator's factor columns (index/build.py's two schemas)
-        factors = (
-            ("center_dist_sq", "b_lb", "b_delta", "b_sum")
-            if model.config.bits_per_dim > 1
-            else ("center_dist_sq", "factor_ip", "factor_ppc", "error_bound")
-        )
+        factors = factor_columns(model.config)
         t = index.to_table(columns=["cluster_id", "orig_id", "code", *factors])
+        width = model.config.bits_per_dim * model.n_words
+        csr = CSRIndex.of(t, model.n_clusters, width, factors)
         b = base.to_table(columns=["orig_id", "vec"])
-        codes, vecs = _list_matrix(t["code"]), _list_matrix(b["vec"])
-        if (
-            codes is None
-            or vecs is None
-            or codes.shape[1] != model.config.bits_per_dim * model.n_words
-            or vecs.shape[1] != model.dim_pad
-        ):
+        vecs = _list_matrix(b["vec"], model.dim_pad)
+        if csr is None or vecs is None:
             return None
-        cid = t["cluster_id"].to_numpy()
-        order = np.argsort(cid, kind="stable")
         ids = b["orig_id"].to_numpy()
         border = np.argsort(ids, kind="stable")
-        return cls(
-            index_df=model.index_df,
-            base_df=model.base_df,
-            offsets=np.searchsorted(cid[order], np.arange(model.n_clusters + 1)),
-            orig_id=t["orig_id"].to_numpy()[order],
-            codes=codes[order],
-            factors={f: t[f].to_numpy()[order] for f in factors},
-            base_ids=ids[border],
-            base_vecs=vecs[border],
-        )
+        return cls(model.index_df, model.base_df, csr, ids[border], vecs[border])
 
 
-def _list_matrix(col) -> "np.ndarray | None":
-    """A list column whose lists share one width as an (n, width) array,
-    else None."""
-    arr = col.combine_chunks()
+def _list_matrix(col, width: int) -> "np.ndarray | None":
+    """A list column (chunked or not) whose lists all hold `width` values
+    as an (n, width) array, else None."""
+    arr = col.combine_chunks() if hasattr(col, "combine_chunks") else col
     lengths = arr.value_lengths().to_numpy(zero_copy_only=False)
-    width = int(lengths[0]) if len(arr) else 0
     if (lengths != width).any():
         return None
     return arr.flatten().to_numpy(zero_copy_only=False).reshape(len(arr), width)
+
+
+def sorted_gather(keys: np.ndarray, rows: np.ndarray, ids: np.ndarray) -> tuple:
+    """For sorted unique `ids`, over sorted `keys` and their `rows`:
+    (positions into `ids` that `keys` holds, those rows). An id `keys`
+    lacks is dropped, the base join's semantics."""
+    if len(keys) == 0:
+        return np.empty(0, dtype=np.int64), rows[:0]
+    where = np.minimum(np.searchsorted(keys, ids), len(keys) - 1)
+    hit = keys[where] == ids
+    return np.flatnonzero(hit), rows[where[hit]]
 
 
 @dataclass
@@ -167,8 +181,7 @@ class RaBitQModel:
     # set, search() stage 7 gathers ONLY candidate rows instead of joining
     # (and thus fully scanning) base_df.
     resident: "ResidentIndex | None" = field(default=None, repr=False)
-    # a small loaded model's index and base as driver arrays (load()); see
-    # the module docstring
+    # a small loaded model's driver arrays (load(), module docstring)
 
     @property
     def n_clusters(self) -> int:

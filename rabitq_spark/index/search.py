@@ -13,20 +13,22 @@ for stage 7.
 
 The planner: like the reference, a batch takes one decision per stage,
 and search(), range_search() and every search_adaptive wave take it in
-the same function — the kernel in choose_kernel (the resident arrays,
-validation, coverage, filtering, unknown geometry, the probe-byte cap,
-the floors), the index pruning in _pruning_set, and the tail of stages
-5-7 in _tail (range_search filters its candidates instead of cutting a
-top-R).
+the same function — the kernel and its index source in stage5_kernel
+(the Spark kernel in choose_kernel: validation, coverage, unknown
+geometry, the probe-byte cap, the floors), the index pruning in
+_pruning_set, and the tail of stages 5-7 in _tail (range_search filters
+its candidates instead of cutting a top-R). Filters apply to the one
+index frame every source and kernel reads.
 
-Where stages 5-7 run: a small loaded model also lives on the driver
-(RaBitQModel.resident: CSR index arrays and the sorted base, read once by
-load() within vecstore.QUERY_MATRIX_MAX_BYTES), like the reference's
-in-process index. An unfiltered "auto" batch on the driver path then
-scores, cuts and reranks in numpy over those arrays — the "resident"
-kernel — so its only Spark job is the query collect. Every other batch
-runs stage 5 as a Spark plan (jvm or Arrow) and stages 6-7 on the driver
-tail or the executor tail.
+Where stages 5-7 run: an "auto" batch whose stages 6-7 fit the driver
+(_driver_tail_fits) scores stage 5 there too, like the reference's
+in-process index: score_clusters over a CSR view of the probed index rows
+(model.CSRIndex) — the "driver" kernel. The rows are a small loaded
+model's resident arrays (RaBitQModel.resident, read once by load()), at
+no job, or else one collect of the pruned index rows, bounded at
+_ARROW_MAX_PROBE_BYTES. Every other batch, and every forced "jvm" or
+"arrow" request, runs stage 5 as a Spark plan and stages 6-7 on the
+executor tail.
 
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
@@ -36,36 +38,36 @@ Stages:
        inside a mapInPandas over the query batch with the rotation matrix
        + projected centroids broadcast. Emits the probe table: (query_id,
        cluster_id, y_c_dist_sq, lower_bound, delta, scalar_sum, qplanes).
-  5.   rough scoring — equi-join probes ⋈ index on cluster_id (probe side
-       broadcast; index side partition-pruned by the probed cluster set),
-       then the D5 estimator as one SQL expression (whole-stage codegen;
-       src/rabitq.rs:336-367) — _rough_candidates — or the Arrow
-       value-GEMM kernel (_fused_shortlist), both behind _candidates. The
-       resident kernel (_resident_candidates) scores each probed
-       cluster's CSR rows with the Arrow kernel's numpy estimator,
-       cluster_rough.
+  5.   rough scoring. The driver kernel: score_clusters, per probed
+       cluster the D5 estimator in numpy (cluster_rough: one value GEMM,
+       src/rabitq.rs:336-367) and a local top-R cut (local_cut). The
+       executor tail's Spark plans, behind _candidates: the equi-join
+       probes ⋈ index on cluster_id (probe side broadcast; index side
+       partition-pruned by the probed cluster set) with the estimator as
+       one SQL expression (whole-stage codegen) — _rough_candidates — or
+       _fused_shortlist, a mapInArrow that runs score_clusters on each
+       Arrow batch of the index.
   6.   top-R rough candidates per query on (rough, orig_id) — the batch
        substitute for the sequential heap threshold (src/rerank.rs:62-114).
-       The driver tail (_driver_tail, when _driver_tail_fits) takes the
-       stage-5 stream as arrays — one collect, or the resident kernel's
-       per-cluster local_cut — and cuts it with top_n in numpy — REPOSE's
-       local top-R and one merge (PAPERS.md); the executor tail
-       (_shortlist) cuts it with a WindowGroupLimit window.
+       The driver tail (_driver_tail) cuts the driver kernel's arrays with
+       top_n in numpy — REPOSE's local top-R and one merge (PAPERS.md);
+       the executor tail (_shortlist) cuts the stream with a
+       WindowGroupLimit window.
   7.   exact rerank and the final top-k per query on (dist, neighbor_id),
        exact squared-L2 in double precision (vecstore.l2_fold). The driver
        tail reads each distinct shortlisted id's base row once — a gather
        from the resident base or a vec store, or one collect of base_df —
-       folds
-       every pair and ranks with top_n; it returns a local relation. The
-       executor tail is vecstore.exact_topk, the one rerank of every other
-       shortlist-then-exact plan: vec-store gather or base join, then a
-       window top-k.
+       folds every pair and ranks with top_n; it returns a local relation.
+       The executor tail is vecstore.exact_topk, the one rerank of every
+       other shortlist-then-exact plan: vec-store gather or base join,
+       then a window top-k.
 
 All kernels and both tails keep the same order and arithmetic, so their
 frames are bit-identical (tests/test_driver_path.py).
 
 Scale notes: a driver-tail batch runs no shuffle at all and moves each
-base row to the driver at most once; a resident batch moves none. On the executor tail the only
+probed index row and each shortlisted base row to the driver at most
+once; a resident batch moves none. On the executor tail the only
 shuffles are the two window top-ks and, when neither side fits a
 broadcast, the cluster_id join and the rerank's base join (a model with a
 vec store gathers candidate rows instead). The index never moves; probes
@@ -91,7 +93,13 @@ from pyspark.sql.types import (
 from rabitq_spark._dist import ensure_package_on_executors
 from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.rotation import apply_rot
-from rabitq_spark.index.model import RaBitQModel
+from rabitq_spark.index.model import (
+    CSRIndex,
+    RaBitQModel,
+    _list_matrix,
+    factor_columns,
+    sorted_gather,
+)
 from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import (
     VecStore,
@@ -477,9 +485,7 @@ def cluster_rough(
     in `dtype` = value_gemm_dtype) and its float32 y_c_dist_sq, lower
     bound, delta and scalar sum; the index side its `codes` ((m, bits ×
     n_words) plane-major int64 words) and `factors`, a mapping from
-    factor column to its m values (a pandas group or arrays). The one
-    scorer of the Arrow plan (_fused_shortlist) and the resident path
-    (_resident_candidates)."""
+    factor column to its m values. Called per cluster by score_clusters."""
     m = codes.shape[0]
     # the cross/asym term is ONE value GEMM of the unpacked base values
     cross = value_gemm_asym(
@@ -550,6 +556,39 @@ def probes_by_cluster(block: dict, theta_log_dim: int, n_words: int) -> dict:
     }
 
 
+def score_clusters(csr: CSRIndex, by_cluster: dict, r: int) -> tuple:
+    """The one numpy stage 5, with the local cut of stage 6: each probed
+    cluster's rows of `csr` scored by cluster_rough against its probe rows
+    in `by_cluster` (probes_by_cluster), then cut by local_cut to its
+    top-R per query, ties kept. The geometry comes from the arrays: words
+    per plane and query planes from the probe planes, code planes from
+    the code width. Returns ((query_id, orig_id, rough) arrays, pairs
+    scored). Serves the resident arrays, a driver index collect and each
+    Arrow batch of _fused_shortlist."""
+    # seeded with empty arrays: a batch that probes only empty clusters
+    out_q, out_id = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    out_rough, scored = [np.empty(0)], 0
+    for c in np.flatnonzero(np.diff(csr.offsets)).tolist():
+        probe = by_cluster.get(c)
+        if probe is None:
+            continue
+        qids, ycd, lb, delta, ssum, planes = probe
+        ids, codes, factors = csr.cluster(c)
+        theta_log_dim, n_words = planes.shape[1:]
+        bits = codes.shape[1] // n_words
+        dtype = value_gemm_dtype(64 * n_words, theta_log_dim, bits)
+        rough = cluster_rough(
+            unpack_plane_values(planes, theta_log_dim, dtype),
+            ycd, lb, delta, ssum, codes, factors, bits, 64 * n_words, dtype,
+        )
+        scored += rough.size
+        qi, ci = local_cut(rough, r)
+        out_q.append(qids[qi])
+        out_id.append(ids[ci])
+        out_rough.append(rough[qi, ci])
+    return tuple(map(np.concatenate, (out_q, out_id, out_rough))), scored
+
+
 #: Worker-buffer row budget for _fused_shortlist's partition-level top-R
 #: accumulation (~100 MB at 24 bytes/row). Exhaustive configs (r ≥ buffer)
 #: emit partial chunks instead of holding the whole partition.
@@ -557,129 +596,68 @@ _FUSED_FLUSH_ROWS = 4_000_000
 
 
 def _fused_shortlist(
-    model: RaBitQModel,
-    block: dict,
-    r: int,
-    clusters=None,
+    model: RaBitQModel, block: dict, r: int, index: DataFrame
 ) -> DataFrame:
-    """The Arrow plan for stages 5-6: rough-score candidates and keep a
-    local top-R per query inside ONE mapInPandas over the index — the probe
-    table rides as a broadcast keyed by cluster.
+    """The Arrow plan for stages 5-6: ONE mapInArrow over the index rows
+    `index` (_index_scan: pruned and filtered), with the driver probe
+    `block` (prepare_probe_block's columns; probe_block_of turns a
+    collected probe frame into one) broadcast keyed by cluster. Each Arrow
+    batch becomes a CSRIndex and runs score_clusters, so every probed
+    cluster's rows are one value GEMM and a local cut; the partition keeps
+    a top-R per query and emits it (≤ R rows per query per partition into
+    the window, instead of every candidate). Same estimator and top-R
+    order as the jvm join, so the frames are identical."""
+    import pyarrow as pa
 
-    `block` is the probe table on the driver, as prepare_probe_block's
-    columns (probe_block_of turns a collected probe frame into one);
-    `clusters`, when given, prunes the index scan (_pruning_set).
-
-    Trades the JVM join+window for numpy batch math plus a much smaller
-    window input (≤ R rows per query per index partition instead of every
-    candidate). Wins when candidates/query is large; the JVM path wins on
-    small batches. Results are identical: same estimator, same top-R
-    semantics (ties on rough broken by orig_id via stable ordering).
-
-    The estimator's integer term is one value GEMM per (cluster, batch)
-    group (value_gemm_asym) for every code width, in the dtype
-    value_gemm_dtype picks for the model's geometry. The unpacked query
-    values are built LAZILY executor-side per cluster (cached per worker,
-    4 or 8 bytes/dim per probe row), NOT broadcast — the per-group rebuild
-    is ~npairs×dim bit ops, noise. The rough formulas mirror
-    rough_distance_expr (1-bit) and rough_distance_expr_multibit (B > 1).
-    """
     spark = model.index_df.sparkSession
     ensure_package_on_executors(spark)
-    n_words = model.n_words
-    theta_log_dim = model.config.theta_log_dim
-    bits = model.config.bits_per_dim
-    dim_pad = model.dim_pad
-    dtype = value_gemm_dtype(dim_pad, theta_log_dim, bits)
+    n_clusters, factors = model.n_clusters, factor_columns(model.config)
+    width = model.config.bits_per_dim * model.n_words
     bc = spark.sparkContext.broadcast(
-        probes_by_cluster(block, theta_log_dim, n_words)
+        probes_by_cluster(block, model.config.theta_log_dim, model.n_words)
     )
 
     def topr(q, i, ro):
         keep = top_n(q, ro, i, r)
         return q[keep], i[keep], ro[keep]
 
+    def emit(q, i, ro):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(q, pa.int64()), pa.array(i, pa.int64()), pa.array(ro)],
+            ["query_id", "orig_id", "rough"],
+        )
+
     def score(batches):
         by_cluster = bc.value
-        qv_cache: dict = {}
-        buf_q, buf_id, buf_rough = [], [], []
-        for pdf in batches:
-            if pdf.empty:
+        buf: list = []
+        for batch in batches:
+            csr = CSRIndex.of(batch, n_clusters, width, factors)
+            if csr is None:
+                raise ValueError(f"an index code list is not {width} words")
+            (q, i, ro), _ = score_clusters(csr, by_cluster, r)
+            if not len(q):
                 continue
-            out_q, out_id, out_rough = [], [], []
-            for cid, grp in pdf.groupby("cluster_id"):
-                pr = by_cluster.get(int(cid))
-                if pr is None:
-                    continue
-                qids, ycd, lb, delta, ssum, planes = pr
-                # unpack the query values once per cluster (cached,
-                # bounded at 64 MB per worker: past it, rebuild per group,
-                # correctness unaffected)
-                qvals = qv_cache.get(int(cid))
-                if qvals is None:
-                    qvals = unpack_plane_values(planes, theta_log_dim, dtype)
-                    if (
-                        sum(v.nbytes for v in qv_cache.values()) + qvals.nbytes
-                        <= 64 << 20
-                    ):
-                        qv_cache[int(cid)] = qvals
-                rough = cluster_rough(
-                    qvals, ycd, lb, delta, ssum,
-                    np.vstack(grp["code"].values).astype(np.int64),
-                    grp, bits, dim_pad, dtype,
-                )
-                # the lexsort-based top-R below then runs on ~nq×r rows
-                # instead of nq×m (the round-7 Amdahl item: selection, not
-                # the estimator, dominated the Arrow path)
-                qi, ci = local_cut(rough, r)
-                out_q.append(qids[qi])
-                out_id.append(grp["orig_id"].values.astype(np.int64)[ci])
-                out_rough.append(rough[qi, ci])
-            if not out_q:
-                continue
-            # per-batch trim bounds the buffer; the partition-level trim
-            # below shrinks the Arrow emit (and the downstream window
-            # input) again — measured 16.7M -> <=nq×R rows per partition
-            # at 1M × 256 / nq=1000 (PLAN.md round 7)
-            q, i, ro = topr(
-                np.concatenate(out_q),
-                np.concatenate(out_id),
-                np.concatenate(out_rough),
-            )
-            buf_q.append(q)
-            buf_id.append(i)
-            buf_rough.append(ro)
-            # bound the worker's buffer: with exhaustive/high-overfetch
-            # configs the per-batch top-R trim keeps every row, so holding
-            # everything until partition end would be O(partition) memory.
-            # Past the budget, compact via the merged top-R; if the trim
-            # cannot shrink below it (r larger than the buffer), EMIT —
-            # topk_per_group downstream re-trims globally, so extra
-            # partial chunks never change results.
-            if sum(len(b) for b in buf_q) > _FUSED_FLUSH_ROWS:
-                q, i, ro = topr(
-                    np.concatenate(buf_q),
-                    np.concatenate(buf_id),
-                    np.concatenate(buf_rough),
-                )
-                if len(q) > _FUSED_FLUSH_ROWS:
-                    yield pd.DataFrame(
-                        {"query_id": q, "orig_id": i, "rough": ro}
-                    )
-                    buf_q, buf_id, buf_rough = [], [], []
+            # the per-batch trim bounds the buffer; the partition-level
+            # trim below shrinks the Arrow emit (and the window input)
+            # again — measured 16.7M -> <=nq×R rows per partition at
+            # 1M × 256 / nq=1000 (PLAN.md round 7)
+            buf.append(topr(q, i, ro))
+            # with exhaustive/high-overfetch configs the per-batch trim
+            # keeps every row: past the budget, compact via the merged
+            # top-R, and if that cannot shrink below it, EMIT — the window
+            # downstream re-trims globally, so partial chunks never change
+            # results
+            if sum(len(b[0]) for b in buf) > _FUSED_FLUSH_ROWS:
+                merged = topr(*map(np.concatenate, zip(*buf)))
+                if len(merged[0]) > _FUSED_FLUSH_ROWS:
+                    yield emit(*merged)
+                    buf = []
                 else:
-                    buf_q, buf_id, buf_rough = [q], [i], [ro]
-        if not buf_q:
-            return
-        q, i, ro = topr(
-            np.concatenate(buf_q), np.concatenate(buf_id), np.concatenate(buf_rough)
-        )
-        yield pd.DataFrame({"query_id": q, "orig_id": i, "rough": ro})
+                    buf = [merged]
+        if buf:
+            yield emit(*topr(*map(np.concatenate, zip(*buf))))
 
-    index = model.index_df
-    if clusters is not None:
-        index = index.filter(cluster_filter(clusters))
-    return index.mapInPandas(
+    return index.select("cluster_id", "orig_id", "code", *factors).mapInArrow(
         score, "query_id bigint, orig_id bigint, rough double"
     )
 
@@ -696,6 +674,18 @@ def probe_block_of(ppdf: pd.DataFrame) -> dict:
     return block
 
 
+def _index_scan(
+    model: RaBitQModel, index: "DataFrame | None", clusters=None
+) -> DataFrame:
+    """The index rows a stage-5 scan reads, every kernel and source:
+    `index` (search()'s frame, filtered by its index predicate and
+    allowed ids; the model's own by default) pruned to `clusters` — an
+    IN-filter pushed into the Parquet scan, the analogue of the
+    reference's CSR offsets scan (src/rabitq.rs:348)."""
+    index = model.index_df if index is None else index
+    return index if clusters is None else index.filter(cluster_filter(clusters))
+
+
 def _rough_candidates(
     model: RaBitQModel,
     probes: DataFrame,
@@ -703,21 +693,16 @@ def _rough_candidates(
     broadcast: bool = True,
     index: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Stage 5 on the jvm: the J2 equi-join index ⋈ probes on cluster_id,
-    then the D5 estimator (rough_estimator_expr) — (query_id, orig_id,
-    rough). `clusters`, when given, prunes the scan to the probed clusters:
-    an IN-filter pushed into the Parquet scan, the analogue of the
-    reference's CSR offsets scan (src/rabitq.rs:348). The probe side
-    broadcasts unless `broadcast` is off: a huge batch (a full-table
-    self-join) then shuffles BOTH sides by cluster_id, the index side
-    bounded by the pruned posting lists. `index` defaults to the model's;
-    search() passes it filtered by its index predicate."""
-    index = model.index_df if index is None else index
-    if clusters is not None:
-        index = index.filter(cluster_filter(clusters))
+    """Stage 5 on the jvm: the J2 equi-join of the _index_scan ⋈ probes on
+    cluster_id, then the D5 estimator (rough_estimator_expr) — (query_id,
+    orig_id, rough). The probe side broadcasts unless `broadcast` is off:
+    a huge batch (a full-table self-join) then shuffles BOTH sides by
+    cluster_id, the index side bounded by the pruned posting lists."""
     probe_side = F.broadcast(probes) if broadcast else probes
-    return index.join(probe_side, "cluster_id").select(
-        "query_id", "orig_id", rough_estimator_expr(model).alias("rough")
+    return (
+        _index_scan(model, index, clusters)
+        .join(probe_side, "cluster_id")
+        .select("query_id", "orig_id", rough_estimator_expr(model).alias("rough"))
     )
 
 
@@ -730,35 +715,44 @@ def _candidates(
     clusters=None,
     broadcast: bool = True,
     index: "DataFrame | None" = None,
-    tap=None,
 ) -> DataFrame:
-    """Stage 5 for search() and every search_adaptive wave: rough-score
-    with `kernel` over the index pruned to `clusters` — "arrow" runs
-    _fused_shortlist (a local top-R per partition) over the driver probe
-    `block`, "jvm" _rough_candidates over the probe frame `probes`; either
-    is built from the other when None. `tap`, when given, wraps the stream
-    (_tail's allowed-id filter and rough observer). Returns (query_id,
-    orig_id, rough)."""
+    """Stage 5 of the executor tail: rough-score with `kernel` over the
+    _index_scan — "arrow" runs _fused_shortlist (a local top-R per
+    partition) over the driver probe `block`, "jvm" _rough_candidates
+    over the probe frame `probes`; either is built from the other when
+    None. Returns (query_id, orig_id, rough)."""
     if kernel == "arrow":
         if block is None:
             block = probe_block_of(probes.toPandas())
-        cand = _fused_shortlist(model, block, r, clusters)
-    else:
-        if probes is None:
-            probes = probe_frame(model.index_df.sparkSession, block)
-        cand = _rough_candidates(model, probes, clusters, broadcast, index)
-    return cand if tap is None else tap(cand)
+        return _fused_shortlist(model, block, r, _index_scan(model, index, clusters))
+    if probes is None:
+        probes = probe_frame(model.index_df.sparkSession, block)
+    return _rough_candidates(model, probes, clusters, broadcast, index)
 
 
-def _shortlist(model: RaBitQModel, kernel: str, r: int, **kw) -> DataFrame:
+def _shortlist(
+    model: RaBitQModel, kernel: str, r: int, metrics=None, **kw
+) -> DataFrame:
     """Stages 5-6 on the executors: _candidates, then the top-R per query
-    on (rough, orig_id) as a window. Returns (query_id, orig_id)."""
-    return topk_per_group(
-        _candidates(model, kernel, r, **kw),
-        ["query_id"],
-        [F.col("rough").asc(), F.col("orig_id").asc()],
-        r,
+    on (rough, orig_id) as a window, with `metrics`' rough and precise
+    observers. Returns (query_id, orig_id)."""
+    cand = _candidates(model, kernel, r, **kw)
+    if metrics is not None and metrics.observe_rough:
+        # A10 rough-candidate counter (src/metrics.rs analogue, no extra
+        # pass — but the CollectMetrics node splits the codegen span; see
+        # SearchMetrics.observe_rough for the at-scale cost)
+        cand = cand.observe(metrics.rough, F.count(F.lit(1)).alias("rough_count"))
+    shortlist = topk_per_group(
+        cand, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
     ).select("query_id", "orig_id")
+    if metrics is not None and metrics.observe_precise:
+        # CollectMetrics directly above the top-R filter defeats the
+        # WindowGroupLimit pre-shuffle trim at scale — see
+        # SearchMetrics.observe_precise for the bisected cost
+        shortlist = shortlist.observe(
+            metrics.precise, F.count(F.lit(1)).alias("precise_count")
+        )
+    return shortlist
 
 
 #: The driver tail's result schema: exact_topk's for a driver batch's
@@ -803,49 +797,21 @@ def _driver_tail_fits(
     )
 
 
-def _resident_candidates(model: RaBitQModel, block: dict, r: int) -> tuple:
-    """Stage 5 and the local cut of stage 6 over the resident arrays: each
-    probed cluster's CSR rows scored by cluster_rough, then local_cut to
-    its top-R per query (ties kept). Returns ((query_id, orig_id, rough)
-    arrays, pairs scored)."""
-    res = model.resident
-    theta_log_dim = model.config.theta_log_dim
-    bits = model.config.bits_per_dim
-    dtype = value_gemm_dtype(model.dim_pad, theta_log_dim, bits)
-    # seeded with empty arrays: a batch that probes only empty clusters
-    out_q, out_id = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
-    out_rough, scored = [np.empty(0)], 0
-    by_cluster = probes_by_cluster(block, theta_log_dim, model.n_words)
-    for c, (qids, ycd, lb, delta, ssum, planes) in by_cluster.items():
-        ids, codes, factors = res.cluster(c)
-        if len(ids) == 0:
-            continue
-        rough = cluster_rough(
-            unpack_plane_values(planes, theta_log_dim, dtype),
-            ycd, lb, delta, ssum, codes, factors, bits, model.dim_pad, dtype,
-        )
-        scored += rough.size
-        qi, ci = local_cut(rough, r)
-        out_q.append(qids[qi])
-        out_id.append(ids[ci])
-        out_rough.append(rough[qi, ci])
-    cand = tuple(map(np.concatenate, (out_q, out_id, out_rough)))
-    return cand, scored
-
-
-def _base_rows(model: RaBitQModel, ids: "np.ndarray", metrics=None, resident=None):
+def _base_rows(model: RaBitQModel, ids: "np.ndarray", metrics=None):
     """The base rows of sorted unique `ids` for the driver tail: (positions
     into `ids` of the rows read, their vectors, base rows read or None when
-    `metrics.rerank` observed them). The `resident` arrays and a vec store
-    gather exactly those rows on the driver, zero jobs. base_df takes ONE
-    collect: the whole frame when all n_rows fit
-    vecstore.QUERY_MATRIX_MAX_BYTES — the scan reads every row either way,
-    and a long `orig_id IN (...)` list costs more to analyze (~100 ms at
-    3.5k ids) than shipping the rest of a small base — else that IN
-    filter. The extra rows are dropped here; an id the frame lacks drops
-    its pairs, the base join's semantics."""
-    if resident is not None:
-        found, vecs = resident.gather(ids)
+    `metrics.rerank` observed them). The resident base, while its arrays
+    describe the model, and a vec store gather exactly those rows on the
+    driver, zero jobs. base_df takes ONE collect: the whole frame when all
+    n_rows fit vecstore.QUERY_MATRIX_MAX_BYTES — the scan reads every row
+    either way, and a long `orig_id IN (...)` list costs more to analyze
+    (~100 ms at 3.5k ids) than shipping the rest of a small base — else
+    that IN filter, its rows then gathered like the resident base's
+    (sorted_gather): an id the frame lacks drops its pairs, the base
+    join's semantics."""
+    res = model.resident
+    if res is not None and res.describes(model):
+        found, vecs = sorted_gather(res.base_ids, res.base_vecs, ids)
         return found, vecs, len(found)
     base = model.rerank_base
     if isinstance(base, VecStore):
@@ -861,13 +827,9 @@ def _base_rows(model: RaBitQModel, ids: "np.ndarray", metrics=None, resident=Non
         base = base.filter(F.expr(f"orig_id IN ({listed})"))
     t = base.select("orig_id", "vec").toArrow()
     got = t["orig_id"].to_numpy()
-    if len(got) == 0:
-        return got, np.empty((0, model.dim_pad), dtype=np.float32), None
-    vecs = t["vec"].combine_chunks().flatten().to_numpy(zero_copy_only=False)
-    vecs = vecs.reshape(len(got), -1)
-    where = np.minimum(np.searchsorted(ids, got), len(ids) - 1)
-    hit = ids[where] == got
-    return where[hit], vecs[hit], None
+    order = np.argsort(got, kind="stable")
+    vecs = _list_matrix(t["vec"], model.dim_pad)
+    return (*sorted_gather(got[order], vecs[order], ids), None)
 
 
 def _driver_tail(
@@ -878,28 +840,24 @@ def _driver_tail(
     k: int,
     metrics: "SearchMetrics | None" = None,
     rough_count: int = 0,
-    resident=None,
 ):
     """Stages 6-7 on the driver, for a batch whose query matrix is there
     and whose bounds _driver_tail_fits, over its stage-5 candidates `cand`,
     parallel (query_id, orig_id, rough) arrays: the top-R per query on
     (rough, orig_id) in numpy (top_n); each DISTINCT shortlisted id's base
-    row read once (_base_rows, from the `resident` arrays when given);
-    vecstore.l2_fold per (query, candidate) pair; the top-k per query on
-    (dist, neighbor_id). Same order and arithmetic as the executor tail
-    (_shortlist + exact_topk), so the rows are bit-identical. Returns a
-    pyarrow Table with exact_topk's columns (query_id, neighbor_id, dist,
-    rank). `metrics` gets the counts from the arrays, at no extra job:
-    `rough_count` (the pairs stage 5 scored), the top-R rows, and the
+    row read once (_base_rows); vecstore.l2_fold per (query, candidate)
+    pair; the top-k per query on (dist, neighbor_id). Same order and
+    arithmetic as the executor tail (_shortlist + exact_topk), so the rows
+    are bit-identical. Returns a pyarrow Table of _RESULT_SCHEMA
+    (result_table). `metrics` gets the counts from the arrays, at no extra
+    job: `rough_count` (the pairs stage 5 scored), the top-R rows, and the
     base rows a gather read."""
-    import pyarrow as pa
-
     qids, qmat = qv
     q, ids, rough = cand
     keep = top_n(q, rough, ids, r)
     q, ids = q[keep], ids[keep]
     uniq, inv = np.unique(ids, return_inverse=True)
-    found, vecs, read = _base_rows(model, uniq, metrics, resident)
+    found, vecs, read = _base_rows(model, uniq, metrics)
     # the `vecs` row of each shortlisted pair; an id base_df lacks drops
     # its pairs
     row = np.full(len(uniq), -1, dtype=np.int64)
@@ -915,12 +873,21 @@ def _driver_tail(
     for s in range(0, len(q), step):
         e = min(s + step, len(q))
         dist[s:e] = l2_fold(qmat[qrow[s:e]], vecs[row[s:e], :dim])
-    sel, rank = top_n(q, dist, ids, k, ranks=True)
     if metrics is not None:
         metrics.counts["rough_count"] = rough_count
         metrics.counts["precise_count"] = len(keep)
         if read is not None:
             metrics.counts["rerank_base_rows"] = read
+    return result_table(q, ids, dist, k)
+
+
+def result_table(q, ids, dist, k: int):
+    """The top-k per query of parallel (query_id, neighbor_id, dist)
+    arrays on (dist, neighbor_id), ranked (top_n), as a pyarrow Table of
+    _RESULT_SCHEMA's columns."""
+    import pyarrow as pa
+
+    sel, rank = top_n(q, dist, ids, k, ranks=True)
     return pa.table(
         {
             "query_id": pa.array(q[sel], pa.int64()),
@@ -978,10 +945,11 @@ _ARROW_MIN_QUERIES_PER_CLUSTER = 12
 # Byte cap for a probe table held on the driver (≈ 1.7M probe rows at dim
 # 256): search()'s driver path builds it there, and the Arrow plan
 # broadcasts it. Past the cap a batch keeps the executor path, whose
-# Arrow request is demoted to the jvm join.
+# Arrow request is demoted to the jvm join. It also caps the index rows a
+# driver-tail batch collects (_driver_csr), one more copy on the driver.
 _ARROW_MAX_PROBE_BYTES = 256 << 20
 
-#: What a caller may ask for; choose_kernel also returns "resident".
+#: What a caller may ask for; the kernel rule also returns "driver".
 KERNELS = ("auto", "jvm", "arrow")
 
 
@@ -990,43 +958,26 @@ def choose_kernel(
     impl: str,
     probe_counts: "dict | None",
     nprobe: int,
-    filtered: bool = False,
-    on_driver: bool = False,
 ) -> tuple[str, str]:
-    """The kernel rule of search() and every search_adaptive wave — the one
-    place a kernel is validated, chosen or demoted. Returns ("resident" |
-    "jvm" | "arrow", reason) for `impl` (one of KERNELS) over a probe table
-    with {cluster_id: probe rows} `probe_counts` (None when the executor
-    path did not resolve it) and at most `nprobe` probed clusters per
-    query; `on_driver` says the batch's query matrix is on the driver and
-    its stages 6-7 fit there (_driver_tail_fits). Every kernel is
+    """The Spark kernel of the executor tail — the one place one is
+    validated, chosen or demoted. Returns ("jvm" | "arrow", reason) for
+    `impl` (one of KERNELS) over a probe table with {cluster_id: probe
+    rows} `probe_counts` (None when the executor path did not resolve it)
+    and at most `nprobe` probed clusters per query. Every kernel is
     bit-identical, so the choice never changes a result row. In order:
-    "auto" runs "resident" — stages 5-7 in numpy over the model's resident
-    arrays (RaBitQModel.resident, no job) — when those arrays still
-    describe the model, the batch is on_driver and unfiltered; "jvm" is
-    honoured; "auto" keeps the jvm join when nprobe covers over half the
-    clusters — the batch scans most of the index, and the executor path
-    would pay a checkpoint and a count job to resolve the geometry (at the
-    sf0.1 headline shape, nprobe 28 of 32 clusters, ~10% of the whole
-    search); a filtered search runs on the jvm plan, as the Arrow plan
-    reads the unfiltered model tables; so does an unknown geometry, or a
-    probe table over _ARROW_MAX_PROBE_BYTES (the Arrow plan broadcasts it
-    from the driver); then "arrow" is honoured, and "auto" asks the floors
-    below."""
+    "jvm" is honoured; "auto" keeps the jvm join when nprobe covers over
+    half the clusters — the batch scans most of the index, and the
+    executor path would pay a checkpoint and a count job to resolve the
+    geometry (at the sf0.1 headline shape, nprobe 28 of 32 clusters, ~10%
+    of the whole search); so does an unknown geometry, or a probe table
+    over _ARROW_MAX_PROBE_BYTES (the Arrow plan broadcasts it from the
+    driver); then "arrow" is honoured, and "auto" asks the floors below."""
     if impl not in KERNELS:
         raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
-    res = model.resident if impl == "auto" and on_driver and not filtered else None
-    if res is not None and res.describes(model):
-        return "resident", (
-            f"resident index and base {res.nbytes} B, base within "
-            f"{vecstore.QUERY_MATRIX_MAX_BYTES} B"
-        )
     if impl == "jvm":
         return "jvm", "requested"
     if impl == "auto" and 2 * nprobe > model.n_clusters:
         return "jvm", "nprobe covers over half the clusters"
-    if filtered:
-        return "jvm", "filtered search runs on the jvm plan"
     if probe_counts is None:
         return "jvm", "probe geometry unknown"
     n_probe_rows = sum(probe_counts.values())
@@ -1062,14 +1013,71 @@ def choose_kernel(
 
 
 def _pruning_set(model: RaBitQModel, probe_counts: "dict | None"):
-    """The pruning rule of every stage-5 scan, either kernel: the probed
-    clusters as the `cluster_id IN (...)` set when they are at most half
-    the index, else None — a wider set prunes little, and its literal list
-    costs analysis. nprobe·2 > n_clusters already rules pruning out, so
-    the executor path pays its count job only below it."""
+    """The pruning rule of every stage-5 scan, any kernel or source: the
+    probed clusters as the `cluster_id IN (...)` set when they are at most
+    half the index, else None — a wider set prunes little, and its literal
+    list costs analysis. nprobe·2 > n_clusters already rules pruning out,
+    so the executor path pays its count job only below it."""
     if probe_counts is not None and 2 * len(probe_counts) <= model.n_clusters:
         return probe_counts
     return None
+
+
+def _index_row_bytes(model: RaBitQModel) -> int:
+    """Driver bytes of one collected index row: bits_per_dim × n_words
+    code words, orig_id, cluster_id and four float32 factors."""
+    return model.config.bits_per_dim * model.n_words * 8 + 28
+
+
+def _driver_csr(model: RaBitQModel, index: DataFrame, clusters) -> tuple:
+    """The driver scorer's index rows: (CSRIndex or None, reason). The
+    resident arrays when they describe the model and `index` is its own
+    frame (no filter), at no job; else ONE collect of the _index_scan,
+    bounded like collect_queries: at most _ARROW_MAX_PROBE_BYTES of rows at
+    the index row width, None past it (the rows fetched to decide are
+    discarded)."""
+    res = model.resident
+    if res is not None and res.describes(model) and index is model.index_df:
+        return res.index, f"resident index and base arrays, {res.nbytes} B"
+    max_rows = _ARROW_MAX_PROBE_BYTES // _index_row_bytes(model)
+    factors = factor_columns(model.config)
+    t = (
+        _index_scan(model, index, clusters)
+        .select("cluster_id", "orig_id", "code", *factors)
+        .limit(max_rows + 1)
+        .toArrow()
+    )
+    if t.num_rows > max_rows:
+        return None, f"index rows over the {max_rows}-row collect bound"
+    width = model.config.bits_per_dim * model.n_words
+    csr = CSRIndex.of(t, model.n_clusters, width, factors)
+    return csr, f"{t.num_rows} index rows collected"
+
+
+def stage5_kernel(
+    model: RaBitQModel,
+    impl: str,
+    r: int,
+    qv,
+    probe_counts: "dict | None",
+    nprobe: int,
+    index: DataFrame,
+) -> tuple:
+    """The kernel rule of search() and every search_adaptive wave: (kernel,
+    reason, CSRIndex or None). An "auto" batch whose stages 6-7 fit the
+    driver (_driver_tail_fits) runs the driver scorer — "driver":
+    score_clusters over _driver_csr's rows of `index`, the resident arrays
+    or one bounded collect — and its reason names the source. Every other
+    batch, a forced "jvm" or "arrow" included, runs choose_kernel's Spark
+    plan on the executor tail."""
+    why = ""
+    if impl == "auto" and _driver_tail_fits(model, qv, probe_counts, r):
+        csr, why = _driver_csr(model, index, _pruning_set(model, probe_counts))
+        if csr is not None:
+            return "driver", why, csr
+        why += "; "
+    kernel, reason = choose_kernel(model, impl, probe_counts, nprobe)
+    return kernel, why + reason, None
 
 
 def _tail(
@@ -1080,65 +1088,31 @@ def _tail(
     qv,
     probe_counts: "dict | None",
     metrics: "SearchMetrics | None" = None,
-    allowed: "DataFrame | None" = None,
     local: bool = False,
+    csr: "CSRIndex | None" = None,
     **stage5,
 ):
-    """Stages 5-7 of search() and every search_adaptive wave, the one place
-    that picks their tail. The "resident" kernel scores the driver probe
-    `block` over the model's resident arrays (_resident_candidates) and
-    finishes in _driver_tail — no Spark job. Otherwise _driver_tail, as a
-    local relation, after one collect of the stage-5 stream, when
-    _driver_tail_fits; else the window top-R (_shortlist) and
-    vecstore.exact_topk, with `metrics`' observers. `allowed`, a one-column
-    frame of permitted ids, is semi-joined against the candidates;
-    `stage5` goes to _candidates, pruned by _pruning_set. Returns
-    (query_id, neighbor_id, dist, rank) — as pandas with `local`: a driver
-    tail's table at no job (toPandas() of its local relation would start
-    one), else one collect."""
-    def result(table):
+    """Stages 5-7 of search() and every search_adaptive wave, for the
+    `kernel` and `csr` of stage5_kernel. The "driver" kernel scores the
+    driver probe `block` against `csr` (score_clusters) and finishes in
+    _driver_tail, a local relation. A
+    Spark kernel runs the window top-R (_shortlist, pruned by
+    _pruning_set, with `metrics`' observers) and vecstore.exact_topk;
+    `stage5` goes to _candidates. Returns (query_id, neighbor_id, dist,
+    rank) — as pandas with `local`: a driver tail's table at no job
+    (toPandas() of its local relation would start one), else one
+    collect."""
+    if kernel == "driver":
+        theta_log_dim = model.config.theta_log_dim
+        by_cluster = probes_by_cluster(stage5["block"], theta_log_dim, model.n_words)
+        cand, scored = score_clusters(csr, by_cluster, r)
+        table = _driver_tail(model, cand, qv, r, k, metrics, scored)
         if local:
             return table.to_pandas()
         return model.index_df.sparkSession.createDataFrame(table, _RESULT_SCHEMA)
-
-    if kernel == "resident":
-        cand, scored = _resident_candidates(model, stage5["block"], r)
-        return result(
-            _driver_tail(model, cand, qv, r, k, metrics, scored, model.resident)
-        )
-    stage5["clusters"] = _pruning_set(model, probe_counts)
-    on_driver = _driver_tail_fits(model, qv, probe_counts, r)
-
-    def tap(cand: DataFrame) -> DataFrame:
-        if allowed is not None:
-            ok = allowed.select(F.col(allowed.columns[0]).alias("orig_id"))
-            cand = cand.join(ok.distinct(), "orig_id", "left_semi")
-        if not on_driver and metrics is not None and metrics.observe_rough:
-            # A10 rough-candidate counter (src/metrics.rs analogue, no
-            # extra pass — but the CollectMetrics node splits the codegen
-            # span; see SearchMetrics.observe_rough for the at-scale cost).
-            # The driver tail counts from its arrays instead.
-            cand = cand.observe(
-                metrics.rough, F.count(F.lit(1)).alias("rough_count")
-            )
-        return cand
-
-    if on_driver:
-        t = (
-            _candidates(model, kernel, r, tap=tap, **stage5)
-            .select("query_id", "orig_id", "rough")
-            .toArrow()
-        )
-        cand = tuple(t[c].to_numpy() for c in ("query_id", "orig_id", "rough"))
-        return result(_driver_tail(model, cand, qv, r, k, metrics, t.num_rows))
-    shortlist = _shortlist(model, kernel, r, tap=tap, **stage5)
-    if metrics is not None and metrics.observe_precise:
-        # CollectMetrics directly above the top-R filter defeats the
-        # WindowGroupLimit pre-shuffle trim at scale — see
-        # SearchMetrics.observe_precise for the bisected cost
-        shortlist = shortlist.observe(
-            metrics.precise, F.count(F.lit(1)).alias("precise_count")
-        )
+    shortlist = _shortlist(
+        model, kernel, r, metrics, clusters=_pruning_set(model, probe_counts), **stage5
+    )
     # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k)
     out = exact_topk(shortlist, qv, model.rerank_base, k, metrics, id_col="orig_id")
     return out.toPandas() if local else out
@@ -1243,7 +1217,7 @@ def _prepare_batch(
     executors. Returns (probes, block, probe_counts, qv): exactly one of
     the executor probe frame and the driver probe block (the frame is
     built from the block only by a jvm stage 5, in _candidates: the
-    resident kernel needs none), the {cluster_id: probe rows} (None on the
+    driver scorer needs none), the {cluster_id: probe rows} (None on the
     executor path unless nprobe·2 ≤ n_clusters: _pruning_set), and the
     stage-7 query side exact_rerank takes."""
     spark = queries.sparkSession
@@ -1282,29 +1256,30 @@ def search(
     A bounded batch is resolved on the driver (see the module docstring):
     one collect job replaces the executor prep stage, its checkpoint and
     the probe-geometry count; every other batch runs the executor path.
-    When the driver tail's bounds fit (_driver_tail_fits), such a batch
-    also finishes stages 6-7 on the driver: its Spark jobs then run INSIDE
-    this call (the stage-5 candidate collect and, without a vec store, one
-    base collect; none on the resident arrays) and the returned frame is a
-    local relation, which collects without a job. Otherwise the returned
-    frame is the lazy executor-tail plan. All give identical frames.
+    When the driver tail's bounds fit (_driver_tail_fits), an "auto" batch
+    also runs stages 5-7 on the driver: its Spark jobs then run INSIDE
+    this call (one collect of the probed index rows and, without a vec
+    store, one base collect; none on a small loaded model's resident
+    arrays) and the returned frame is a local relation, which collects
+    without a job. Otherwise the returned frame is the lazy executor-tail
+    plan. All give identical frames.
 
     `broadcast_probes=False` is for a caller that knows its batch is large
     (the full-table self-joins): the stage-5 join then shuffles both sides
     by cluster_id instead of broadcasting the probe table, and the batch
     keeps the executor path without the driver path's collect.
 
-    Filtered search (two forms, both applied BEFORE the top-R shortlist so
-    filtered-out rows never consume rerank slots — post-filtering the final
-    top-k would silently shrink result sets):
+    Filtered search (two forms, both applied to the index rows every
+    kernel scores, so filtered-out rows never consume rerank slots —
+    post-filtering the final top-k would silently shrink result sets):
 
     * `index_predicate` — a Column/SQL predicate over metadata columns the
       index carries (build_index(attr_cols=...)). The scale path: the
       predicate filters the index SCAN itself (Parquet predicate pushdown,
       zero extra shuffles/joins).
     * `allowed` — a one-column DataFrame of permitted ids, semi-joined
-      against the candidate stream. For ad-hoc id sets not materialized in
-      the index; costs a join keyed by orig_id (broadcast when small / AQE).
+      against the index rows. For ad-hoc id sets not materialized in the
+      index; costs a join keyed by orig_id (broadcast when small / AQE).
 
     dist is exact squared L2 in the original space (the reference reranks on
     unrotated base columns — src/rerank.rs:85-90) computed as a deterministic
@@ -1321,17 +1296,18 @@ def search(
     model.n_rows when the builder recorded it and otherwise n_clusters
     itself (exact under the standard n_clusters ≈ √n sizing).
 
-    `impl` asks for the rough-scoring kernel — "jvm", the codegen
-    broadcast-join plan, "arrow", the value-GEMM mapInPandas plan
-    (_fused_shortlist), or "auto" — under choose_kernel's rule, which
-    also runs "auto" batches of a small loaded model on its resident
-    arrays ("resident": stages 5-7 in numpy, no job past the query
-    collect); all give bit-identical frames. `metrics.kernel` /
-    `metrics.kernel_reason` report the kernel that ran and why;
+    `impl` asks for the rough-scoring kernel under stage5_kernel's rule:
+    "auto" runs a driver-tail batch on the driver scorer ("driver":
+    score_clusters over the resident arrays or one bounded collect of the
+    index rows) and any other batch on choose_kernel's pick; "jvm", the
+    codegen broadcast-join plan, and "arrow", the value-GEMM mapInArrow
+    plan (_fused_shortlist), run that plan and the executor tail. All
+    give bit-identical frames. `metrics.kernel` / `metrics.kernel_reason`
+    report the kernel that ran and why (the driver scorer's source);
     `metrics.probe_rows` / `metrics.probed_clusters` the probe geometry
     whenever the search resolved it (always on the driver path). On the
-    driver tail the rough, precise and gather rerank counts come from its
-    arrays (`metrics.counts`: resident rough_count is every pair scored,
+    driver scorer the rough, precise and gather rerank counts come from
+    its arrays (`metrics.counts`: rough_count is every pair scored,
     rerank_base_rows the distinct ids gathered), and a base_df rerank is
     observed inside its one base job.
     """
@@ -1343,22 +1319,23 @@ def search(
     probes, block, probe_counts, qv = _prepare_batch(
         model, queries, query_id, query_vec, nprobe, broadcast_probes
     )
-    filtered = index_predicate is not None or allowed is not None
+    index = model.index_df
+    if index_predicate is not None:
+        index = index.filter(index_predicate)
+    if allowed is not None:
+        ok = allowed.select(F.col(allowed.columns[0]).alias("orig_id"))
+        index = index.join(ok.distinct(), "orig_id", "left_semi")
     r = max(topk * overfetch, topk)
-    kernel, reason = choose_kernel(
-        model, impl, probe_counts, nprobe, filtered,
-        _driver_tail_fits(model, qv, probe_counts, r),
+    kernel, reason, csr = stage5_kernel(
+        model, impl, r, qv, probe_counts, nprobe, index
     )
     if metrics is not None:
         metrics.kernel, metrics.kernel_reason = kernel, reason
         if probe_counts is not None:
             metrics.probed_clusters = probe_counts
             metrics.probe_rows = sum(probe_counts.values())
-    index = model.index_df
-    if index_predicate is not None:
-        index = index.filter(index_predicate)
     return _tail(
-        model, kernel, r, topk, qv, probe_counts, metrics, allowed,
+        model, kernel, r, topk, qv, probe_counts, metrics, csr=csr,
         block=block, probes=probes, broadcast=broadcast_probes, index=index,
     )
 
@@ -1369,10 +1346,8 @@ def range_search(
     radius_sq: float,
     nprobe: int | None = None,
     rough_cutoff: bool = True,
-    rough_margin: float = 0.0,
     query_id: str = "query_id",
     query_vec: str = "qvec",
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Radius query: all (query_id, neighbor_id, dist) with exact squared-L2
     dist ≤ `radius_sq` among the probed clusters — the range-query sibling
@@ -1381,10 +1356,9 @@ def range_search(
     Same J1→J2→D5→J3 pipeline as search(), driver path included, but the
     shortlist step is a FILTER, not a top-R window — no per-query state,
     no window shuffle; the exact rerank is bounded by the rough survivors.
-    With `rough_cutoff` the estimator screens candidates at `radius_sq +
-    rough_margin`; the estimator is a probabilistic lower bound
-    (error-bound slack, src/rabitq.rs:352-363), so a nonzero margin trades
-    rerank volume against the residual false-negative rate.
+    With `rough_cutoff` the estimator screens candidates at `radius_sq`;
+    the estimator is a probabilistic lower bound (error-bound slack,
+    src/rabitq.rs:352-363), so the screen may drop a few in-range rows.
     `rough_cutoff=False` + nprobe=n_clusters is the exhaustive
     configuration: provably equal to the brute-force range scan (every
     candidate reranked exactly).
@@ -1392,15 +1366,13 @@ def range_search(
     cfg = model.config
     nprobe = nprobe or cfg.nprobe
     probes, block, probe_counts, qv = _prepare_batch(
-        model, queries, query_id, query_vec, nprobe, broadcast_probes
+        model, queries, query_id, query_vec, nprobe, True
     )
     if probes is None:
         probes = probe_frame(queries.sparkSession, block)
-    cand = _rough_candidates(
-        model, probes, _pruning_set(model, probe_counts), broadcast_probes
-    )
+    cand = _rough_candidates(model, probes, _pruning_set(model, probe_counts))
     if rough_cutoff:
-        cand = cand.filter(F.col("rough") <= F.lit(radius_sq + rough_margin))
+        cand = cand.filter(F.col("rough") <= F.lit(radius_sq))
     exact = exact_rerank(
         cand.select("query_id", "orig_id"), qv, model.rerank_base, id_col="orig_id"
     )

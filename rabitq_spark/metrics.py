@@ -36,11 +36,10 @@ class SearchMetrics:
     # window/codegen interaction and measured free, so it has no flag.
     observe_rough: bool = True
     observe_precise: bool = True
-    # The rough kernel that ran ("resident" | "jvm" | "arrow") and why it
-    # was chosen —
-    # set by search() (and search_adaptive(), for its last wave) from
-    # choose_kernel when the plan is built, so reading them costs no
-    # Spark job.
+    # The rough kernel that ran ("driver" | "jvm" | "arrow") and why it
+    # was chosen (for "driver", its index source) — set by search() (and
+    # search_adaptive(), for its last wave) from search.stage5_kernel when
+    # the plan is built, so reading them costs no Spark job.
     kernel: str | None = None
     kernel_reason: str | None = None
     # The probe geometry — probe-table rows and {cluster_id: probe rows}

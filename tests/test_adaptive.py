@@ -165,3 +165,21 @@ def test_adaptive_jvm_kernel_equals_arrow(spark, sf_dir):
         assert met.kernel == k
         assert stats["wave_kernels"] == [k] * stats["waves"]
     pd.testing.assert_frame_equal(frames["jvm"], frames["arrow"], check_exact=True)
+
+
+def test_adaptive_returns_a_local_relation(clustered, monkeypatch):
+    """The batch is one collect bounded by QUERY_MATRIX_MAX_BYTES (past it
+    search_adaptive raises), and the ranked result is a local relation:
+    no window job after the waves."""
+    from rabitq_spark.index import vecstore
+
+    df, model, queries = clustered
+    got = search_adaptive(model, queries, topk=10)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan") and "Window" not in plan
+    ranks = got.toPandas().groupby("query_id")["rank"].apply(list)
+    assert all(r == list(range(1, 11)) for r in ranks)
+    # room for 29 float64 64-d query rows: the 30-query batch is over the cap
+    monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", 29 * 64 * 8)
+    with pytest.raises(ValueError, match="QUERY_MATRIX_MAX_BYTES"):
+        search_adaptive(model, queries, topk=10)

@@ -1,10 +1,11 @@
 """search()'s driver path — a bounded batch collected once, stages 1-4 in
-numpy on the driver, stages 6-7 finished there too (the driver tail) —
-against the executor path it replaces, and a small loaded model's
-resident arrays (stages 5-7 in numpy, the "resident" kernel) against both.
-Patching vecstore.QUERY_MATRIX_MAX_BYTES to 0 forces every batch onto the
-executor path (and the vec-store rerank onto its join form), so the paths
-can be compared frame for frame."""
+numpy on the driver, stages 5-7 finished there too (the "driver" kernel:
+score_clusters over a small loaded model's resident arrays or one bounded
+collect of the index rows, then the driver tail) — against the executor
+path it replaces and the forced Spark kernels. Patching
+vecstore.QUERY_MATRIX_MAX_BYTES to 0 forces every batch onto the executor
+path (and the vec-store rerank onto its join form), so the paths can be
+compared frame for frame."""
 
 import copy
 import importlib
@@ -131,9 +132,9 @@ def test_driver_path_equals_executor_path(
             executor = _sorted(search(model, queries, metrics=met_x, **kw))
         pd.testing.assert_frame_equal(driver, executor, check_exact=True)
         assert len(driver) == NQ * K
-        # the same kernel ran on both paths; unfiltered arrow is honoured
-        assert met.kernel == met_x.kernel
-        assert met.kernel == (impl if filt == "none" else "jvm")
+        # the same kernel ran on both paths; a forced kernel is honoured,
+        # filtered or not
+        assert met.kernel == met_x.kernel == impl
         assert met.probe_rows == NQ * NPROBE
         assert sum(met.probed_clusters.values()) == met.probe_rows
 
@@ -197,26 +198,26 @@ def test_driver_batch_returns_local_relation(
     spark, sf_dir, models, monkeypatch, tmp_path
 ):
     """A driver batch runs its jobs inside search() and returns a local
-    relation: over a saved model's plain scans, no executor ran a Python
-    stage or a window, where the executor path runs the `rr` rerank and
-    two window top-ks."""
+    relation: over a saved model's plain scans (its resident arrays
+    dropped, so the driver scorer collects the index rows), no executor
+    ran a Python stage or a window, where the executor path runs the `rr`
+    rerank and two window top-ks."""
     path = str(tmp_path / "model")
     models[(1, False)].save(path)
     model = RaBitQModel.load(spark, path)
+    model.resident = None
     queries = _queries(spark, sf_dir, "float")
     met = SearchMetrics()
     out = []
     plans = _executed_plans(
         spark,
-        lambda: out.append(
-            search(model, queries, topk=K, metrics=met, impl="jvm")
-        ),
+        lambda: out.append(search(model, queries, topk=K, metrics=met)),
     )
-    assert met.kernel == "jvm"
+    assert met.kernel == "driver" and "index rows collected" in met.kernel_reason
     assert _plan(out[0]).startswith("LocalTableScan")
     assert plans
     for p in plans:
-        assert "MapInPandas" not in p and "Window" not in p, p
+        assert "MapIn" not in p and "Window" not in p, p
     with monkeypatch.context() as m:
         _executor_path(m)
         plans = _executed_plans(
@@ -297,6 +298,85 @@ def test_driver_tail_filtered_base_collect(spark, sf_dir, models, monkeypatch, b
         executor = _sorted(search(model, queries, topk=K))
     pd.testing.assert_frame_equal(driver, executor, check_exact=True)
     assert met.rerank_base_rows == model.n_rows
+
+
+def _pairs(index, probed_clusters) -> int:
+    """Σ probe rows × cluster size over `index`'s rows."""
+    sizes = {
+        r["cluster_id"]: r["count"]
+        for r in index.groupBy("cluster_id").count().collect()
+    }
+    return sum(n * sizes.get(c, 0) for c, n in probed_clusters.items())
+
+
+@pytest.mark.parametrize("filt", ["index_predicate", "allowed"])
+@pytest.mark.parametrize("bits", [1, 4])
+def test_filtered_driver_batch_equals_jvm_executor_tail(
+    spark, sf_dir, models, bits, filt
+):
+    """A filtered "auto" batch of a model with no resident arrays runs the
+    driver scorer over one collect of the filtered index rows, and its
+    frame is the forced jvm plan's on the executor tail. Its rough count
+    is every pair it scored: Σ probe rows × filtered cluster size."""
+    model = models[(bits, False)]
+    queries = _queries(spark, sf_dir, "float")
+    if filt == "index_predicate":
+        kw = {"index_predicate": F.col("label") < 4}
+        index = model.index_df.filter(F.col("label") < 4)
+    else:
+        kw = {"allowed": model.base_df.filter("orig_id % 3 != 0").select("orig_id")}
+        index = model.index_df.filter("orig_id % 3 != 0")
+    met = SearchMetrics()
+    got = _sorted(search(model, queries, topk=K, metrics=met, **kw))
+    assert met.kernel == "driver" and "index rows collected" in met.kernel_reason
+    jvm = SearchMetrics()
+    want = _sorted(search(model, queries, topk=K, impl="jvm", metrics=jvm, **kw))
+    assert jvm.kernel == "jvm"
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert len(got) == NQ * K
+    assert met.rough_count == jvm.rough_count == _pairs(index, met.probed_clusters)
+
+
+def test_over_bound_index_collect_takes_executor_tail(
+    spark, sf_dir, models, monkeypatch
+):
+    """A driver-tail batch whose probed index rows pass the collect bound
+    discards that collect and runs the executor tail (window top-R,
+    exact_topk), with the same frame."""
+    model = models[(1, False)]
+    queries = _queries(spark, sf_dir, "float")
+    want = _sorted(search(model, queries, topk=K))
+    # room for 10 index rows: the probed clusters hold more
+    monkeypatch.setattr(
+        search_mod,
+        "_index_row_bytes",
+        lambda m: search_mod._ARROW_MAX_PROBE_BYTES // 10,
+    )
+    met = SearchMetrics()
+    df = search(model, queries, topk=K, metrics=met)
+    assert met.kernel == "jvm" and "10-row collect bound" in met.kernel_reason
+    plan = _plan(df)
+    assert not plan.startswith("LocalTableScan") and "Window" in plan
+    pd.testing.assert_frame_equal(_sorted(df), want, check_exact=True)
+
+
+def test_driver_scorer_collects_the_index_in_one_job(spark, sf_dir, models):
+    """Over a vec-store model with no resident arrays, a driver-tail search
+    runs two Spark jobs with the metrics on or off: the query collect and
+    the one collect of the probed index rows (the store gathers the base
+    rows at no job). Its rough count is Σ probe rows × cluster size."""
+    model = models[(1, True)]
+    queries = _queries(spark, sf_dir, "float")
+
+    def run(metrics=None):
+        search(model, queries, topk=K, metrics=metrics).collect()
+
+    run()  # warm
+    assert _jobs(spark, "driver_scorer:bare", run) == 2
+    met = SearchMetrics()
+    assert _jobs(spark, "driver_scorer:metrics", lambda: run(met)) == 2
+    assert met.kernel == "driver"
+    assert met.rough_count == _pairs(model.index_df, met.probed_clusters)
 
 
 def test_duplicate_query_ids_keep_executor_path(spark, sf_dir, models):
@@ -403,15 +483,16 @@ def loaded(spark, models, tmp_path_factory):
 
 @pytest.mark.parametrize("bits", [1, 4])
 def test_resident_equals_spark_tails(spark, sf_dir, loaded, monkeypatch, bits):
-    """An "auto" search of a loaded small model runs the resident kernel,
-    and its frame equals the forced Spark driver tails (jvm and arrow) and
-    the executor path bit for bit, for float and double queries."""
+    """An "auto" search of a loaded small model runs the driver scorer on
+    its resident arrays, and its frame equals the forced Spark kernels
+    (jvm and arrow, on the executor tail) and the executor path bit for
+    bit, for float and double queries."""
     model = loaded[bits]
     for elem in ("float", "double"):
         queries = _queries(spark, sf_dir, elem)
         met = SearchMetrics()
         resident = _sorted(search(model, queries, topk=K, metrics=met))
-        assert met.kernel == "resident"
+        assert met.kernel == "driver" and "resident" in met.kernel_reason
         assert f"{model.resident.nbytes} B" in met.kernel_reason
         assert len(resident) == NQ * K
         for impl in ("jvm", "arrow"):
@@ -429,14 +510,14 @@ def test_resident_equals_spark_tails(spark, sf_dir, loaded, monkeypatch, bits):
 
 @pytest.mark.parametrize("bits", [1, 4])
 def test_resident_adaptive_equals_jvm_waves(spark, sf_dir, loaded, bits):
-    """Every search_adaptive wave over a resident model runs the resident
-    kernel, and the result equals the same waves on the jvm join."""
+    """Every search_adaptive wave over a resident model runs the driver
+    scorer, and the result equals the same waves on the jvm join."""
     model = loaded[bits]
     queries = _queries(spark, sf_dir, "float")
     stats: dict = {}
     got = _sorted(search_adaptive(model, queries, topk=K, stats=stats))
     assert stats["waves"] >= 1
-    assert set(stats["wave_kernels"]) == {"resident"}
+    assert set(stats["wave_kernels"]) == {"driver"}
     jvm_stats: dict = {}
     want = _sorted(
         search_adaptive(model, queries, topk=K, kernel="jvm", stats=jvm_stats)
@@ -448,9 +529,9 @@ def test_resident_adaptive_equals_jvm_waves(spark, sf_dir, loaded, bits):
 def test_resident_search_runs_one_job(spark, sf_dir, loaded):
     """A resident search runs ONE Spark job, the query collect, with the
     metrics on or off. Its counts: rough_count is every pair scored, the
-    Spark driver tail's count of its jvm candidate stream; precise_count
-    the top-R rows; rerank_base_rows the distinct shortlisted ids the
-    resident base gathered."""
+    jvm plan's observed candidate count; precise_count the top-R rows;
+    rerank_base_rows the distinct shortlisted ids the resident base
+    gathered."""
     model = loaded[1]
     queries = _queries(spark, sf_dir, "float")
 
@@ -461,14 +542,10 @@ def test_resident_search_runs_one_job(spark, sf_dir, loaded):
     assert _jobs(spark, "resident:bare", run) == 1
     met = SearchMetrics()
     assert _jobs(spark, "resident:metrics", lambda: run(met)) == 1
-    assert met.kernel == "resident"
+    assert met.kernel == "driver"
     jvm = SearchMetrics()
     search(model, queries, topk=K, impl="jvm", metrics=jvm).collect()
-    sizes = {
-        r["cluster_id"]: r["count"]
-        for r in model.index_df.groupBy("cluster_id").count().collect()
-    }
-    pairs = sum(n * sizes.get(c, 0) for c, n in met.probed_clusters.items())
+    pairs = _pairs(model.index_df, met.probed_clusters)
     assert met.rough_count == jvm.rough_count == pairs
     assert met.precise_count == jvm.precise_count
     r = K * search_mod.auto_overfetch(model, NPROBE, K)
@@ -485,8 +562,8 @@ def test_resident_search_runs_one_job(spark, sf_dir, loaded):
 
 def test_resident_arrays_follow_the_frames(spark, sf_dir, models, loaded, tmp_path):
     """The arrays serve only the frames they were read with: reassigning
-    index_df or base_df, or a tombstone-resolving load, runs the Spark
-    plans again, with the same rows where the data is the same."""
+    index_df or base_df, or a tombstone-resolving load, collects the index
+    rows again, with the same rows where the data is the same."""
     from rabitq_spark.streaming.index_stream import load_index_with_tombstones
 
     model = loaded[1]
@@ -497,7 +574,8 @@ def test_resident_arrays_follow_the_frames(spark, sf_dir, models, loaded, tmp_pa
         setattr(moved, frame, getattr(model, frame).select("*"))
         met = SearchMetrics()
         got = _sorted(search(moved, queries, topk=K, metrics=met))
-        assert met.kernel == "jvm", frame
+        assert met.kernel == "driver", frame
+        assert "index rows collected" in met.kernel_reason, frame
         pd.testing.assert_frame_equal(got, want, check_exact=True)
 
     path = str(tmp_path / "model")
@@ -508,7 +586,7 @@ def test_resident_arrays_follow_the_frames(spark, sf_dir, models, loaded, tmp_pa
     tomb = load_index_with_tombstones(spark, path)
     met = SearchMetrics()
     got = _sorted(search(tomb, queries, topk=K, metrics=met))
-    assert met.kernel == "jvm"
+    assert met.kernel == "driver" and "index rows collected" in met.kernel_reason
     assert len(got) == NQ * K and 0 not in set(got["neighbor_id"])
 
 
@@ -537,6 +615,6 @@ def test_service_answers_from_resident_arrays(spark, sf_dir, loaded):
                 search(model, qdf, topk=K, metrics=met).collect(),
                 key=lambda r: r["rank"],
             )
-            assert met.kernel == "resident"
+            assert met.kernel == "driver"
             assert got["ids"] == [r["neighbor_id"] for r in want]
             assert got["scores"] == [r["dist"] for r in want]

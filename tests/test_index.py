@@ -274,13 +274,13 @@ def test_fused_gate_falls_back_to_jvm(spark, model_and_data, monkeypatch):
 
 
 def test_choose_kernel_floors(monkeypatch):
-    """The one kernel rule, for search() and every search_adaptive wave:
-    the request is validated; "jvm" is honoured; "auto" keeps the jvm
-    join past half coverage; a filtered search, an unknown geometry and a
-    probe table over the byte cap demote any request; "arrow" is then
-    honoured, and "auto" asks the floors — 1-bit codes need both the
-    pair-volume floor and 12 probing queries per cluster, multi-bit codes
-    only their lower pair floor. Pure geometry — no Spark."""
+    """The Spark kernel rule of the executor tail: the request is
+    validated; "jvm" is honoured; "auto" keeps the jvm join past half
+    coverage; an unknown geometry and a probe table over the byte cap
+    demote any request; "arrow" is then honoured, and "auto" asks the
+    floors — 1-bit codes need both the pair-volume floor and 12 probing
+    queries per cluster, multi-bit codes only their lower pair floor. Pure
+    geometry — no Spark."""
     import importlib
     from types import SimpleNamespace
 
@@ -311,29 +311,26 @@ def test_choose_kernel_floors(monkeypatch):
     assert auto(model(4), 1_999, 1000)[0] == "jvm"
     assert auto(model(4), 2_000, 1000)[0] == "arrow"
 
-    # the rule table: (impl, geometry, nprobe, filtered) -> kernel, with a
-    # geometry over every auto floor and one under them all
+    # the rule table: (impl, geometry, nprobe) -> kernel, with a geometry
+    # over every auto floor and one under them all
     big, small = counts(12_000, 1000), counts(8, 8)
-    for impl, geometry, nprobe, filtered, want in [
-        ("jvm", big, 8, False, "jvm"),
-        ("auto", big, 8, False, "arrow"),
-        ("auto", small, 8, False, "jvm"),
-        ("arrow", small, 8, False, "arrow"),
+    for impl, geometry, nprobe, want in [
+        ("jvm", big, 8, "jvm"),
+        ("auto", big, 8, "arrow"),
+        ("auto", small, 8, "jvm"),
+        ("arrow", small, 8, "arrow"),
         # over half coverage: "auto" keeps the jvm join, "arrow" holds
-        ("auto", big, 501, False, "jvm"),
-        ("auto", None, 501, False, "jvm"),
-        ("arrow", big, 501, False, "arrow"),
-        # filtered search and unknown geometry demote any request
-        ("auto", big, 8, True, "jvm"),
-        ("arrow", small, 8, True, "jvm"),
-        ("arrow", None, 501, False, "jvm"),
-        ("auto", None, 8, False, "jvm"),
+        ("auto", big, 501, "jvm"),
+        ("auto", None, 501, "jvm"),
+        ("arrow", big, 501, "arrow"),
+        # unknown geometry demotes any request
+        ("arrow", None, 501, "jvm"),
+        ("auto", None, 8, "jvm"),
     ]:
-        got = choose_kernel(model(1), impl, geometry, nprobe, filtered)
-        assert got[0] == want, (impl, nprobe, filtered, got)
+        got = choose_kernel(model(1), impl, geometry, nprobe)
+        assert got[0] == want, (impl, nprobe, got)
     assert choose_kernel(model(1), "jvm", None, 8)[1] == "requested"
     assert "half" in choose_kernel(model(1), "auto", big, 501)[1]
-    assert "filtered" in choose_kernel(model(1), "arrow", small, 8, True)[1]
     assert "unknown" in choose_kernel(model(1), "arrow", None, 501)[1]
 
     # a wave's geometry: 3000 queries probing 4 clusters each over 1000
@@ -363,17 +360,51 @@ def test_choose_kernel_floors(monkeypatch):
         choose_kernel(model(1), "gpu", big, 8)
 
 
-def test_choose_kernel_resident_rule():
-    """The first "auto" rule: the resident kernel runs an unfiltered batch
-    whose stages 6-7 fit the driver, while the model's resident arrays
-    still describe its frames — before the coverage rule, since it scans
-    no Spark table. Forced "jvm" and "arrow" keep the Spark plans."""
+def test_stage5_kernel_driver_rule(monkeypatch):
+    """The driver rule ahead of choose_kernel: an "auto" batch whose stages
+    6-7 fit the driver runs the driver scorer — on the model's resident
+    arrays while they describe it and the index frame is its own, else on
+    one collect of the index frame, bounded at _ARROW_MAX_PROBE_BYTES of
+    rows. Past the bound, or for a batch that does not fit, or a forced
+    "jvm"/"arrow", choose_kernel's Spark kernel runs. Fake frames — no
+    Spark."""
+    import importlib
     from types import SimpleNamespace
 
-    from rabitq_spark.index.search import choose_kernel, cluster_counts
+    import pyarrow as pa
+
+    from rabitq_spark.index.model import CSRIndex
+    from rabitq_spark.index.search import cluster_counts, stage5_kernel
+
+    search_mod = importlib.import_module("rabitq_spark.index.search")
+
+    class Frame:
+        """The DataFrame calls of an index collect, over an Arrow table."""
+
+        def __init__(self, table):
+            self.table = table
+
+        def select(self, *cols):
+            return Frame(self.table.select(list(cols)))
+
+        def limit(self, n):
+            return Frame(self.table.slice(0, n))
+
+        def toArrow(self):
+            return self.table
+
+    n = 40
+    rows = pa.table({
+        "cluster_id": pa.array(np.arange(n) % 8, pa.int32()),
+        "orig_id": pa.array(np.arange(n), pa.int64()),
+        "code": pa.array([[i] for i in range(n)], pa.list_(pa.int64())),
+        **{f: pa.array(np.ones(n), pa.float32())
+           for f in ("center_dist_sq", "factor_ip", "factor_ppc", "error_bound")},
+    })
 
     class Arrays:
         nbytes = 4321
+        index = "resident csr"
 
         def __init__(self, current):
             self.current = current
@@ -381,18 +412,153 @@ def test_choose_kernel_resident_rule():
         def describes(self, model):
             return self.current
 
+    own = Frame(rows)
     m = SimpleNamespace(
-        n_rows=5000, n_clusters=8, n_words=1, config=RaBitQConfig(),
-        resident=Arrays(True),
+        n_rows=n, n_clusters=8, n_words=1, dim_pad=64, config=RaBitQConfig(),
+        resident=Arrays(True), index_df=own,
     )
-    geometry = cluster_counts(np.arange(40) % 8)
-    kernel, reason = choose_kernel(m, "auto", geometry, 8, on_driver=True)
-    assert kernel == "resident" and "4321 B" in reason
-    assert choose_kernel(m, "auto", geometry, 2, on_driver=True)[0] == "resident"
-    assert choose_kernel(m, "auto", geometry, 8)[0] == "jvm"
-    assert choose_kernel(m, "auto", geometry, 2, True, on_driver=True)[0] == "jvm"
+    geometry = cluster_counts(np.arange(40) % 8)  # every cluster: no pruning
+    qv = (np.arange(5), np.zeros((5, 64)))
+
+    def rule(impl="auto", index=own):
+        return stage5_kernel(m, impl, 10, qv, geometry, 2, index)
+
+    kernel, reason, csr = rule()
+    assert kernel == "driver" and "resident" in reason and "4321 B" in reason
+    assert csr == "resident csr"
+    # a filtered frame, or stale arrays: one collect of the frame's rows
+    for index, arrays in (
+        (Frame(rows.slice(0, 30)), Arrays(True)),
+        (own, Arrays(False)),
+    ):
+        m.resident = arrays
+        kernel, reason, csr = rule(index=index)
+        assert kernel == "driver", reason
+        assert reason == f"{index.table.num_rows} index rows collected"
+        assert isinstance(csr, CSRIndex)
+        assert len(csr.orig_id) == index.table.num_rows
+    m.resident = None
+    # forced Spark kernels, and a batch whose tail does not fit
     for impl in ("jvm", "arrow"):
-        assert choose_kernel(m, impl, geometry, 2, on_driver=True)[0] == impl
-    for stale in (Arrays(False), None):
-        m.resident = stale
-        assert choose_kernel(m, "auto", geometry, 2, on_driver=True)[0] == "jvm"
+        assert rule(impl)[0] == impl
+    m.n_rows = None
+    kernel, reason, csr = rule()
+    assert kernel == "jvm" and csr is None
+    m.n_rows = n
+    # past the collect bound: the rows fetched are discarded
+    def room(rows):
+        monkeypatch.setattr(
+            search_mod,
+            "_index_row_bytes",
+            lambda m: search_mod._ARROW_MAX_PROBE_BYTES // rows,
+        )
+        return rule()
+
+    kernel, reason, csr = room(n - 1)
+    assert kernel == "jvm" and csr is None
+    assert f"{n - 1}-row collect bound" in reason
+    assert room(n)[0] == "driver"
+
+
+def _index_table(rng, n, n_clusters, bits, n_words):
+    """A shuffled Arrow index table of random codes and factors, with 20
+    copies of row 0 under other ids, so their rough values tie."""
+    import pyarrow as pa
+
+    from rabitq_spark.index.model import factor_columns
+
+    codes = rng.integers(-(2**63), 2**63, size=(n, bits * n_words), dtype=np.int64)
+    factors = rng.random((n, 4)).astype(np.float32)
+    cid = rng.integers(0, n_clusters, n)
+    for a in (codes, factors, cid):
+        a[n // 2 : n // 2 + 20] = a[0]
+    cols = {
+        "cluster_id": pa.array(cid, pa.int32()),
+        "orig_id": pa.array(rng.permutation(n) + 1000, pa.int64()),
+        "code": pa.array(list(codes), pa.list_(pa.int64())),
+    }
+    for j, f in enumerate(factor_columns(RaBitQConfig(bits_per_dim=bits))):
+        cols[f] = pa.array(factors[:, j], pa.float32())
+    return pa.table(cols)
+
+
+@pytest.mark.parametrize("bits", [1, 4])
+def test_score_clusters_batches_equal_one_pass(bits):
+    """score_clusters over the CSR view of each Arrow batch of a shuffled
+    index table, cut with top_n, equals one pass over the whole table's
+    CSR — the Arrow plan's per-batch scoring against the driver scorer's
+    one pass — and counts every (probe row, cluster row) pair. No Spark."""
+    from rabitq_spark.index.model import CSRIndex, factor_columns
+    from rabitq_spark.index.search import (
+        prepare_probe_block,
+        probes_by_cluster,
+        score_clusters,
+        top_n,
+    )
+
+    rng = np.random.default_rng(3)
+    n_clusters, n_words, theta, r = 6, 2, 4, 7
+    table = _index_table(rng, 400, n_clusters, bits, n_words)
+    block = prepare_probe_block(
+        np.arange(9) + 50, rng.standard_normal((9, 100)), np.eye(128),
+        rng.standard_normal((n_clusters, 128)).astype(np.float32),
+        rng.random(128).astype(np.float32), np.float32(3.0), theta, 3,
+    )
+    by_cluster = probes_by_cluster(block, theta, n_words)
+    factors = factor_columns(RaBitQConfig(bits_per_dim=bits))
+
+    def csr(t):
+        return CSRIndex.of(t, n_clusters, bits * n_words, factors)
+
+    def cut(q, i, ro):
+        keep = top_n(q, ro, i, r)
+        return q[keep], i[keep], ro[keep]
+
+    whole, scored = score_clusters(csr(table), by_cluster, r)
+    parts, total = [], 0
+    for batch in table.to_batches(max_chunksize=37):
+        got, pairs = score_clusters(csr(batch), by_cluster, r)
+        parts.append(cut(*got))
+        total += pairs
+    batched = cut(*map(np.concatenate, zip(*parts)))
+    for a, b in zip(cut(*whole), batched):
+        np.testing.assert_array_equal(a, b)
+    sizes = np.bincount(table["cluster_id"].to_numpy(), minlength=n_clusters)
+    probe_rows = np.bincount(block["cluster_id"], minlength=n_clusters)
+    assert scored == total == int((sizes * probe_rows).sum())
+    assert len(batched[0]) == 9 * r
+    # a code list of another width is no CSR view
+    assert CSRIndex.of(table, n_clusters, bits * n_words + 1, factors) is None
+
+
+@pytest.mark.parametrize("bits", [1, 4])
+@pytest.mark.parametrize("parts", [1, 3, 7])
+def test_arrow_plan_ties_keep_the_smallest_ids(spark, parts, bits):
+    """40 copies of one vector under shuffled ids tie exactly on the rough
+    value. However the index is partitioned, the forced Arrow plan must
+    shortlist the smallest tied ids, so k=5 from a shortlist of 10 is
+    5000-5004 — the jvm plan's and the driver scorer's answer."""
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((1000, 32)).astype(np.float32)
+    dup = rng.standard_normal(32).astype(np.float32)
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    rows += [(int(i), dup.tolist()) for i in 5000 + rng.permutation(40)]
+    base = spark.createDataFrame(rows, "id bigint, vec array<float>")
+    queries = spark.createDataFrame(
+        [(0, dup.tolist())], "query_id bigint, qvec array<float>"
+    )
+    cfg = RaBitQConfig(
+        n_clusters=8, nprobe=2, topk=5, overfetch=2, bits_per_dim=bits
+    )
+    model = build_index(base, cfg, n_rows=1040)
+    model.index_df = model.index_df.repartition(parts).cache()
+    frames = {}
+    for impl in ("arrow", "jvm", "auto"):
+        met = SearchMetrics()
+        got = search(model, queries, metrics=met, impl=impl).orderBy("rank").collect()
+        assert met.kernel == {"auto": "driver"}.get(impl, impl), met.kernel_reason
+        assert [row.neighbor_id for row in got] == [5000, 5001, 5002, 5003, 5004]
+        assert all(row.dist == 0.0 for row in got)
+        frames[impl] = got
+    assert frames["arrow"] == frames["jvm"] == frames["auto"]
+    model.index_df.unpersist()
