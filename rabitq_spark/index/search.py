@@ -945,8 +945,9 @@ _ARROW_MIN_QUERIES_PER_CLUSTER = 12
 # Byte cap for a probe table held on the driver (≈ 1.7M probe rows at dim
 # 256): search()'s driver path builds it there, and the Arrow plan
 # broadcasts it. Past the cap a batch keeps the executor path, whose
-# Arrow request is demoted to the jvm join. It also caps the index rows a
-# driver-tail batch collects (_driver_csr), one more copy on the driver.
+# Arrow request is demoted to the jvm join. It also caps a driver-tail
+# batch's index collect (_driver_csr: all n_rows rows at the index row
+# width), one more copy on the driver.
 _ARROW_MAX_PROBE_BYTES = 256 << 20
 
 #: What a caller may ask for; the kernel rule also returns "driver".
@@ -1033,22 +1034,23 @@ def _driver_csr(model: RaBitQModel, index: DataFrame, clusters) -> tuple:
     """The driver scorer's index rows: (CSRIndex or None, reason). The
     resident arrays when they describe the model and `index` is its own
     frame (no filter), at no job; else ONE collect of the _index_scan,
-    bounded like collect_queries: at most _ARROW_MAX_PROBE_BYTES of rows at
-    the index row width, None past it (the rows fetched to decide are
-    discarded)."""
+    admitted before any job like _driver_tail_fits' bounds: all n_rows
+    index rows at the index row width within _ARROW_MAX_PROBE_BYTES, None
+    past it."""
     res = model.resident
     if res is not None and res.describes(model) and index is model.index_df:
         return res.index, f"resident index and base arrays, {res.nbytes} B"
-    max_rows = _ARROW_MAX_PROBE_BYTES // _index_row_bytes(model)
+    index_bytes = model.n_rows * _index_row_bytes(model)
+    if index_bytes > _ARROW_MAX_PROBE_BYTES:
+        return None, (
+            f"index {index_bytes} B > collect cap {_ARROW_MAX_PROBE_BYTES} B"
+        )
     factors = factor_columns(model.config)
     t = (
         _index_scan(model, index, clusters)
         .select("cluster_id", "orig_id", "code", *factors)
-        .limit(max_rows + 1)
         .toArrow()
     )
-    if t.num_rows > max_rows:
-        return None, f"index rows over the {max_rows}-row collect bound"
     width = model.config.bits_per_dim * model.n_words
     csr = CSRIndex.of(t, model.n_clusters, width, factors)
     return csr, f"{t.num_rows} index rows collected"

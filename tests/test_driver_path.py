@@ -112,7 +112,7 @@ def _plan(df) -> str:
 @pytest.mark.parametrize("filt", ["none", "index_predicate", "allowed"])
 @pytest.mark.parametrize("store", [False, True], ids=["join", "store"])
 @pytest.mark.parametrize("bits", [1, 4])
-@pytest.mark.parametrize("impl", ["jvm", "arrow"])
+@pytest.mark.parametrize("impl", ["auto", "jvm", "arrow"])
 def test_driver_path_equals_executor_path(
     spark, sf_dir, models, monkeypatch, impl, bits, store, filt
 ):
@@ -132,9 +132,18 @@ def test_driver_path_equals_executor_path(
             executor = _sorted(search(model, queries, metrics=met_x, **kw))
         pd.testing.assert_frame_equal(driver, executor, check_exact=True)
         assert len(driver) == NQ * K
-        # the same kernel ran on both paths; a forced kernel is honoured,
-        # filtered or not
-        assert met.kernel == met_x.kernel == impl
+        # a forced kernel is honoured on both paths, filtered or not;
+        # "auto" runs the driver scorer over one collect of the index rows
+        # on the driver path and choose_kernel's pick on the executor path
+        if impl == "auto":
+            assert met.kernel == "driver", met.kernel_reason
+            assert "index rows collected" in met.kernel_reason
+            pick, _ = search_mod.choose_kernel(
+                model, impl, met_x.probed_clusters, NPROBE
+            )
+            assert met_x.kernel == pick
+        else:
+            assert met.kernel == met_x.kernel == impl
         assert met.probe_rows == NQ * NPROBE
         assert sum(met.probed_clusters.values()) == met.probe_rows
 
@@ -340,13 +349,13 @@ def test_filtered_driver_batch_equals_jvm_executor_tail(
 def test_over_bound_index_collect_takes_executor_tail(
     spark, sf_dir, models, monkeypatch
 ):
-    """A driver-tail batch whose probed index rows pass the collect bound
-    discards that collect and runs the executor tail (window top-R,
-    exact_topk), with the same frame."""
+    """A driver-tail batch over a model whose n_rows index rows pass the
+    collect cap runs the executor tail (window top-R, exact_topk) without
+    collecting the index, with the same frame."""
     model = models[(1, False)]
     queries = _queries(spark, sf_dir, "float")
     want = _sorted(search(model, queries, topk=K))
-    # room for 10 index rows: the probed clusters hold more
+    # room for 10 index rows: the model holds more
     monkeypatch.setattr(
         search_mod,
         "_index_row_bytes",
@@ -354,7 +363,7 @@ def test_over_bound_index_collect_takes_executor_tail(
     )
     met = SearchMetrics()
     df = search(model, queries, topk=K, metrics=met)
-    assert met.kernel == "jvm" and "10-row collect bound" in met.kernel_reason
+    assert met.kernel == "jvm" and "> collect cap" in met.kernel_reason
     plan = _plan(df)
     assert not plan.startswith("LocalTableScan") and "Window" in plan
     pd.testing.assert_frame_equal(_sorted(df), want, check_exact=True)

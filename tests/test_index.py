@@ -364,10 +364,11 @@ def test_stage5_kernel_driver_rule(monkeypatch):
     """The driver rule ahead of choose_kernel: an "auto" batch whose stages
     6-7 fit the driver runs the driver scorer — on the model's resident
     arrays while they describe it and the index frame is its own, else on
-    one collect of the index frame, bounded at _ARROW_MAX_PROBE_BYTES of
-    rows. Past the bound, or for a batch that does not fit, or a forced
-    "jvm"/"arrow", choose_kernel's Spark kernel runs. Fake frames — no
-    Spark."""
+    one collect of the index frame, admitted while all n_rows rows fit
+    _ARROW_MAX_PROBE_BYTES. Past the bound, or for a batch that does not
+    fit, or a forced "jvm"/"arrow", choose_kernel's Spark kernel runs. The
+    bound is read from n_rows, so a batch past it collects nothing. Fake
+    frames — no Spark."""
     import importlib
     from types import SimpleNamespace
 
@@ -385,13 +386,14 @@ def test_stage5_kernel_driver_rule(monkeypatch):
             self.table = table
 
         def select(self, *cols):
-            return Frame(self.table.select(list(cols)))
-
-        def limit(self, n):
-            return Frame(self.table.slice(0, n))
+            return type(self)(self.table.select(list(cols)))
 
         def toArrow(self):
             return self.table
+
+    class Uncollected(Frame):
+        def toArrow(self):
+            raise AssertionError("an index frame past the bound was collected")
 
     n = 40
     rows = pa.table({
@@ -445,18 +447,18 @@ def test_stage5_kernel_driver_rule(monkeypatch):
     kernel, reason, csr = rule()
     assert kernel == "jvm" and csr is None
     m.n_rows = n
-    # past the collect bound: the rows fetched are discarded
-    def room(rows):
+    # past the collect cap for n_rows rows: decided before any collect
+    def room(rows, index=own):
         monkeypatch.setattr(
             search_mod,
             "_index_row_bytes",
             lambda m: search_mod._ARROW_MAX_PROBE_BYTES // rows,
         )
-        return rule()
+        return rule(index=index)
 
-    kernel, reason, csr = room(n - 1)
+    kernel, reason, csr = room(n - 1, Uncollected(rows))
     assert kernel == "jvm" and csr is None
-    assert f"{n - 1}-row collect bound" in reason
+    assert "> collect cap" in reason
     assert room(n)[0] == "driver"
 
 
