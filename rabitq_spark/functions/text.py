@@ -142,25 +142,6 @@ def banded_minhash_key(
     return _combine_hashes(mins)
 
 
-def char_ngrams(text: Column | str, n: int = 5, lower: bool = True) -> Column:
-    """Distinct character n-grams of the lowercased text — the dedup unit
-    for n-gram Jaccard (robust to token boundaries, unlike word shingles).
-    Short texts yield an empty array.
-
-    Pass lower=False with a PRE-LOWERED column: lower() inlined here is
-    re-evaluated per n-gram inside the lambda (no CSE across lambda
-    boundaries — measured 9.1 s vs 2.5 s at 5k docs, Catalyst pitfall #2)."""
-    t = F.lower(_c(text)) if lower else _c(text)
-    ln = F.length(t)
-    make = F.transform(
-        F.sequence(F.lit(1), ln - (n - 1)),
-        lambda i: F.substr(t, i, F.lit(n)),
-    )
-    return F.array_distinct(
-        F.when(ln >= n, make).otherwise(F.array().cast("array<string>"))
-    )
-
-
 #: Polynomial gram-hash constants: two independent 31-bit prime moduli with
 #: large bases. The base MUST be large enough that the Horner accumulator
 #: wraps past P on every step — a small base (first attempt: B=67, P=2**55)
@@ -390,17 +371,6 @@ def fingerprint(text: Column | str) -> Column:
 
 
 # -- quality / language heuristics -----------------------------------------
-
-_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
-
-
-def stopword_ratio(text: Column | str) -> Column:
-    toks = tokens(text)
-    n = F.size(toks)
-    stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        stop.cast("double") / n.cast("double")
-    )
 
 
 def distinct_ratio(text: Column | str) -> Column:

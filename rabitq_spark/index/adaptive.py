@@ -70,6 +70,7 @@ from rabitq_spark.index.search import (
     result_table,
     stage5_kernel,
 )
+from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import collect_queries, query_matrix
 from rabitq_spark.metrics import SearchMetrics
 from rabitq_spark._dist import ensure_package_on_executors
@@ -157,7 +158,10 @@ def search_adaptive(
     ncl = cp.shape[0]
     scalar = np.float32(cfg.scalar)
 
-    qpd = collect_queries(queries, query_id, query_vec, model.dim)
+    qpd = collect_queries(
+        queries, query_id, query_vec, 8 * model.dim,
+        vecstore.QUERY_MATRIX_MAX_BYTES,
+    )
     if qpd is None:
         raise ValueError(
             f"the adaptive query batch's float64 (nq, {model.dim}) matrix passes "

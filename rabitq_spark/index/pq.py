@@ -57,6 +57,7 @@ from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from rabitq_spark._dist import ensure_package_on_executors
 from rabitq_spark.index.search import cluster_filter, local_cut
+from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import collect_queries, exact_topk, query_matrix
 from rabitq_spark.operators.topk import topk_per_group
 
@@ -446,7 +447,9 @@ def _query_batch(
 ) -> tuple[np.ndarray, np.ndarray]:
     """The query batch on the driver as (int64 ids, (nq, dim) float64):
     ONE collect, bounded by vecstore.QUERY_MATRIX_MAX_BYTES."""
-    pdf = collect_queries(queries, query_id, query_vec, dim)
+    pdf = collect_queries(
+        queries, query_id, query_vec, 8 * dim, vecstore.QUERY_MATRIX_MAX_BYTES
+    )
     if pdf is None:
         raise ValueError(
             f"the PQ query batch's float64 (nq, {dim}) matrix passes "

@@ -1,52 +1,55 @@
 """Batch ANN search — the reference's 7-stage query lifecycle
 (src/rabitq.rs:267-333) as one DataFrame program (SURVEY.md §3).
 
-A bounded batch (its float64 query matrix within
-vecstore.QUERY_MATRIX_MAX_BYTES, its probe table within
-_ARROW_MAX_PROBE_BYTES, unique integer query ids) is collected ONCE to the
-driver, where the reference runs stages 1-4 too: per query, before any
-scan. That one copy feeds every stage below. Any other batch, and any
-batch whose caller passes broadcast_probes=False, keeps the executor path:
-stages 1-4 as a mapInPandas, a checkpoint and a count job for the probe
-geometry (only while nprobe·2 ≤ n_clusters), the query vectors joined back
-for stage 7.
+Where stages 1-4 run: a batch with integer query ids whose probe table
+and float64 query block each fit _ARROW_MAX_PROBE_BYTES, the cap for one
+copy held on the driver, is collected ONCE to the driver, where the
+reference runs stages 1-4 too. Only a batch past that cap keeps the
+executor path: a mapInPandas, a checkpoint and a count job for the probe
+geometry (while nprobe·2 ≤ n_clusters), then the jvm join, both sides
+shuffled by cluster_id. Stage 7 reads the driver's query matrix only
+while it fits vecstore.QUERY_MATRIX_MAX_BYTES and its ids are unique
+(_query_side); any other batch joins the query vectors back.
 
 The planner: like the reference, a batch takes one decision per stage,
-and search(), range_search() and every search_adaptive wave take it in
-the same function — the kernel and its index source in stage5_kernel
-(the Spark kernel in choose_kernel: validation, coverage, unknown
-geometry, the probe-byte cap, the floors), the index pruning in
-_pruning_set, and the tail of stages 5-7 in _tail (range_search filters
-its candidates instead of cutting a top-R). Filters apply to the one
-index frame every source and kernel reads.
+and search() and every search_adaptive wave take it in the same
+function — the kernel and its index source in stage5_kernel (the Spark
+kernel in choose_kernel: validation, coverage, a probe table not on the
+driver, the floors), the index pruning in _pruning_set, and the tail of
+stages 5-7 in _tail. range_search() shares stages 1-4 and the pruning
+rule, then always runs the jvm join (_rough_candidates) and filters its
+candidates at the radius instead of cutting a top-R. Filters apply to
+the one index frame every source and kernel reads.
 
 Where stages 5-7 run: an "auto" batch whose stages 6-7 fit the driver
-(_driver_tail_fits) scores stage 5 there too, like the reference's
+(_driver_tail_fits: its query matrix is there, and its candidate and
+base-row bounds hold) scores stage 5 there too, like the reference's
 in-process index: score_clusters over a CSR view of the probed index rows
 (model.CSRIndex) — the "driver" kernel. The rows are a small loaded
 model's resident arrays (RaBitQModel.resident, read once by load()), at
 no job, or else one collect of the pruned index rows, bounded at
 _ARROW_MAX_PROBE_BYTES. Every other batch, and every forced "jvm" or
 "arrow" request, runs stage 5 as a Spark plan and stages 6-7 on the
-executor tail.
+executor tail; the probe table broadcasts if and only if the driver
+built it.
 
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
-       residual quantization) — prepare_probe_block, one numpy function:
-       on the driver for a bounded batch (the probe table then rides as an
-       Arrow local relation and the probed-cluster geometry is free), else
-       inside a mapInPandas over the query batch with the rotation matrix
-       + projected centroids broadcast. Emits the probe table: (query_id,
+       residual quantization) — prepare_probe_block, one numpy function
+       per Arrow batch's rows: on the driver (the probed-cluster geometry
+       is then free), else in a mapInPandas with the rotation matrix +
+       projected centroids broadcast. Emits the probe table: (query_id,
        cluster_id, y_c_dist_sq, lower_bound, delta, scalar_sum, qplanes).
   5.   rough scoring. The driver kernel: score_clusters, per probed
        cluster the D5 estimator in numpy (cluster_rough: one value GEMM,
        src/rabitq.rs:336-367) and a local top-R cut (local_cut). The
        executor tail's Spark plans, behind _candidates: the equi-join
-       probes ⋈ index on cluster_id (probe side broadcast; index side
-       partition-pruned by the probed cluster set) with the estimator as
-       one SQL expression (whole-stage codegen) — _rough_candidates — or
-       _fused_shortlist, a mapInArrow that runs score_clusters on each
-       Arrow batch of the index.
+       probes ⋈ index on cluster_id (a driver probe table broadcast, an
+       executor one shuffled; index side partition-pruned by the probed
+       cluster set) with the estimator as one SQL expression
+       (whole-stage codegen) — _rough_candidates — or _fused_shortlist, a
+       mapInArrow that runs score_clusters on each Arrow batch of the
+       index with the driver probe table broadcast.
   6.   top-R rough candidates per query on (rough, orig_id) — the batch
        substitute for the sequential heap threshold (src/rerank.rs:62-114).
        The driver tail (_driver_tail) cuts the driver kernel's arrays with
@@ -68,10 +71,12 @@ frames are bit-identical (tests/test_driver_path.py).
 Scale notes: a driver-tail batch runs no shuffle at all and moves each
 probed index row and each shortlisted base row to the driver at most
 once; a resident batch moves none. On the executor tail the only
-shuffles are the two window top-ks and, when neither side fits a
-broadcast, the cluster_id join and the rerank's base join (a model with a
-vec store gathers candidate rows instead). The index never moves; probes
-move to it. Cluster-size skew is handled by AQE skew-join splitting.
+shuffles are the two window top-ks, the rerank's base join when the
+base does not fit a broadcast (a model with a vec store gathers
+candidate rows instead) and, on the executor path, the cluster_id join.
+A driver probe table moves to the index; the index moves to the driver
+only through the driver scorer's bounded collect. Cluster-size skew is
+handled by AQE skew-join splitting.
 """
 
 from __future__ import annotations
@@ -600,13 +605,12 @@ def _fused_shortlist(
 ) -> DataFrame:
     """The Arrow plan for stages 5-6: ONE mapInArrow over the index rows
     `index` (_index_scan: pruned and filtered), with the driver probe
-    `block` (prepare_probe_block's columns; probe_block_of turns a
-    collected probe frame into one) broadcast keyed by cluster. Each Arrow
-    batch becomes a CSRIndex and runs score_clusters, so every probed
-    cluster's rows are one value GEMM and a local cut; the partition keeps
-    a top-R per query and emits it (≤ R rows per query per partition into
-    the window, instead of every candidate). Same estimator and top-R
-    order as the jvm join, so the frames are identical."""
+    `block` (prepare_probe_block's columns) broadcast keyed by cluster.
+    Each Arrow batch becomes a CSRIndex and runs score_clusters, so every
+    probed cluster's rows are one value GEMM and a local cut; the
+    partition keeps a top-R per query and emits it (≤ R rows per query per
+    partition into the window, instead of every candidate). Same estimator
+    and top-R order as the jvm join, so the frames are identical."""
     import pyarrow as pa
 
     spark = model.index_df.sparkSession
@@ -662,18 +666,6 @@ def _fused_shortlist(
     )
 
 
-def probe_block_of(ppdf: pd.DataFrame) -> dict:
-    """A collected probe frame as prepare_probe_block's columns."""
-    block = {c: ppdf[c].to_numpy() for c in ppdf.columns if c != "qplanes"}
-    planes = ppdf["qplanes"].to_numpy()
-    block["qplanes"] = (
-        np.vstack(planes).astype(np.int64)
-        if len(planes)
-        else np.empty((0, 0), dtype=np.int64)
-    )
-    return block
-
-
 def _index_scan(
     model: RaBitQModel, index: "DataFrame | None", clusters=None
 ) -> DataFrame:
@@ -688,17 +680,22 @@ def _index_scan(
 
 def _rough_candidates(
     model: RaBitQModel,
-    probes: DataFrame,
+    block: "dict | None" = None,
+    probes: "DataFrame | None" = None,
     clusters=None,
-    broadcast: bool = True,
     index: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Stage 5 on the jvm: the J2 equi-join of the _index_scan ⋈ probes on
-    cluster_id, then the D5 estimator (rough_estimator_expr) — (query_id,
-    orig_id, rough). The probe side broadcasts unless `broadcast` is off:
-    a huge batch (a full-table self-join) then shuffles BOTH sides by
+    """Stage 5 on the jvm: the J2 equi-join of the _index_scan ⋈ the probe
+    table on cluster_id, then the D5 estimator (rough_estimator_expr) —
+    (query_id, orig_id, rough). The probe table broadcasts if and only if
+    the driver built it: the driver `block` as a local relation, else the
+    executor frame `probes` joins under a merge hint, so no size estimate
+    broadcasts a table past the driver cap: BOTH sides shuffle by
     cluster_id, the index side bounded by the pruned posting lists."""
-    probe_side = F.broadcast(probes) if broadcast else probes
+    if block is not None:
+        probe_side = F.broadcast(probe_frame(model.index_df.sparkSession, block))
+    else:
+        probe_side = probes.hint("merge")
     return (
         _index_scan(model, index, clusters)
         .join(probe_side, "cluster_id")
@@ -713,21 +710,17 @@ def _candidates(
     block: "dict | None" = None,
     probes: "DataFrame | None" = None,
     clusters=None,
-    broadcast: bool = True,
     index: "DataFrame | None" = None,
 ) -> DataFrame:
     """Stage 5 of the executor tail: rough-score with `kernel` over the
     _index_scan — "arrow" runs _fused_shortlist (a local top-R per
     partition) over the driver probe `block`, "jvm" _rough_candidates
-    over the probe frame `probes`; either is built from the other when
-    None. Returns (query_id, orig_id, rough)."""
+    over the block, or over the executor probe frame `probes` when the
+    driver holds none (choose_kernel then picks only "jvm"). Returns
+    (query_id, orig_id, rough)."""
     if kernel == "arrow":
-        if block is None:
-            block = probe_block_of(probes.toPandas())
         return _fused_shortlist(model, block, r, _index_scan(model, index, clusters))
-    if probes is None:
-        probes = probe_frame(model.index_df.sparkSession, block)
-    return _rough_candidates(model, probes, clusters, broadcast, index)
+    return _rough_candidates(model, block, probes, clusters, index)
 
 
 def _shortlist(
@@ -942,12 +935,12 @@ _ARROW_MIN_PAIRS_MULTIBIT = 2_000_000
 # popcount kernel ~30× slower per call than the value GEMM, so these floors
 # are conservative until re-measured.
 _ARROW_MIN_QUERIES_PER_CLUSTER = 12
-# Byte cap for a probe table held on the driver (≈ 1.7M probe rows at dim
-# 256): search()'s driver path builds it there, and the Arrow plan
-# broadcasts it. Past the cap a batch keeps the executor path, whose
-# Arrow request is demoted to the jvm join. It also caps a driver-tail
-# batch's index collect (_driver_csr: all n_rows rows at the index row
-# width), one more copy on the driver.
+# Byte cap for one copy held on the driver. A batch runs stages 1-4 there
+# while its probe table (≈ 1.7M probe rows at dim 256, which the Spark
+# plans then broadcast) and its float64 query block each fit; past it the
+# batch keeps the executor path and its jvm join. It also caps a
+# driver-tail batch's candidate stream (_driver_tail_fits) and index
+# collect (_driver_csr: all n_rows rows at the index row width).
 _ARROW_MAX_PROBE_BYTES = 256 << 20
 
 #: What a caller may ask for; the kernel rule also returns "driver".
@@ -961,30 +954,25 @@ def choose_kernel(
     nprobe: int,
 ) -> tuple[str, str]:
     """The Spark kernel of the executor tail — the one place one is
-    validated, chosen or demoted. Returns ("jvm" | "arrow", reason) for
-    `impl` (one of KERNELS) over a probe table with {cluster_id: probe
-    rows} `probe_counts` (None when the executor path did not resolve it)
-    and at most `nprobe` probed clusters per query. Every kernel is
+    validated or chosen. Returns ("jvm" | "arrow", reason) for `impl` (one
+    of KERNELS) over a driver probe table with {cluster_id: probe rows}
+    `probe_counts` (None when the probe table is not on the driver) and at
+    most `nprobe` probed clusters per query. Every kernel is
     bit-identical, so the choice never changes a result row. In order:
-    "jvm" is honoured; "auto" keeps the jvm join when nprobe covers over
-    half the clusters — the batch scans most of the index, and the
-    executor path would pay a checkpoint and a count job to resolve the
-    geometry (at the sf0.1 headline shape, nprobe 28 of 32 clusters, ~10%
-    of the whole search); so does an unknown geometry, or a probe table
-    over _ARROW_MAX_PROBE_BYTES (the Arrow plan broadcasts it from the
-    driver); then "arrow" is honoured, and "auto" asks the floors below."""
+    "jvm" is honoured; a probe table not on the driver runs the jvm join,
+    the one plan that never holds it there; "auto" keeps the jvm join when
+    nprobe covers over half the clusters — the batch scans most of the
+    index (at the sf0.1 headline shape, nprobe 28 of 32 clusters); then
+    "arrow" is honoured, and "auto" asks the floors below."""
     if impl not in KERNELS:
         raise ValueError(f"impl must be one of {KERNELS}, got {impl!r}")
     if impl == "jvm":
         return "jvm", "requested"
+    if probe_counts is None:
+        return "jvm", "probe table not on the driver"
     if impl == "auto" and 2 * nprobe > model.n_clusters:
         return "jvm", "nprobe covers over half the clusters"
-    if probe_counts is None:
-        return "jvm", "probe geometry unknown"
     n_probe_rows = sum(probe_counts.values())
-    probe_bytes = n_probe_rows * _probe_row_bytes(model)
-    if probe_bytes > _ARROW_MAX_PROBE_BYTES:
-        return "jvm", f"probe table {probe_bytes} B > cap {_ARROW_MAX_PROBE_BYTES} B"
     if impl == "arrow":
         return "arrow", "requested"
     # avg cluster size uses model.n_rows when the builder recorded it, else
@@ -1071,7 +1059,8 @@ def stage5_kernel(
     score_clusters over _driver_csr's rows of `index`, the resident arrays
     or one bounded collect — and its reason names the source. Every other
     batch, a forced "jvm" or "arrow" included, runs choose_kernel's Spark
-    plan on the executor tail."""
+    plan on the executor tail. `probe_counts` is the geometry of a probe
+    table the driver holds, None when it holds none."""
     why = ""
     if impl == "auto" and _driver_tail_fits(model, qv, probe_counts, r):
         csr, why = _driver_csr(model, index, _pruning_set(model, probe_counts))
@@ -1136,31 +1125,37 @@ def _driver_batch(
     """Stages 1-4 on the driver: ONE bounded collect of the query batch
     (vecstore.collect_queries), then prepare_probe_block in numpy.
     Returns (ids, (nq, dim) float64 query matrix, probe block), or None —
-    the batch keeps the executor path — when the query matrix or the
-    probe table would pass its driver byte cap, or the ids are not unique
-    integers (the rerank indexes the matrix by id). Both caps bound the
-    collect's row limit, so an over-cap batch fetches no row past the
-    tighter one."""
+    the batch keeps the executor path — when its probe table (nq × nprobe
+    probe rows) or its query block would pass _ARROW_MAX_PROBE_BYTES, the
+    cap for one copy held on the driver, or its ids are not integers. The
+    ids need not be unique: stage 7 then joins the query frame
+    (_query_side). A query row is priced at the larger of its two copies,
+    so a batch past the cap fetches at most cap + 1 rows, once."""
     nb = min(nprobe, model.centroids_proj.shape[0])
-    max_rows = _ARROW_MAX_PROBE_BYTES // (max(nb, 1) * _probe_row_bytes(model))
-    pdf = collect_queries(queries, query_id, query_vec, model.dim, max_rows)
+    row_bytes = max(8 * model.dim, nb * _probe_row_bytes(model))
+    pdf = collect_queries(
+        queries, query_id, query_vec, row_bytes, _ARROW_MAX_PROBE_BYTES
+    )
     if pdf is None:
         return None
     ids = pdf[query_id].to_numpy()
-    qmat = query_matrix(pdf[query_vec].to_numpy(), model.dim)
-    if not _driver_matrix(ids, qmat):
+    if not np.issubdtype(ids.dtype, np.integer):
         return None
+    qmat = query_matrix(pdf[query_vec].to_numpy(), model.dim)
     cfg = model.config
-    block = prepare_probe_block(
-        ids,
-        qmat,
-        model.rotation,
-        model.centroids_proj,
-        model.rand_bias,
-        np.float32(cfg.scalar),
-        cfg.theta_log_dim,
-        nprobe,
-    )
+    geometry = (model.rotation, model.centroids_proj, model.rand_bias)
+    quant = (np.float32(cfg.scalar), cfg.theta_log_dim, nprobe)
+    # blocks of an Arrow batch's rows, as the executor prep sees them: the
+    # (queries, clusters) distances and each pair's float32 residual are
+    # temporaries several times the probe table's bytes
+    conf = queries.sparkSession.conf
+    step = int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    step = step if step > 0 else max(len(ids), 1)
+    parts = [
+        prepare_probe_block(ids[i : i + step], qmat[i : i + step], *geometry, *quant)
+        for i in range(0, max(len(ids), 1), step)
+    ]
+    block = {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
     return ids, qmat, block
 
 
@@ -1212,26 +1207,22 @@ def _prepare_batch(
     query_id: str,
     query_vec: str,
     nprobe: int,
-    on_driver: bool,
 ):
     """Stages 1-4 for search() and range_search(): on the driver when
-    `on_driver` holds and _driver_batch takes the batch, else on the
-    executors. Returns (probes, block, probe_counts, qv): exactly one of
-    the executor probe frame and the driver probe block (the frame is
-    built from the block only by a jvm stage 5, in _candidates: the
-    driver scorer needs none), the {cluster_id: probe rows} (None on the
-    executor path unless nprobe·2 ≤ n_clusters: _pruning_set), and the
-    stage-7 query side exact_rerank takes."""
+    _driver_batch takes the batch, else on the executors. Returns (probes,
+    block, probe_counts, qv): exactly one of the executor probe frame and
+    the driver probe block (a jvm stage 5 broadcasts the block as a local
+    relation, in _rough_candidates: the driver scorer needs none), the
+    {cluster_id: probe rows} (None on the executor path unless nprobe·2 ≤
+    n_clusters: _pruning_set), and the stage-7 query side exact_rerank
+    takes (_query_side)."""
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
-    driver = (
-        _driver_batch(model, queries, query_id, query_vec, nprobe)
-        if on_driver
-        else None
-    )
+    driver = _driver_batch(model, queries, query_id, query_vec, nprobe)
     if driver is not None:
         qids, qmat, block = driver
-        return None, block, cluster_counts(block["cluster_id"]), (qids, qmat)
+        qv = _query_side(model, queries, query_id, query_vec, (qids, qmat))
+        return None, block, cluster_counts(block["cluster_id"]), qv
     probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
     probe_counts = None
     if 2 * nprobe <= model.n_clusters:
@@ -1249,27 +1240,24 @@ def search(
     query_vec: str = "qvec",
     metrics: "SearchMetrics | None" = None,
     impl: str = "auto",
-    broadcast_probes: bool = True,
     index_predicate=None,
     allowed: "DataFrame | None" = None,
 ) -> DataFrame:
     """Batch top-k ANN: returns (query_id, neighbor_id, dist, rank).
 
-    A bounded batch is resolved on the driver (see the module docstring):
-    one collect job replaces the executor prep stage, its checkpoint and
-    the probe-geometry count; every other batch runs the executor path.
-    When the driver tail's bounds fit (_driver_tail_fits), an "auto" batch
-    also runs stages 5-7 on the driver: its Spark jobs then run INSIDE
-    this call (one collect of the probed index rows and, without a vec
-    store, one base collect; none on a small loaded model's resident
-    arrays) and the returned frame is a local relation, which collects
-    without a job. Otherwise the returned frame is the lazy executor-tail
-    plan. All give identical frames.
-
-    `broadcast_probes=False` is for a caller that knows its batch is large
-    (the full-table self-joins): the stage-5 join then shuffles both sides
-    by cluster_id instead of broadcasting the probe table, and the batch
-    keeps the executor path without the driver path's collect.
+    Every batch whose probe table and query block fit the driver cap
+    (_ARROW_MAX_PROBE_BYTES) runs stages 1-4 on the driver (see the module
+    docstring): one collect job replaces the executor prep stage, its
+    checkpoint and the probe-geometry count. Only a batch past the cap,
+    such as a full-table self-join past about 350k rows at dim 64 and
+    nprobe 12, runs the executor path, with the jvm join shuffling both
+    sides by cluster_id. When the driver tail's bounds fit
+    (_driver_tail_fits), an "auto" batch also runs stages 5-7 on the
+    driver: its Spark jobs then run INSIDE this call (one collect of the
+    probed index rows and, without a vec store, one base collect; none on
+    a small loaded model's resident arrays) and the returned frame is a
+    local relation, which collects without a job. Otherwise the returned
+    frame is the lazy executor-tail plan. All give identical frames.
 
     Filtered search (two forms, both applied to the index rows every
     kernel scores, so filtered-out rows never consume rerank slots —
@@ -1302,16 +1290,18 @@ def search(
     "auto" runs a driver-tail batch on the driver scorer ("driver":
     score_clusters over the resident arrays or one bounded collect of the
     index rows) and any other batch on choose_kernel's pick; "jvm", the
-    codegen broadcast-join plan, and "arrow", the value-GEMM mapInArrow
-    plan (_fused_shortlist), run that plan and the executor tail. All
-    give bit-identical frames. `metrics.kernel` / `metrics.kernel_reason`
-    report the kernel that ran and why (the driver scorer's source);
-    `metrics.probe_rows` / `metrics.probed_clusters` the probe geometry
-    whenever the search resolved it (always on the driver path). On the
-    driver scorer the rough, precise and gather rerank counts come from
-    its arrays (`metrics.counts`: rough_count is every pair scored,
-    rerank_base_rows the distinct ids gathered), and a base_df rerank is
-    observed inside its one base job.
+    codegen join plan, and "arrow", the value-GEMM mapInArrow plan
+    (_fused_shortlist), run that plan and the executor tail. A batch past
+    the driver cap has no probe table on the driver, so it runs the jvm
+    join whatever it asks for. All give bit-identical frames.
+    `metrics.kernel` / `metrics.kernel_reason` report the kernel that ran
+    and why (the driver scorer's source); `metrics.probe_rows` /
+    `metrics.probed_clusters` the probe geometry whenever the search
+    resolved it (always on the driver path). On the driver scorer the
+    rough, precise and gather rerank counts come from its arrays
+    (`metrics.counts`: rough_count is every pair scored, rerank_base_rows
+    the distinct ids gathered), and a base_df rerank is observed inside
+    its one base job.
     """
     cfg = model.config
     topk = topk or cfg.topk
@@ -1319,7 +1309,7 @@ def search(
     if overfetch is None:
         overfetch = auto_overfetch(model, nprobe, topk)
     probes, block, probe_counts, qv = _prepare_batch(
-        model, queries, query_id, query_vec, nprobe, broadcast_probes
+        model, queries, query_id, query_vec, nprobe
     )
     index = model.index_df
     if index_predicate is not None:
@@ -1328,8 +1318,9 @@ def search(
         ok = allowed.select(F.col(allowed.columns[0]).alias("orig_id"))
         index = index.join(ok.distinct(), "orig_id", "left_semi")
     r = max(topk * overfetch, topk)
+    # the kernel rule reads the geometry of a probe table on the driver
     kernel, reason, csr = stage5_kernel(
-        model, impl, r, qv, probe_counts, nprobe, index
+        model, impl, r, qv, None if block is None else probe_counts, nprobe, index
     )
     if metrics is not None:
         metrics.kernel, metrics.kernel_reason = kernel, reason
@@ -1338,7 +1329,7 @@ def search(
             metrics.probe_rows = sum(probe_counts.values())
     return _tail(
         model, kernel, r, topk, qv, probe_counts, metrics, csr=csr,
-        block=block, probes=probes, broadcast=broadcast_probes, index=index,
+        block=block, probes=probes, index=index,
     )
 
 
@@ -1355,8 +1346,10 @@ def range_search(
     dist ≤ `radius_sq` among the probed clusters — the range-query sibling
     of top-k search (not in the reference; standard vector-store surface).
 
-    Same J1→J2→D5→J3 pipeline as search(), driver path included, but the
-    shortlist step is a FILTER, not a top-R window — no per-query state,
+    Same stages 1-4 as search(), driver path included, then always the
+    jvm join (_rough_candidates, its probe table broadcast if and only if
+    the driver built it) and the exact rerank; the shortlist step is a
+    FILTER, not a top-R window — no per-query state,
     no window shuffle; the exact rerank is bounded by the rough survivors.
     With `rough_cutoff` the estimator screens candidates at `radius_sq`;
     the estimator is a probabilistic lower bound (error-bound slack,
@@ -1368,11 +1361,11 @@ def range_search(
     cfg = model.config
     nprobe = nprobe or cfg.nprobe
     probes, block, probe_counts, qv = _prepare_batch(
-        model, queries, query_id, query_vec, nprobe, True
+        model, queries, query_id, query_vec, nprobe
     )
-    if probes is None:
-        probes = probe_frame(queries.sparkSession, block)
-    cand = _rough_candidates(model, probes, _pruning_set(model, probe_counts))
+    cand = _rough_candidates(
+        model, block, probes, _pruning_set(model, probe_counts)
+    )
     if rough_cutoff:
         cand = cand.filter(F.col("rough") <= F.lit(radius_sq))
     exact = exact_rerank(

@@ -146,11 +146,10 @@ def _fs_replace(fs, src: str, dst: str) -> None:
 # object-store branch.
 _URI_ID_CACHE: dict = {}
 
-#: Byte bound for a query matrix held on the driver: the (nq, dim) float64
-#: block search() resolves a batch from and the rerank ships as ONE
-#: broadcast. collect_queries turns it into a row limit for the geometry
-#: (4096 queries at dim 256), so one bound governs every plan that
-#: collects queries; larger batches keep their Spark-side plans. Every
+#: Byte bound for a query matrix that a rerank ships as ONE broadcast:
+#: the (nq, dim) float64 block (4096 queries at dim 256) of search()'s
+#: stage 7 (_query_side), search_adaptive and the PQ scans, which pass it
+#: to collect_queries; larger batches keep their Spark-side plans. Every
 #: Python worker running the rerank holds its own copy of the matrix, so
 #: memory grows with matrix bytes × concurrent workers. Measured on
 #: local[32] (4 cores, 15 GB host, dim 256, median search wall, driver
@@ -445,16 +444,14 @@ def collect_queries(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    dim: int,
-    max_rows: int | None = None,
+    row_bytes: int,
+    max_bytes: int,
 ) -> "pd.DataFrame | None":
     """ONE bounded job: the (id, vec) rows of a query batch as pandas when
-    their float64 (n, dim) matrix fits QUERY_MATRIX_MAX_BYTES and there
-    are at most `max_rows` of them, else None (the over-cap rows fetched
-    to decide are discarded)."""
-    cap_rows = QUERY_MATRIX_MAX_BYTES // (8 * max(dim, 1))
-    if max_rows is not None:
-        cap_rows = min(cap_rows, max_rows)
+    they fit the caller's byte cap `max_bytes` at `row_bytes` per row
+    (the caller's driver copies of one query), else None (the cap + 1
+    rows fetched to decide are discarded)."""
+    cap_rows = max_bytes // max(row_bytes, 1)
     pdf = queries.select(id_col, vec_col).limit(cap_rows + 1).toPandas()
     return None if len(pdf) > cap_rows else pdf
 

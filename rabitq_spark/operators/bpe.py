@@ -145,22 +145,6 @@ def bpe_train(
     return merges
 
 
-def bpe_merges_df(
-    docs: DataFrame,
-    n_merges: int = 20,
-    text_col: str = "text",
-    lowercase: bool = True,
-) -> DataFrame:
-    """bpe_train as a DataFrame (step, left, right, pair_count) — the
-    registerable query form of the tokenizer artifact."""
-    spark = docs.sparkSession
-    merges = bpe_train(docs, n_merges, text_col, lowercase)
-    return spark.createDataFrame(
-        [(i, a, b, c) for i, (a, b, c) in enumerate(merges)],
-        "step int, left string, right string, pair_count bigint",
-    )
-
-
 def bpe_tokenize(
     docs: DataFrame,
     merges: list[tuple[str, str, int]] | list[tuple[str, str]],

@@ -811,9 +811,9 @@ def embedding_neardup_pairs(
     qualifying pair can be missed — the correctness anchor, bit-identical to
     the naive all-pairs oracle). Larger tables take the IVF-blocked path:
     index the unit-normalized vectors, self-similarity-join for each row's
-    top `k_per_row` neighbors, then exact-verify candidates — the table is
-    never collected to the driver and candidate volume is bounded by
-    k_per_row per row.
+    top `k_per_row` neighbors, then exact-verify candidates — the table
+    reaches the driver only as search()'s bounded stages-1-4 batch, and
+    candidate volume is bounded by k_per_row per row.
 
     The dispatch probe never scans the full table: one row for the vector
     dimension, then `limit(max_rows + 1).count()` which stops as soon as the
@@ -877,30 +877,6 @@ def embedding_neardup_pairs(
     )
 
 
-def _probe_broadcast_ok(
-    row_count: int | None,
-    model,
-    nprobe: int,
-    max_bytes: int = 128 << 20,
-) -> bool:
-    """Whether a |table| × nprobe probe table of `model` is small enough to
-    broadcast.
-
-    Byte-aware, not row-count-aware: each probe row is priced by
-    index/search.py::_probe_row_bytes, the one byte model of the probe
-    table (its packed query planes grow with dim), so a fixed row cutoff
-    would scale its memory cost with dim × nprobe. Unknown row_count
-    (streaming caller) keeps the historical broadcast default; oversized
-    tables take the shuffle-by-cluster_id join, which is memory-bounded at
-    any size.
-    """
-    from rabitq_spark.index.search import _probe_row_bytes
-
-    if row_count is None:
-        return True
-    return row_count * nprobe * _probe_row_bytes(model) <= max_bytes
-
-
 def _embedding_neardup_blocked(
     embeddings: DataFrame,
     id_col: str,
@@ -924,9 +900,11 @@ def _embedding_neardup_blocked(
     search — exhaustive settings (nprobe = n_clusters, large overfetch) make
     candidate generation exact up to the k_per_row cap.
 
-    Nothing here collects the table: the index build is mapInPandas over
-    partitions, probes shuffle by cluster_id, and the verify join is an
-    equi-join on candidate ids.
+    The index build is mapInPandas over partitions and the verify join is
+    an equi-join on candidate ids. search() runs stages 1-4 on the driver
+    while the table's probe table and query block fit its driver cap
+    (about 350k rows at dim 64 and nprobe 12); past it, probes shuffle by
+    cluster_id and nothing here collects the table.
     """
     from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.functions.vector import dot, l2_norm
@@ -958,16 +936,11 @@ def _embedding_neardup_blocked(
     queries = unit.select(
         F.col("id").alias("query_id"), F.col("vec").alias("qvec")
     )
-    # the probe table is |table| × nprobe rows; broadcast it only while its
-    # BYTES stay heap-friendly (round-6: the old 500k-ROW cutoff let a
-    # 200k × nprobe=12 probe table broadcast ~1.7 GB of padded vectors +
-    # codes and OOM an 8 GB heap). Past the cap both join sides shuffle by
-    # cluster_id — same key, bounded memory at any table size.
+    # the probe table is |table| × nprobe rows: search() builds it on the
+    # driver while it fits the driver cap, else both join sides shuffle by
+    # cluster_id — same key, bounded memory at any table size
     nn = search(
-        model, queries, topk=k_per_row + 1, nprobe=nprobe, overfetch=overfetch,
-        broadcast_probes=_probe_broadcast_ok(
-            row_count, model, nprobe or config.nprobe
-        ),
+        model, queries, topk=k_per_row + 1, nprobe=nprobe, overfetch=overfetch
     )
     cand = (
         nn.filter(F.col("query_id") != F.col("neighbor_id"))

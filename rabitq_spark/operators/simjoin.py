@@ -148,22 +148,10 @@ def similarity_join(
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-    # a full-table query side makes the probe table |left| × nprobe rows —
-    # too big to broadcast once its BYTES outgrow the heap (byte-aware gate,
-    # shared with the blocked embedding near-dup); shuffle both sides by
-    # cluster_id instead (pass left_count to enable the check)
-    from rabitq_spark.operators.dedup import _probe_broadcast_ok
-
-    return search(
-        model,
-        queries,
-        topk=k,
-        nprobe=nprobe,
-        overfetch=overfetch,
-        broadcast_probes=_probe_broadcast_ok(
-            left_count, model, nprobe or model.config.nprobe
-        ),
-    )
+    # a full-table query side makes the probe table |left| × nprobe rows:
+    # search() builds it on the driver while it fits the driver cap, else
+    # both join sides shuffle by cluster_id
+    return search(model, queries, topk=k, nprobe=nprobe, overfetch=overfetch)
 
 
 def grouped_similarity_join(

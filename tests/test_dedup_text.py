@@ -174,24 +174,44 @@ def test_dedup_cache_scope_is_bounded(spark, sf_dir):
     assert n2 <= n1
 
 
-def test_embedding_neardup_blocked_path_no_driver_collect(spark, sf_dir, monkeypatch):
-    """Above broadcast_max_rows the operator must dispatch to the IVF-blocked
-    plan, which never collects the table to the driver: any toPandas() during
-    plan construction fails this test."""
-    from pyspark.sql import DataFrame
+def test_embedding_neardup_blocked_path_bounded_driver_collect(
+    spark, sf_dir, monkeypatch
+):
+    """Above broadcast_max_rows the operator dispatches to the IVF-blocked
+    plan, which brings the table to the driver only as search()'s bounded
+    stages-1-4 batch: for a table past the driver cap (patched to 10 query
+    rows' worth), plan construction makes ONE query collect, of at most
+    cap + 1 rows, and then takes the executor path."""
+    import importlib
 
+    search_mod = importlib.import_module("rabitq_spark.index.search")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    fetched = []
+    real_collect = search_mod.collect_queries
 
-    def boom(self):
-        raise AssertionError("blocked path must not collect the table to the driver")
+    def spy(queries, id_col, vec_col, row_bytes, max_bytes):
+        got = real_collect(queries, id_col, vec_col, row_bytes, max_bytes)
+        fetched.append((max_bytes // row_bytes, got))
+        return got
 
-    monkeypatch.setattr(DataFrame, "toPandas", boom)
+    monkeypatch.setattr(search_mod, "collect_queries", spy)
+    # a query's driver copies at dim 64 and the default nprobe 12: 12
+    # probe rows of 64 B outweigh its 512 B float64 row
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 10 * 12 * 64)
+    prepared = []
+    real_prepare = search_mod._prepare_probes
+    monkeypatch.setattr(
+        search_mod,
+        "_prepare_probes",
+        lambda *a: prepared.append(a) or real_prepare(*a),
+    )
     # row_count passed explicitly (fake "huge table") so dispatch picks the
     # blocked plan without a count job
     df = embedding_neardup_pairs(
         emb, threshold=0.4, broadcast_max_rows=1000, row_count=10_000_000
     )
-    assert "cosine" in df.columns  # plan constructed without any toPandas
+    assert "cosine" in df.columns
+    assert fetched == [(10, None)] and len(prepared) == 1
 
 
 def test_embedding_neardup_blocked_equals_broadcast(spark, sf_dir):
@@ -221,6 +241,44 @@ def test_embedding_neardup_blocked_equals_broadcast(spark, sf_dir):
         .sort_values(["id_a", "id_b"], ignore_index=True)
     )
     pd.testing.assert_frame_equal(blocked, exact, check_exact=True)
+
+
+def test_embedding_neardup_blocked_between_caps(spark, sf_dir, monkeypatch):
+    """A blocked table whose query matrix passes QUERY_MATRIX_MAX_BYTES
+    (patched to 100 rows) but whose probe table and query block fit the
+    driver cap runs stages 1-4 on the driver, with no `prep` stage, and
+    returns the executor path's pairs (the driver cap patched to 0)."""
+    import importlib
+
+    import pandas as pd
+
+    from rabitq_spark.index import vecstore
+
+    search_mod = importlib.import_module("rabitq_spark.index.search")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    n = emb.count()
+    monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", 100 * 64 * 8)
+
+    def pairs():
+        return (
+            embedding_neardup_pairs(
+                emb, threshold=0.4, broadcast_max_rows=1, row_count=n, k_per_row=5
+            )
+            .toPandas()
+            .sort_values(["id_a", "id_b"], ignore_index=True)
+        )
+
+    with monkeypatch.context() as m:
+        m.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 0)
+        executor = pairs()
+
+    def no_prep(*args):
+        raise AssertionError("a batch within the driver cap ran the prep stage")
+
+    monkeypatch.setattr(search_mod, "_prepare_probes", no_prep)
+    between = pairs()
+    assert len(between) > 0
+    pd.testing.assert_frame_equal(between, executor, check_exact=True)
 
 
 def test_similarity_join_blocked_exhaustive_equals_single_block(spark, sf_dir):
@@ -515,37 +573,3 @@ def test_connected_components_raises_when_unconverged(spark):
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, nodes, max_iter=2)
 
-
-def test_probe_broadcast_gate_is_byte_aware():
-    """The probe-broadcast decision prices BYTES (dim × nprobe × the probe
-    row), not row count (round-6: a fixed 500k-row cutoff broadcast ~1.7 GB
-    at 200k × 64 × nprobe=12 and OOMed an 8 GB heap). A row is priced as
-    search prices it (_probe_row_bytes: theta_log_dim packed query planes
-    plus scalars)."""
-    from types import SimpleNamespace
-
-    from rabitq_spark.config import RaBitQConfig
-    from rabitq_spark.operators.dedup import _probe_broadcast_ok
-
-    def model(dim_pad):
-        return SimpleNamespace(
-            config=RaBitQConfig(bits_per_dim=4), n_words=dim_pad // 64
-        )
-
-    # unknown row count (streaming caller): historical default = broadcast
-    assert _probe_broadcast_ok(None, model(64), 12)
-    # small table: broadcast fine
-    assert _probe_broadcast_ok(10_000, model(64), 12)
-    # the OOM shape: 200k rows x 64 dims x nprobe 12 -> 153.6 MB, past 128 MiB
-    assert not _probe_broadcast_ok(200_000, model(64), 12)
-    # same rows, tiny nprobe: back under the cap — 4 planes × 1 word × 8 B
-    # plus 32 B of scalars per row
-    assert _probe_broadcast_ok(200_000, model(64), 1, max_bytes=128 << 20) == (
-        200_000 * 1 * (4 * 1 * 8 + 32) <= 128 << 20
-    )
-    # a 100k-row self-join at dim 64 and nprobe 12 now broadcasts (the old
-    # padded-vector price of 640 B/row shuffled it)
-    assert _probe_broadcast_ok(100_000, model(64), 12)
-    # widening any factor flips the decision monotonically
-    assert _probe_broadcast_ok(100_000, model(64), 2)
-    assert not _probe_broadcast_ok(100_000, model(1024), 2, max_bytes=1 << 20)

@@ -3,12 +3,15 @@ numpy on the driver, stages 5-7 finished there too (the "driver" kernel:
 score_clusters over a small loaded model's resident arrays or one bounded
 collect of the index rows, then the driver tail) — against the executor
 path it replaces and the forced Spark kernels. Patching
-vecstore.QUERY_MATRIX_MAX_BYTES to 0 forces every batch onto the executor
-path (and the vec-store rerank onto its join form), so the paths can be
+search._ARROW_MAX_PROBE_BYTES, the driver cap, to 0 forces every batch
+onto the executor path; patching vecstore.QUERY_MATRIX_MAX_BYTES to 0
+keeps stages 1-4 on the driver but sends stage 7 to the query frame (and
+the vec-store rerank to its join form). So the three placements can be
 compared frame for frame."""
 
 import copy
 import importlib
+import re
 
 import pandas as pd
 import pytest
@@ -71,7 +74,39 @@ def _sorted(df, keys=("query_id", "rank")):
 
 
 def _executor_path(monkeypatch):
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 0)
+
+
+def _frame_query_side(monkeypatch):
     monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", 0)
+
+
+#: Where a batch runs: the driver (stages 1-4 and the stage-7 query
+#: matrix), a driver probe block with the frame query side, and the
+#: executor path.
+PLACEMENTS = {
+    "driver": lambda m: None,
+    "frame_side": _frame_query_side,
+    "executor": _executor_path,
+}
+
+
+def _probe_join(plans) -> str:
+    """The stage-5 join of formatted `plans` on cluster_id: "broadcast",
+    "shuffle" (both sides sort-merged) or "" when none is there."""
+    text = "\n".join(plans)
+
+    def joins(kind):
+        return re.search(rf"{kind}[^\n]*\nLeft keys \[1\]: \[cluster_id#", text)
+
+    if joins("BroadcastHashJoin"):
+        return "broadcast"
+    return "shuffle" if joins("SortMergeJoin") else ""
+
+
+def _runs_prep(plans) -> bool:
+    """Whether formatted `plans` run the executor path's `prep` stage."""
+    return any("MapInPandas" in p and re.search(r"\bprep\(", p) for p in plans)
 
 
 def _jobs(spark, tag, run) -> int:
@@ -116,6 +151,12 @@ def _plan(df) -> str:
 def test_driver_path_equals_executor_path(
     spark, sf_dir, models, monkeypatch, impl, bits, store, filt
 ):
+    """Every batch runs in the three PLACEMENTS, whose frames are equal.
+    The kernel that runs is reported: on the driver a forced kernel is
+    honoured and "auto" runs the driver scorer over one collect of the
+    index rows; with the frame query side a forced kernel is honoured
+    ("arrow" over the driver probe block) and "auto" takes choose_kernel's
+    pick; on the executor path every request runs the jvm join."""
     model = models[(bits, store)]
     kw = {"topk": K, "impl": impl}
     if filt == "index_predicate":
@@ -124,28 +165,32 @@ def test_driver_path_equals_executor_path(
         kw["allowed"] = model.base_df.filter("orig_id % 3 != 0").select("orig_id")
     for elem in ("float", "double"):
         queries = _queries(spark, sf_dir, elem)
-        met = SearchMetrics()
-        driver = _sorted(search(model, queries, metrics=met, **kw))
-        with monkeypatch.context() as m:
-            _executor_path(m)
-            met_x = SearchMetrics()
-            executor = _sorted(search(model, queries, metrics=met_x, **kw))
-        pd.testing.assert_frame_equal(driver, executor, check_exact=True)
-        assert len(driver) == NQ * K
-        # a forced kernel is honoured on both paths, filtered or not;
-        # "auto" runs the driver scorer over one collect of the index rows
-        # on the driver path and choose_kernel's pick on the executor path
-        if impl == "auto":
-            assert met.kernel == "driver", met.kernel_reason
-            assert "index rows collected" in met.kernel_reason
-            pick, _ = search_mod.choose_kernel(
-                model, impl, met_x.probed_clusters, NPROBE
+        frames = {}
+        for placement, patch in PLACEMENTS.items():
+            met = SearchMetrics()
+            with monkeypatch.context() as m:
+                patch(m)
+                frames[placement] = _sorted(search(model, queries, metrics=met, **kw))
+            want = impl
+            if placement == "executor":
+                want = "jvm"
+                if impl != "jvm":
+                    assert met.kernel_reason == "probe table not on the driver"
+            elif impl == "auto" and placement == "driver":
+                want = "driver"
+                assert "index rows collected" in met.kernel_reason
+            elif impl == "auto":
+                want, _ = search_mod.choose_kernel(
+                    model, impl, met.probed_clusters, NPROBE
+                )
+            assert met.kernel == want, (placement, met.kernel_reason)
+            assert met.probe_rows == NQ * NPROBE
+            assert sum(met.probed_clusters.values()) == met.probe_rows
+        assert len(frames["driver"]) == NQ * K
+        for placement in ("frame_side", "executor"):
+            pd.testing.assert_frame_equal(
+                frames["driver"], frames[placement], check_exact=True
             )
-            assert met_x.kernel == pick
-        else:
-            assert met.kernel == met_x.kernel == impl
-        assert met.probe_rows == NQ * NPROBE
-        assert sum(met.probed_clusters.values()) == met.probe_rows
 
 
 def test_range_search_driver_path_equals_executor_path(
@@ -158,11 +203,12 @@ def test_range_search_driver_path_equals_executor_path(
     )
     keys = ("query_id", "neighbor_id")
     driver = _sorted(range_search(model, queries, radius), keys)
-    with monkeypatch.context() as m:
-        _executor_path(m)
-        executor = _sorted(range_search(model, queries, radius), keys)
     assert len(driver) > 0
-    pd.testing.assert_frame_equal(driver, executor, check_exact=True)
+    for placement in ("frame_side", "executor"):
+        with monkeypatch.context() as m:
+            PLACEMENTS[placement](m)
+            other = _sorted(range_search(model, queries, radius), keys)
+        pd.testing.assert_frame_equal(driver, other, check_exact=True)
 
 
 def test_driver_path_drops_prep_stage_and_two_jobs(spark, sf_dir, models, monkeypatch):
@@ -271,11 +317,10 @@ def test_over_bound_batch_takes_executor_tail(
     queries = _queries(spark, sf_dir, "float")
     want = _sorted(search(model, queries, topk=K))
     if bound == "candidates":
-        # the probe table still fits: the batch stays on the driver path
-        row_bytes = search_mod._probe_row_bytes(model)
-        monkeypatch.setattr(
-            search_mod, "_ARROW_MAX_PROBE_BYTES", NQ * NPROBE * row_bytes
-        )
+        # the probe table and the query block still fit: the batch stays
+        # on the driver path
+        row_bytes = max(8 * model.dim, NPROBE * search_mod._probe_row_bytes(model))
+        monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", NQ * row_bytes)
     else:
         # the query matrix still fits, the shortlisted base rows do not
         monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", NQ * model.dim * 8)
@@ -388,18 +433,32 @@ def test_driver_scorer_collects_the_index_in_one_job(spark, sf_dir, models):
     assert met.rough_count == _pairs(model.index_df, met.probed_clusters)
 
 
-def test_duplicate_query_ids_keep_executor_path(spark, sf_dir, models):
-    """Duplicate ids cannot index the driver query matrix: such a batch
-    keeps the executor path, and its unique ids get the answers a batch
-    without the duplicates gets."""
-    from rabitq_spark.index.search import _driver_batch
+def test_duplicate_query_ids_take_frame_query_side(
+    spark, sf_dir, models, monkeypatch
+):
+    """Duplicate ids cannot index the driver query matrix, but stages 1-4
+    need no unique ids: such a batch builds its probe block on the driver
+    and stage 7 joins the query frame. Its frame is the executor path's,
+    and its unique ids get the answers a batch without the duplicates
+    gets."""
+    from pyspark.sql import DataFrame
 
     model = models[(1, False)]
     queries = _queries(spark, sf_dir, "float")
     dup = queries.unionByName(queries.filter("query_id < 2"))
-    assert _driver_batch(model, dup, "query_id", "qvec", NPROBE) is None
-    assert _driver_batch(model, queries, "query_id", "qvec", NPROBE) is not None
-    got = _sorted(search(model, dup, topk=K))
+    probes, block, _, qv = search_mod._prepare_batch(
+        model, dup, "query_id", "qvec", NPROBE
+    )
+    assert probes is None and len(block["query_id"]) == (NQ + 2) * NPROBE
+    assert isinstance(qv, DataFrame)
+    met = SearchMetrics()
+    got = _sorted(search(model, dup, topk=K, metrics=met))
+    assert met.kernel == "jvm" and met.probe_rows == (NQ + 2) * NPROBE
+    with monkeypatch.context() as m:
+        _executor_path(m)
+        pd.testing.assert_frame_equal(
+            got, _sorted(search(model, dup, topk=K)), check_exact=True
+        )
     single = _sorted(search(model, queries, topk=K))
     pd.testing.assert_frame_equal(
         got[got.query_id >= 2].reset_index(drop=True),
@@ -408,53 +467,147 @@ def test_duplicate_query_ids_keep_executor_path(spark, sf_dir, models):
     )
 
 
-def test_broadcast_probes_false_keeps_executor_path(
+def test_between_caps_batch_runs_stages_1_to_4_on_the_driver(
     spark, sf_dir, models, monkeypatch
 ):
-    """A caller that turns the probe broadcast off (the full-table
-    self-joins) gets the executor path: the batch is never collected for
-    stages 1-4, the plan runs the `prep` stage, and the frame is the driver
-    path's."""
+    """A batch whose query matrix passes QUERY_MATRIX_MAX_BYTES but whose
+    probe table and query block fit the driver cap runs ONE query collect
+    and stages 1-4 on the driver: no `prep` stage, no checkpoint and no
+    probe-count job; with impl="arrow" no probe collect either (the
+    collect is the query batch's only toPandas). Stage 7 joins the query
+    frame. It runs fewer jobs than the executor path, and the frames
+    are equal."""
+    model = models[(4, False)]
+    queries = _queries(spark, sf_dir, "float")
+    want = _sorted(search(model, queries, topk=K))
+    frame_class = type(queries)  # the concrete class that collects
+    _frame_query_side(monkeypatch)
+
+    def run(impl):
+        search(model, queries, topk=K, impl=impl).collect()
+
+    run("arrow")  # warm
+    frames = []
+    calls = {"toPandas": 0, "localCheckpoint": 0}
+    for name in calls:
+        real = getattr(frame_class, name)
+
+        def spy(self, *a, _real=real, _name=name, **kw):
+            calls[_name] += 1
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(frame_class, name, spy)
+    met = SearchMetrics()
+    plans = _executed_plans(
+        spark,
+        lambda: frames.append(
+            _sorted(search(model, queries, topk=K, impl="arrow", metrics=met))
+        ),
+    )
+    assert calls == {"toPandas": 2, "localCheckpoint": 0}  # and _sorted's
+    assert met.kernel == "arrow"
+    assert not _runs_prep(plans)
+    pd.testing.assert_frame_equal(frames[0], want, check_exact=True)
+    between = _jobs(spark, "between_caps:arrow", lambda: run("arrow"))
+    with monkeypatch.context() as m:
+        _executor_path(m)
+        run("arrow")  # warm
+        executor = _jobs(spark, "between_caps:executor", lambda: run("arrow"))
+    assert between < executor, (between, executor)
+
+
+def test_past_cap_batch_keeps_executor_path(spark, sf_dir, models, monkeypatch):
+    """A batch past the driver cap keeps the executor path whatever it asks
+    for: the plan runs the `prep` stage and the jvm join, which shuffles
+    both sides by cluster_id (no probe-side broadcast), and the frame is
+    the driver path's. Within the cap the driver's probe table
+    broadcasts."""
     model = models[(1, False)]
     queries = _queries(spark, sf_dir, "float")
-    driver = _sorted(search(model, queries, topk=K))
+    driver = {impl: _sorted(search(model, queries, topk=K, impl=impl))
+              for impl in ("auto", "arrow")}
+    with monkeypatch.context() as m:
+        _frame_query_side(m)  # the executor tail, not the driver's
+        plans = _executed_plans(
+            spark, lambda: search(model, queries, topk=K, impl="jvm").collect()
+        )
+    assert _probe_join(plans) == "broadcast"
+    _executor_path(monkeypatch)
+    for impl, want in driver.items():
+        met = SearchMetrics()
+        out = []
+        plans = _executed_plans(
+            spark,
+            lambda: out.append(
+                _sorted(search(model, queries, topk=K, impl=impl, metrics=met))
+            ),
+        )
+        assert met.kernel == "jvm", met.kernel_reason
+        assert _probe_join(plans) == "shuffle"
+        assert _runs_prep(plans)
+        pd.testing.assert_frame_equal(want, out[0], check_exact=True)
 
-    def no_collect(*args, **kwargs):
-        raise AssertionError("broadcast_probes=False collected the batch")
 
-    monkeypatch.setattr(search_mod, "collect_queries", no_collect)
-    executor = _sorted(search(model, queries, topk=K, broadcast_probes=False))
-    pd.testing.assert_frame_equal(driver, executor, check_exact=True)
-    df = search(
-        model, queries, topk=K, nprobe=model.n_clusters, broadcast_probes=False
-    )
-    assert "MapInPandas prep(" in df._jdf.queryExecution().executedPlan().toString()
+def test_driver_batch_blocks_keep_every_probe_row(spark, sf_dir, models):
+    """Driver stages 1-4 run per Arrow batch's rows, as the executor prep
+    sees them (here 5 of 12 queries, three blocks), which bounds their
+    temporaries. Every query keeps its probe rows and clusters in order;
+    the float columns agree with one pass to float32 rounding (BLAS
+    rounds a row's dot products differently with the rows beside it)."""
+    import numpy as np
+
+    model = models[(4, False)]
+    queries = _queries(spark, sf_dir, "float")
+    one = search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE)[2]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        got = search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE)[2]
+    finally:
+        spark.conf.set(key, old)
+    assert set(got) == set(one) and len(got["query_id"]) == NQ * NPROBE
+    for col in ("query_id", "cluster_id"):
+        np.testing.assert_array_equal(got[col], one[col])
+    for col in ("y_c_dist_sq", "lower_bound", "delta"):
+        np.testing.assert_allclose(got[col], one[col], rtol=1e-5)
 
 
 def test_probe_cap_bounds_the_batch_collect(spark, sf_dir, models, monkeypatch):
-    """The probe-table cap turns into the collect's row limit, so a batch
-    one row over it is collected no further than that limit and keeps the
-    executor path."""
+    """The driver cap turns into the collect's row limit at the larger of a
+    query's two driver copies, its probe rows and its float64 query row:
+    a batch one row over it is fetched once, at most cap + 1 rows, and
+    keeps the executor path."""
     model = models[(1, False)]
     queries = _queries(spark, sf_dir, "float")
     fetched = []
 
-    def spy(queries, id_col, vec_col, dim, max_rows=None):
-        fetched.append(max_rows)
-        return vecstore.collect_queries(queries, id_col, vec_col, dim, max_rows)
+    def spy(queries, id_col, vec_col, row_bytes, max_bytes):
+        got = vecstore.collect_queries(queries, id_col, vec_col, row_bytes, max_bytes)
+        fetched.append((max_bytes // row_bytes, got is not None))
+        return got
 
     monkeypatch.setattr(search_mod, "collect_queries", spy)
-    row_bytes = search_mod._probe_row_bytes(model)
-    monkeypatch.setattr(
-        search_mod, "_ARROW_MAX_PROBE_BYTES", (NQ - 1) * NPROBE * row_bytes
-    )
-    assert search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE) is None
-    assert fetched == [NQ - 1]
-    monkeypatch.setattr(
-        search_mod, "_ARROW_MAX_PROBE_BYTES", NQ * NPROBE * row_bytes
-    )
-    got = search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE)
-    assert got is not None and fetched == [NQ - 1, NQ]
+    # the query row binds at the real probe rows (3 × 64 B < 8 × 64 B);
+    # priced at a query row each, the probe rows bind
+    assert NPROBE * search_mod._probe_row_bytes(model) < 8 * model.dim
+    real = search_mod._probe_row_bytes
+    for probe_row, row_bytes in (
+        (real, 8 * model.dim),
+        (lambda m: 8 * m.dim, NPROBE * 8 * model.dim),
+    ):
+        fetched.clear()
+        monkeypatch.setattr(search_mod, "_probe_row_bytes", probe_row)
+        monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", (NQ - 1) * row_bytes)
+        batch = search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE)
+        assert batch is None and fetched == [(NQ - 1, False)]
+        met = SearchMetrics()
+        search(model, queries, topk=K, impl="arrow", metrics=met)
+        assert fetched == [(NQ - 1, False)] * 2
+        assert met.kernel == "jvm"
+        monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", NQ * row_bytes)
+        assert search_mod._driver_batch(model, queries, "query_id", "qvec", NPROBE)
+        assert fetched[-1] == (NQ, True)
 
 
 def test_over_cap_store_batch_collects_once(spark, sf_dir, models, monkeypatch):
@@ -559,7 +712,7 @@ def test_resident_search_runs_one_job(spark, sf_dir, loaded):
     assert met.precise_count == jvm.precise_count
     r = K * search_mod.auto_overfetch(model, NPROBE, K)
     probes, block, counts, _ = search_mod._prepare_batch(
-        model, queries, "query_id", "qvec", NPROBE, True
+        model, queries, "query_id", "qvec", NPROBE
     )
     ids = search_mod._shortlist(
         model, "jvm", r, probes=probes, block=block, clusters=counts

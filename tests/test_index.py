@@ -181,16 +181,33 @@ def test_save_load_roundtrip(spark, model_and_data, tmp_path):
     pd.testing.assert_frame_equal(before, after, check_exact=True)
 
 
-def test_shuffled_probe_join_equals_broadcast(spark, model_and_data):
-    """broadcast_probes=False (the huge-query-batch plan: both sides shuffle
-    by cluster_id) must return identical results to the broadcast plan."""
+def _probe_join(df) -> str:
+    """The stage-5 cluster_id join of `df`'s plan: "broadcast" or
+    "shuffle" (sort-merge, both sides exchanged)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if re.search(r"BroadcastHashJoin \[cluster_id#", plan):
+        return "broadcast"
+    assert re.search(r"SortMergeJoin \[cluster_id#", plan), plan
+    return "shuffle"
+
+
+def test_shuffled_probe_join_equals_broadcast(spark, model_and_data, monkeypatch):
+    """A batch past the driver cap (patched to 0; a huge query batch such
+    as a full-table self-join) has no probe table on the driver: it runs
+    the jvm join with both sides shuffled by cluster_id, never a probe
+    broadcast, and returns the broadcast plan's frame."""
+    import importlib
+
+    search_mod = importlib.import_module("rabitq_spark.index.search")
     model, base, queries = model_and_data
-    a = search(model, queries, topk=K).toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
-    )
-    b = search(model, queries, topk=K, broadcast_probes=False).toPandas().sort_values(
-        ["query_id", "rank"], ignore_index=True
-    )
+    assert _probe_join(search(model, queries, topk=K, impl="jvm")) == "broadcast"
+    a, _ = _search_sorted(model, queries, topk=K)
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 0)
+    b, met = _search_sorted(model, queries, topk=K)
+    assert met.kernel == "jvm"
+    assert _probe_join(search(model, queries, topk=K)) == "shuffle"
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
@@ -254,33 +271,35 @@ def test_index_schema_and_codes(spark, model_and_data):
 
 
 def test_fused_gate_falls_back_to_jvm(spark, model_and_data, monkeypatch):
-    """Past the probe-table byte cap an explicit impl="arrow" must NOT
-    collect the probe table to the driver: it falls back to the jvm join
-    path, reports why, and returns identical results."""
+    """Past the driver cap an explicit impl="arrow" has no probe table on
+    the driver and must NOT collect one: it runs the jvm join with both
+    sides shuffled, reports why, and returns the driver path's frame."""
     import importlib
 
     search_mod = importlib.import_module("rabitq_spark.index.search")
     model, base, queries = model_and_data
+    want, _ = _search_sorted(model, queries, topk=K, impl="arrow")
 
     def boom(*args, **kwargs):
-        raise AssertionError("Arrow shortlist must not run past the probe cap")
+        raise AssertionError("Arrow shortlist must not run past the driver cap")
 
     monkeypatch.setattr(search_mod, "_fused_shortlist", boom)
     monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 1)
     gated, met = _search_sorted(model, queries, topk=K, impl="arrow")
-    assert met.kernel == "jvm" and "cap" in met.kernel_reason
-    jvm, _ = _search_sorted(model, queries, topk=K)
-    pd.testing.assert_frame_equal(gated, jvm, check_exact=True)
+    assert met.kernel == "jvm"
+    assert met.kernel_reason == "probe table not on the driver"
+    assert _probe_join(search(model, queries, topk=K, impl="arrow")) == "shuffle"
+    pd.testing.assert_frame_equal(gated, want, check_exact=True)
 
 
 def test_choose_kernel_floors(monkeypatch):
     """The Spark kernel rule of the executor tail: the request is
-    validated; "jvm" is honoured; "auto" keeps the jvm join past half
-    coverage; an unknown geometry and a probe table over the byte cap
-    demote any request; "arrow" is then honoured, and "auto" asks the
-    floors — 1-bit codes need both the pair-volume floor and 12 probing
-    queries per cluster, multi-bit codes only their lower pair floor. Pure
-    geometry — no Spark."""
+    validated; "jvm" is honoured; a probe table not on the driver (no
+    geometry) runs the jvm join for any request; "auto" keeps the jvm join
+    past half coverage; "arrow" is then honoured, whatever the probe
+    table's bytes, and "auto" asks the floors — 1-bit codes need both the
+    pair-volume floor and 12 probing queries per cluster, multi-bit codes
+    only their lower pair floor. Pure geometry — no Spark."""
     import importlib
     from types import SimpleNamespace
 
@@ -323,15 +342,18 @@ def test_choose_kernel_floors(monkeypatch):
         ("auto", big, 501, "jvm"),
         ("auto", None, 501, "jvm"),
         ("arrow", big, 501, "arrow"),
-        # unknown geometry demotes any request
+        # a probe table not on the driver runs the jvm join for any request
         ("arrow", None, 501, "jvm"),
+        ("arrow", None, 8, "jvm"),
         ("auto", None, 8, "jvm"),
     ]:
         got = choose_kernel(model(1), impl, geometry, nprobe)
         assert got[0] == want, (impl, nprobe, got)
     assert choose_kernel(model(1), "jvm", None, 8)[1] == "requested"
     assert "half" in choose_kernel(model(1), "auto", big, 501)[1]
-    assert "unknown" in choose_kernel(model(1), "arrow", None, 501)[1]
+    for impl in ("auto", "arrow"):
+        reason = choose_kernel(model(1), impl, None, 501)[1]
+        assert reason == "probe table not on the driver"
 
     # a wave's geometry: 3000 queries probing 4 clusters each over 1000
     # clusters — 12 queries per cluster, 12M pairs
@@ -348,13 +370,10 @@ def test_choose_kernel_floors(monkeypatch):
     )
     assert kernel == "jvm" and "half" in reason
 
-    # over the probe-table byte cap: every non-jvm request is demoted
-    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 12_000 * 64 - 1)
-    for impl in ("auto", "arrow"):
-        kernel, reason = choose_kernel(model(1), impl, big, 8)
-        assert kernel == "jvm" and "cap" in reason
-    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 12_000 * 64)
+    # no byte rule: a driver probe table is already within the driver cap
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 1)
     assert choose_kernel(model(1), "arrow", big, 8)[0] == "arrow"
+    assert choose_kernel(model(1), "auto", big, 8)[0] == "arrow"
 
     with pytest.raises(ValueError):
         choose_kernel(model(1), "gpu", big, 8)

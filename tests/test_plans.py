@@ -83,24 +83,41 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir):
 
 
 def test_ann_search_plan_shape(spark, sf_dir, monkeypatch):
-    """The executor tail's plan: a batch past the driver caps (patched to
-    0 here) broadcasts its probes and cuts both top-ks with
-    WindowGroupLimit. A driver batch finishes on the driver instead
-    (tests/test_driver_path.py)."""
+    """The executor tail's plan. A batch past the driver cap (patched to 0
+    here) has no probe table on the driver: its jvm join shuffles both
+    sides by cluster_id, with no probe-side broadcast, whatever kernel it
+    asks for. A driver probe table (the frame query side, forced by a 0
+    query-matrix cap) broadcasts into the same join. Both cut the top-R
+    with WindowGroupLimit. A driver-tail batch finishes on the driver
+    instead (tests/test_driver_path.py)."""
+    import importlib
+    import re
+
     from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.index import build_index, search, vecstore
 
-    monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", 0)
-
+    search_mod = importlib.import_module("rabitq_spark.index.search")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     queries = emb.filter("vec_id < 3").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     model = build_index(base, RaBitQConfig(n_clusters=8))
-    plan = _fmt(search(model, queries, topk=5, nprobe=2))
-    assert "BroadcastHashJoin" in plan   # probe side broadcast into J2
+
+    def _tree(df) -> str:  # join keys inline, as _fmt does not print them
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.setattr(vecstore, "QUERY_MATRIX_MAX_BYTES", 0)
+    plan = _tree(search(model, queries, topk=5, nprobe=2))
+    assert re.search(r"BroadcastHashJoin \[cluster_id#", plan)  # driver probes
     assert "WindowGroupLimit" in plan    # top-R shortlist is partial
+    monkeypatch.setattr(search_mod, "_ARROW_MAX_PROBE_BYTES", 0)
+    for impl in ("auto", "arrow"):
+        plan = _tree(search(model, queries, topk=5, nprobe=2, impl=impl))
+        assert re.search(r"SortMergeJoin \[cluster_id#", plan)
+        assert not re.search(r"BroadcastHashJoin \[cluster_id#", plan)
+        assert "MapInArrow" not in plan
+        assert "WindowGroupLimit" in plan
 
 
 def test_bucketed_model_rerank_join_no_base_exchange(spark, sf_dir):

@@ -136,7 +136,7 @@ def _shortlist_ids(model, queries) -> pd.Series:
     search_mod = importlib.import_module("rabitq_spark.index.search")
     nprobe = model.config.nprobe
     probes, block, counts, _ = search_mod._prepare_batch(
-        model, queries, "query_id", "qvec", nprobe, True
+        model, queries, "query_id", "qvec", nprobe
     )
     r = K * search_mod.auto_overfetch(model, nprobe, K)
     shortlist = search_mod._shortlist(
