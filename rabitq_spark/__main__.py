@@ -15,9 +15,10 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
+
+from rabitq_spark import _fs
 
 
 def _session(name: str):
@@ -36,15 +37,13 @@ def _load_base(spark, path: str):
 
     from rabitq_spark.sources.vecs import read_vecs
 
-    if path.rstrip("/").endswith(".parquet") or os.path.isdir(path):
-        df = spark.read.parquet(path)
-        cols = set(df.columns)
-        if {"id", "vec"} <= cols:
-            return df.select("id", "vec")
-        return df.select(
-            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
-        )
-    return read_vecs(spark, path, "fvecs")
+    if path.endswith(".fvecs"):
+        return read_vecs(spark, path, "fvecs")
+    df = spark.read.parquet(path)
+    cols = set(df.columns)
+    if {"id", "vec"} <= cols:
+        return df.select("id", "vec")
+    return df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
 
 
 def _cmd_run(args) -> int:
@@ -56,7 +55,7 @@ def _cmd_run(args) -> int:
     from rabitq_spark.sources.vecs import read_vecs
 
     spark, owns = _session("rabitq_cli")
-    if os.path.isfile(os.path.join(args.saved, "meta.json")):
+    if _fs.exists(f"{args.saved}/meta.json"):
         model = RaBitQModel.load(spark, args.saved)
     else:
         base = _load_base(spark, args.base)

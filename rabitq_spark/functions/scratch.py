@@ -29,6 +29,14 @@ import numpy as np
 
 SCRATCH_MAX_BYTES = 64 * 1024 * 1024
 
+#: Entries of the largest matrix a numpy kernel builds in one piece: 2^25,
+#: 256 MB of float64. The kernels that score a (rows × rows) product — the
+#: exact kNN GEMM and fold, the similarity-join shortlist, the PQ ADC
+#: accumulator, the cosine screen and the RaBitQ rough matrix — cut one
+#: side into blocks so each block stays within it. A kernel patched for a
+#: test reads it on the driver and passes it into its Python workers.
+BLOCK_ENTRIES = 1 << 25
+
 _POOL: dict[str, np.ndarray] = {}
 
 

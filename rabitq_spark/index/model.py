@@ -20,13 +20,12 @@ Persistence (S6/S7 analogue, src/rabitq.rs:84-156): a directory of
 
 from __future__ import annotations
 
-import json
-import os
 from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from rabitq_spark import _fs
 from rabitq_spark.config import RaBitQConfig
 
 
@@ -110,16 +109,14 @@ class ResidentIndex:
     @classmethod
     def read(cls, path: str, model: "RaBitQModel") -> "ResidentIndex | None":
         """The arrays of the model saved at `path` (posix or URI, through
-        vecstore._fs_path like the vec store), read with pyarrow: the
-        hive-partitioned index/ and base/. None when the Parquet footers'
-        row counts differ from model.n_rows — a stale or wrong count must
-        not admit a model past the byte bound it was checked against — or
-        a column does not have the model's width."""
+        _fs.resolve), read with pyarrow: the hive-partitioned index/ and
+        base/. None when the Parquet footers' row counts differ from
+        model.n_rows — a stale or wrong count must not admit a model past
+        the byte bound it was checked against — or a column does not have
+        the model's width."""
         import pyarrow.dataset as ds
 
-        from rabitq_spark.index.vecstore import _fs_path, _is_uri
-
-        fs, root = _fs_path(path) if _is_uri(path) else (None, path)
+        fs, root = _fs.resolve(path)
         index = ds.dataset(
             f"{root}/index", filesystem=fs, format="parquet", partitioning="hive"
         )
@@ -221,26 +218,14 @@ class RaBitQModel:
         attach_vec_store call the user has to know about. load()
         auto-attaches any sidecar it finds and search() dispatches on it.
         """
-        from rabitq_spark.index.vecstore import (
-            STORE_AUTO_MIN_ROWS,
-            _fs_path,
-            _is_uri,
-        )
+        from rabitq_spark.index.vecstore import STORE_AUTO_MIN_ROWS
 
         if store_min_rows is None:
             store_min_rows = STORE_AUTO_MIN_ROWS
-        # URI targets (s3://, s3a://, hdfs://, file://, any pyarrow.fs
-        # scheme): the index/base parquet and the vec-store sidecar already
-        # write through URI-capable layers (Spark, pyarrow.fs); the numpy/
-        # JSON sidecars go through pyarrow.fs streams below. The one
-        # requirement is a scheme BOTH Spark's Hadoop layer and pyarrow
-        # resolve (s3a:// is bridged to pyarrow's s3:// in _fs_path).
-        is_uri = _is_uri(path)
-        if is_uri:
-            fs, root = _fs_path(path)
-            fs.create_dir(root, recursive=True)
-        else:
-            os.makedirs(path, exist_ok=True)
+        # parquet goes through Spark's Hadoop layer, everything else
+        # through _fs: the one requirement on a URI is a scheme both
+        # resolve (s3a:// is bridged to pyarrow's s3:// in _fs.resolve)
+        _fs.makedirs(path)
         (
             self.index_df.repartition("cluster_id")
             .sortWithinPartitions("center_dist_sq")
@@ -276,22 +261,13 @@ class RaBitQModel:
                 self.base_df.sparkSession.read.parquet(f"{path}/base"),
                 f"{path}/vecstore", dim=self.dim, n_rows=self.n_rows,
             )
-        elif is_uri:
+        else:
             # overwrite-save of a store-less model must REMOVE a stale
             # sidecar left by a previous occupant of this path: load()
             # auto-attaches any vecstore dir it finds, and index/ + base/
             # were just overwritten — a surviving old store would serve the
             # previous model's vectors to the new model's shortlists
-            from rabitq_spark.index.vecstore import VecStore
-
-            if VecStore.exists(f"{path}/vecstore"):
-                sfs, sroot = _fs_path(f"{path}/vecstore")
-                sfs.delete_dir(sroot)
-        elif os.path.isdir(f"{path}/vecstore"):
-            # same stale-sidecar removal, posix form
-            import shutil
-
-            shutil.rmtree(f"{path}/vecstore")
+            _fs.remove_dir(f"{path}/vecstore")
         from rabitq_spark.index.rotation import BlockRotation
 
         if isinstance(self.rotation, BlockRotation):
@@ -308,29 +284,13 @@ class RaBitQModel:
             "n_rows": self.n_rows,
             "format_version": 1,
         }
-        if is_uri:
-            import io
-
-            buf = io.BytesIO()
-            np.savez(
-                buf,
-                rand_bias=self.rand_bias,
-                centroids_proj=self.centroids_proj,
-                **rot_arrays,
-            )
-            with fs.open_output_stream(f"{root}/arrays.npz") as f:
-                f.write(buf.getvalue())
-            with fs.open_output_stream(f"{root}/meta.json") as f:
-                f.write(json.dumps(meta).encode())
-        else:
-            np.savez(
-                f"{path}/arrays.npz",
-                rand_bias=self.rand_bias,
-                centroids_proj=self.centroids_proj,
-                **rot_arrays,
-            )
-            with open(f"{path}/meta.json", "w") as f:
-                json.dump(meta, f)
+        _fs.write_npz(
+            f"{path}/arrays.npz",
+            rand_bias=self.rand_bias,
+            centroids_proj=self.centroids_proj,
+            **rot_arrays,
+        )
+        _fs.write_json(f"{path}/meta.json", meta)
 
     def persist_bucketed(
         self, n_buckets: int = 32, name: str = "rabitq_model"
@@ -370,29 +330,10 @@ class RaBitQModel:
     def load(cls, spark: SparkSession, path: str) -> RaBitQModel:
         from rabitq_spark.index.rotation import BlockRotation
 
-        from rabitq_spark.index.vecstore import (
-            QUERY_MATRIX_MAX_BYTES,
-            VecStore,
-            _fs_path,
-            _is_uri,
-        )
+        from rabitq_spark.index.vecstore import QUERY_MATRIX_MAX_BYTES, VecStore
 
-        if _is_uri(path):
-            # URI model dir (object/cluster storage): numpy/JSON sidecars
-            # read through pyarrow.fs; parquet + vecstore are URI-capable
-            # already. np.load needs a seekable file — buffer the (small,
-            # rotation-matrix-sized) archive.
-            import io
-
-            fs, root = _fs_path(path)
-            with fs.open_input_file(f"{root}/meta.json") as f:
-                meta = json.load(f)
-            with fs.open_input_file(f"{root}/arrays.npz") as f:
-                arrays = np.load(io.BytesIO(f.read()))
-        else:
-            with open(f"{path}/meta.json") as f:
-                meta = json.load(f)
-            arrays = np.load(f"{path}/arrays.npz")
+        meta = _fs.read_json(f"{path}/meta.json")
+        arrays = _fs.read_npz(f"{path}/arrays.npz")
         if "rotation" in arrays:
             rotation = arrays["rotation"]
         else:
@@ -433,21 +374,6 @@ def forget_row_count(path: str) -> None:
     with n_rows null, atomically (a temp file, then a replace, as the vec
     store writes its meta): for writers that append rows to index/ and
     base/ in place, after which the saved count no longer holds."""
-    from rabitq_spark.index.vecstore import _fs_path, _fs_replace, _is_uri
-
-    if _is_uri(path):
-        fs, root = _fs_path(path)
-        with fs.open_input_file(f"{root}/meta.json") as f:
-            meta = json.load(f)
-    else:
-        with open(f"{path}/meta.json") as f:
-            meta = json.load(f)
+    meta = _fs.read_json(f"{path}/meta.json")
     meta["n_rows"] = None
-    if _is_uri(path):
-        with fs.open_output_stream(f"{root}/meta.json.tmp") as f:
-            f.write(json.dumps(meta).encode())
-        _fs_replace(fs, f"{root}/meta.json.tmp", f"{root}/meta.json")
-    else:
-        with open(f"{path}/meta.json.tmp", "w") as f:
-            json.dump(meta, f)
-        os.replace(f"{path}/meta.json.tmp", f"{path}/meta.json")
+    _fs.write_json(f"{path}/meta.json", meta)

@@ -55,7 +55,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
+from rabitq_spark import _fs
 from rabitq_spark._dist import ensure_package_on_executors
+from rabitq_spark.functions import scratch as _scratch
 from rabitq_spark.index.search import cluster_filter, local_cut
 from rabitq_spark.index import vecstore
 from rabitq_spark.index.vecstore import collect_queries, exact_topk, query_matrix
@@ -284,17 +286,16 @@ def ivfpq_save(
     """Persist an IVF-PQ index: codes Parquet partitioned by cluster_id
     (probe-filtered reads prune partitions — the same serving layout as
     RaBitQModel.save, index/model.py) + a numpy sidecar for the small
-    driver-held state (coarse centroids, codebook)."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
+    driver-held state (coarse centroids, codebook). `path` is a posix
+    directory or a URI, through _fs like RaBitQModel.save."""
+    _fs.makedirs(path)
     (
         coded.repartition("cluster_id")
         .write.mode("overwrite")
         .partitionBy("cluster_id")
         .parquet(f"{path}/codes")
     )
-    np.savez(f"{path}/arrays.npz", coarse=coarse, codebook=codebook)
+    _fs.write_npz(f"{path}/arrays.npz", coarse=coarse, codebook=codebook)
 
 
 def ivfpq_append(
@@ -311,7 +312,7 @@ def ivfpq_append(
     of append_to_index (index/build.py). Codebooks stay frozen by design:
     the exact rerank keeps results correct; re-train only when drift
     degrades the rough ordering (monitor via operators/embstats.py)."""
-    arrays = np.load(f"{path}/arrays.npz")
+    arrays = _fs.read_npz(f"{path}/arrays.npz")
     # the saved codes schema is the append contract: a narrower batch (e.g.
     # attr_cols omitted on an index saved WITH attributes) would write
     # narrower parquet files that a later predicate search silently
@@ -349,19 +350,13 @@ def ivfpq_load(spark, path: str) -> tuple[np.ndarray, np.ndarray, DataFrame]:
     """(coarse, codebook, coded) from `ivfpq_save` output. The coded
     DataFrame is lazy: a subsequent probe-pruned search reads only the
     probed cluster_id partitions."""
-    arrays = np.load(f"{path}/arrays.npz")
+    arrays = _fs.read_npz(f"{path}/arrays.npz")
     raw = spark.read.parquet(f"{path}/codes")
     head = ["cluster_id", "__bid", "__bvec", "__bcode"]
     coded = raw.select(*head, *[c for c in raw.columns if c not in head])
     return arrays["coarse"], arrays["codebook"], coded
 
 
-
-
-#: Entries of one query block's float64 rough accumulator in adc_shortlist
-#: (256 MB): the batch's queries are scored in blocks of this many
-#: entries over the Arrow batch's rows.
-_ADC_BLOCK_ENTRIES = 1 << 25
 
 
 def adc_luts(codebook: np.ndarray, x: np.ndarray) -> np.ndarray:
@@ -388,6 +383,7 @@ def adc_shortlist(
     codes: np.ndarray,
     b_ids: np.ndarray,
     r: int,
+    max_entries: int,
 ) -> Iterator[pd.DataFrame]:
     """The ADC scorer of both PQ scans: the rough distance
     Σ_j luts[q, j, codes[b, j]] of every (query, coded row) pair, cut to a
@@ -403,14 +399,16 @@ def adc_shortlist(
     over per-subspace gathers at ksub 16); above it, the 256× flop blow-up
     loses 6×, and m gathers from the (m, ksub, nq) transposed LUT read one
     contiguous row per code (2.9-3.9× over the column gather at m 16,
-    ksub 256). Queries are blocked so the accumulator stays ≤ 256 MB."""
+    ksub 256). Queries are blocked so the accumulator holds at most
+    `max_entries` entries (scratch.BLOCK_ENTRIES, read by the caller on
+    the driver)."""
     nq, m, ksub = luts.shape
     rows = codes.shape[0]
     onehot = None
     if ksub <= 32:
         onehot = np.zeros((rows, m * ksub), dtype=np.float64)
         onehot[np.arange(rows)[:, None], codes + ksub * np.arange(m)] = 1.0
-    qblock = max(1, _ADC_BLOCK_ENTRIES // max(rows, 1))
+    qblock = max(1, max_entries // max(rows, 1))
     for lo in range(0, nq, qblock):
         blk = luts[lo : lo + qblock]
         if onehot is not None:
@@ -537,6 +535,7 @@ def ivfpq_search(
         coded_base = coded_base.filter(cluster_filter(cell_queries))
     bc = spark.sparkContext.broadcast((q_ids, q_mat, cell_queries))
     r = max(shortlist, k)
+    max_entries = _scratch.BLOCK_ENTRIES
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat, cells = bc.value
@@ -546,7 +545,9 @@ def ivfpq_search(
                 if qidx is None:
                     continue
                 luts = adc_luts(codebook, mat[qidx] - coarse[int(c)][None, :])
-                yield from adc_shortlist(luts, ids[qidx], *_batch_codes(grp), r)
+                yield from adc_shortlist(
+                    luts, ids[qidx], *_batch_codes(grp), r, max_entries
+                )
 
     # cells contiguous per task: one small shuffle of the CODES (m ints +
     # id per row) so each cell's LUTs are built once per Arrow batch
@@ -595,12 +596,15 @@ def pq_search(
     q_ids, q_mat = _query_batch(queries, query_id, query_vec, m * dsub)
     bc = spark.sparkContext.broadcast((q_ids, adc_luts(codebook, q_mat)))
     r = max(shortlist, k)
+    max_entries = _scratch.BLOCK_ENTRIES
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, luts = bc.value
         for pdf in batches:
             if not pdf.empty:
-                yield from adc_shortlist(luts, ids, *_batch_codes(pdf), r)
+                yield from adc_shortlist(
+                    luts, ids, *_batch_codes(pdf), r, max_entries
+                )
 
     slim = coded_base.select("__bid", "__bcode")
     par = spark.sparkContext.defaultParallelism

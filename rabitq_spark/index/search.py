@@ -96,6 +96,7 @@ from pyspark.sql.types import (
 )
 
 from rabitq_spark._dist import ensure_package_on_executors
+from rabitq_spark.functions import scratch as _scratch
 from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.rotation import apply_rot
 from rabitq_spark.index.model import (
@@ -478,27 +479,21 @@ def cluster_rough(
     lb: "np.ndarray",
     delta: "np.ndarray",
     ssum: "np.ndarray",
-    codes: "np.ndarray",
+    bvals: "np.ndarray",
     factors,
     bits: int,
     dim_pad: int,
-    dtype,
 ) -> "np.ndarray":
     """The D5 estimator of one cluster in numpy: the (probe rows, index
     rows) float64 rough matrix, bit-identical to rough_estimator_expr. The
-    probe side is its unpacked query values `qvals` (unpack_plane_values,
-    in `dtype` = value_gemm_dtype) and its float32 y_c_dist_sq, lower
-    bound, delta and scalar sum; the index side its `codes` ((m, bits ×
-    n_words) plane-major int64 words) and `factors`, a mapping from
-    factor column to its m values. Called per cluster by score_clusters."""
-    m = codes.shape[0]
-    # the cross/asym term is ONE value GEMM of the unpacked base values
-    cross = value_gemm_asym(
-        qvals,
-        unpack_plane_values(
-            codes.reshape(m, bits, codes.shape[1] // bits), bits, dtype
-        ),
-    )
+    probe side is its unpacked query values `qvals` and its float32
+    y_c_dist_sq, lower bound, delta and scalar sum; the index side its
+    unpacked base values `bvals` (m, dim_pad) of `bits`-bit codes — both
+    unpack_plane_values in value_gemm_dtype — and `factors`, a mapping
+    from factor column to its m values. Called per cluster and probe-row
+    block by score_clusters."""
+    # the cross/asym term is ONE value GEMM of the unpacked values
+    cross = value_gemm_asym(qvals, bvals)
     cds = np.asarray(factors["center_dist_sq"], dtype=np.float32)
     if bits > 1:
         b_lb = np.asarray(factors["b_lb"], dtype=np.float32)
@@ -561,7 +556,9 @@ def probes_by_cluster(block: dict, theta_log_dim: int, n_words: int) -> dict:
     }
 
 
-def score_clusters(csr: CSRIndex, by_cluster: dict, r: int) -> tuple:
+def score_clusters(
+    csr: CSRIndex, by_cluster: dict, r: int, max_entries: int
+) -> tuple:
     """The one numpy stage 5, with the local cut of stage 6: each probed
     cluster's rows of `csr` scored by cluster_rough against its probe rows
     in `by_cluster` (probes_by_cluster), then cut by local_cut to its
@@ -569,7 +566,13 @@ def score_clusters(csr: CSRIndex, by_cluster: dict, r: int) -> tuple:
     per plane and query planes from the probe planes, code planes from
     the code width. Returns ((query_id, orig_id, rough) arrays, pairs
     scored). Serves the resident arrays, a driver index collect and each
-    Arrow batch of _fused_shortlist."""
+    Arrow batch of _fused_shortlist.
+
+    A cluster's probe rows are scored in blocks, so one rough matrix
+    holds at most `max_entries` entries (scratch.BLOCK_ENTRIES, read by
+    the caller on the driver); its base values are unpacked once. The cut
+    is row-wise and the value GEMM integer-exact, so the blocks are
+    bit-identical to one pass."""
     # seeded with empty arrays: a batch that probes only empty clusters
     out_q, out_id = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
     out_rough, scored = [np.empty(0)], 0
@@ -582,15 +585,22 @@ def score_clusters(csr: CSRIndex, by_cluster: dict, r: int) -> tuple:
         theta_log_dim, n_words = planes.shape[1:]
         bits = codes.shape[1] // n_words
         dtype = value_gemm_dtype(64 * n_words, theta_log_dim, bits)
-        rough = cluster_rough(
-            unpack_plane_values(planes, theta_log_dim, dtype),
-            ycd, lb, delta, ssum, codes, factors, bits, 64 * n_words, dtype,
+        bvals = unpack_plane_values(
+            codes.reshape(len(ids), bits, n_words), bits, dtype
         )
-        scored += rough.size
-        qi, ci = local_cut(rough, r)
-        out_q.append(qids[qi])
-        out_id.append(ids[ci])
-        out_rough.append(rough[qi, ci])
+        step = max(1, max_entries // len(ids))
+        for lo in range(0, len(qids), step):
+            b = slice(lo, lo + step)
+            rough = cluster_rough(
+                unpack_plane_values(planes[b], theta_log_dim, dtype),
+                ycd[b], lb[b], delta[b], ssum[b], bvals, factors, bits,
+                64 * n_words,
+            )
+            scored += rough.size
+            qi, ci = local_cut(rough, r)
+            out_q.append(qids[b][qi])
+            out_id.append(ids[ci])
+            out_rough.append(rough[qi, ci])
     return tuple(map(np.concatenate, (out_q, out_id, out_rough))), scored
 
 
@@ -620,6 +630,7 @@ def _fused_shortlist(
     bc = spark.sparkContext.broadcast(
         probes_by_cluster(block, model.config.theta_log_dim, model.n_words)
     )
+    max_entries = _scratch.BLOCK_ENTRIES
 
     def topr(q, i, ro):
         keep = top_n(q, ro, i, r)
@@ -638,7 +649,7 @@ def _fused_shortlist(
             csr = CSRIndex.of(batch, n_clusters, width, factors)
             if csr is None:
                 raise ValueError(f"an index code list is not {width} words")
-            (q, i, ro), _ = score_clusters(csr, by_cluster, r)
+            (q, i, ro), _ = score_clusters(csr, by_cluster, r, max_entries)
             if not len(q):
                 continue
             # the per-batch trim bounds the buffer; the partition-level
@@ -1096,7 +1107,7 @@ def _tail(
     if kernel == "driver":
         theta_log_dim = model.config.theta_log_dim
         by_cluster = probes_by_cluster(stage5["block"], theta_log_dim, model.n_words)
-        cand, scored = score_clusters(csr, by_cluster, r)
+        cand, scored = score_clusters(csr, by_cluster, r, _scratch.BLOCK_ENTRIES)
         table = _driver_tail(model, cand, qv, r, k, metrics, scored)
         if local:
             return table.to_pandas()

@@ -21,6 +21,10 @@ served by np.memmap gathers (page-cached); a scheme-qualified URI
 byte-range reads (`read_at`) — one bounded read per candidate run, the
 direct analogue of the reference disk variant's S3 range-GETs. Only the
 (small) sorted id arrays are cached per shard; vector bytes never are.
+The write side has one branch for both: build_vec_store streams every
+shard and meta.json through pyarrow.fs (rabitq_spark._fs, where a posix
+path is a LocalFileSystem path), and open/exists read through the same
+layer.
 
 Layout under `dir/`:
     meta.json             dim, row count, shard table (min_id/max_id/count)
@@ -46,7 +50,6 @@ query batch on the driver or in a DataFrame.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -54,6 +57,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rabitq_spark import _fs
 from rabitq_spark.functions.vector import l2_squared
 
 # Rows at or past this count get a store built automatically on
@@ -101,43 +105,6 @@ def _shard_mmaps(store_dir: str, shard: dict, dim: int):
         hit = (ids, vec)
         _MM_CACHE[key] = hit
     return hit
-
-
-def _is_uri(path: str) -> bool:
-    """True for scheme-qualified paths (file://, s3://, hdfs://, ...) —
-    these read through pyarrow.fs bounded range reads instead of memmaps."""
-    return "://" in path
-
-
-def _fs_path(uri: str):
-    from pyarrow import fs as pafs
-
-    # Hadoop spells the S3 connector "s3a://" while pyarrow.fs spells it
-    # "s3://" — a cluster that writes parquet through s3a:// should be able
-    # to hand the same path string to the store/model sidecar readers
-    if uri.startswith("s3a://"):
-        uri = "s3://" + uri[len("s3a://"):]
-    return pafs.FileSystem.from_uri(uri)
-
-
-def _fs_replace(fs, src: str, dst: str) -> None:
-    """move-with-overwrite through pyarrow.fs. On posix-backed filesystems
-    this is an atomic rename(2); on object stores it is copy+delete — NOT
-    atomic, a concurrent reader can observe dst half-written or briefly
-    absent on stores without native rename. That weaker guarantee is safe
-    here because every attempt of a shard task writes identical rows
-    (deterministic sort order), so whichever attempt's move lands last
-    leaves a complete, correct file — the same argument the posix branch
-    makes for duplicate speculative attempts."""
-    try:
-        fs.move(src, dst)
-    except OSError:
-        # filesystems that refuse to clobber: drop dst and retry once
-        try:
-            fs.delete_file(dst)
-        except FileNotFoundError:
-            pass
-        fs.move(src, dst)
 
 
 # URI-store shard-id cache: the (small) sorted id array per shard, keyed by
@@ -236,13 +203,7 @@ class VecStore:
 
     @classmethod
     def open(cls, store_dir: str) -> "VecStore":
-        if _is_uri(store_dir):
-            fs, p = _fs_path(store_dir)
-            with fs.open_input_file(f"{p}/meta.json") as f:
-                meta = json.load(f)
-        else:
-            with open(os.path.join(store_dir, "meta.json")) as f:
-                meta = json.load(f)
+        meta = _fs.read_json(f"{store_dir}/meta.json")
         return cls(
             dir=store_dir,
             dim=meta["dim"],
@@ -252,12 +213,7 @@ class VecStore:
 
     @staticmethod
     def exists(store_dir: str) -> bool:
-        if _is_uri(store_dir):
-            from pyarrow import fs as pafs
-
-            fs, p = _fs_path(store_dir)
-            return fs.get_file_info(f"{p}/meta.json").type == pafs.FileType.File
-        return os.path.isfile(os.path.join(store_dir, "meta.json"))
+        return _fs.exists(f"{store_dir}/meta.json")
 
     def gather(self, ids: np.ndarray) -> np.ndarray:
         """(n, dim) float32 rows for int64 `ids`, in the order given.
@@ -275,10 +231,10 @@ class VecStore:
             bad = ids[which >= len(self.shards)][0]
             top = int(max_ids[-1]) if len(max_ids) else "<empty store>"
             raise KeyError(f"id {bad} beyond store max {top}")
-        uri = _is_uri(self.dir)
+        uri = _fs.is_uri(self.dir)
         fs = path_in_fs = None
         if uri:
-            fs, path_in_fs = _fs_path(self.dir)
+            fs, path_in_fs = _fs.resolve(self.dir)
         for si in np.unique(which):
             sel = np.flatnonzero(which == si)
             if uri:
@@ -321,22 +277,20 @@ def build_vec_store(
     O(n) sequential writes, no driver materialization. `vec` may be padded;
     only the first `dim` floats per row are stored.
 
-    The directory must be visible to every executor: a posix path
-    (local disk in local-mode, a shared mount on a cluster) writes via
-    plain file handles; a scheme-qualified URI (s3://, hdfs://, file://,
-    any pyarrow.fs scheme) writes each shard through a pyarrow.fs output
-    stream — the round-10 read branch's twin, so a cluster can build
-    DIRECTLY onto the object store the searchers will range-GET from.
-    Both branches use attempt-unique temp names + move-with-overwrite;
-    note the weaker atomicity of object-store "rename" (_fs_replace)."""
+    The directory must be visible to every executor: a posix path (local
+    disk in local-mode, a shared mount on a cluster) or a scheme-qualified
+    URI (s3://, hdfs://, file://, any pyarrow.fs scheme). Each shard is
+    written through a pyarrow.fs output stream (_fs), so a cluster can
+    build DIRECTLY onto the object store the searchers will range-GET
+    from, under attempt-unique temp names + move-with-overwrite; note the
+    weaker atomicity of object-store "rename" (_fs.replace)."""
     from pyspark import TaskContext
 
-    is_uri = _is_uri(store_dir)
-    if is_uri:
-        fs, root = _fs_path(store_dir)
-        fs.create_dir(root, recursive=True)
-    else:
-        os.makedirs(store_dir, exist_ok=True)
+    from rabitq_spark._dist import ensure_package_on_executors
+
+    # the shard writer below imports _fs on the executors
+    ensure_package_on_executors(base.sparkSession)
+    _fs.makedirs(store_dir)
     row_bytes = dim * 4
     if n_shards is None:
         if n_rows:
@@ -359,23 +313,15 @@ def build_vec_store(
         # bytes with the winning attempt's files (both attempts write the
         # same rows, so whichever rename lands last leaves a complete file)
         suffix = f".tmp{ctx.taskAttemptId()}"
-        if is_uri:
-            tfs, troot = _fs_path(store_dir)
-            vec_path = f"{troot}/{name}.vec"
-            ids_path = f"{troot}/{name}.ids"
-            _open = lambda p: tfs.open_output_stream(p)  # noqa: E731
-            _replace = lambda s, d: _fs_replace(tfs, s, d)  # noqa: E731
-            _unlink = tfs.delete_file
-        else:
-            vec_path = os.path.join(store_dir, name + ".vec")
-            ids_path = os.path.join(store_dir, name + ".ids")
-            _open = lambda p: open(p, "wb")  # noqa: E731
-            _replace = os.replace
-            _unlink = os.unlink
+        fs, root = _fs.resolve(store_dir)
+        vec_path = f"{root}/{name}.vec"
+        ids_path = f"{root}/{name}.ids"
         count = 0
         min_id = None
         max_id = None
-        with _open(vec_path + suffix) as fv, _open(ids_path + suffix) as fi:
+        with fs.open_output_stream(
+            vec_path + suffix, compression=None
+        ) as fv, fs.open_output_stream(ids_path + suffix, compression=None) as fi:
             for pdf in it:
                 ids = pdf["__id"].to_numpy(dtype="<i8")
                 if len(ids) == 0:
@@ -389,11 +335,11 @@ def build_vec_store(
                 min_id = int(ids[0]) if min_id is None else min_id
                 max_id = int(ids[-1])
         if count == 0:
-            _unlink(vec_path + suffix)
-            _unlink(ids_path + suffix)
+            fs.delete_file(vec_path + suffix)
+            fs.delete_file(ids_path + suffix)
             return
-        _replace(vec_path + suffix, vec_path)
-        _replace(ids_path + suffix, ids_path)
+        _fs.replace(fs, vec_path + suffix, vec_path)
+        _fs.replace(fs, ids_path + suffix, ids_path)
         yield pd.DataFrame(
             {
                 "name": [name],
@@ -424,19 +370,10 @@ def build_vec_store(
         "shards": shards,
         "format_version": 1,
     }
-    # temp + atomic replace: meta.json is the store's existence marker, so
-    # a crash mid-write must never leave a present-but-truncated file that
-    # passes exists() and then fails open() (round-9 advisor — the bench's
-    # fingerprint block took the open path, not the rebuild path, on one)
-    if is_uri:
-        with fs.open_output_stream(f"{root}/meta.json.tmp") as f:
-            f.write(json.dumps(meta).encode())
-        _fs_replace(fs, f"{root}/meta.json.tmp", f"{root}/meta.json")
-    else:
-        meta_path = os.path.join(store_dir, "meta.json")
-        with open(meta_path + ".tmp", "w") as f:
-            json.dump(meta, f)
-        os.replace(meta_path + ".tmp", meta_path)
+    # meta.json is the store's existence marker: written atomically, so a
+    # crash mid-write never leaves a file that passes exists() and then
+    # fails open()
+    _fs.write_json(f"{store_dir}/meta.json", meta)
     return VecStore(dir=store_dir, dim=dim, n_rows=n_rows, shards=shards)
 
 

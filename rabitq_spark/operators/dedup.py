@@ -38,6 +38,7 @@ from rabitq_spark.functions.text import (
     jaccard,
     simhash60,
 )
+from rabitq_spark.functions import scratch as _scratch
 from rabitq_spark.functions.vector import cosine_similarity
 
 
@@ -135,49 +136,23 @@ def _existing_delta_tables(
     delta_dir populated by a previous session reads those prior delta docs
     too — otherwise cross-pair scans would silently miss them while new
     appends land in the same directory (an incomplete pair set, no error).
-    Schemeless local paths use os.listdir; any URI scheme (file://,
-    hdfs://, s3a://, ...) goes through the Hadoop FileSystem API, so the
-    seeding guarantee holds on cluster storage too — and the cluster code
-    path is exercised by every file:// test, not just in production.
+    Every location, posix or URI (file://, hdfs://, s3a://, ...), goes
+    through the Hadoop FileSystem that wrote the tables (_fs.has_data).
     """
-    import os
-    import re
+    from rabitq_spark import _fs
 
     if not delta_dir:
         return set()
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", delta_dir)
-    scheme = m.group(1).lower() if m else ""
-    found: set[str] = set()
-    if not scheme:
-        for table in tables:
-            p = os.path.join(delta_dir, table)
-            try:
-                entries = os.listdir(p)
-            except (FileNotFoundError, NotADirectoryError):
-                continue
-            if any(not e.startswith(("_", ".")) for e in entries):
-                found.add(table)
-        return found
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for table in tables:
-        path = jvm.org.apache.hadoop.fs.Path(f"{delta_dir}/{table}")
-        fs = path.getFileSystem(hconf)
-        if not fs.exists(path):
-            continue
-        for status in fs.listStatus(path):
-            if not status.getPath().getName().startswith(("_", ".")):
-                found.add(table)
-                break
-    return found
+    return {t for t in tables if _fs.has_data(spark, f"{delta_dir}/{t}")}
 
 
 def _widen(df: DataFrame) -> DataFrame:
     """Spread a narrow input (e.g. a 2-file parquet table) to cluster
-    width so the hashing that follows (the MinHash kernel, the char-n-gram
-    projections) parallelizes — it is CPU-bound per row and otherwise runs
-    on as many cores as the table has files. No-op on already-wide inputs, so
-    the at-scale path never pays an extra shuffle."""
+    width so the work that follows (the MinHash kernel, the char-n-gram
+    projections, the broadcast cosine scan) parallelizes — it is CPU-bound
+    per row and otherwise runs on as many cores as the table has files.
+    No-op on already-wide inputs, so the at-scale path never pays an extra
+    shuffle."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
@@ -729,13 +704,6 @@ def simhash_pairs(
     )
 
 
-# Largest GEMM screen block, in matrix entries: 32M float64 ≈ 256 MB per
-# block, whatever the Arrow batch and the broadcast side's sizes. Callers
-# read it on the driver and pass it into their Python workers, so the value
-# in effect on the driver is the one the workers use.
-_COSINE_BLOCK_ENTRIES = 33_554_432
-
-
 def _seq_norms(mat):
     """sqrt of the left-to-right running sum of squares — the exact order
     l2_norm's fold (and the oracle's list_reduce) uses."""
@@ -790,6 +758,42 @@ def _cosine_pairs(ids_a, mat_a, ids_b, mat_b, threshold, max_entries, keep=None)
         yield ids_a[li][final], ids_b[ri][final], exact[final]
 
 
+def _broadcast_cosine_pairs(rows: DataFrame, bc, threshold: float, keep=None):
+    """(id_a < id_b, cosine) pairs of `rows` (id, vec) × the broadcast
+    (ids, float64 matrix) `bc` whose cosine is >= threshold: ONE scan of
+    `rows`, spread to cluster width, each Arrow batch screened and exactly
+    emitted against the broadcast side by _cosine_pairs (`keep` as there),
+    so no verify join or shuffle runs at all."""
+    import numpy as np
+    import pandas as pd
+
+    max_entries = _scratch.BLOCK_ENTRIES
+
+    def pairs(batches):
+        ids_b, mat_b = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = np.asarray(pdf["id"].values, dtype=np.int64)
+            mat = np.ascontiguousarray(
+                np.vstack(pdf["vec"].values).astype(np.float64)
+            )
+            for ia, ib, cos in _cosine_pairs(
+                ids, mat, ids_b, mat_b, threshold, max_entries, keep
+            ):
+                yield pd.DataFrame(
+                    {
+                        "id_a": np.minimum(ia, ib),
+                        "id_b": np.maximum(ia, ib),
+                        "cosine": cos,
+                    }
+                )
+
+    return _widen(rows).mapInPandas(
+        pairs, "id_a bigint, id_b bigint, cosine double"
+    )
+
+
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -818,63 +822,39 @@ def embedding_neardup_pairs(
     The dispatch probe never scans the full table: one row for the vector
     dimension, then `limit(max_rows + 1).count()` which stops as soon as the
     threshold is exceeded (round-2 verdict: the previous unconditional
-    `.count()` here was a full-scan job inside every measured call).
-    `broadcast_max_rows` overrides the byte-derived row cap when set.
+    `.count()` here was a full-scan job inside every measured call); a
+    table past the cap, whose probe says only "more than the cap", is
+    counted once on the blocked path. `broadcast_max_rows` overrides the
+    byte-derived row cap when set.
     """
     if broadcast_max_rows is None:
         head = embeddings.select(F.size(F.col(vec_col)).alias("d")).first()
         dim = int(head["d"]) if head is not None and head["d"] is not None else 1
         broadcast_max_rows = max(1, broadcast_max_bytes // (max(dim, 1) * 8))
-    if row_count is None:
-        row_count = embeddings.limit(broadcast_max_rows + 1).count()
-    if row_count > broadcast_max_rows:
+    probe = row_count
+    if probe is None:
+        probe = embeddings.limit(broadcast_max_rows + 1).count()
+    if probe > broadcast_max_rows:
         return _embedding_neardup_blocked(
             embeddings, id_col, vec_col, threshold, k_per_row, config,
             nprobe, overfetch, row_count=row_count,
         )
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from rabitq_spark._dist import ensure_package_on_executors
 
     spark = embeddings.sparkSession
     ensure_package_on_executors(spark)
-
-    # One distributed pass: each Arrow batch is GEMM-screened and exactly
-    # emitted against the broadcast table (_cosine_pairs), so no verify
-    # join or shuffle runs at all.
     pdf_all = embeddings.select(id_col, vec_col).toPandas()
     all_ids = np.asarray(pdf_all[id_col].values, dtype=np.int64)
     all_mat = np.ascontiguousarray(
         np.vstack(pdf_all[vec_col].values).astype(np.float64)
     )
     bc = spark.sparkContext.broadcast((all_ids, all_mat))
-    max_entries = _COSINE_BLOCK_ENTRIES
-
-    def find_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, mat_b = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = np.asarray(pdf[id_col].values, dtype=np.int64)
-            mat = np.ascontiguousarray(np.vstack(pdf[vec_col].values).astype(np.float64))
-            for ia, ib, cos in _cosine_pairs(
-                ids, mat, ids_b, mat_b, threshold, max_entries, keep=np.less
-            ):
-                yield pd.DataFrame({"id_a": ia, "id_b": ib, "cosine": cos})
-
-    # spread the GEMM to cluster width: a 2-file parquet table would
-    # otherwise run on 2 cores (same fix as knn_exact_fast — measured
-    # 46 -> 11 s at 20k rows; no-op on already-wide tables)
-    slim = embeddings.select(id_col, vec_col)
-    par = spark.sparkContext.defaultParallelism
-    if slim.rdd.getNumPartitions() < par:
-        slim = slim.repartition(par)
-    return slim.mapInPandas(
-        find_pairs, "id_a bigint, id_b bigint, cosine double"
+    rows = embeddings.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
+    return _broadcast_cosine_pairs(rows, bc, threshold, keep=np.less)
 
 
 def _embedding_neardup_blocked(
@@ -904,12 +884,16 @@ def _embedding_neardup_blocked(
     an equi-join on candidate ids. search() runs stages 1-4 on the driver
     while the table's probe table and query block fit its driver cap
     (about 350k rows at dim 64 and nprobe 12); past it, probes shuffle by
-    cluster_id and nothing here collects the table.
+    cluster_id and nothing here collects the table. A `row_count` of None
+    is counted here with one job: it sizes the clusters and the model's
+    n_rows.
     """
     from rabitq_spark.config import RaBitQConfig
     from rabitq_spark.functions.vector import dot, l2_norm
     from rabitq_spark.index import build_index, search
 
+    if row_count is None:
+        row_count = embeddings.count()
     unit_norm = l2_norm(F.col(vec_col))
     unit_vec = F.when(unit_norm == 0.0, F.col(vec_col)).otherwise(
         F.transform(F.col(vec_col), lambda x: x / unit_norm)
@@ -925,10 +909,9 @@ def _embedding_neardup_blocked(
         # multi-bit codes win (scripts/multibit_probe.py: 2.4× faster search
         # at recall 1.0 vs 0.97); better candidates also tighten the blocked
         # path's agreement with the exact GEMM plan.
-        n_clusters = (
-            max(16, int(row_count**0.5)) if row_count else RaBitQConfig.n_clusters
+        config = RaBitQConfig(
+            n_clusters=max(16, int(row_count**0.5)), bits_per_dim=4
         )
-        config = RaBitQConfig(n_clusters=n_clusters, bits_per_dim=4)
     model = build_index(unit, config, n_rows=row_count)
     # registered in the scope registry so release_caches() (or the next
     # invocation) drains it — round-2 verdict: this cache was never retired
@@ -1199,12 +1182,12 @@ class EmbeddingNearDupState(_LayeredState):
     `pairs` (id_a, id_b, cosine >= threshold), layered as base_dir ∪
     delta_dir exactly like NearDupState (_LayeredState).
 
-    `apply_delta` pays only the Δ terms: pairs(Δ, Δ) via the exact
-    GEMM-prefilter family (embedding_neardup_pairs — Δ is batch-sized), and
-    pairs(Δ, old) by broadcasting the Δ MATRIX (small side) over ONE scan
-    of the state vectors — per Arrow batch the same blocked screen/emit as
-    embedding_neardup_pairs (_cosine_pairs), so the result is bit-identical
-    to the naive all-pairs oracle. The corpus-sized side is never shuffled,
+    `apply_delta` pays only the Δ terms: it collects Δ once and broadcasts
+    its MATRIX (small side) against one scan of Δ itself — pairs(Δ, Δ) —
+    and ONE scan of the state vectors — pairs(Δ, old) — per Arrow batch the
+    same blocked screen/emit as embedding_neardup_pairs (_cosine_pairs), so
+    the result is bit-identical to the naive all-pairs oracle at any Δ
+    size. The corpus-sized side is never shuffled,
     never collected; per-batch work is O(batch × |Δ|) flops.
 
     Oracle contract (queries.py::q_embedding_neardup_state): bootstrap +
@@ -1244,71 +1227,42 @@ class EmbeddingNearDupState(_LayeredState):
         import numpy as np
 
         from rabitq_spark._dist import ensure_package_on_executors
+        from rabitq_spark.index.vecstore import collect_queries
 
         ensure_package_on_executors(self.spark)
-        self_pairs = embedding_neardup_pairs(
-            delta, self.id_col, self.vec_col, self.threshold
+        # Δ collected ONCE and broadcast as a matrix (batch-sized by
+        # contract — the caller's delta is a crawl batch, not a corpus).
+        # Guard the contract: an oversized delta (easy to hit from a
+        # foreachBatch maintenance stream with large micro-batches) must
+        # fail cleanly, not OOM the driver; the collect fetches at most
+        # max_delta_rows + 1 rows.
+        d_pdf = collect_queries(
+            delta, self.id_col, self.vec_col, 1, self.max_delta_rows
         )
-
-        # Δ matrix broadcast (batch-sized by contract — the caller's delta
-        # is a crawl batch, not a corpus). Guard the contract: an oversized
-        # delta (easy to hit from a foreachBatch maintenance stream with
-        # large micro-batches) must fail cleanly, not OOM the driver under
-        # toPandas + dense-float64 broadcast. limit(N+1) bounds the probe.
-        probe = delta.select(self.id_col).limit(self.max_delta_rows + 1).count()
-        if probe > self.max_delta_rows:
+        if d_pdf is None:
             raise ValueError(
                 f"EmbeddingNearDupState.apply_delta: delta exceeds "
                 f"max_delta_rows={self.max_delta_rows}; split the batch "
                 f"(e.g. foreachBatch with a smaller maxFilesPerTrigger) or "
                 f"raise max_delta_rows if the driver has headroom"
             )
-        d_pdf = delta.select(self.id_col, self.vec_col).toPandas()
         d_ids = np.asarray(d_pdf[self.id_col].values, dtype=np.int64)
         d_mat = np.ascontiguousarray(
             np.vstack(d_pdf[self.vec_col].values).astype(np.float64)
         )
         bc = self.spark.sparkContext.broadcast((d_ids, d_mat))
-        threshold = self.threshold
-        max_entries = _COSINE_BLOCK_ENTRIES
-
-        def cross(batches):
-            import pandas as pd
-
-            ids_d, mat_d = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ids_o = np.asarray(pdf["id"].values, dtype=np.int64)
-                mat_o = np.ascontiguousarray(
-                    np.vstack(pdf["vec"].values).astype(np.float64)
-                )
-                for io, id_, cos in _cosine_pairs(
-                    ids_o, mat_o, ids_d, mat_d, threshold, max_entries
-                ):
-                    yield pd.DataFrame(
-                        {
-                            "id_a": np.minimum(io, id_),
-                            "id_b": np.maximum(io, id_),
-                            "cosine": cos,
-                        }
-                    )
-
-        old = self._read("vectors")
-        par = self.spark.sparkContext.defaultParallelism
-        if old.rdd.getNumPartitions() < par:
-            old = old.repartition(par)
-        cross_pairs = old.mapInPandas(
-            cross, "id_a bigint, id_b bigint, cosine double"
+        d_rows = delta.select(
+            F.col(self.id_col).alias("id"), F.col(self.vec_col).alias("vec")
         )
-        new_pairs = self_pairs.unionByName(cross_pairs).localCheckpoint(
-            eager=True
+        # pairs(Δ, Δ) once each (id_a < id_b), then pairs(Δ, old); MUST be
+        # materialized before the appends below mutate the state it reads
+        new_pairs = (
+            _broadcast_cosine_pairs(d_rows, bc, self.threshold, np.less)
+            .unionByName(
+                _broadcast_cosine_pairs(self._read("vectors"), bc, self.threshold)
+            )
+            .localCheckpoint(eager=True)
         )
-        self._append(
-            delta.select(
-                F.col(self.id_col).alias("id"), F.col(self.vec_col).alias("vec")
-            ),
-            "vectors",
-        )
+        self._append(d_rows, "vectors")
         self._append(new_pairs, "pairs")
         return new_pairs

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rabitq_spark._dist import ensure_package_on_executors
+from rabitq_spark.functions import scratch as _scratch
 from rabitq_spark.functions.scratch import scratch
 from rabitq_spark.functions.vector import l2_squared
 from rabitq_spark.operators.topk import topk_per_group
@@ -133,6 +134,7 @@ def knn_exact_fast(
     bc = spark.sparkContext.broadcast((q_ids, q_mat, q_sq))
     if bc_registry is not None:
         bc_registry.append(bc)
+    max_entries = _scratch.BLOCK_ENTRIES
 
     def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_b, mat_b, sq_b = bc.value
@@ -147,7 +149,7 @@ def knn_exact_fast(
             # regardless of batch shape (a 20k-query × 10k-row batch would
             # otherwise allocate 1.6 GB per Arrow batch)
             nq = mat_b.shape[0]
-            qblock = max(1, 33_554_432 // max(len(b_ids), 1))
+            qblock = max(1, max_entries // max(len(b_ids), 1))
             if exact_fold:
                 # the fold temporaries diff/sq below are (qblock*kk, dim)
                 # float64 — unbounded by the GEMM cap when a small Arrow
@@ -156,7 +158,7 @@ def knn_exact_fast(
                 # 500k queries). Bound the block so the fold obeys the
                 # same ~256 MB ceiling as the distance matrix.
                 qblock = max(
-                    1, min(qblock, 33_554_432 // max(kk * mat_b.shape[1], 1))
+                    1, min(qblock, max_entries // max(kk * mat_b.shape[1], 1))
                 )
             for lo in range(0, nq, qblock):
                 hi = min(lo + qblock, nq)

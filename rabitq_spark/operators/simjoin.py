@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from rabitq_spark.config import RaBitQConfig
+from rabitq_spark.functions import scratch as _scratch
 from rabitq_spark.index.build import build_index
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.search import search
@@ -236,6 +237,7 @@ def grouped_similarity_join(
 
     ensure_package_on_executors(df.sparkSession)
     ncand = k + margin
+    max_entries = _scratch.BLOCK_ENTRIES
     slim = df.select(
         F.col(group_col).alias("__g"),
         F.col(id_col).alias("query_id"),
@@ -253,7 +255,7 @@ def grouped_similarity_join(
         sq = (mat * mat).sum(axis=1)
         kk = min(ncand, n - 1)
         out_q, out_n = [], []
-        block = max(1, 33_554_432 // max(n, 1))  # ≤ 256 MB of doubles per block
+        block = max(1, max_entries // max(n, 1))
         for lo in range(0, n, block):
             hi = min(lo + block, n)
             d = sq[lo:hi, None] + sq[None, :] - 2.0 * (mat[lo:hi] @ mat.T)

@@ -226,12 +226,12 @@ def load_index_with_tombstones(spark: SparkSession, model_path: str) -> RaBitQMo
     at seq s (bootstrapped rows: s = -1) is visible iff s >= max tombstone
     seq for its id. mergeSchema absorbs the bootstrapped files' missing
     __seq column."""
-    import os
-
     from pyspark.sql import functions as F
 
+    from rabitq_spark import _fs
+
     model = RaBitQModel.load(spark, model_path)
-    if not os.path.exists(f"{model_path}/tombstones"):
+    if not _fs.has_data(spark, f"{model_path}/tombstones"):
         return model
     tombs = (
         spark.read.parquet(f"{model_path}/tombstones")

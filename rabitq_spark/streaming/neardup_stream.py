@@ -34,8 +34,6 @@ rows + one hash-set row, independent of corpus size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -67,6 +65,7 @@ def neardup_maintenance_stream(
 ):
     """Run the admission stream to completion (availableNow). Read
     `{store_path}/decisions` afterwards for the verdict log."""
+    from rabitq_spark import _fs
     from rabitq_spark.operators.dedup import (
         _cross_candidates,
         _explode_keys,
@@ -76,9 +75,9 @@ def neardup_maintenance_stream(
     )
 
     spark = doc_stream.sparkSession
-    keys_dir = os.path.join(store_path, "keys")
-    hashes_dir = os.path.join(store_path, "hashes")
-    decisions_dir = os.path.join(store_path, "decisions")
+    keys_dir = f"{store_path}/keys"
+    hashes_dir = f"{store_path}/hashes"
+    decisions_dir = f"{store_path}/decisions"
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
         # every cache is consumed before the handler returns, so the
@@ -94,7 +93,7 @@ def neardup_maintenance_stream(
             matches = _jaccard_verify(
                 _self_candidates(keys), hashed, hashed, threshold, spread=False
             ).select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("match_id"))
-            if os.path.isdir(keys_dir):
+            if _fs.has_data(spark, keys_dir):
                 store_matches = _jaccard_verify(
                     _cross_candidates(keys, spark.read.parquet(keys_dir)),
                     hashed,

@@ -21,3 +21,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(params=["posix", "file_uri"])
+def location(request, tmp_path):
+    """`location(name)`: a fresh directory under tmp_path, spelled as a
+    posix path or as a file:// URI — the two forms every persistence
+    function takes (a file:// URI runs the branch an object store runs)."""
+
+    def at(name: str) -> str:
+        path = tmp_path / name
+        return str(path) if request.param == "posix" else path.as_uri()
+
+    return at

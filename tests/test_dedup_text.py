@@ -281,6 +281,27 @@ def test_embedding_neardup_blocked_between_caps(spark, sf_dir, monkeypatch):
     pd.testing.assert_frame_equal(between, executor, check_exact=True)
 
 
+def test_embedding_neardup_blocked_sizes_by_true_count(spark, sf_dir, monkeypatch):
+    """A table past the dispatch cap is sized by its row count, not by the
+    cap + 1 rows the dispatch probe stops at: the blocked path's index
+    records n_rows = 500 and √500 = 22 clusters."""
+    import rabitq_spark.index as index_pkg
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    real_build = index_pkg.build_index
+    built = []
+
+    def spy(df, config, **kw):
+        built.append((kw.get("n_rows"), config.n_clusters))
+        return real_build(df, config, **kw)
+
+    monkeypatch.setattr(index_pkg, "build_index", spy)
+    embedding_neardup_pairs(
+        emb, threshold=0.9, broadcast_max_rows=100, k_per_row=5
+    ).count()
+    assert built == [(500, 22)]
+
+
 def test_similarity_join_blocked_exhaustive_equals_single_block(spark, sf_dir):
     """Chunking the exhaustive left side into hash blocks must not change the
     result: per-query top-k is independent across queries."""

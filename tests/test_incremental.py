@@ -135,7 +135,7 @@ def test_neardup_incremental_equals_full_recompute(spark):
     assert any((a % 3 == 0) != (b % 3 == 0) for a, b in full)
 
 
-def test_stream_append_forgets_saved_row_count(spark, sf_dir, tmp_path):
+def test_stream_append_forgets_saved_row_count(spark, sf_dir, tmp_path, location):
     """A model saved with n_rows, then streamed into, reloads with n_rows
     None: the bootstrap count no longer holds, so nothing sizes a plan by
     it and load() reads no resident arrays."""
@@ -149,7 +149,7 @@ def test_stream_append_forgets_saved_row_count(spark, sf_dir, tmp_path):
     seed = emb.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
-    path = str(tmp_path / "model")
+    path = location("model")
     build_index(seed, RaBitQConfig(n_clusters=4, topk=5), n_rows=100).save(path)
     before = RaBitQModel.load(spark, path)
     assert before.n_rows == 100 and before.resident is not None

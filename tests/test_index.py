@@ -508,7 +508,10 @@ def test_score_clusters_batches_equal_one_pass(bits):
     """score_clusters over the CSR view of each Arrow batch of a shuffled
     index table, cut with top_n, equals one pass over the whole table's
     CSR — the Arrow plan's per-batch scoring against the driver scorer's
-    one pass — and counts every (probe row, cluster row) pair. No Spark."""
+    one pass — and counts every (probe row, cluster row) pair, also when a
+    block bound of a few entries scores each probe row on its own. No
+    Spark."""
+    from rabitq_spark.functions.scratch import BLOCK_ENTRIES
     from rabitq_spark.index.model import CSRIndex, factor_columns
     from rabitq_spark.index.search import (
         prepare_probe_block,
@@ -535,19 +538,24 @@ def test_score_clusters_batches_equal_one_pass(bits):
         keep = top_n(q, ro, i, r)
         return q[keep], i[keep], ro[keep]
 
-    whole, scored = score_clusters(csr(table), by_cluster, r)
-    parts, total = [], 0
-    for batch in table.to_batches(max_chunksize=37):
-        got, pairs = score_clusters(csr(batch), by_cluster, r)
-        parts.append(cut(*got))
-        total += pairs
-    batched = cut(*map(np.concatenate, zip(*parts)))
-    for a, b in zip(cut(*whole), batched):
-        np.testing.assert_array_equal(a, b)
+    whole, scored = score_clusters(csr(table), by_cluster, r, BLOCK_ENTRIES)
     sizes = np.bincount(table["cluster_id"].to_numpy(), minlength=n_clusters)
     probe_rows = np.bincount(block["cluster_id"], minlength=n_clusters)
-    assert scored == total == int((sizes * probe_rows).sum())
-    assert len(batched[0]) == 9 * r
+    for bound in (BLOCK_ENTRIES, 5):
+        parts, total = [], 0
+        for batch in table.to_batches(max_chunksize=37):
+            got, pairs = score_clusters(csr(batch), by_cluster, r, bound)
+            parts.append(cut(*got))
+            total += pairs
+        batched = cut(*map(np.concatenate, zip(*parts)))
+        for a, b in zip(cut(*whole), batched):
+            np.testing.assert_array_equal(a, b)
+        assert scored == total == int((sizes * probe_rows).sum())
+        assert len(batched[0]) == 9 * r
+    # unbatched under the small bound: the same cut rows, in the same order
+    small, _ = score_clusters(csr(table), by_cluster, r, 5)
+    for a, b in zip(whole, small):
+        np.testing.assert_array_equal(a, b)
     # a code list of another width is no CSR view
     assert CSRIndex.of(table, n_clusters, bits * n_words + 1, factors) is None
 

@@ -155,6 +155,7 @@ def test_embedding_delta_blocked_screen_equals_one_block(
     """apply_delta's Δ×old GEMM screen is blocked by the same budget as
     embedding_neardup_pairs: patched down to a few matrix entries it runs
     one old row per block, and must land on the same pairs."""
+    from rabitq_spark.functions import scratch
     from rabitq_spark.operators import dedup
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -172,7 +173,7 @@ def test_embedding_delta_blocked_screen_equals_one_block(
 
     want = delta_pairs("one_block")
     assert len(want) > 0
-    monkeypatch.setattr(dedup, "_COSINE_BLOCK_ENTRIES", 7)
+    monkeypatch.setattr(scratch, "BLOCK_ENTRIES", 7)
     assert delta.count() > 7  # so each block holds a single old row
     pd.testing.assert_frame_equal(delta_pairs("blocked"), want, check_exact=True)
 

@@ -2,13 +2,12 @@
 verdicts equal batch connected-components on clique-shaped groups, and
 the clique assumption itself is asserted for the test corpus."""
 
-import os
 import tempfile
 
 from pyspark.sql import functions as F
 
 
-def _run_stream(spark, docs, n_slices=3):
+def _run_stream(spark, docs, n_slices=3, store=None):
     from rabitq_spark.streaming.neardup_stream import (
         neardup_maintenance_stream,
         read_doc_stream,
@@ -24,7 +23,7 @@ def _run_stream(spark, docs, n_slices=3):
         docs.filter(F.col("doc_id").isin(chunk)).coalesce(1).write.mode(
             "append"
         ).parquet(stream_in)
-    store = tempfile.mkdtemp(prefix="ndtest_store_")
+    store = store or tempfile.mkdtemp(prefix="ndtest_store_")
     neardup_maintenance_stream(
         read_doc_stream(spark, stream_in, max_files_per_trigger=1),
         store,
@@ -32,7 +31,7 @@ def _run_stream(spark, docs, n_slices=3):
     )
     return {
         r.doc_id: (r.canonical_id, r.is_dup)
-        for r in spark.read.parquet(os.path.join(store, "decisions")).collect()
+        for r in spark.read.parquet(f"{store}/decisions").collect()
     }
 
 
@@ -89,7 +88,7 @@ def test_corpus_groups_are_cliques(spark, sf_dir):
                     )
 
 
-def test_stream_across_batches_flags_later_copy(spark):
+def test_stream_across_batches_flags_later_copy(spark, location):
     docs = spark.createDataFrame(
         [
             (0, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -98,13 +97,13 @@ def test_stream_across_batches_flags_later_copy(spark):
         ],
         "doc_id long, text string",
     )
-    got = _run_stream(spark, docs, n_slices=3)
+    got = _run_stream(spark, docs, n_slices=3, store=location("store"))
     assert got[0] == (0, 0)
     assert got[5] == (5, 0)
     assert got[10] == (0, 1)  # exact copy in a LATER batch -> dup of 0
 
 
-def test_cdc_stream_equals_batch_index_ops(spark, sf_dir, tmp_path):
+def test_cdc_stream_equals_batch_index_ops(spark, sf_dir, tmp_path, location):
     """Streamed tombstone CDC must land exactly where the batch
     delete_from_index + upsert_into_index path lands."""
     from pyspark.sql import functions as F
@@ -123,7 +122,7 @@ def test_cdc_stream_equals_batch_index_ops(spark, sf_dir, tmp_path):
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
     cfg = RaBitQConfig(n_clusters=8, topk=5)
-    model_path = str(tmp_path / "model")
+    model_path = location("model")
     build_index(boot, cfg).save(model_path)
 
     ups = emb.filter("vec_id % 6 = 0").select(

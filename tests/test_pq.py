@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from rabitq_spark.functions.scratch import BLOCK_ENTRIES
 from rabitq_spark.index.pq import (
     adc_luts,
     adc_shortlist,
@@ -51,13 +52,14 @@ def test_adc_shortlist_sums_the_tables_and_keeps_ties(ksub):
     q_ids, b_ids = np.arange(nq) + 100, np.arange(rows) + 1000
     want = luts[:, np.arange(m), codes].sum(axis=2)  # (nq, rows) reference
 
-    full = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, rows))
+    full = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, rows, BLOCK_ENTRIES))
     assert len(full) == nq * rows
     np.testing.assert_allclose(
         full["__rough"], want[full.query_id - 100, full.neighbor_id - 1000],
         rtol=1e-12,
     )
-    cut = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, r))
+    # a bound of 7 entries scores one query per block: the same cut
+    cut = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, r, 7))
     for q in q_ids:
         rough = full[full.query_id == q]
         kth = np.sort(rough["__rough"])[r - 1]
@@ -65,7 +67,7 @@ def test_adc_shortlist_sums_the_tables_and_keeps_ties(ksub):
         assert set(cut.neighbor_id[cut.query_id == q]) == set(kept)
     # the shared code scores 0 for query 100: all 11 copies tie below R=5
     luts[0, np.arange(m), codes[0]] = 0.0
-    cut = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, r))
+    cut = pd.concat(adc_shortlist(luts, q_ids, codes, b_ids, r, BLOCK_ENTRIES))
     tied = cut[cut.query_id == 100].neighbor_id - 1000
     assert set(tied) == {0, *range(10, 20)}
 
@@ -148,10 +150,14 @@ def test_ivfpq_bounded_recall_and_pruning(spark, sf_dir):
     coded.unpersist()
 
 
-def test_ivfpq_save_load_and_partition_pruning(spark, sf_dir, tmp_path):
+def test_ivfpq_save_load_and_partition_pruning(
+    spark, sf_dir, tmp_path, location, monkeypatch
+):
     """Cold-start serving: save -> load -> bounded search must (a) equal the
     in-memory bounded search and (b) prune the codes scan to the probed
-    cluster_id partitions (PartitionFilters in the plan)."""
+    cluster_id partitions (PartitionFilters in the plan). The sidecar lands
+    at the location itself: a file:// path is no directory under the
+    cwd."""
     import contextlib
     import io
     import re
@@ -167,7 +173,8 @@ def test_ivfpq_save_load_and_partition_pruning(spark, sf_dir, tmp_path):
     base, queries = _base_queries(spark, sf_dir, nq=6)
     coarse, cb = ivfpq_train(base, "vec", n_clusters=8, m=8, ksub=32, iters=4)
     coded = ivfpq_encode(base, coarse, cb)
-    path = str(tmp_path / "ivfpq")
+    path = location("ivfpq")
+    monkeypatch.chdir(tmp_path)
     ivfpq_save(path, coarse, cb, coded)
     lco, lcb, lcoded = ivfpq_load(spark, path)
     assert np.allclose(lco, coarse) and np.allclose(lcb, cb)
@@ -187,6 +194,7 @@ def test_ivfpq_save_load_and_partition_pruning(spark, sf_dir, tmp_path):
     assert "cluster_id" in m.group(1), m.group(1)
     got = result.toPandas().sort_values(["query_id", "rank"], ignore_index=True)
     assert want.equals(got)
+    assert not [p for p in tmp_path.iterdir() if p.name.startswith("file:")]
 
 
 def test_pq_arrow_impl_equals_bruteforce_and_jvm(spark, sf_dir):
